@@ -14,10 +14,27 @@ foreachBatch into
              -(same gate)---->  VersionedAnnIndexSnapshot (embedding)
     deletes  ----------------->  BOTH indexes' VERSIONED tombstone logs
 
-under ONE checkpoint, so the three surfaces commit in lockstep: a
-replayed micro-batch re-runs all fan-out legs with the same batch_id,
-and each leg is individually replay-idempotent (their own statedir
-proofs carry over unchanged — composition adds no new state protocol).
+under ONE checkpoint, so the surfaces commit in lockstep: a replayed
+micro-batch re-runs all fan-out legs with the same batch_id, and each
+leg is individually replay-idempotent (their own statedir proofs carry
+over unchanged — composition adds no new state protocol).
+
+The two index surfaces commit CONCURRENTLY: the ANN surface (admission,
+then its tombstones) runs on a pyspark InheritableThread while the
+calling thread runs the retrieval surface (same order). This is safe
+because the surfaces share nothing but the pinned envelope batch — each
+has its own state root and its own ordered commits with its ledger
+last, and no commit of one was ever ordered against the other. The
+reference's "one worker" wiring fixes the object graph, not a serial
+order, and the micro-batch contract (Structured Streaming, SIGMOD 2018)
+asks only that a replayed batch give the same result, which each leg
+already guarantees. The join is unconditional: foreach_batch returns or
+raises only after both legs finished, so a failed batch leaves no leg
+running when the query replays it. InheritableThread carries the
+streaming query's local properties (its job group) to the worker, so
+query.stop() still cancels both legs' jobs. The one session-global
+setting a leg toggles — the bucketed fold's autoBucketedScan conf — is
+held under statedir's module lock.
 
 Delete permanence differs by channel (ADVICE r13). An IN-BAND Delete
 envelope carries its CDC sequence and kills only versions at or below
@@ -44,10 +61,15 @@ sequence as the version, so "the same update" supersedes on both
 surfaces atomically at the read rule level.
 
 Scale shape per trigger: the envelope batch is pinned ONCE (the shared
-ancestor of all four legs — the foreachBatch multi-consumer rule), the
-fan-out itself is narrow column work, and each leg keeps its own
-admission/probe shape (slim ledgers, bucketed tiers, pushed IN probes).
-Nothing in the composition adds a corpus-sized Exchange.
+ancestor of all four legs — the foreachBatch multi-consumer rule), one
+fused scan of the pinned batch checks both null guards, the fan-out
+itself is narrow column work, and each leg keeps its own admission/
+probe shape (slim ledgers, bucketed tiers, pushed IN probes). The
+composition's own jobs are three (emptiness probe, pin, null scan); the
+~30 small jobs of the two surfaces run as two concurrent streams
+instead of one serial one, so a small trigger no longer leaves the
+executor idle between them. Nothing in the composition adds a
+corpus-sized Exchange.
 
 Equality contract (tests/test_cdc_full.py): after any interleaving of
 insert/update/delete envelopes — out-of-order versions, redeliveries,
@@ -63,9 +85,12 @@ out-of-band deletion feed on top of the in-band Delete envelopes.
 
 from __future__ import annotations
 
+import logging
 import os
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark import InheritableThread
+from pyspark.sql import Column, DataFrame, functions as F
 
 from stream_cdc_spark.streaming.ann_index import VersionedAnnIndexSnapshot
 from stream_cdc_spark.streaming.curation import default_quality_predicate
@@ -80,6 +105,8 @@ CDC_FULL_FEED_SCHEMA = (
     "event_type string, gtid_seq bigint, "
     "content struct<doc_id bigint, text string, embedding array<float>>"
 )
+
+_LOG = logging.getLogger(__name__)
 
 
 class CdcFullPipeline:
@@ -151,16 +178,29 @@ class CdcFullPipeline:
         )
 
     # -- fan-out ----------------------------------------------------------
+    def _upsert_gate(self) -> tuple[Column, Column]:
+        """(is_upsert, quality gate) over the envelope columns."""
+        return (
+            F.col(self.event_type_col).isin("Insert", "Update"),
+            default_quality_predicate(
+                f"{self.content_col}.{self.text_field}", self.min_tokens
+            ),
+        )
+
+    def _vec_image(self) -> tuple[Column, Column]:
+        """(vec_id, embedding) of the vector leg, off the row image."""
+        return (
+            F.col(f"{self.content_col}.{self.id_field}").cast("long"),
+            F.col(f"{self.content_col}.{self.vec_field}").cast("array<float>"),
+        )
+
     def _split(self, envelopes: DataFrame):
         """(gated text upserts, gated vector upserts, deletes). The gate
         filters the ENVELOPE stream (Deletes always pass — quality never
         blocks a legally-required deletion), then the text leg is the
         shared CDC adapter verbatim and the vector leg mirrors it with
         the embedding field and the vec_id rename."""
-        is_upsert = F.col(self.event_type_col).isin("Insert", "Update")
-        gate = default_quality_predicate(
-            f"{self.content_col}.{self.text_field}", self.min_tokens
-        )
+        is_upsert, gate = self._upsert_gate()
         kept = envelopes.filter(~is_upsert | gate)
         gated_text, deletes = cdc_upserts_and_deletes(
             kept,
@@ -170,36 +210,49 @@ class CdcFullPipeline:
             version_col=self.version_col,
             content_col=self.content_col,
         )
+        vec_id, embedding = self._vec_image()
         gated_vec = kept.filter(is_upsert).select(
-            F.col(f"{self.content_col}.{self.id_field}")
-            .cast("long")
-            .alias("vec_id"),
+            vec_id.alias("vec_id"),
             F.col(self.version_col).cast("long").alias("version"),
-            F.col(f"{self.content_col}.{self.vec_field}")
-            .cast("array<float>")
-            .alias("embedding"),
+            embedding.alias("embedding"),
         )
         return gated_text, gated_vec, deletes
 
-    # -- the sink ---------------------------------------------------------
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # pin ONCE at the shared ancestor: four legs derive from the
-        # envelope batch, and an unpinned source would re-read per leg
-        if not batch_df.take(1):
-            return  # empty trigger: no leg commits (missing == empty)
-        envelopes = batch_df.localCheckpoint(eager=True)
-        # fail LOUDLY on ANY envelope with a NULL version (a feed file
-        # missing gtid_seq reads all-null under the forced schema; a
-        # malformed envelope carries one): on upserts, null keys never
-        # match the admission anti-join (every redelivery re-admits,
-        # state grows unbounded) NOR the version-max equi-join (the doc
-        # silently vanishes from every probe); on in-band Deletes, a
-        # null sequence is a kill watermark that kills nothing — the
-        # same silent-no-op class the versioned CLI modes guard at
-        # startup, which a column check alone cannot catch row-wise.
-        # One cheap scan of the pinned batch.
-        bad = envelopes.filter(F.col(self.version_col).isNull())
-        if bad.take(1):
+    def _check_nulls(self, envelopes: DataFrame, batch_id: int) -> None:
+        """Fail LOUDLY on ANY envelope with a NULL version (a feed file
+        missing gtid_seq reads all-null under the forced schema; a
+        malformed envelope carries one): on upserts, null keys never
+        match the admission anti-join (every redelivery re-admits,
+        state grows unbounded) NOR the version-max equi-join (the doc
+        silently vanishes from every probe); on in-band Deletes, a null
+        sequence is a kill watermark that kills nothing — the same
+        silent-no-op class the versioned CLI modes guard at startup,
+        which a column check alone cannot catch row-wise.
+
+        Same rule for the row-image KEYS on gated upserts (ADVICE r13):
+        a content struct missing its doc_id or embedding field reads
+        all-null under the forced schema while the gate still passes on
+        text — the ANN leg would admit null vectors whose first-wins
+        (vec_id, version) slots a corrected redelivery can never
+        reclaim, and null-cosine candidates can reach topk when a probed
+        cell holds fewer than k real vectors. (Null TEXT is the gate's
+        job: a null image fails the quality predicate and is skipped,
+        not an error.)
+
+        One scan of the pinned batch over both predicates; only a hit
+        pays a second probe, so the version error keeps precedence. The
+        image predicate is exactly ``_split``'s gated vector rows
+        (upsert AND gate, both TRUE) with a null key."""
+        is_upsert, gate = self._upsert_gate()
+        vec_id, embedding = self._vec_image()
+        null_version = F.col(self.version_col).isNull()
+        bad_image = is_upsert & gate & (vec_id.isNull() | embedding.isNull())
+        hit = envelopes.filter(null_version | bad_image).take(1)
+        if not hit:
+            return
+        if hit[0][self.version_col] is None or envelopes.filter(
+            null_version
+        ).take(1):
             raise ValueError(
                 f"cdc_full batch {batch_id}: envelopes with a "
                 f"NULL {self.version_col!r} — the feed is missing the "
@@ -209,43 +262,42 @@ class CdcFullPipeline:
                 f"probe, and make in-band Deletes kill nothing — all "
                 f"silently."
             )
-        gated_text, gated_vec, deletes = self._split(envelopes)
-        # same loud-failure rule for the row-image KEYS on gated
-        # upserts (ADVICE r13): a content struct missing its doc_id or
-        # embedding field reads all-null under the forced schema while
-        # the gate still passes on text — the ANN leg would admit null
-        # vectors whose first-wins (vec_id, version) slots a corrected
-        # redelivery can never reclaim, and null-cosine candidates can
-        # reach topk when a probed cell holds fewer than k real
-        # vectors. (Null TEXT is the gate's job: a null image fails
-        # the quality predicate and is skipped, not an error.)
-        bad_vec = gated_vec.filter(
-            F.col("vec_id").isNull() | F.col("embedding").isNull()
+        raise ValueError(
+            f"cdc_full batch {batch_id}: gated upsert envelopes "
+            f"with a NULL {self.id_field!r} or {self.vec_field!r} "
+            f"in {self.content_col!r} — the feed's content struct "
+            f"is missing the field (forced schema reads it "
+            f"all-null) or carries malformed images. Admitting "
+            f"them would permanently occupy first-wins slots and "
+            f"poison ANN candidates, silently."
         )
-        if bad_vec.take(1):
-            raise ValueError(
-                f"cdc_full batch {batch_id}: gated upsert envelopes "
-                f"with a NULL {self.id_field!r} or {self.vec_field!r} "
-                f"in {self.content_col!r} — the feed's content struct "
-                f"is missing the field (forced schema reads it "
-                f"all-null) or carries malformed images. Admitting "
-                f"them would permanently occupy first-wins slots and "
-                f"poison ANN candidates, silently."
-            )
-        self.retr.foreach_batch(gated_text, batch_id)
-        self.ann.foreach_batch(gated_vec, batch_id)
+
+    # -- the sink ---------------------------------------------------------
+    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        # pin ONCE at the shared ancestor: four legs derive from the
+        # envelope batch, and an unpinned source would re-read per leg
+        if not batch_df.take(1):
+            return  # empty trigger: no leg commits (missing == empty)
+        envelopes = batch_df.localCheckpoint(eager=True)
+        self._check_nulls(envelopes, batch_id)
+        gated_text, gated_vec, deletes = self._split(envelopes)
         # in-band Deletes carry their CDC sequence: versioned kill on
         # both surfaces (versions <= the sequence; a later re-insert
-        # is live again — module doc). The deletes relation derives
-        # from the pinned envelope batch, so the two appends read it
-        # without re-running the source.
-        self.retr.delete_versions_batch(deletes, batch_id)
-        self.ann.delete_versions_batch(
-            deletes.select(
-                F.col("doc_id").alias("vec_id"), "version"
-            ),
-            batch_id,
-        )
+        # is live again — module doc). Each surface keeps its own
+        # order (admission, then its tombstones); the two surfaces
+        # share nothing but the pinned batch, so they commit
+        # concurrently (module doc).
+        vec_deletes = deletes.select(F.col("doc_id").alias("vec_id"), "version")
+
+        def ann_leg() -> None:
+            self.ann.foreach_batch(gated_vec, batch_id)
+            self.ann.delete_versions_batch(vec_deletes, batch_id)
+
+        def retr_leg() -> None:
+            self.retr.foreach_batch(gated_text, batch_id)
+            self.retr.delete_versions_batch(deletes, batch_id)
+
+        _concurrently(ann_leg, retr_leg)
 
     # -- out-of-band deletion feed (DELETES_PATH second query) ------------
     def delete_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -257,8 +309,43 @@ class CdcFullPipeline:
         stream's in-band tombstone commits (constructor doc)."""
         ids = batch_df.select(F.col("doc_id").cast("long").alias("doc_id"))
         ids = ids.localCheckpoint(eager=True)  # two consumers
-        self._ext_retr.append(ids, batch_id)
-        self._ext_ann.append(ids, batch_id)
+        _concurrently(
+            lambda: self._ext_ann.append(ids, batch_id),
+            lambda: self._ext_retr.append(ids, batch_id),
+        )
+
+
+def _concurrently(worker: Callable[[], None], caller: Callable[[], None]) -> None:
+    """Run ``worker`` on a pyspark InheritableThread while the calling
+    thread runs ``caller``; return once BOTH have finished.
+
+    InheritableThread copies the caller's Spark local properties — the
+    streaming query's job group above all — so ``query.stop()`` still
+    cancels the worker's jobs (a bare thread would run them ungrouped).
+    Failure: the join is unconditional, so nothing of either leg still
+    runs when this raises; the caller's exception wins when both fail
+    (the worker's is logged), otherwise the worker's is re-raised
+    as-is. A replay of the batch re-runs both legs, each idempotent."""
+    errors: list[BaseException] = []
+
+    def run() -> None:
+        try:
+            worker()
+        except BaseException as e:  # noqa: BLE001 -- re-raised below
+            errors.append(e)
+
+    t = InheritableThread(target=run, name="cdc_full-worker-leg")
+    t.start()
+    try:
+        caller()
+    except BaseException:
+        t.join()
+        if errors:
+            _LOG.error("cdc_full: worker leg failed too", exc_info=errors[0])
+        raise
+    t.join()
+    if errors:
+        raise errors[0]
 
 
 def composed_bm25_over_envelopes(

@@ -125,11 +125,18 @@ import logging
 import os
 import re
 import shutil
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 _LOG = logging.getLogger(__name__)
+
+# held over the bucketed fold's set -> write -> restore of the
+# session-global autoBucketedScan conf (``compact``): sinks that commit
+# concurrently (cdc_full's two legs) would otherwise interleave the
+# steps, one leg restoring "true" while the other's write still plans
+_AUTO_BUCKETED_SCAN_LOCK = threading.Lock()
 
 _BATCH_RE = re.compile(r"^batch=(\d+)$")
 _COMPACT_RE = re.compile(r"^compact=(\d+)$")
@@ -479,26 +486,27 @@ def compact(
             fs.rmtree(dest)
             _put_bucket_intent(fs, dest, list(bucket_cols), num_buckets)
             auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-            prev_auto = spark.conf.get(auto_key, "true")
             # force one-partition-per-bucket scans of the chain for the
             # duration of the fold job, so each write task holds exactly
             # one bucket and emits exactly one file — the per-bucket
             # merge (auto mode would fall back to size splits here
             # because the write alone doesn't "benefit" from bucketing)
-            spark.conf.set(auto_key, "false")
-            try:
-                (
-                    df.write.mode("overwrite")
-                    .format("parquet")
-                    .bucketBy(num_buckets, *bucket_cols)
-                    .sortBy(*bucket_cols)
-                    .option("path", _table_location(dest))
-                    .saveAsTable(name)
-                )
-            finally:
-                spark.conf.set(auto_key, prev_auto)
-                for t in tmp_tables:
-                    spark.sql(f"DROP TABLE IF EXISTS {t}")
+            with _AUTO_BUCKETED_SCAN_LOCK:
+                prev_auto = spark.conf.get(auto_key, "true")
+                spark.conf.set(auto_key, "false")
+                try:
+                    (
+                        df.write.mode("overwrite")
+                        .format("parquet")
+                        .bucketBy(num_buckets, *bucket_cols)
+                        .sortBy(*bucket_cols)
+                        .option("path", _table_location(dest))
+                        .saveAsTable(name)
+                    )
+                finally:
+                    spark.conf.set(auto_key, prev_auto)
+                    for t in tmp_tables:
+                        spark.sql(f"DROP TABLE IF EXISTS {t}")
             _publish_manifest(
                 fs, dest, {"cols": list(bucket_cols), "n": num_buckets}
             )

@@ -15,7 +15,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from stream_cdc_spark.operators import similarity, text
-from stream_cdc_spark.streaming.cdc_full import CdcFullPipeline
+from stream_cdc_spark.streaming.cdc_full import (
+    CDC_FULL_FEED_SCHEMA,
+    CdcFullPipeline,
+)
 from stream_cdc_spark.tables import load
 from tests.conftest import SF_SMALL
 
@@ -526,3 +529,245 @@ def test_inband_delete_then_recreate_restores_doc(spark, tmp_path):
                        [0.7, 0.3]), "Update"), 5,
     )
     assert pipe.ann._latest_live(spark).count() == 0
+
+
+# -- concurrent fan-out: the two index surfaces commit on two threads ------
+
+TINY_CENTS = [(0, [1.0, 0.0]), (1, [-1.0, 0.0])]
+# (event_type, gtid_seq, doc_id, text, embedding) per batch: inserts, a
+# good and a below-gate update, a redelivery, in-band deletes (one doc
+# recreated above its kill watermark in the same batch) and a repeated
+# delete
+TINY_BATCHES = [
+    [
+        ("Insert", 1, 1, "stream join vector query engine", [0.9, 0.1]),
+        ("Insert", 1, 2, "vector search over stream data", [0.7, 0.3]),
+        ("Insert", 1, 3, "join planning for stream engines", [-0.6, 0.4]),
+        ("Insert", 1, 4, "batch table scan vector math", [-0.9, 0.2]),
+        ("Insert", 1, 5, "plain text about nothing much", [0.2, 0.9]),
+        ("Insert", 1, 6, "stream stream join join vector", [-0.3, -0.8]),
+    ],
+    [
+        ("Update", 2, 1, "stream join vector engine rebuilt", [0.5, 0.5]),
+        ("Update", 2, 2, "tiny doc", [-0.9, 0.1]),
+        ("Insert", 1, 7, "join vector stream windows in order", [0.8, -0.2]),
+        ("Insert", 1, 3, "join planning for stream engines", [-0.6, 0.4]),
+    ],
+    [
+        ("Delete", 1, 3, None, None),
+        ("Delete", 1, 5, None, None),
+        ("Delete", 1, 5, None, None),
+        ("Insert", 4, 3, "stream vector join is back", [-0.5, 0.5]),
+        ("Update", 3, 4, "vector stream join batch table", [-0.8, 0.3]),
+    ],
+]
+TINY_QUERIES = [(0, [1.0, 0.0]), (1, [-0.7, 0.7])]
+
+
+def _tiny_env(spark, rows):
+    return spark.createDataFrame(
+        [(e, s, (d, t, v)) for e, s, d, t, v in rows], CDC_FULL_FEED_SCHEMA
+    )
+
+
+def _tiny_model(batches):
+    """(admitted (doc, version) count, latest live gated images) after
+    ``batches`` — first-wins admission of gate-passing upserts, the
+    version-max read rule, versioned in-band kills."""
+    admitted, kill = {}, {}
+    for rows in batches:
+        for e, s, d, t, v in rows:
+            if e == "Delete":
+                kill[d] = max(kill.get(d, -1), s)
+            elif len(t.split(" ")) >= MIN_TOKENS:
+                admitted.setdefault((d, s), (t, v))
+    latest = {}
+    for d, s in admitted:
+        latest[d] = max(latest.get(d, -1), s)
+    live = {
+        d: admitted[(d, s)] for d, s in latest.items() if s > kill.get(d, -1)
+    }
+    return len(admitted), live
+
+
+def _tiny_refs(spark, live):
+    rows = sorted(live.items())
+    corpus_t = spark.createDataFrame(
+        [(d, t) for d, (t, _) in rows], "doc_id bigint, text string"
+    )
+    corpus_v = spark.createDataFrame(
+        [(d, v) for d, (_, v) in rows], "vec_id bigint, embedding array<float>"
+    )
+    retr = sorted(
+        map(tuple, text.bm25_topk(corpus_t, TERMS, top_k=15).collect())
+    )
+    ann = sorted(
+        map(
+            tuple,
+            similarity.ivf_ann_topk(
+                corpus_v, _tiny_queries(spark),
+                spark.createDataFrame(TINY_CENTS, "cid bigint, cv array<float>"),
+                k=5, nprobe=2, quantize_bp=10000,
+            ).collect(),
+        )
+    )
+    return retr, ann
+
+
+def _tiny_queries(spark):
+    return spark.createDataFrame(
+        TINY_QUERIES, "vec_id bigint, embedding array<float>"
+    )
+
+
+def _tiny_probe(pipe, spark):
+    retr = sorted(
+        map(tuple, pipe.retr.bm25_topk(spark, TERMS, top_k=15).collect())
+    )
+    ann = sorted(map(tuple, pipe.ann.topk(spark, _tiny_queries(spark)).collect()))
+    return retr, ann
+
+
+def _assert_matches_model(pipe, spark):
+    n_admitted, live = _tiny_model(TINY_BATCHES)
+    assert _tiny_probe(pipe, spark) == _tiny_refs(spark, live)
+    assert pipe.retr.docs(spark).count() == n_admitted
+    assert pipe.ann.ledger(spark).count() == n_admitted
+
+
+def test_failed_worker_leg_reraises_after_both_legs_and_replays(
+    spark, tmp_path
+):
+    """The ANN surface runs on a worker thread beside the retrieval
+    surface. An ANN failure on batch 1 re-raises the SAME exception from
+    foreach_batch, only after the retrieval leg committed; replaying
+    batch 1 re-runs both legs and the stream ends equal to the batch
+    references on both surfaces."""
+    pipe = CdcFullPipeline(str(tmp_path / "s"), TINY_CENTS, min_tokens=MIN_TOKENS)
+    boom = RuntimeError("injected ANN leg failure")
+    real = pipe.ann.foreach_batch
+    fired = []
+
+    def flaky(df, batch_id):
+        if batch_id == 1 and not fired:
+            fired.append(batch_id)
+            raise boom
+        return real(df, batch_id)
+
+    pipe.ann.foreach_batch = flaky
+    envs = [_tiny_env(spark, rows) for rows in TINY_BATCHES]
+    pipe.foreach_batch(envs[0], 0)
+    with pytest.raises(RuntimeError) as caught:
+        pipe.foreach_batch(envs[1], 1)
+    assert caught.value is boom
+    # the calling thread's leg finished its commits; the failed leg
+    # committed nothing for batch 1
+    assert pipe.retr.docs(spark).count() == _tiny_model(TINY_BATCHES[:2])[0]
+    assert pipe.ann.ledger(spark).count() == _tiny_model(TINY_BATCHES[:1])[0]
+    for i, env in enumerate(envs[1:], start=1):  # replay of 1, then on
+        pipe.foreach_batch(env, i)
+    _assert_matches_model(pipe, spark)
+
+
+def test_bucketed_folds_of_both_legs_run_concurrently(spark, tmp_path):
+    """compact_every=1 folds both surfaces' bucketed state on every
+    trigger, so the two legs' major folds (each toggling the session's
+    autoBucketedScan conf) overlap; with a replayed trigger in the mix
+    both probes still equal the batch references."""
+    pipe = CdcFullPipeline(
+        str(tmp_path / "s"), TINY_CENTS, min_tokens=MIN_TOKENS,
+        bucketed=True, num_buckets=4, compact_every=1,
+    )
+    envs = [_tiny_env(spark, rows) for rows in TINY_BATCHES]
+    for i, env in enumerate(envs):
+        pipe.foreach_batch(env, i)
+        if i == 1:
+            pipe.foreach_batch(env, i)  # replay after a completed fold
+    _assert_matches_model(pipe, spark)
+
+
+def test_both_legs_run_in_the_streaming_query_job_group(spark, tmp_path):
+    """Inside a real foreachBatch query, the worker leg inherits the
+    query's Spark local properties: both legs run their jobs in the job
+    group the query sets (its runId), so stopping the query cancels
+    both."""
+    import threading
+
+    feed = str(tmp_path / "feed")
+    _tiny_env(spark, TINY_BATCHES[0]).coalesce(1).write.parquet(feed)
+    pipe = CdcFullPipeline(str(tmp_path / "s"), TINY_CENTS, min_tokens=MIN_TOKENS)
+    sc = spark.sparkContext
+    seen = {}
+
+    def record(label, leg):
+        real = leg.foreach_batch
+
+        def wrapped(df, batch_id):
+            seen[label] = (
+                threading.get_ident(), sc.getLocalProperty("spark.jobGroup.id")
+            )
+            return real(df, batch_id)
+
+        leg.foreach_batch = wrapped
+
+    record("retr", pipe.retr)
+    record("ann", pipe.ann)
+    q = (
+        spark.readStream.schema(CDC_FULL_FEED_SCHEMA).parquet(feed)
+        .writeStream.foreachBatch(pipe.foreach_batch)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert seen["retr"][0] != seen["ann"][0]  # two threads
+    assert seen["retr"][1] == seen["ann"][1] == str(q.runId)
+
+
+def test_null_version_error_keeps_precedence_in_the_fused_scan(
+    spark, tmp_path
+):
+    """One scan checks both null guards; when a batch trips both, the
+    NULL version error still wins, whichever row the scan meets first."""
+    pipe = CdcFullPipeline(str(tmp_path / "s"), TINY_CENTS, min_tokens=1)
+    both = spark.createDataFrame(
+        [
+            ("Insert", 1, (None, "good text that passes the gate",
+                           [0.5, 0.5])),
+            ("Delete", None, (2, None, None)),
+        ],
+        CDC_FULL_FEED_SCHEMA,
+    ).coalesce(1)
+    with pytest.raises(ValueError, match="NULL 'gtid_seq'"):
+        pipe.foreach_batch(both, 0)
+
+
+def test_fan_out_joins_both_legs_before_raising(spark):
+    """The fan-out helper returns or raises only after both legs ended;
+    a worker failure re-raises as-is, and the caller's wins when both
+    fail."""
+    import time
+
+    from stream_cdc_spark.streaming.cdc_full import _concurrently
+
+    ended = []
+    worker_err = KeyError("worker leg")
+
+    def slow_failing_worker():
+        time.sleep(0.3)
+        ended.append("worker")
+        raise worker_err
+
+    def failing_caller():
+        raise ValueError("caller leg")
+
+    with pytest.raises(ValueError, match="caller leg"):
+        _concurrently(slow_failing_worker, failing_caller)
+    assert ended == ["worker"]
+    with pytest.raises(KeyError) as caught:
+        _concurrently(slow_failing_worker, lambda: ended.append("caller"))
+    assert caught.value is worker_err
+    assert ended == ["worker", "caller", "worker"]

@@ -145,6 +145,66 @@ def test_column_metadata_survives_compaction(spark, tmp_path):
     assert dict(got.schema["id"].metadata)["lsh_k"] == 3
 
 
+def test_concurrent_bucketed_folds_restore_the_session_scan_conf(
+    spark, tmp_path, monkeypatch
+):
+    """Bucketed folds on more threads than cores (cdc_full's two legs fold
+    concurrently). Each fold turns the session-global autoBucketedScan
+    conf off for its write and restores it after; under the module lock
+    no fold can restore a value another fold set, so the session ends
+    with its own value and every fold publishes the same rows."""
+    import sys
+    import threading
+    import time
+
+    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    roots = [str(tmp_path / f"s{i}") for i in range(5)]
+    for root in roots:
+        _write_batch(spark, root, 0, [(i, f"v{i}") for i in range(20)])
+    want = _rows(spark, roots[0], 1)
+    published, errors = [], []
+
+    def fold(root):
+        try:
+            published.append(statedir.compact(
+                spark, root, SCHEMA, 1, bucket_cols=["id"], num_buckets=4
+            ))
+        except Exception as e:  # noqa: BLE001 -- asserted below
+            errors.append(e)
+
+    real_set = spark.conf.set
+    restorers = set()
+
+    def slow_set(k, v):
+        # a fold's second set of the key is its restore; holding back
+        # restores of "false" lets them land last, so any fold that
+        # read another fold's value shows in the session's final value
+        if k == key:
+            me = threading.get_ident()
+            if me in restorers and v == "false":
+                time.sleep(0.5)
+            restorers.add(me)
+        real_set(k, v)
+
+    monkeypatch.setattr(spark.conf, "set", slow_set)
+    before = spark.conf.get(key, "true")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=fold, args=(r,)) for r in roots]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert published == [True] * len(roots)
+    assert spark.conf.get(key, "true") == before
+    assert all(_rows(spark, root, 1) == want for root in roots)
+
+
 def test_bucketed_compaction_registers_shuffle_free_side(spark, tmp_path):
     """compact(bucket_cols=...) publishes the snapshot as a bucketed
     table: a key-join against it plans with no Exchange on the snapshot
