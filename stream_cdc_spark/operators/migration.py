@@ -114,7 +114,7 @@ def rebuild_ann_index(spark, src, dst) -> int:
     vecs = src._probe_relation(spark).select("vec_id", "vv")
     # pinned: feeds both the vectors and ledger publishes (unpinned, the
     # source scan + re-assignment would run twice)
-    assigned = dst._assign(spark, vecs).localCheckpoint(eager=True)
+    assigned = dst._assign(vecs).localCheckpoint(eager=True)
     statedir.publish_snapshot(
         spark, dst.vectors_dir, assigned.sortWithinPartitions("cell"),
         fs=dst.fs,

@@ -341,16 +341,35 @@ def _argmin_cells_arrow(vec: Column, cents_rows: "list[tuple[int, list[float]]]"
       saturation at Long.Min/Max) instead of numpy's undefined astype;
     - ties break lexicographically on (dist_bp, cid) with centroids
       iterated in ascending-cid order — the expression tier's F.least;
-    - unclean rows (null vector, length != dim, null element) produce
+    - unclean rows (null vector, length != dim) produce
       (dist_bp=NULL, cell=min cid), which is what the expression fold's
       null algebra yields (null products -> null distance -> the
       struct's null-first ordering makes every candidate equal-least and
       cid decides).
+
+    Documented divergence: a null ELEMENT inside a vector crosses the
+    Arrow boundary as NaN (list<float> nulls are unrepresentable in the
+    numpy view), so every distance of such a row is NaN -> 0 and the
+    row gets (dist_bp=0, cell=min cid) where the expression tier gives
+    (dist_bp=NULL, cell=min cid) — the same cell, a different residual.
+    No in-repo corpus produces null elements (the lsh_buckets_arrow
+    divergence; asserted in the tier-identity test).
+
+    ``cents_rows`` must be fully populated: a null cid, a null centroid
+    vector or a null element in one raises ValueError (there is no
+    null algebra that makes a partial centroid meaningful).
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    for c, v in cents_rows:
+        if c is None or v is None or any(x is None for x in v):
+            raise ValueError(
+                f"ivf_assign: centroid {c!r} has a NULL id, vector or "
+                f"vector element; every centroid needs a non-null id and "
+                f"a fully populated vector"
+            )
     rows = sorted(((int(c), list(map(float, v))) for c, v in cents_rows))
     cids = np.array([c for c, _ in rows], dtype=np.int64)
     C = np.array([v for _, v in rows], dtype=np.float64)
@@ -407,6 +426,50 @@ def _argmin_cells_arrow(vec: Column, cents_rows: "list[tuple[int, list[float]]]"
     return pandas_udf(_assign, "struct<dist_bp:bigint,cell:bigint>")(vec)
 
 
+# Row cap on the Arrow tier's centroid collect: IVF centroid sets are
+# broadcast-small by design (num_cells rows), so a relation past this is
+# a caller passing a corpus where centroids belong.
+_CENTROID_COLLECT_CAP = 100_000
+
+
+def _collect_centroid_rows(
+    centroids: DataFrame, centroid_id_col: str, centroid_vec_col: str
+) -> "list[tuple[int, list[float]]]":
+    """The centroid relation as driver-side (cid, vector) rows — a
+    planning collect, run when the plan is built. Vectors are widened
+    to double by the cast, so array<float> centroids collect as
+    float64-of-float32: exactly the values the expression tier's
+    per-element cast sees. Capped: a relation over
+    ``_CENTROID_COLLECT_CAP`` rows raises instead of filling the driver."""
+    rows = (
+        centroids.select(
+            F.col(centroid_id_col).cast("long"),
+            F.col(centroid_vec_col).cast("array<double>"),
+        )
+        .limit(_CENTROID_COLLECT_CAP + 1)
+        .collect()
+    )
+    if len(rows) > _CENTROID_COLLECT_CAP:
+        raise ValueError(
+            f"ivf_assign(tier='arrow') collects the centroid relation to "
+            f"the driver, and it has more than {_CENTROID_COLLECT_CAP} "
+            f"rows; pass tier='expr', which broadcasts the centroid set "
+            f"instead of collecting it"
+        )
+    return [(r[0], r[1] if r[1] is None else list(r[1])) for r in rows]
+
+
+def _assign_input(
+    corpus: DataFrame, id_col: str, vec_col: str, carry_cols: tuple[str, ...]
+) -> DataFrame:
+    """(vec_id, *carry_cols, vv): the assignment input of both tiers."""
+    return ensure_parallelism(corpus).select(
+        F.col(id_col).alias("vec_id"),
+        *[F.col(c) for c in carry_cols],
+        F.col(vec_col).alias("vv"),
+    )
+
+
 def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -445,45 +508,25 @@ def ivf_assign(
     fold (see ``_argmin_cells_arrow``; proven by the tier-identity test
     and every IVF consumer oracle) and measured 6–8x faster on the sf1
     corpus, where the interpreted fold WAS the whole assignment wall.
-    The centroid relation is collected at plan-build time (a planning
-    collect, num_cells rows — the same class as ivf_probe_topk's
-    probed-cell collect). 'expr' keeps the pure-expression fold: the
-    reference semantics, and the composition-safe choice when no job
-    may run at plan construction.
+    The centroid relation is collected at plan-build time
+    (``_collect_centroid_rows``, capped) and handed to
+    ``ivf_assign_rows``; callers that already hold their centroids as
+    rows (the streaming ANN sinks) call that directly and run no job.
+    'expr' keeps the pure-expression fold: the reference semantics, and
+    the composition-safe choice when no job may run at plan
+    construction.
     """
-    carry = [F.col(c) for c in carry_cols]
-    v = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("vec_id"), *carry, F.col(vec_col).alias("vv")
-    )
     if tier == "arrow":
-        # A planning collect of the centroid relation. Every in-repo
-        # caller builds it from a local list or a tiny filter, and the
-        # float32/float64 story is inherited from the relation itself
-        # (the sinks' array<float> centroids collect as
-        # float64-of-float32, exactly the values the expression tier's
-        # per-element cast saw). For the sinks this is a LocalTableScan
-        # collect — driver-side, no job.
-        cents_rows = [
-            (r[0], list(r[1]))
-            for r in centroids.select(
-                F.col(centroid_id_col).cast("long"),
-                F.col(centroid_vec_col).cast("array<double>"),
-            ).collect()
-        ]
-        if not cents_rows:
-            # empty centroid set -> empty result, matching the
-            # expression tier's inner-join-with-empty semantics
-            return v.filter(F.lit(False)).select(
-                "vec_id",
-                *carry_cols,
-                "vv",
-                F.lit(None).cast("bigint").alias("cell"),
-                F.lit(None).cast("bigint").alias("dist_bp"),
-            )
-        best = _argmin_cells_arrow(F.col("vv"), cents_rows)
-        return v.select(
-            "vec_id", *carry_cols, "vv", F.inline(F.array(best))
-        ).select("vec_id", *carry_cols, "vv", "cell", "dist_bp")
+        return ivf_assign_rows(
+            corpus,
+            _collect_centroid_rows(
+                centroids, centroid_id_col, centroid_vec_col
+            ),
+            id_col=id_col,
+            vec_col=vec_col,
+            carry_cols=carry_cols,
+        )
+    v = _assign_input(corpus, id_col, vec_col, carry_cols)
     cents = _centroid_array(centroids, centroid_id_col, centroid_vec_col)
     # F.inline evaluates the argmin struct ONCE per row (selecting
     # .cell/.dist_bp separately would duplicate the whole fold after
@@ -500,6 +543,35 @@ def ivf_assign(
         )
         .select("vec_id", *carry_cols, "vv", "cell", "dist_bp")
     )
+
+
+def ivf_assign_rows(
+    corpus: DataFrame,
+    cents_rows: "list[tuple[int, list[float]]]",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    carry_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """The Arrow tier of ``ivf_assign`` over driver-side centroid rows
+    ``[(cid, vector), ...]``: builds the plan without running a job.
+    The rows must carry the values the expression tier would see — for
+    array<float> centroids, float32 values widened to float64 (what
+    ``_collect_centroid_rows`` returns)."""
+    v = _assign_input(corpus, id_col, vec_col, carry_cols)
+    if not cents_rows:
+        # empty centroid set -> empty result, matching the expression
+        # tier's inner-join-with-empty semantics
+        return v.filter(F.lit(False)).select(
+            "vec_id",
+            *carry_cols,
+            "vv",
+            F.lit(None).cast("bigint").alias("cell"),
+            F.lit(None).cast("bigint").alias("dist_bp"),
+        )
+    best = _argmin_cells_arrow(F.col("vv"), cents_rows)
+    return v.select(
+        "vec_id", *carry_cols, "vv", F.inline(F.array(best))
+    ).select("vec_id", *carry_cols, "vv", "cell", "dist_bp")
 
 
 def ivf_ann_topk(

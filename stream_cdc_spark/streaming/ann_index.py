@@ -120,6 +120,7 @@ from __future__ import annotations
 import hashlib
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from stream_cdc_spark.operators import similarity
@@ -179,6 +180,20 @@ def centroid_digest(centroids: list[tuple[int, list[float]]]) -> str:
         for cid, vec in sorted(centroids, key=lambda t: int(t[0]))
     )
     return hashlib.sha256(canon.encode()).hexdigest()[:16]
+
+
+def _assignment_rows(
+    centroids: list[tuple[int, list[float]]],
+) -> list[tuple[int, list[float]]]:
+    """The centroid set as ``similarity.ivf_assign_rows`` takes it: each
+    vector rounded to float32 (the ``array<float>`` the sinks store and
+    probe with) and widened back to float64 — exactly the values a
+    collect of ``_centroids_df`` returns, computed once at construction
+    so a trigger's assignment plan runs no centroid job."""
+    return [
+        (cid, np.asarray(v, dtype=np.float32).astype(np.float64).tolist())
+        for cid, v in centroids
+    ]
 
 
 def sq_ranges_digest(ranges: list[tuple[float, float]]) -> str:
@@ -421,6 +436,7 @@ class AnnIndexSnapshot(_DriftMonitor):
         )
         self.tombstones_dir = self._tomb.root
         self.centroids = [(int(c), [float(x) for x in v]) for c, v in centroids]
+        self._assignment_rows = _assignment_rows(self.centroids)
         self.id_col = id_col
         self.vec_col = vec_col
         self.quantize_bp = quantize_bp
@@ -724,27 +740,31 @@ class AnnIndexSnapshot(_DriftMonitor):
         # (anti-joins compose over union; statedir.state_relations doc).
         for rel in self._ledger_relations(spark, batch_id):
             vecs = vecs.join(rel.select("vec_id"), "vec_id", "left_anti")
-        raw = similarity.ivf_assign(
-            vecs, self._centroids_df(spark), id_col="vec_id", vec_col="vv"
-        )
         # pin: feeds the emptiness probe and all three commit writes —
         # unpinned, the assignment (and the state anti-join behind it)
         # would recompute per action. Pinned AFTER the storage
         # projection (class doc: code-size blocks on the sq8 tier).
-        staged = self._storage(raw, keep_residual=True).localCheckpoint(
+        staged = self._assign(vecs, keep_residual=True).localCheckpoint(
             eager=True
         )
         if not staged.take(1):
             return None
         return staged
 
-    def _storage(
-        self, raw: DataFrame, keep_residual: bool = False
+    def _assign(
+        self, vecs: DataFrame, keep_residual: bool = False
     ) -> DataFrame:
-        """An assigned relation -> this sink's stamped storage rows:
+        """(vec_id, vv) -> the stamped storage relation: cells assigned
+        from the FULL-precision vectors (same geometry on both tiers),
         payload quantized only for sq8 storage (1 B/dim on disk).
-        ``keep_residual`` carries dist_bp through for the drift
-        monitor's partials (the per-trigger _build path)."""
+        Shared by the per-trigger _build and the offline migration
+        publish (operators/migration.rebuild_ann_index), so the two
+        paths cannot drift. ``keep_residual`` carries dist_bp through
+        for the drift monitor's partials (the per-trigger _build
+        path)."""
+        raw = similarity.ivf_assign_rows(
+            vecs, self._assignment_rows, id_col="vec_id", vec_col="vv"
+        )
         extra = [F.col("dist_bp")] if keep_residual else []
         if self.storage == "sq8":
             return raw.select(
@@ -758,20 +778,6 @@ class AnnIndexSnapshot(_DriftMonitor):
             "vv",
             F.col("cell").alias("cell", metadata=self._stamp),
             *extra,
-        )
-
-    def _assign(self, spark, vecs: DataFrame) -> DataFrame:
-        """(vec_id, vv) -> the stamped storage relation: cells assigned
-        from the FULL-precision vectors (same geometry on both tiers).
-        Shared by the per-trigger _build (via ivf_assign + _storage) and
-        the offline migration publish
-        (operators/migration.rebuild_ann_index), so the two paths
-        cannot drift."""
-        return self._storage(
-            similarity.ivf_assign(
-                vecs, self._centroids_df(spark), id_col="vec_id",
-                vec_col="vv",
-            )
         )
 
 
@@ -985,6 +991,7 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
         )
         self.vtombstones_dir = self._vtomb.root
         self.centroids = [(int(c), [float(x) for x in v]) for c, v in centroids]
+        self._assignment_rows = _assignment_rows(self.centroids)
         self.id_col = id_col
         self.version_col = version_col
         self.vec_col = vec_col
@@ -1272,14 +1279,14 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
                 ["vec_id", "version"],
                 "left_anti",
             )
-        staged = self._assign(spark, vecs, keep_residual=True)
+        staged = self._assign(vecs, keep_residual=True)
         staged = staged.localCheckpoint(eager=True)
         if not staged.take(1):
             return None
         return staged
 
     def _assign(
-        self, spark, vecs: DataFrame, keep_residual: bool = False
+        self, vecs: DataFrame, keep_residual: bool = False
     ) -> DataFrame:
         """(vec_id, version, vv) -> the stamped storage relation. Cells
         are assigned from the FULL-precision vector of THAT version via
@@ -1288,9 +1295,9 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
         its own correct cell — the geometry every probe relies on.
         ``keep_residual`` carries dist_bp through for the drift
         monitor's partials (the per-trigger _build path)."""
-        assigned = similarity.ivf_assign(
+        assigned = similarity.ivf_assign_rows(
             vecs,
-            self._centroids_df(spark),
+            self._assignment_rows,
             id_col="vec_id",
             vec_col="vv",
             carry_cols=("version",),

@@ -1029,14 +1029,16 @@ class VersionedRetrievalIndexSnapshot:
                 ["doc_id", "version"],
                 "left_anti",
             )
-        # lazy emptiness probe first, then pin ONCE at the tokenized
-        # batch (both commits derive from it — retrieval _build rule)
+        # pin ONCE at the tokenized batch (both commits derive from it —
+        # retrieval _build rule), THEN probe the pin for emptiness: a
+        # take(1) cannot exit early past the groupBy/anti-join shuffles,
+        # so probing the lazy plan first ran the whole admission plan
+        # twice (the ANN _build order)
         toks = docs.select(
             "doc_id", "version", text.tokens(F.col("text")).alias("t")
-        )
+        ).localCheckpoint(eager=True)
         if not toks.take(1):
             return None
-        toks = toks.localCheckpoint(eager=True)
         new_docs = toks.select(
             "doc_id", "version", F.size("t").cast("bigint").alias("dl")
         )

@@ -18,3 +18,20 @@ def spark():
     s = get_spark(app_name="stream-cdc-spark-tests")
     yield s
     s.stop()
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched on this thread), counted
+    through a job tag once the listener bus has delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"count-jobs-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return out, len(jsc.statusTracker().getJobIdsForTag(tag))

@@ -6,6 +6,7 @@ duplicates."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stream_cdc_spark.operators import dedup, similarity
@@ -463,3 +464,46 @@ def test_ivf_assign_tiers_identical(spark):
 
     a, e = urows("arrow"), urows("expr")
     assert a == e, (a, e)
+
+    # Documented divergence (_argmin_cells_arrow): a null ELEMENT
+    # crosses Arrow as NaN, so every distance is NaN -> 0 on the Arrow
+    # tier where the expression tier's null algebra gives NULL; both
+    # pick the lowest cid.
+    cents2 = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cid bigint, cv array<float>"
+    )
+    holey = spark.createDataFrame(
+        [(7, [None, 0.5])], "vec_id bigint, embedding array<float>"
+    )
+    got = {
+        tier: [
+            (r.cell, r.dist_bp)
+            for r in similarity.ivf_assign(holey, cents2, tier=tier).collect()
+        ]
+        for tier in ("arrow", "expr")
+    }
+    assert got == {"arrow": [(0, 0)], "expr": [(0, None)]}, got
+
+
+def test_ivf_assign_arrow_centroid_collect_fails_loudly(spark, monkeypatch):
+    """The Arrow tier collects its centroid relation: past the row cap
+    it raises and points to tier='expr' instead of filling the driver,
+    and a NULL centroid vector raises a ValueError naming the centroid
+    (not a bare TypeError from the float conversion)."""
+    corpus = spark.createDataFrame(
+        [(1, [0.5, 0.5])], "vec_id bigint, embedding array<float>"
+    )
+    three = spark.createDataFrame(
+        [(c, [float(c), 0.0]) for c in range(3)], "cid bigint, cv array<float>"
+    )
+    monkeypatch.setattr(similarity, "_CENTROID_COLLECT_CAP", 2)
+    with pytest.raises(ValueError, match="tier='expr'"):
+        similarity.ivf_assign(corpus, three)
+    assert similarity.ivf_assign(corpus, three.filter("cid < 2")).count() == 1
+    assert similarity.ivf_assign(corpus, three, tier="expr").count() == 1
+
+    null_vec = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None)], "cid bigint, cv array<float>"
+    )
+    with pytest.raises(ValueError, match="centroid 1 has a NULL"):
+        similarity.ivf_assign(corpus, null_vec)

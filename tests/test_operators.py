@@ -8,6 +8,8 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from stream_cdc_spark.operators import batching, compaction, envelope
+from stream_cdc_spark.operators.util import ensure_parallelism
+from tests.conftest import count_jobs
 
 
 def test_classify_event_type(spark):
@@ -303,3 +305,24 @@ def test_equidepth_histogram_balance_and_approx_mode(spark):
     }
     assert set(approx) == {0, 1, 2, 3}
     assert all(abs(c - 250) <= 25 for c in approx.values())
+
+
+def test_ensure_parallelism_executes_no_plan(spark):
+    """A groupBy input already has its shuffle's partitioning: it comes
+    back unchanged and without a job (probing df.rdd of an adaptive
+    plan would run its map stages, which the consumer then runs again).
+    A single-partition exchange-free input is still repartitioned, and
+    its probe runs no job either."""
+    grouped = (
+        spark.range(1000)
+        .groupBy((F.col("id") % 7).alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    out, jobs = count_jobs(spark, lambda: ensure_parallelism(grouped))
+    assert (out is grouped, jobs) == (True, 0)
+
+    single = spark.range(0, 100, 1, numPartitions=1)
+    out, jobs = count_jobs(spark, lambda: ensure_parallelism(single))
+    assert jobs == 0
+    target = spark.sparkContext.defaultParallelism
+    assert out.rdd.getNumPartitions() == target > 1

@@ -25,7 +25,7 @@ from stream_cdc_spark.streaming.ann_index import (
     versioned_ann_topk_over_events,
 )
 from stream_cdc_spark.tables import load
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, count_jobs
 
 
 def _emb(spark):
@@ -804,3 +804,40 @@ def test_vdelete_harness_matches_statedir_ann(spark, tmp_path):
         )
     )
     assert got == want
+
+
+def test_assignment_plan_runs_no_job(spark, tmp_path):
+    """A trigger's assignment plan (groupBy + ledger anti-join + argmin)
+    builds without a job: the sinks hold their centroid rows, so nothing
+    is collected, and ensure_parallelism leaves the shuffled input alone.
+    The precomputed rows are exactly what a collect of the stored
+    array<float> centroid relation returns, so the cells cannot move."""
+    import random
+
+    rnd = random.Random(7)
+    cents = [(c, [rnd.uniform(-1, 1) for _ in range(8)]) for c in range(12)]
+    cents.append((12, [1e-40, -0.0, 3.0, 1.0 / 3, 0.1, -2.5, 7.0, 1e-7]))
+    for cls in (AnnIndexSnapshot, VersionedAnnIndexSnapshot):
+        sink = cls(str(tmp_path / cls.__name__), cents)
+        collected = [
+            (r[0], list(r[1]))
+            for r in sink._centroids_df(spark)
+            .select("cid", F.col("cv").cast("array<double>"))
+            .collect()
+        ]
+        assert sink._assignment_rows == collected, cls.__name__
+
+    snap = VersionedAnnIndexSnapshot(str(tmp_path / "s"), _centroids(spark))
+    snap.foreach_batch(_v1(spark), 0)
+    vecs = (
+        _v2(spark)
+        .select("vec_id", "version", F.col("embedding").alias("vv"))
+        .groupBy("vec_id", "version")
+        .agg(F.min("vv").alias("vv"))
+    )
+    for rel in snap._ledger_relations(spark, 1):
+        vecs = vecs.join(
+            rel.select("vec_id", "version"), ["vec_id", "version"], "left_anti"
+        )
+    _, jobs = count_jobs(spark, lambda: snap._assign(vecs, keep_residual=True))
+    assert jobs == 0

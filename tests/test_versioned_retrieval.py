@@ -1101,3 +1101,32 @@ def test_vacuum_handles_versioned_kills(spark, tmp_path):
     )
     dst.foreach_batch(dead_v1, 100)
     assert _snap_bm25(dst, spark) == _snap_bm25(src, spark)
+
+
+def test_build_runs_the_admission_plan_once(spark, tmp_path):
+    """Pin, then probe the pin: a take(1) cannot exit early past the
+    admission plan's groupBy/anti-join shuffles, so probing the lazy
+    plan before pinning ran the whole admission plan twice per trigger.
+    An all-redelivered batch still commits nothing."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    snap = VersionedRetrievalIndexSnapshot(str(tmp_path / "s"))
+    snap.foreach_batch(_v1(spark), 0)
+    seen = {int(e.executionId()) for e in executions()}
+    assert snap._build(spark, _v2(spark), 1) is not None
+    anti = [
+        e
+        for e in executions()
+        if int(e.executionId()) not in seen
+        and "LeftAnti" in e.physicalPlanDescription()
+    ]
+    assert len(anti) == 1, [e.description() for e in anti]
+
+    snap.foreach_batch(_v1(spark), 1)
+    for sub in ("docs", "postings"):
+        c = statedir.dir_counts(os.path.join(str(tmp_path / "s"), sub))
+        assert c["batch"] == 1, (sub, c)
