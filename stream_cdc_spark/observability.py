@@ -1,8 +1,8 @@
-"""Observability: per-query execution metrics and an engine logger.
+"""Observability: per-query execution metrics.
 
 Parity surface for the reference's profiling harness
-(stream_cdc/profiling/profiler.py:66-100, profile_app.py:70-140) and
-logger (stream_cdc/utils/logger.py:1-82), re-expressed for Spark: instead
+(stream_cdc/profiling/profiler.py:66-100, profile_app.py:70-140),
+re-expressed for Spark: instead
 of cProfile around single-process functions, pull the SQL metrics Spark
 already aggregates per execution (shuffle bytes, scan bytes/files, spills,
 output rows) out of the SQLAppStatusStore — works headless (spark.ui
@@ -12,30 +12,12 @@ the numbers are the executors' own, not a driver-side sample.
 
 from __future__ import annotations
 
-import logging
 import re
 import time
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-
-_LOG_FORMAT = "%(asctime)s - %(name)s - %(levelname)s - %(message)s"
-
-
-def get_logger(name: str = "stream_cdc_spark", level: int = logging.INFO) -> logging.Logger:
-    """Engine logger with the reference's format (utils/logger.py:24-40):
-    timestamp - name - level - message, single stream handler, no
-    propagation doubling."""
-    logger = logging.getLogger(name)
-    if not logger.handlers:
-        h = logging.StreamHandler()
-        h.setFormatter(logging.Formatter(_LOG_FORMAT))
-        logger.addHandler(h)
-        logger.propagate = False
-    logger.setLevel(level)
-    return logger
-
 
 # SQL metric values arrive human-formatted ("26.5 KiB", "1,000",
 # "1.0 s (0 ms, 2 ms, 5 ms)"); normalize to plain numbers (bytes / ms / count).

@@ -129,7 +129,6 @@ from stream_cdc_spark.streaming import statedir
 ANN_VECTORS_SCHEMA = "vec_id bigint, vv array<float>, cell bigint"
 ANN_VECTORS_SCHEMA_SQ8 = "vec_id bigint, code array<tinyint>, cell bigint"
 ANN_LEDGER_SCHEMA = "vec_id bigint"
-ANN_TOMBSTONES_SCHEMA = "vec_id bigint"
 
 # versioned variant (VersionedAnnIndexSnapshot): admission key is
 # (vec_id, version) — a re-embedding arrives as a higher version of the
@@ -297,7 +296,7 @@ class _DriftMonitor:
     trigger and folds with ``_reduce_moments`` — a commutative
     component-wise sum monoid), compared against the offline
     ``train_residual_baseline`` by ``drift_report``. Expects the owning
-    sink to define ``moments_dir`` and ``fs``."""
+    sink's ``_tables`` to declare ``_MOMENTS`` as its moments table."""
 
     @staticmethod
     def _moments_of(raw: DataFrame) -> DataFrame:
@@ -321,12 +320,7 @@ class _DriftMonitor:
 
     def moments(self, spark) -> DataFrame:
         """The accumulated per-cell residual moments (fully reduced)."""
-        return self._reduce_moments(
-            statedir.read_state(
-                spark, self.moments_dir, ANN_MOMENTS_SCHEMA, 1 << 62,
-                fs=self.fs,
-            )
-        )
+        return self._reduce_moments(self._tables.read(spark, "moments"))
 
     def drift_report(
         self, spark, baseline: DataFrame, z: float = 3.0, min_n: int = 100
@@ -374,7 +368,262 @@ class _DriftMonitor:
         )
 
 
-class AnnIndexSnapshot(_DriftMonitor):
+# the drift monitor's moments table, shared by both ANN sinks: folds are
+# component-wise sums per cell (a commutative monoid — minor/major folds
+# and the read-time reduction all compose); each trigger commits
+# num_cells rows as one file
+_MOMENTS = statedir.Table(
+    "moments", ANN_MOMENTS_SCHEMA, fold=_DriftMonitor._reduce_moments, files=1
+)
+
+# rebuild hints of the two ANN sinks' stamp guards
+_ANN_HINT = (
+    "Persisted cell assignments are not comparable across centroid sets "
+    "or schemes — a probe would silently score the wrong cells. Rebuild "
+    "the index by replaying the corpus through an AnnIndexSnapshot over a "
+    "fresh state dir with the new centroids."
+)
+_VANN_HINT = (
+    "Persisted cell assignments are not comparable across centroid sets, "
+    "schemes or the plain/versioned layout — a probe would silently score "
+    "the wrong cells or misread the row shape. Rebuild the index by "
+    "replaying the corpus through a VersionedAnnIndexSnapshot over a "
+    "fresh state dir with the new parameters."
+)
+
+
+class _AnnSink(_DriftMonitor):
+    """What both ANN sinks share: the centroid set and storage tier
+    stamped into the index, the doc-level tombstones, and the
+    statedir.SinkTables protocol over three tables — ledger/ (the slim
+    admission ledger, keyed and bucketed by the subclass's admission key
+    ``_KEY``), vectors/ (cell-sorted commits) and moments/ — folded in
+    that order and committed vectors, moments, ledger.
+
+    The ledger commits LAST because it is the admission commit point (a
+    redelivery of these rows under a LATER batch id anti-joins to empty
+    and writes nothing), so every state the batch owns must be durable
+    before the ledger rows are: a crash between two commits leaves the
+    earlier tables written, and a same-id replay overwrites them
+    identically while the ledger dir is still absent (ADVICE r13)."""
+
+    _KEY: tuple[str, ...]
+    _HINT: str
+
+    def _init_index(
+        self,
+        centroids: list[tuple[int, list[float]]],
+        quantize_bp: int | None,
+        storage: str,
+        sq_ranges: list[tuple[float, float]] | None,
+        scheme: str,
+    ) -> None:
+        """Validate and keep the parameters stamped into the index."""
+        if not centroids:
+            raise ValueError(
+                f"{type(self).__name__} needs a non-empty centroid set"
+            )
+        if storage not in ("float32", "sq8"):
+            raise ValueError(
+                f"storage must be 'float32' or 'sq8', got {storage!r}"
+            )
+        if storage == "sq8":
+            if not sq_ranges:
+                raise ValueError(
+                    "sq8 storage needs sq_ranges — the offline-trained "
+                    "per-dim (min, max) quantizer (train_sq_ranges)"
+                )
+            dim = len(centroids[0][1])
+            if len(sq_ranges) != dim:
+                raise ValueError(
+                    f"sq_ranges has {len(sq_ranges)} dims but centroids "
+                    f"have {dim}"
+                )
+        self.centroids = [(int(c), [float(x) for x in v]) for c, v in centroids]
+        self._assignment_rows = _assignment_rows(self.centroids)
+        self.quantize_bp = quantize_bp
+        self.storage = storage
+        self.sq_ranges = (
+            [(float(lo), float(hi)) for lo, hi in sq_ranges]
+            if sq_ranges
+            else None
+        )
+        self._stamp = {
+            "ann_scheme": scheme,
+            "ann_centroid_digest": centroid_digest(self.centroids),
+            "ann_num_cells": len(self.centroids),
+            "ann_quantize_bp": -1 if quantize_bp is None else int(quantize_bp),
+            "ann_storage": (
+                ANN_STORAGE_SQ8 if storage == "sq8" else ANN_STORAGE_FLOAT
+            ),
+            "ann_sq_digest": (
+                sq_ranges_digest(self.sq_ranges) if self.sq_ranges else "-"
+            ),
+        }
+
+    def _init_tables(
+        self,
+        state_dir: str,
+        id_col: str,
+        ledger_schema: str,
+        vectors_schema: str,
+        vectors_fold,
+        compact_every: int,
+        major_every: int,
+        commit_files: int,
+        bucketed: bool,
+        num_buckets: int,
+        fs: statedir.LocalFS | None,
+        extra_tombstones_roots: tuple[str, ...] = (),
+    ) -> None:
+        """The tombstone log and the three tables. ``vectors_fold``
+        applies the deletes (it reads the tombstone roots cross-state),
+        so the plain cell-sort is its read-equivalent fallback; both
+        re-sort by cell (row-preserving): batch commits are cell-sorted,
+        and without this a fold would interleave cells across its output
+        row groups — the probe's pushed IN filter would stop pruning
+        exactly when most of the corpus lives in compacted snapshots."""
+        self.state_dir = state_dir
+        self.fs = fs
+        self._tomb = statedir.TombstoneLog(
+            os.path.join(state_dir, "tombstones"),
+            store_col="vec_id",
+            source_col=id_col,
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            # read-unioned second-channel tombstones (cdc_full's
+            # out-of-band deletion feed) — never written here
+            extra_read_roots=extra_tombstones_roots,
+            fs=fs,
+        )
+        self.tombstones_dir = self._tomb.root
+        self._schema = vectors_schema
+        self._tables = statedir.SinkTables(
+            state_dir,
+            [
+                statedir.Table("ledger", ledger_schema, bucket_cols=self._KEY),
+                statedir.Table(
+                    "vectors",
+                    vectors_schema,
+                    fold=vectors_fold,
+                    fallback=lambda df: df.sortWithinPartitions("cell"),
+                    sort_by="cell",
+                ),
+                _MOMENTS,
+            ],
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            bucketed=bucketed,
+            num_buckets=num_buckets,
+            fs=fs,
+        )
+        self.vectors_dir = self._tables.dir("vectors")
+        self.ledger_dir = self._tables.dir("ledger")
+        self.moments_dir = self._tables.dir("moments")
+
+    # -- state ------------------------------------------------------------
+    def _centroids_df(self, spark) -> DataFrame:
+        return spark.createDataFrame(
+            self.centroids, "cid bigint, cv array<float>"
+        )
+
+    def _state(self, spark, batch_id: int) -> DataFrame:
+        # pre-storage-tier state (round 10) carries no ann_storage key;
+        # it is float32 by construction (_STAMP_DEFAULTS)
+        return self._tables.read_stamped(
+            spark, "vectors", batch_id, "cell", self._stamp,
+            "ANN index parameter", self._HINT, _STAMP_DEFAULTS,
+        )
+
+    def vectors(self, spark) -> DataFrame:
+        """Every admitted row as stored — (vec_id[, version], vv, cell)
+        on the float32 tier, code instead of vv on the sq8 tier.
+        Tombstoned (and, versioned, superseded) rows persist in the
+        un-folded tail until a compaction fold erases them (probes never
+        read them either way)."""
+        return self._state(spark, 1 << 62)
+
+    def ledger(self, spark) -> DataFrame:
+        """Every admitted admission key (``_KEY``) — the slim ledger the
+        redelivery guard (and the versioned version-max read rule)
+        reads. Never erased: a deleted id must never be re-admitted, so
+        it keeps tombstoned ids and is a superset of the post-fold
+        vectors/ keys whenever deletions exist."""
+        return self._tables.read(spark, "ledger")
+
+    def _ledger_relations(self, spark, batch_id: int) -> list[DataFrame]:
+        """The admission ledger visible to ``batch_id``, as the relation
+        list the redelivery guard chains anti-joins over
+        (``SinkTables.relations``)."""
+        return self._tables.relations(spark, "ledger", batch_id)
+
+    def _maybe_seed_ledger(self, spark, batch_id: int) -> None:
+        """Only pre-ledger plain roots need a seed (AnnIndexSnapshot)."""
+
+    def _assign(
+        self, vecs: DataFrame, keep_residual: bool = False
+    ) -> DataFrame:
+        """(``_KEY``, vv) -> the stamped storage relation: cells assigned
+        from the FULL-precision vector (same geometry on both tiers; on
+        the versioned sink the vector of THAT version, carried through
+        the per-row argmin, so a re-embedding lands in its own correct
+        cell), payload quantized only for sq8 storage (1 B/dim on disk).
+        Shared by the per-trigger _build and the offline migration
+        publish (operators/migration.rebuild_ann_index), so the two
+        paths cannot drift. ``keep_residual`` carries dist_bp through
+        for the drift monitor's partials (the per-trigger _build
+        path)."""
+        raw = similarity.ivf_assign_rows(
+            vecs,
+            self._assignment_rows,
+            id_col="vec_id",
+            vec_col="vv",
+            carry_cols=self._KEY[1:],
+        )
+        payload = (
+            _sq8_encode(F.col("vv"), self.sq_ranges).alias("code")
+            if self.storage == "sq8"
+            else F.col("vv")
+        )
+        extra = [F.col("dist_bp")] if keep_residual else []
+        return raw.select(
+            *self._KEY,
+            payload,
+            F.col("cell").alias("cell", metadata=self._stamp),
+            *extra,
+        )
+
+    def tombstones(self, spark) -> DataFrame:
+        """Every deleted vec_id, distinct."""
+        return self._tomb.read(spark)
+
+    # -- the sink: the statedir.SinkTables protocol ------------------------
+    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        self._state(spark, batch_id)  # stamp guard
+        # pre-ledger state roots seed their admission ledger before any
+        # fold of this trigger can apply tombstones to vectors/
+        self._maybe_seed_ledger(spark, batch_id)
+        self._tables.fold(spark, batch_id)
+        staged = self._build(spark, batch_df, batch_id)
+        if staged is None:
+            return  # empty trigger: commit nothing (missing == empty)
+        # the drift monitor's per-cell residual partials: the argmin's
+        # own dist_bp, reduced to num_cells rows — free at ingest (no
+        # extra scoring); the ledger last (class doc)
+        self._tables.commit(
+            batch_id,
+            {
+                "vectors": staged.drop("dist_bp"),
+                "moments": self._moments_of(staged),
+                "ledger": staged.select(*self._KEY),
+            },
+        )
+
+
+class AnnIndexSnapshot(_AnnSink):
     """foreachBatch sink: continuous IVF index admission over a
     (vec_id, embedding) stream, plus the `topk` probe over the persisted
     index. See module doc.
@@ -383,6 +632,9 @@ class AnnIndexSnapshot(_DriftMonitor):
     quantizer. Broadcast-small by IVF design; its digest is stamped into
     the persisted index and enforced on every admit/probe.
     """
+
+    _KEY = ("vec_id",)
+    _HINT = _ANN_HINT
 
     def __init__(
         self,
@@ -400,127 +652,29 @@ class AnnIndexSnapshot(_DriftMonitor):
         num_buckets: int = 32,
         fs: statedir.LocalFS | None = None,
     ):
-        if not centroids:
-            raise ValueError("AnnIndexSnapshot needs a non-empty centroid set")
-        if storage not in ("float32", "sq8"):
-            raise ValueError(
-                f"storage must be 'float32' or 'sq8', got {storage!r}"
-            )
-        if storage == "sq8":
-            if not sq_ranges:
-                raise ValueError(
-                    "sq8 storage needs sq_ranges — the offline-trained "
-                    "per-dim (min, max) quantizer (train_sq_ranges)"
-                )
-            dim = len(centroids[0][1])
-            if len(sq_ranges) != dim:
-                raise ValueError(
-                    f"sq_ranges has {len(sq_ranges)} dims but centroids "
-                    f"have {dim}"
-                )
-        self.state_dir = state_dir
-        self.vectors_dir = os.path.join(state_dir, "vectors")
-        self.ledger_dir = os.path.join(state_dir, "ledger")
-        # per-cell residual moments — the centroid-drift monitor's
-        # state (num_cells rows per trigger, folded as an integer-sum
-        # monoid; see drift_report)
-        self.moments_dir = os.path.join(state_dir, "moments")
-        self._tomb = statedir.TombstoneLog(
-            os.path.join(state_dir, "tombstones"),
-            store_col="vec_id",
-            source_col=id_col,
-            compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
-            fs=fs,
-        )
-        self.tombstones_dir = self._tomb.root
-        self.centroids = [(int(c), [float(x) for x in v]) for c, v in centroids]
-        self._assignment_rows = _assignment_rows(self.centroids)
+        self._init_index(centroids, quantize_bp, storage, sq_ranges, ANN_SCHEME)
         self.id_col = id_col
         self.vec_col = vec_col
-        self.quantize_bp = quantize_bp
-        self.compact_every = compact_every
-        self.major_every = major_every
-        self.commit_files = commit_files
-        self.storage = storage
-        self.sq_ranges = (
-            [(float(lo), float(hi)) for lo, hi in sq_ranges]
-            if sq_ranges
-            else None
-        )
         # bucketed=True folds the ledger/ admission state into a
         # vec_id-bucketed snapshot table, so the per-trigger redelivery
         # anti-join keeps the ledger side Exchange-free once the corpus
         # outgrows broadcast (statedir.state_relations; plan-asserted) —
         # the 100 TB shape, same switch as RetrievalIndexSnapshot's.
-        self.bucketed = bucketed
-        self.num_buckets = num_buckets
-        self.fs = fs
-        self._schema = (
-            ANN_VECTORS_SCHEMA_SQ8 if storage == "sq8" else ANN_VECTORS_SCHEMA
-        )
-        self._stamp = {
-            "ann_scheme": ANN_SCHEME,
-            "ann_centroid_digest": centroid_digest(self.centroids),
-            "ann_num_cells": len(self.centroids),
-            "ann_quantize_bp": -1 if quantize_bp is None else int(quantize_bp),
-            "ann_storage": (
-                ANN_STORAGE_SQ8 if storage == "sq8" else ANN_STORAGE_FLOAT
-            ),
-            "ann_sq_digest": (
-                sq_ranges_digest(self.sq_ranges) if self.sq_ranges else "-"
-            ),
-        }
-
-    # -- state ------------------------------------------------------------
-    def _centroids_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
-            self.centroids, "cid bigint, cv array<float>"
-        )
-
-    def _validate_stamp(self, state: DataFrame) -> None:
-        meta = dict(state.schema["cell"].metadata or {})
-        if not meta:
-            # schema-fallback read of an empty state: nothing persisted
-            # yet, nothing to contradict
-            return
-        # pre-storage-tier state (round 10) carries no ann_storage key;
-        # it is float32 by construction
-        got = {k: meta.get(k, _STAMP_DEFAULTS.get(k)) for k in self._stamp}
-        if got != self._stamp:
-            raise ValueError(
-                f"ANN index parameter mismatch: state at "
-                f"{self.vectors_dir!r} was built with {got!r} but this "
-                f"sink/probe uses {self._stamp!r}. Persisted cell "
-                f"assignments are not comparable across centroid sets or "
-                f"schemes — a probe would silently score the wrong cells. "
-                f"Rebuild the index by replaying the corpus through an "
-                f"AnnIndexSnapshot over a fresh state dir with the new "
-                f"centroids."
-            )
-
-    def _state(self, spark, batch_id: int) -> DataFrame:
-        state = statedir.read_state(
-            spark, self.vectors_dir, self._schema, batch_id, fs=self.fs
-        )
-        self._validate_stamp(state)
-        return state
-
-    def vectors(self, spark) -> DataFrame:
-        """Every admitted row as stored — (vec_id, vv, cell) on the
-        float32 tier, (vec_id, code, cell) on the sq8 tier. Tombstoned
-        rows persist in the un-folded tail until a compaction fold
-        applies the tombstones (probes exclude them either way)."""
-        return self._state(spark, 1 << 62)
-
-    def ledger(self, spark) -> DataFrame:
-        """Every admitted vec_id — the slim admission ledger the
-        redelivery guard reads. Keeps tombstoned ids forever (a deleted
-        id must never be re-admitted), so it is a superset of the
-        post-fold vectors/ id set whenever deletions exist."""
-        return statedir.read_state(
-            spark, self.ledger_dir, ANN_LEDGER_SCHEMA, 1 << 62, fs=self.fs
+        # vectors/ folds APPLY the tombstones (live rows only in the
+        # folded tier — eventual physical erasure, module doc):
+        # read-equivalent because probes already exclude tombstoned ids
+        # and tombstones are append-only, and admission-safe because the
+        # guard reads ledger/, never vectors/.
+        self._init_tables(
+            state_dir,
+            id_col,
+            ANN_LEDGER_SCHEMA,
+            ANN_VECTORS_SCHEMA_SQ8 if storage == "sq8" else ANN_VECTORS_SCHEMA,
+            lambda df: self._tomb.exclude(
+                df.sparkSession, df
+            ).sortWithinPartitions("cell"),
+            compact_every, major_every, commit_files, bucketed, num_buckets,
+            fs,
         )
 
     def _maybe_seed_ledger(self, spark, batch_id: int) -> None:
@@ -534,9 +688,9 @@ class AnnIndexSnapshot(_DriftMonitor):
         Runs BEFORE any vectors/ fold of this trigger, so fold-time
         tombstone application can never erase an admitted id ahead of
         its seeding."""
-        if statedir.state_paths(self.ledger_dir, 1 << 62, self.fs):
+        if self._tables.has_state("ledger"):
             return  # ledger exists (normal path after the first trigger)
-        if not statedir.state_paths(self.vectors_dir, batch_id, self.fs):
+        if not self._tables.has_state("vectors", batch_id):
             return  # fresh root: nothing to seed
         statedir.publish_snapshot(
             spark,
@@ -544,28 +698,6 @@ class AnnIndexSnapshot(_DriftMonitor):
             self._state(spark, batch_id).select("vec_id"),
             fs=self.fs,
         )
-
-    def _ledger_relations(self, spark, batch_id: int) -> list[DataFrame]:
-        """The admission ledger visible to ``batch_id``, as the relation
-        list the redelivery guard chains anti-joins over: with
-        ``bucketed=True`` the vec_id-bucketed snapshot arrives as its
-        registered bucketed table (Exchange-free join side) plus the
-        plain tail; otherwise one plain relation."""
-        if self.bucketed:
-            return statedir.state_relations(
-                spark, self.ledger_dir, ANN_LEDGER_SCHEMA, batch_id,
-                ["vec_id"], self.num_buckets, fs=self.fs,
-            )
-        return [
-            statedir.read_state(
-                spark, self.ledger_dir, ANN_LEDGER_SCHEMA, batch_id,
-                fs=self.fs,
-            )
-        ]
-
-    def tombstones(self, spark) -> DataFrame:
-        """Every deleted vec_id, distinct."""
-        return self._tomb.read(spark)
 
     def _probe_relation(self, spark) -> DataFrame:
         """The LIVE index as (vec_id, vv, cell) float vectors: tombstoned
@@ -621,96 +753,6 @@ class AnnIndexSnapshot(_DriftMonitor):
             prune_cells=True,
         )
 
-    # -- the sink ---------------------------------------------------------
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # refuse mismatched state BEFORE touching the statedir: a sink
-        # built with drifted centroids must not fold/delete batch dirs of
-        # an index it is then refused from probing (the fold would be
-        # read-equivalent, but the guard's contract is "no operation at
-        # all on mismatched state")
-        self._state(spark, batch_id)
-        # pre-ledger state roots seed their admission ledger before any
-        # fold of this trigger can apply tombstones to vectors/
-        self._maybe_seed_ledger(spark, batch_id)
-        statedir.maybe_compact(
-            spark, self.ledger_dir, ANN_LEDGER_SCHEMA, batch_id,
-            every=self.compact_every,
-            major_every=self.major_every,
-            # bucketed ledger snapshot: the admission anti-join's
-            # Exchange-free side at corpus scale (constructor doc)
-            bucket_cols=["vec_id"] if self.bucketed else None,
-            num_buckets=self.num_buckets,
-            fs=self.fs,
-        )
-        # fold committed prefix first — a replayed batch re-folds the
-        # identical prefix, so compaction inherits replay idempotence.
-        # Folds re-sort by cell (row-preserving, so read-equivalent):
-        # batch commits are cell-sorted, and without this a fold would
-        # interleave cells across its output row groups — the probe's
-        # pushed IN filter would stop pruning exactly when most of the
-        # corpus lives in compacted snapshots. Folds also APPLY the
-        # tombstones (live rows only in the folded tier — eventual
-        # physical erasure, module doc): read-equivalent because probes
-        # already exclude tombstoned ids and tombstones are append-only,
-        # and admission-safe because the guard reads ledger/, never
-        # vectors/. The tombstone read is cross-state and a CONCURRENT
-        # delete-stream compaction can invalidate it mid-fold, so the
-        # application carries the plain cell-sort as its read-equivalent
-        # fallback (statedir.maybe_compact_with_fallback doc).
-        statedir.maybe_compact_with_fallback(
-            spark, self.vectors_dir, self._schema, batch_id,
-            every=self.compact_every,
-            major_every=self.major_every,
-            transform=lambda df: self._tomb.exclude(
-                df.sparkSession, df
-            ).sortWithinPartitions("cell"),
-            fallback_transform=lambda df: df.sortWithinPartitions("cell"),
-            fs=self.fs,
-        )
-        # the drift monitor's moments fold: component-wise sums per cell
-        # (a commutative monoid — minor/major folds and the read-time
-        # reduction all compose)
-        statedir.maybe_compact(
-            spark, self.moments_dir, ANN_MOMENTS_SCHEMA, batch_id,
-            every=self.compact_every,
-            major_every=self.major_every,
-            transform=self._reduce_moments,
-            fs=self.fs,
-        )
-        staged = self._build(spark, batch_df, batch_id)
-        if staged is None:
-            return  # empty trigger: commit nothing (missing == empty)
-        (
-            staged.drop("dist_bp")
-            .coalesce(self.commit_files)
-            .sortWithinPartitions("cell")
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.vectors_dir, batch_id))
-        )
-        # the drift monitor's per-cell residual partials: the argmin's
-        # own dist_bp, reduced to num_cells rows — free at ingest (no
-        # extra scoring), folded as a sum monoid above. Committed
-        # BEFORE the ledger: the ledger is the admission commit point
-        # (a redelivery of these rows under a LATER batch id anti-joins
-        # to empty and writes nothing), so every state the batch owns
-        # must be durable before the ledger rows are — a crash between
-        # the two leaves the moments already written, and a same-id
-        # replay overwrites them identically while the ledger dir is
-        # still absent (ADVICE r13).
-        (
-            self._moments_of(staged)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.moments_dir, batch_id))
-        )
-        (
-            staged.select("vec_id")
-            .coalesce(self.commit_files)
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.ledger_dir, batch_id))
-        )
-
     def _build(self, spark, batch_df: DataFrame, batch_id: int):
         """The micro-batch's new STORAGE rows plus the residual column
         (vec_id, vv|code, cell, dist_bp), or None for an effectively-
@@ -744,41 +786,7 @@ class AnnIndexSnapshot(_DriftMonitor):
         # unpinned, the assignment (and the state anti-join behind it)
         # would recompute per action. Pinned AFTER the storage
         # projection (class doc: code-size blocks on the sq8 tier).
-        staged = self._assign(vecs, keep_residual=True).localCheckpoint(
-            eager=True
-        )
-        if not staged.take(1):
-            return None
-        return staged
-
-    def _assign(
-        self, vecs: DataFrame, keep_residual: bool = False
-    ) -> DataFrame:
-        """(vec_id, vv) -> the stamped storage relation: cells assigned
-        from the FULL-precision vectors (same geometry on both tiers),
-        payload quantized only for sq8 storage (1 B/dim on disk).
-        Shared by the per-trigger _build and the offline migration
-        publish (operators/migration.rebuild_ann_index), so the two
-        paths cannot drift. ``keep_residual`` carries dist_bp through
-        for the drift monitor's partials (the per-trigger _build
-        path)."""
-        raw = similarity.ivf_assign_rows(
-            vecs, self._assignment_rows, id_col="vec_id", vec_col="vv"
-        )
-        extra = [F.col("dist_bp")] if keep_residual else []
-        if self.storage == "sq8":
-            return raw.select(
-                "vec_id",
-                _sq8_encode(F.col("vv"), self.sq_ranges).alias("code"),
-                F.col("cell").alias("cell", metadata=self._stamp),
-                *extra,
-            )
-        return raw.select(
-            "vec_id",
-            "vv",
-            F.col("cell").alias("cell", metadata=self._stamp),
-            *extra,
-        )
+        return statedir.pinned_or_none(self._assign(vecs, keep_residual=True))
 
 
 def ann_topk_over_batches(
@@ -849,7 +857,7 @@ def ann_topk_over_batches(
     )
 
 
-class VersionedAnnIndexSnapshot(_DriftMonitor):
+class VersionedAnnIndexSnapshot(_AnnSink):
     """foreachBatch sink: UPDATE-capable continuous IVF index — the
     CDC-native widening of AnnIndexSnapshot, the exact q138 design the
     versioned retrieval index uses (streaming/retrieval_index.py
@@ -919,6 +927,9 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
     q03-style latest-image compaction).
     """
 
+    _KEY = ("vec_id", "version")
+    _HINT = _VANN_HINT
+
     def __init__(
         self,
         state_dir: str,
@@ -938,45 +949,38 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
         extra_tombstones_roots: tuple[str, ...] = (),
         fs: statedir.LocalFS | None = None,
     ):
-        if not centroids:
-            raise ValueError(
-                "VersionedAnnIndexSnapshot needs a non-empty centroid set"
-            )
-        if storage not in ("float32", "sq8"):
-            raise ValueError(
-                f"storage must be 'float32' or 'sq8', got {storage!r}"
-            )
-        if storage == "sq8":
-            if not sq_ranges:
-                raise ValueError(
-                    "sq8 storage needs sq_ranges — the offline-trained "
-                    "per-dim (min, max) quantizer (train_sq_ranges)"
-                )
-            dim = len(centroids[0][1])
-            if len(sq_ranges) != dim:
-                raise ValueError(
-                    f"sq_ranges has {len(sq_ranges)} dims but centroids "
-                    f"have {dim}"
-                )
-        self.state_dir = state_dir
-        self.vectors_dir = os.path.join(state_dir, "vectors")
-        self.ledger_dir = os.path.join(state_dir, "ledger")
-        # centroid-drift monitor state (_DriftMonitor) — on the
-        # versioned sink it measures every ADMITTED version
-        self.moments_dir = os.path.join(state_dir, "moments")
-        self._tomb = statedir.TombstoneLog(
-            os.path.join(state_dir, "tombstones"),
-            store_col="vec_id",
-            source_col=id_col,
-            compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
-            # read-unioned second-channel tombstones (cdc_full's
-            # out-of-band deletion feed) — never written here
-            extra_read_roots=extra_tombstones_roots,
-            fs=fs,
+        self._init_index(
+            centroids, quantize_bp, storage, sq_ranges, ANN_SCHEME_VERSIONED
         )
-        self.tombstones_dir = self._tomb.root
+        self.id_col = id_col
+        self.version_col = version_col
+        self.vec_col = vec_col
+        # cap on the matching-id count the probe will force-broadcast —
+        # same guard as the versioned retrieval probe (a hot probed cell
+        # can hold an unbounded corpus share; an unconditional hint
+        # bypasses the auto-broadcast threshold)
+        self.broadcast_max_ids = broadcast_max_ids
+        # The ledger is bucketed by the ADMISSION KEY so the redelivery
+        # anti-join reads the snapshot side Exchange-free at corpus
+        # scale. vectors/ folds keep only rows that are the latest live
+        # version at fold time — every fold erases superseded
+        # re-embeddings and tombstoned ids physically (read-equivalent:
+        # the ledger still drives the version-max read and versions are
+        # monotone, class doc). The moments measure every ADMITTED
+        # version.
+        self._init_tables(
+            state_dir,
+            id_col,
+            ANN_VLEDGER_SCHEMA,
+            ANN_VVECTORS_SCHEMA_SQ8 if storage == "sq8" else ANN_VVECTORS_SCHEMA,
+            lambda df: df.join(
+                self._latest_live(df.sparkSession),
+                ["vec_id", "version"],
+                "left_semi",
+            ).sortWithinPartitions("cell"),
+            compact_every, major_every, commit_files, bucketed, num_buckets,
+            fs, extra_tombstones_roots,
+        )
         # in-band versioned deletes: (vec_id, version) rows killing the
         # version prefix <= the delete's CDC sequence (class doc)
         self._vtomb = statedir.VersionedTombstoneLog(
@@ -990,108 +994,6 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
             fs=fs,
         )
         self.vtombstones_dir = self._vtomb.root
-        self.centroids = [(int(c), [float(x) for x in v]) for c, v in centroids]
-        self._assignment_rows = _assignment_rows(self.centroids)
-        self.id_col = id_col
-        self.version_col = version_col
-        self.vec_col = vec_col
-        self.quantize_bp = quantize_bp
-        self.compact_every = compact_every
-        self.major_every = major_every
-        self.commit_files = commit_files
-        self.storage = storage
-        self.sq_ranges = (
-            [(float(lo), float(hi)) for lo, hi in sq_ranges]
-            if sq_ranges
-            else None
-        )
-        self.bucketed = bucketed
-        self.num_buckets = num_buckets
-        # cap on the matching-id count the probe will force-broadcast —
-        # same guard as the versioned retrieval probe (a hot probed cell
-        # can hold an unbounded corpus share; an unconditional hint
-        # bypasses the auto-broadcast threshold)
-        self.broadcast_max_ids = broadcast_max_ids
-        self.fs = fs
-        self._schema = (
-            ANN_VVECTORS_SCHEMA_SQ8 if storage == "sq8" else ANN_VVECTORS_SCHEMA
-        )
-        self._stamp = {
-            "ann_scheme": ANN_SCHEME_VERSIONED,
-            "ann_centroid_digest": centroid_digest(self.centroids),
-            "ann_num_cells": len(self.centroids),
-            "ann_quantize_bp": -1 if quantize_bp is None else int(quantize_bp),
-            "ann_storage": (
-                ANN_STORAGE_SQ8 if storage == "sq8" else ANN_STORAGE_FLOAT
-            ),
-            "ann_sq_digest": (
-                sq_ranges_digest(self.sq_ranges) if self.sq_ranges else "-"
-            ),
-        }
-
-    # -- state ------------------------------------------------------------
-    def _centroids_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
-            self.centroids, "cid bigint, cv array<float>"
-        )
-
-    def _validate_stamp(self, state: DataFrame) -> None:
-        meta = dict(state.schema["cell"].metadata or {})
-        if not meta:
-            return  # schema-fallback read of an empty state
-        got = {k: meta.get(k, _STAMP_DEFAULTS.get(k)) for k in self._stamp}
-        if got != self._stamp:
-            raise ValueError(
-                f"ANN index parameter mismatch: state at "
-                f"{self.vectors_dir!r} was built with {got!r} but this "
-                f"sink/probe uses {self._stamp!r}. Persisted cell "
-                f"assignments are not comparable across centroid sets, "
-                f"schemes or the plain/versioned layout — a probe would "
-                f"silently score the wrong cells or misread the row "
-                f"shape. Rebuild the index by replaying the corpus "
-                f"through a VersionedAnnIndexSnapshot over a fresh state "
-                f"dir with the new parameters."
-            )
-
-    def _state(self, spark, batch_id: int) -> DataFrame:
-        state = statedir.read_state(
-            spark, self.vectors_dir, self._schema, batch_id, fs=self.fs
-        )
-        self._validate_stamp(state)
-        return state
-
-    def vectors(self, spark) -> DataFrame:
-        """Every admitted row as stored — (vec_id, version, vv, cell) on
-        the float32 tier, (vec_id, version, code, cell) on sq8.
-        Superseded and tombstoned rows persist in the un-folded tail
-        until a compaction fold erases them (probes never read them
-        either way)."""
-        return self._state(spark, 1 << 62)
-
-    def ledger(self, spark) -> DataFrame:
-        """Every admitted (vec_id, version) — the slim admission ledger
-        the redelivery guard AND the version-max read rule consult.
-        Never erased: first-wins admission and update supersession both
-        depend on its completeness."""
-        return statedir.read_state(
-            spark, self.ledger_dir, ANN_VLEDGER_SCHEMA, 1 << 62, fs=self.fs
-        )
-
-    def _ledger_relations(self, spark, batch_id: int) -> list[DataFrame]:
-        if self.bucketed:
-            return statedir.state_relations(
-                spark, self.ledger_dir, ANN_VLEDGER_SCHEMA, batch_id,
-                ["vec_id", "version"], self.num_buckets, fs=self.fs,
-            )
-        return [
-            statedir.read_state(
-                spark, self.ledger_dir, ANN_VLEDGER_SCHEMA, batch_id,
-                fs=self.fs,
-            )
-        ]
-
-    def tombstones(self, spark) -> DataFrame:
-        return self._tomb.read(spark)
 
     def versioned_tombstones(self, spark) -> DataFrame | None:
         """(vec_id, dead_version) kill watermarks of the in-band delete
@@ -1187,73 +1089,6 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
             latest, probes, k=k, quantize_bp=self.quantize_bp
         )
 
-    # -- the sink ---------------------------------------------------------
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # refuse mismatched state BEFORE touching the statedir (same
-        # no-operation-on-mismatch contract as the plain sink)
-        self._state(spark, batch_id)
-        statedir.maybe_compact(
-            spark, self.ledger_dir, ANN_VLEDGER_SCHEMA, batch_id,
-            every=self.compact_every,
-            major_every=self.major_every,
-            # bucketed by the ADMISSION KEY so the redelivery anti-join
-            # reads the snapshot side Exchange-free at corpus scale
-            bucket_cols=["vec_id", "version"] if self.bucketed else None,
-            num_buckets=self.num_buckets,
-            fs=self.fs,
-        )
-        # vectors/ folds keep only rows that are the latest live version
-        # at fold time — every fold erases superseded re-embeddings and
-        # tombstoned ids physically (read-equivalent: the ledger still
-        # drives the version-max read and versions are monotone, class
-        # doc). Cross-state tombstone read -> plain cell-sort fallback.
-        statedir.maybe_compact_with_fallback(
-            spark, self.vectors_dir, self._schema, batch_id,
-            every=self.compact_every,
-            major_every=self.major_every,
-            transform=lambda df: df.join(
-                self._latest_live(df.sparkSession),
-                ["vec_id", "version"],
-                "left_semi",
-            ).sortWithinPartitions("cell"),
-            fallback_transform=lambda df: df.sortWithinPartitions("cell"),
-            fs=self.fs,
-        )
-        # drift-monitor moments fold (sum monoid, _DriftMonitor doc)
-        statedir.maybe_compact(
-            spark, self.moments_dir, ANN_MOMENTS_SCHEMA, batch_id,
-            every=self.compact_every,
-            major_every=self.major_every,
-            transform=self._reduce_moments,
-            fs=self.fs,
-        )
-        staged = self._build(spark, batch_df, batch_id)
-        if staged is None:
-            return  # empty trigger: commit nothing (missing == empty)
-        (
-            staged.drop("dist_bp")
-            .coalesce(self.commit_files)
-            .sortWithinPartitions("cell")
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.vectors_dir, batch_id))
-        )
-        # moments BEFORE the ledger — the ledger is the admission
-        # commit point, so all batch-owned state must be durable first
-        # (the plain sink's ordering rationale, ADVICE r13)
-        (
-            self._moments_of(staged)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.moments_dir, batch_id))
-        )
-        (
-            staged.select("vec_id", "version")
-            .coalesce(self.commit_files)
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.ledger_dir, batch_id))
-        )
-
     def _build(self, spark, batch_df: DataFrame, batch_id: int):
         """The micro-batch's new STORAGE rows plus the residual column
         (vec_id, version, vv|code, cell, dist_bp), or None for an
@@ -1279,45 +1114,7 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
                 ["vec_id", "version"],
                 "left_anti",
             )
-        staged = self._assign(vecs, keep_residual=True)
-        staged = staged.localCheckpoint(eager=True)
-        if not staged.take(1):
-            return None
-        return staged
-
-    def _assign(
-        self, vecs: DataFrame, keep_residual: bool = False
-    ) -> DataFrame:
-        """(vec_id, version, vv) -> the stamped storage relation. Cells
-        are assigned from the FULL-precision vector of THAT version via
-        the shared similarity.ivf_assign argmin (carry_cols threads the
-        version through the per-row argmin), so a re-embedding lands in
-        its own correct cell — the geometry every probe relies on.
-        ``keep_residual`` carries dist_bp through for the drift
-        monitor's partials (the per-trigger _build path)."""
-        assigned = similarity.ivf_assign_rows(
-            vecs,
-            self._assignment_rows,
-            id_col="vec_id",
-            vec_col="vv",
-            carry_cols=("version",),
-        )
-        extra = [F.col("dist_bp")] if keep_residual else []
-        if self.storage == "sq8":
-            return assigned.select(
-                "vec_id",
-                "version",
-                _sq8_encode(F.col("vv"), self.sq_ranges).alias("code"),
-                F.col("cell").alias("cell", metadata=self._stamp),
-                *extra,
-            )
-        return assigned.select(
-            "vec_id",
-            "version",
-            "vv",
-            F.col("cell").alias("cell", metadata=self._stamp),
-            *extra,
-        )
+        return statedir.pinned_or_none(self._assign(vecs, keep_residual=True))
 
 
 def versioned_ann_topk_over_events(

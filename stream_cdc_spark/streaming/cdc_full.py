@@ -23,8 +23,9 @@ The two index surfaces commit CONCURRENTLY: the ANN surface (admission,
 then its tombstones) runs on a pyspark InheritableThread while the
 calling thread runs the retrieval surface (same order). This is safe
 because the surfaces share nothing but the pinned envelope batch — each
-has its own state root and its own ordered commits with its ledger
-last, and no commit of one was ever ordered against the other. The
+has its own state root and its own ordered commits (the
+statedir.SinkTables protocol), and no commit of one was ever ordered
+against the other. The
 reference's "one worker" wiring fixes the object graph, not a serial
 order, and the micro-batch contract (Structured Streaming, SIGMOD 2018)
 asks only that a replayed batch give the same result, which each leg

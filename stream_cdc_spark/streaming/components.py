@@ -55,8 +55,6 @@ surface built on top of its CDC feed.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -171,12 +169,14 @@ def incremental_cc_step(
     from stream_cdc_spark.operators.dedup import connected_components
 
     spark = edges.sparkSession
-    e = edges.select(
-        F.col(id_a).cast("long").alias("u"), F.col(id_b).cast("long").alias("v")
+    e = statedir.pinned_or_none(
+        edges.select(
+            F.col(id_a).cast("long").alias("u"),
+            F.col(id_b).cast("long").alias("v"),
+        )
     )
-    if not e.take(1):
+    if e is None:
         return None
-    e = e.localCheckpoint(eager=True)
     verts = e.select(F.col("u").alias("vertex")).union(
         e.select(F.col("v").alias("vertex"))
     ).distinct()
@@ -314,9 +314,8 @@ def components_over_batches(
 
 class IncrementalComponentsSnapshot:
     """foreachBatch sink over an (id_a, id_b) near-dup pair stream,
-    maintaining the union-find forest on statedir state. Same commit
-    protocol, replay idempotence, and compaction tiers as the LSH
-    snapshot sink (streaming/lsh_snapshot.py); `labels(spark)` is the
+    maintaining the union-find forest on statedir state under the
+    statedir.SinkTables per-trigger protocol; `labels(spark)` is the
     cluster-membership view consumers (and the equality tests) read.
     """
 
@@ -331,22 +330,32 @@ class IncrementalComponentsSnapshot:
         fs: statedir.LocalFS | None = None,
     ):
         self.state_dir = state_dir
-        self.members_dir = os.path.join(state_dir, "members")
-        self.parents_dir = os.path.join(state_dir, "parents")
+        # parents fold = path compression (read-equivalent: readers
+        # flatten anyway), bounding the chain depth — and with it the
+        # reader's pointer-jumping passes — at O(pending batches)
+        self._tables = statedir.SinkTables(
+            state_dir,
+            [
+                statedir.Table("members", MEMBERS_SCHEMA),
+                statedir.Table(
+                    "parents", PARENTS_SCHEMA, fold=flatten_parent_log
+                ),
+            ],
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            fs=fs,
+        )
+        self.members_dir = self._tables.dir("members")
+        self.parents_dir = self._tables.dir("parents")
         self.id_a = id_a
         self.id_b = id_b
-        self.compact_every = compact_every
-        self.major_every = major_every
-        self.commit_files = commit_files
         self.fs = fs
-
-    def _read(self, spark, root: str, schema: str, batch_id: int) -> DataFrame:
-        return statedir.read_state(spark, root, schema, batch_id, fs=self.fs)
 
     def labels(self, spark: SparkSession) -> DataFrame:
         """(vertex, component) over everything committed so far."""
-        members = self._read(spark, self.members_dir, MEMBERS_SCHEMA, 1 << 62)
-        parents = self._read(spark, self.parents_dir, PARENTS_SCHEMA, 1 << 62)
+        members = self._tables.read(spark, "members")
+        parents = self._tables.read(spark, "parents")
         return resolve_labels(members, flatten_parent_log(parents))
 
     def representatives(self, spark: SparkSession) -> DataFrame:
@@ -356,29 +365,41 @@ class IncrementalComponentsSnapshot:
             F.count(F.lit(1)).alias("size")
         )
 
-    def _compact(self, spark, batch_id: int) -> None:
-        # parents fold = path compression (read-equivalent: readers
-        # flatten anyway), bounding the chain depth — and with it the
-        # reader's pointer-jumping passes — at O(pending batches)
-        for root, schema, transform in (
-            (self.members_dir, MEMBERS_SCHEMA, None),
-            (self.parents_dir, PARENTS_SCHEMA, flatten_parent_log),
-        ):
-            statedir.maybe_compact(
-                spark, root, schema, batch_id,
-                every=self.compact_every,
-                major_every=self.major_every,
-                transform=transform,
-                fs=self.fs,
-            )
-
     def is_empty(self, batch_id: int = 1 << 62) -> bool:
         """True while no batch has committed any member row — the
         never-folded-anything state (used by the dedup sinks to decide
         whether a late-enabled cluster_state needs a match-history
         backfill). Metadata-only: no data files are read."""
-        return not statedir.state_paths(self.members_dir, batch_id, self.fs)
+        return not self._tables.has_state("members", batch_id)
 
+    def fold_matches(
+        self,
+        spark: SparkSession,
+        owner: statedir.SinkTables,
+        table: str,
+        batch_id: int,
+    ) -> None:
+        """Fold the matches a dedup sink (LSH or media, cluster_state=
+        True) just committed to its ``table`` for ``batch_id`` into the
+        forest. The committed rows are read back, so the match plan is
+        not recomputed, and a replayed batch re-reads identical rows:
+        cluster state inherits the exactly-once rule.
+
+        While the forest is still empty, the owner's whole committed
+        match history folds in with this batch: cluster_state enabled
+        AFTER matches accrued would otherwise ignore historical pairs
+        and report wrong survivorship roots. The one-time O(total
+        matches) backfill is replay-exact, because a replayed batch's
+        own forest dirs are invisible at its read bound, so it
+        recomputes the identical union."""
+        cols = (self.id_a, self.id_b)
+        edges = owner.read_batch(spark, table, batch_id).select(*cols)
+        if self.is_empty(batch_id):
+            history = owner.read(spark, table, batch_id).select(*cols)
+            edges = history.unionByName(edges)
+        self.foreach_batch(edges, batch_id)
+
+    # -- the sink: the statedir.SinkTables protocol ------------------------
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # Edge-free trigger: exit before ANY state read — without this,
@@ -390,35 +411,26 @@ class IncrementalComponentsSnapshot:
         # edge-bearing batch, exactly like the skipped-commit rule.
         if not batch_df.take(1):
             return
-        # fold committed prefix first — a replayed batch re-folds the
-        # identical prefix, so compaction inherits replay idempotence
-        self._compact(spark, batch_id)
-        members = self._read(spark, self.members_dir, MEMBERS_SCHEMA, batch_id)
-        parents = self._read(spark, self.parents_dir, PARENTS_SCHEMA, batch_id)
+        self._tables.fold(spark, batch_id)
         step = incremental_cc_step(
-            members,
-            flatten_parent_log(parents),
+            self._tables.read(spark, "members", batch_id),
+            flatten_parent_log(self._tables.read(spark, "parents", batch_id)),
             batch_df,
             self.id_a,
             self.id_b,
         )
         if step is None:
-            # nothing to commit: the read-exclusion rule makes a missing
-            # batch dir indistinguishable from an empty one — replay
-            # stays exact and idle triggers add no metadata
-            return
+            return  # empty trigger: commit nothing (missing == empty)
         m_delta, p_delta = step
-        # pin before the emptiness probe so the write doesn't recompute,
-        # and skip empty deltas entirely — a redundant-edge batch (all
-        # endpoints known, no merges) then commits NOTHING, which the
-        # read-exclusion rule makes indistinguishable from an empty dir
-        for df, root in ((m_delta, self.members_dir), (p_delta, self.parents_dir)):
-            df = df.localCheckpoint(eager=True)
-            if not df.take(1):
-                continue
-            df.coalesce(self.commit_files).write.mode("overwrite").parquet(
-                statedir.batch_dir(root, batch_id)
-            )
+        # empty deltas commit nothing too: a redundant-edge batch (all
+        # endpoints known, no merges) then adds no batch dir at all
+        self._tables.commit(
+            batch_id,
+            {
+                "members": statedir.pinned_or_none(m_delta),
+                "parents": statedir.pinned_or_none(p_delta),
+            },
+        )
 
     @property
     def sink(self):

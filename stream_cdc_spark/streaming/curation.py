@@ -28,25 +28,12 @@ earlier id as dup_of. In-batch peers compare min-id-representative
 whole multimodal gate has a deterministic batch twin
 (tests/test_curation_stream.py restart-equality).
 
-Exactly-once without sink transactions: every write is an OVERWRITE of
-the current batch's own subdirectory, and state reads exclude subdirs
-with batch id >= the executing batch. A replayed micro-batch therefore
-sees exactly the state it saw the first time (its own partial output is
-invisible to itself) and idempotently rewrites the same subdirs — the
-classic batch-versioned foreachBatch pattern, the same guarantee the
-reference gets from its offset-after-flush ordering
-(stream_cdc/coordinator.py:281-303), generalized to three state tables.
-
-Every ``compact_every`` committed batches the per-batch subdirs are
-folded into an atomically-published compact=<w> snapshot (the read rule
-is unchanged, so replay idempotence survives the fold — see
-streaming/statedir.py for the crash-interleaving proof), keeping driver
-listing and union planning O(compact_every) instead of O(stream age);
-``major_every=K`` enables the leveled tier (L1 delta folds of only the
-pending batch dirs, full O(total state) folds 1/K as often — the shape
-for a kept-corpus that dwarfs any micro-batch). This is the parquet
-analogue of the reference's O(1)-forever checkpoint item (reference:
-stream_cdc/state/dynamodb.py:76-91).
+Exactly-once without sink transactions: the per-trigger protocol of
+statedir.SinkTables (overwrite of the batch's own subdirs, reads that
+exclude them, folds of the committed prefix, the leveled tier with
+``major_every``) — the same guarantee the reference gets from its
+offset-after-flush ordering (stream_cdc/coordinator.py:281-303),
+generalized to three state tables (five in multimodal mode).
 
 At 100 TB the kept/ and index/ tables compact into bucketed tables (see
 tests/test_bucketing.py: the (band, key)-bucketed index joins without an
@@ -75,12 +62,6 @@ def default_quality_predicate(text_col: str, min_tokens: int) -> Column:
     CurationPipeline and the composed CDC pipeline
     (streaming/cdc_full.py), so the two gates cannot drift."""
     return F.size(F.split(F.col(text_col), " ")) >= min_tokens
-
-
-def _subdirs_before(root: str, batch_id: int) -> list[str]:
-    """Back-compat shim for pre-compaction callers: the read set for
-    ``batch_id`` (now including the compacted snapshot)."""
-    return statedir.state_paths(root, batch_id)
 
 
 class CurationPipeline:
@@ -132,9 +113,6 @@ class CurationPipeline:
         # (None = local/HDFS default; inject an object-store client for
         # S3/GCS state roots — statedir module doc)
         self.fs = fs
-        self.decisions_dir = os.path.join(state_dir, "decisions")
-        self.kept_dir = os.path.join(state_dir, "kept")
-        self.index_dir = os.path.join(state_dir, "index")
         # multimodal mode (module doc): perceptual dHash admission
         # between the quality gate and text dedup, state shared under
         # the same root / commit protocol
@@ -143,24 +121,35 @@ class CurationPipeline:
         self.media_grid_h = media_grid_h
         self.media_max_hamming = media_max_hamming
         self.media_n_bands = media_n_bands
-        self.media_sigs_dir = os.path.join(state_dir, "media_sigs")
-        self.media_index_dir = os.path.join(state_dir, "media_index")
+        tables = [
+            statedir.Table("decisions", DECISIONS_SCHEMA),
+            statedir.Table("kept", KEPT_SCHEMA),
+            statedir.Table("index", INDEX_SCHEMA),
+        ]
+        if media_blob_col is not None:
+            tables += [
+                statedir.Table("media_sigs", MEDIA_SIGS_SCHEMA),
+                statedir.Table("media_index", MEDIA_INDEX_SCHEMA),
+            ]
+        self._tables = statedir.SinkTables(
+            state_dir,
+            tables,
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            fs=fs,
+        )
+        self.decisions_dir = self._tables.dir("decisions")
+        self.kept_dir = self._tables.dir("kept")
+        self.index_dir = self._tables.dir("index")
+        self.media_sigs_dir = self._tables.dir("media_sigs")
+        self.media_index_dir = self._tables.dir("media_index")
         self.id_col = id_col
         self.text_col = text_col
         self.threshold_ppm = threshold_ppm
         self.k = k
         self.num_hashes = num_hashes
         self.bands = bands
-        self.compact_every = compact_every
-        # major_every=K enables the leveled tier: pending batch dirs fold
-        # into L1 deltas (O(recent)); a full O(total state) fold only
-        # every K deltas — the shape for a kept-corpus that dwarfs any
-        # micro-batch (statedir module doc)
-        self.major_every = major_every
-        # micro-batch commits are single-file by default (a batch is
-        # small by construction; multi-file commits balloon long-horizon
-        # file counts and per-trigger write latency)
-        self.commit_files = commit_files
         # Column construction needs an active SparkContext; defer the
         # default predicate so the pipeline can be built config-first
         # (sink_registry) before any session exists.
@@ -199,31 +188,16 @@ class CurationPipeline:
 
     # -- state ------------------------------------------------------------
     def _read(self, spark, root: str, schema: str, batch_id: int) -> DataFrame:
-        return statedir.read_state(spark, root, schema, batch_id, fs=self.fs)
+        """State of the table stored at ``root``, read with the table's
+        declared schema (``schema`` is kept for callers)."""
+        return self._tables.read(spark, os.path.basename(root), batch_id)
 
     def corpus(self, spark) -> DataFrame:
         """The curated corpus accumulated so far (all committed batches)."""
-        return self._read(spark, self.kept_dir, KEPT_SCHEMA, 1 << 62)
+        return self._tables.read(spark, "kept")
 
     def decisions(self, spark) -> DataFrame:
-        return self._read(spark, self.decisions_dir, DECISIONS_SCHEMA, 1 << 62)
-
-    def _compact(self, spark, batch_id: int) -> None:
-        plans = [
-            (self.decisions_dir, DECISIONS_SCHEMA),
-            (self.kept_dir, KEPT_SCHEMA),
-            (self.index_dir, INDEX_SCHEMA),
-        ]
-        if self.media_blob_col is not None:
-            plans += [
-                (self.media_sigs_dir, MEDIA_SIGS_SCHEMA),
-                (self.media_index_dir, MEDIA_INDEX_SCHEMA),
-            ]
-        for root, schema in plans:
-            statedir.maybe_compact(
-                spark, root, schema, batch_id, every=self.compact_every,
-                major_every=self.major_every, fs=self.fs,
-            )
+        return self._tables.read(spark, "decisions")
 
     def _media_gate(self, spark, qual_ok: DataFrame, batch_id: int):
         """The perceptual admission stage (multimodal mode): returns
@@ -237,23 +211,20 @@ class CurationPipeline:
 
         mcol = self.media_blob_col
         m = qual_ok.filter(F.col(mcol).isNotNull()).select("doc_id", mcol)
-        sigs_new = dhash_bands(
-            m, "doc_id", mcol,
-            self.media_grid_w, self.media_grid_h, self.media_n_bands,
-        ).withColumnRenamed("id", "doc_id")
-        if not sigs_new.take(1):
-            return None
         # pinned: feeds the band explode, the verify join, and the commit
-        sigs_new = sigs_new.localCheckpoint(eager=True)
+        sigs_new = statedir.pinned_or_none(
+            dhash_bands(
+                m, "doc_id", mcol,
+                self.media_grid_w, self.media_grid_h, self.media_n_bands,
+            ).withColumnRenamed("id", "doc_id")
+        )
+        if sigs_new is None:
+            return None
         index_new = sigs_new.select(
             "doc_id", F.posexplode("bands").alias("band_idx", "band_val")
         )
-        state_sigs = self._read(
-            spark, self.media_sigs_dir, MEDIA_SIGS_SCHEMA, batch_id
-        )
-        state_index = self._read(
-            spark, self.media_index_dir, MEDIA_INDEX_SCHEMA, batch_id
-        )
+        state_sigs = self._tables.read(spark, "media_sigs", batch_id)
+        state_index = self._tables.read(spark, "media_index", batch_id)
         # candidates: vs the ADMITTED corpus, and vs earlier-id quality
         # survivors of this batch (min-id representative — module doc)
         cand_corpus = (
@@ -297,13 +268,18 @@ class CurationPipeline:
         )
         return sigs_new, media_rejected
 
-    # -- the sink ---------------------------------------------------------
+    # -- the sink: the statedir.SinkTables protocol ------------------------
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # Compact FIRST (before this batch writes anything): a replayed
-        # batch then re-folds the identical committed prefix, so the fold
-        # is itself covered by the idempotence rule.
-        self._compact(spark, batch_id)
+        self._tables.fold(spark, batch_id)
+        built = self._build(spark, batch_df, batch_id)
+        if built is None:
+            return  # empty trigger: commit nothing (missing == empty)
+        self._tables.commit(batch_id, built)
+
+    def _build(self, spark, batch_df: DataFrame, batch_id: int):
+        """{table: rows to commit} for one micro-batch, or None for an
+        effectively-empty one."""
         # Pin the batch: it feeds the quality gate, the dedup admission
         # (itself a multi-branch plan) and three commit writes — without
         # the eager localCheckpoint each action re-reads the source and
@@ -315,13 +291,11 @@ class CurationPipeline:
         ]
         if self.media_blob_col is not None:
             cols.append(F.col(self.media_blob_col))
-        docs = (
-            batch_df.select(*cols)
-            .dropDuplicates(["doc_id"])
-            .localCheckpoint(eager=True)
+        docs = statedir.pinned_or_none(
+            batch_df.select(*cols).dropDuplicates(["doc_id"])
         )
-        if not docs.take(1):
-            return
+        if docs is None:
+            return None
         qual_ok = docs.filter(self.quality_predicate)
         qual_bad = docs.join(qual_ok, "doc_id", "left_anti")
 
@@ -342,12 +316,12 @@ class CurationPipeline:
         # downstream (text dedup, kept/) is text-shaped regardless of mode
         qual_ok = qual_ok.select("doc_id", "text")
 
-        corpus = self._read(spark, self.kept_dir, KEPT_SCHEMA, batch_id)
+        corpus = self._tables.read(spark, "kept", batch_id)
         # NOTE: no forced schema on the index read — the LSH parameter
         # stamp rides column metadata, and forcing INDEX_SCHEMA stripped
         # it, disarming the mismatch guard exactly on the restart path
         # where parameter drift happens (round-5 advice).
-        index = self._read(spark, self.index_dir, INDEX_SCHEMA, batch_id)
+        index = self._tables.read(spark, "index", batch_id)
         # Pin the admission verdicts too: one row per batch doc, consumed
         # by the decisions write AND the admitted semi-join — unpinned, the
         # second consumer replays the whole candidate+verify join tree.
@@ -379,20 +353,16 @@ class CurationPipeline:
                     "dup_of",
                 )
             )
-        decisions.coalesce(self.commit_files).write.mode("overwrite").parquet(
-            statedir.batch_dir(self.decisions_dir, batch_id)
-        )
         admitted = qual_ok.join(
             adm.filter("keep").select("doc_id"), "doc_id", "left_semi"
         )
-        admitted.coalesce(self.commit_files).write.mode("overwrite").parquet(
-            statedir.batch_dir(self.kept_dir, batch_id)
-        )
-        dedup.minhash_band_index(
-            admitted, k=self.k, num_hashes=self.num_hashes, bands=self.bands
-        ).coalesce(self.commit_files).write.mode("overwrite").parquet(
-            statedir.batch_dir(self.index_dir, batch_id)
-        )
+        out = {
+            "decisions": decisions,
+            "kept": admitted,
+            "index": dedup.minhash_band_index(
+                admitted, k=self.k, num_hashes=self.num_hashes, bands=self.bands
+            ),
+        }
         if self.media_blob_col is not None:
             # media state holds ADMITTED docs only (cross-batch media
             # comparisons are chained-greedy against the kept corpus)
@@ -403,20 +373,11 @@ class CurationPipeline:
                 if media_sigs_new is not None
                 else spark.createDataFrame([], MEDIA_SIGS_SCHEMA)
             )
-
-            def commit(df: DataFrame, root: str) -> None:
-                df.coalesce(self.commit_files).write.mode(
-                    "overwrite"
-                ).parquet(statedir.batch_dir(root, batch_id))
-
-            commit(adm_sigs, self.media_sigs_dir)
-            commit(
-                adm_sigs.select(
-                    "doc_id",
-                    F.posexplode("bands").alias("band_idx", "band_val"),
-                ),
-                self.media_index_dir,
+            out["media_sigs"] = adm_sigs
+            out["media_index"] = adm_sigs.select(
+                "doc_id", F.posexplode("bands").alias("band_idx", "band_val")
             )
+        return out
 
     def sink(self):
         """The foreachBatch callable for writeStream."""

@@ -31,17 +31,11 @@ streaming/statedir.py, which also holds the crash-interleaving proof):
                         components.py)
     */compact=<w>/      compacted snapshot of all batches < w
 
-Every ``compact_every`` committed batches each table's subdirs fold into
-one atomically-published snapshot (counts additionally re-aggregate on
-fold — readers sum increments, so the reduction is read-equivalent),
-bounding dir listing and union planning at O(compact_every) regardless
-of stream age (``major_every=K`` switches to the leveled tier: cheap L1
-delta folds of just the pending batch dirs, with the O(total state) full
-fold paid only every K deltas — the shape for a corpus that dwarfs any
-micro-batch; statedir module doc); an effectively-empty micro-batch
-commits NOTHING (the
-read-exclusion rule makes the skipped dirs unobservable — a replay of
-the empty batch sees the same pre-batch state either way).
+Every trigger runs the statedir.SinkTables protocol over these tables
+(folds every ``compact_every`` batches, leveled with ``major_every``;
+an effectively-empty micro-batch commits nothing); counts additionally
+re-aggregate on fold — readers sum increments, so the reduction is
+read-equivalent.
 
 Semantics (matches _bucket_matches):
   - every arriving doc is compared against all bucket residents, emits a
@@ -110,10 +104,31 @@ class LshDedupSnapshot:
         # (None = local/HDFS default; inject an object-store client for
         # S3/GCS state roots — statedir module doc)
         self.fs = fs
-        self.sigs_dir = os.path.join(state_dir, "sigs")
-        self.index_dir = os.path.join(state_dir, "index")
-        self.counts_dir = os.path.join(state_dir, "counts")
-        self.matches_dir = os.path.join(state_dir, "matches")
+        # counts re-aggregate on fold (readers sum increments, so the
+        # reduction is read-equivalent); with bucketed=True sigs/ and
+        # index/ fold into doc_id- and (band, key)-bucketed snapshots
+        # (module doc)
+        self._tables = statedir.SinkTables(
+            state_dir,
+            [
+                statedir.Table("matches", MATCHES_SCHEMA),
+                statedir.Table("counts", COUNTS_SCHEMA, fold=_sum_counts),
+                statedir.Table("sigs", SIGS_SCHEMA, bucket_cols=("doc_id",)),
+                statedir.Table(
+                    "index", INDEX_SCHEMA, bucket_cols=("band", "key")
+                ),
+            ],
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            bucketed=bucketed,
+            num_buckets=num_buckets,
+            fs=fs,
+        )
+        self.sigs_dir = self._tables.dir("sigs")
+        self.index_dir = self._tables.dir("index")
+        self.counts_dir = self._tables.dir("counts")
+        self.matches_dir = self._tables.dir("matches")
         self.text_col = text_col
         self.id_col = id_col
         self.k = k
@@ -121,19 +136,6 @@ class LshDedupSnapshot:
         self.bands = bands
         self.min_agree = min_agree
         self.max_bucket = max_bucket
-        self.compact_every = compact_every
-        # major_every=K: leveled compaction — pending batch dirs fold
-        # into L1 deltas (O(recent)); the full O(total state) fold runs
-        # only every K deltas (statedir module doc)
-        self.major_every = major_every
-        self.bucketed = bucketed
-        self.num_buckets = num_buckets
-        # A micro-batch is small by construction (the same premise that
-        # lets every batch-side join broadcast), so its commit is a
-        # single file per table by default — without this each trigger
-        # writes up to <shuffle partitions> part files per dir, and the
-        # long-horizon file count (and per-batch write latency) balloons.
-        self.commit_files = commit_files
         # cluster_state=True maintains dedup-CLUSTER membership (and the
         # min-id survivorship representative) continuously: each batch's
         # committed matches feed the incremental union-find forest under
@@ -158,14 +160,16 @@ class LshDedupSnapshot:
 
     # -- state ------------------------------------------------------------
     def _read(self, spark, root: str, schema: str, batch_id: int) -> DataFrame:
-        return statedir.read_state(spark, root, schema, batch_id, fs=self.fs)
+        """State of the table stored at ``root``, read with the table's
+        declared schema (``schema`` is kept for callers)."""
+        return self._tables.read(spark, os.path.basename(root), batch_id)
 
     def matches(self, spark) -> DataFrame:
         """All matches emitted by committed batches."""
-        return self._read(spark, self.matches_dir, MATCHES_SCHEMA, 1 << 62)
+        return self._tables.read(spark, "matches")
 
     def processed(self, spark) -> DataFrame:
-        return self._read(spark, self.sigs_dir, SIGS_SCHEMA, 1 << 62)
+        return self._tables.read(spark, "sigs")
 
     def clusters(self, spark) -> DataFrame:
         """(vertex, component) cluster membership over every committed
@@ -183,88 +187,36 @@ class LshDedupSnapshot:
         """The compacted admitted-corpus band index as its registered
         (band, key)-bucketed table — the shuffle-free join side for batch
         consumers; None until the first bucketed compaction ran."""
-        if not self.bucketed:
+        if not self._tables.bucketed:
             return None
         return statedir.bucketed_relation(
             spark, self.index_dir, INDEX_SCHEMA, ["band", "key"],
-            self.num_buckets, fs=self.fs,
+            self._tables.num_buckets, fs=self.fs,
         )
 
-    def _compact(self, spark, batch_id: int) -> None:
-        sum_counts = lambda df: df.groupBy("band", "key").agg(  # noqa: E731
-            F.sum("cnt").alias("cnt")
-        )
-        plans = [
-            (self.matches_dir, MATCHES_SCHEMA, None, None),
-            (self.counts_dir, COUNTS_SCHEMA, sum_counts, None),
-            (self.sigs_dir, SIGS_SCHEMA, None, ["doc_id"]),
-            (self.index_dir, INDEX_SCHEMA, None, ["band", "key"]),
-        ]
-        for root, schema, transform, bucket_cols in plans:
-            statedir.maybe_compact(
-                spark, root, schema, batch_id,
-                every=self.compact_every,
-                major_every=self.major_every,
-                transform=transform,
-                bucket_cols=bucket_cols if self.bucketed else None,
-                num_buckets=self.num_buckets,
-                fs=self.fs,
-            )
-
-    # -- the sink ---------------------------------------------------------
+    # -- the sink: the statedir.SinkTables protocol ------------------------
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # fold committed prefix first — a replayed batch re-folds the
-        # identical prefix, so compaction inherits replay idempotence
-        self._compact(spark, batch_id)
+        self._tables.fold(spark, batch_id)
         built = self._build(spark, batch_df, batch_id)
         if built is None:
-            # nothing to commit: the read-exclusion rule makes a missing
-            # batch dir indistinguishable from an empty one, so skipping
-            # the write keeps replay exact AND stops metadata growth on
-            # idle triggers (round-5: 4 empty dirs per empty batch)
-            return
+            return  # empty trigger: commit nothing (missing == empty)
         batch_sigs, admitted_bk, matches = built
-
-        # -- commit: overwrite this batch's own subdirs -------------------
-        def commit(df: DataFrame, root: str) -> None:
-            df.coalesce(self.commit_files).write.mode("overwrite").parquet(
-                statedir.batch_dir(root, batch_id)
-            )
-
-        commit(matches, self.matches_dir)
-        commit(batch_sigs, self.sigs_dir)
-        commit(admitted_bk.select("doc_id", "band", "key"), self.index_dir)
-        commit(
-            admitted_bk.groupBy("band", "key").agg(
-                F.count(F.lit(1)).alias("cnt")
-            ),
-            self.counts_dir,
+        self._tables.commit(
+            batch_id,
+            {
+                "matches": matches,
+                "sigs": batch_sigs,
+                "index": admitted_bk.select("doc_id", "band", "key"),
+                "counts": admitted_bk.groupBy("band", "key").agg(
+                    F.count(F.lit(1)).alias("cnt")
+                ),
+            },
         )
         if self._components is not None:
-            # Fold this batch's matches into the cluster forest — read
-            # the just-COMMITTED rows back (no recompute of the match
-            # plan) and let the components sink run its own compaction
-            # and replay-idempotent batch-dir overwrite under clusters/.
-            # A replayed batch re-reads identical matches, so cluster
-            # state inherits the exactly-once rule.
-            edges = spark.read.parquet(
-                statedir.batch_dir(self.matches_dir, batch_id)
-            ).select("dup_of", "doc_id")
-            if self._components.is_empty(batch_id):
-                # cluster_state enabled AFTER matches history accrued:
-                # without a backfill, clusters() would silently ignore
-                # historical pairs and report wrong survivorship roots
-                # (review finding). Fold the whole committed history
-                # with this batch — a one-time O(total matches) cost,
-                # replay-exact because a replayed batch's own forest
-                # dirs are invisible at its read bound, so it recomputes
-                # the identical union.
-                history = self._read(
-                    spark, self.matches_dir, MATCHES_SCHEMA, batch_id
-                ).select("dup_of", "doc_id")
-                edges = history.unionByName(edges)
-            self._components.foreach_batch(edges, batch_id)
+            self._components.fold_matches(
+                spark, self._tables, "matches", batch_id
+            )
 
     def _build(self, spark, batch_df: DataFrame, batch_id: int):
         """Build (batch_sigs, admitted_bk, matches) for one micro-batch, or
@@ -281,7 +233,7 @@ class LshDedupSnapshot:
             F.col(self.text_col).alias("text"),
         ).dropDuplicates(["doc_id"])
 
-        state_sigs = self._read(spark, self.sigs_dir, SIGS_SCHEMA, batch_id)
+        state_sigs = self._tables.read(spark, "sigs", batch_id)
         # redelivery guard: anything already processed is dropped whole
         docs = docs.join(
             state_sigs.select("doc_id"), "doc_id", "left_anti"
@@ -293,16 +245,16 @@ class LshDedupSnapshot:
         # constraint doesn't apply and the proven-fastest shape does.
         # Values are identical (min over xxhash64(shingle, i)), so
         # emissions still line up with the batch LSH family and the
-        # state-store stream. Emptiness is decided on the LAZY plan
-        # (take(1) early-exits) BEFORE the eager pin, so an idle trigger
-        # never pays a full materialization; the pin then serves the four
-        # downstream joins (a micro-batch is small).
-        batch_sigs = minhash_signatures(
-            docs, "text", "doc_id", self.k, self.num_hashes
-        ).withColumnRenamed("id", "doc_id")
-        if not batch_sigs.take(1):
+        # state-store stream. Pinned once (the admission plan then runs
+        # once per trigger); the pin serves the four downstream joins (a
+        # micro-batch is small).
+        batch_sigs = statedir.pinned_or_none(
+            minhash_signatures(
+                docs, "text", "doc_id", self.k, self.num_hashes
+            ).withColumnRenamed("id", "doc_id")
+        )
+        if batch_sigs is None:
             return None
-        batch_sigs = batch_sigs.localCheckpoint(eager=True)
         keyed = band_buckets(
             batch_sigs.withColumnRenamed("doc_id", "id"),
             self.num_hashes,
@@ -311,7 +263,7 @@ class LshDedupSnapshot:
 
     # -- candidate generation: slim (band, key) joins, batch side broadcast
         bk = keyed.select("band", "key", "doc_id")
-        state_index = self._read(spark, self.index_dir, INDEX_SCHEMA, batch_id)
+        state_index = self._tables.read(spark, "index", batch_id)
         cand_corpus = (
             state_index.withColumnRenamed("doc_id", "other_id")
             .join(F.broadcast(bk), ["band", "key"])
@@ -326,7 +278,7 @@ class LshDedupSnapshot:
         # shuffle and the broadcast are then both bounded by the batch.
         batch_buckets = bk.select("band", "key").dropDuplicates()
         state_counts = (
-            self._read(spark, self.counts_dir, COUNTS_SCHEMA, batch_id)
+            self._tables.read(spark, "counts", batch_id)
             .join(F.broadcast(batch_buckets), ["band", "key"], "left_semi")
             .groupBy("band", "key")
             .agg(F.sum("cnt").alias("resident_cnt"))
@@ -414,6 +366,10 @@ class LshDedupSnapshot:
     @property
     def sink(self):
         return self.foreach_batch
+
+
+def _sum_counts(df: DataFrame) -> DataFrame:
+    return df.groupBy("band", "key").agg(F.sum("cnt").alias("cnt"))
 
 
 def int_ceil(min_agree: float, num_hashes: int) -> int:

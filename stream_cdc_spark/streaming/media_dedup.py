@@ -14,8 +14,8 @@ tests/test_media_dedup_stream.py (the same batch-equivalence contract as
 LshDedupSnapshot, reference anchor: the coordinator's
 process-then-checkpoint loop, stream_cdc/coordinator.py:110-159).
 
-State tables (all under the statedir commit protocol — manifest commit,
-bounded metadata via compaction, object-store safe):
+State tables (run by the statedir.SinkTables per-trigger protocol —
+manifest commit, bounded metadata via compaction, object-store safe):
 
     <root>/sigs/     (media_id, bands)            admitted signatures
     <root>/index/    (media_id, band_idx, band_val) band index (probe side)
@@ -70,18 +70,27 @@ class MediaDedupSnapshot:
                 f"(got {n_bands} bands, threshold {max_hamming})"
             )
         self.state_dir = state_dir
-        self.sigs_dir = os.path.join(state_dir, "sigs")
-        self.index_dir = os.path.join(state_dir, "index")
-        self.matches_dir = os.path.join(state_dir, "matches")
+        self._tables = statedir.SinkTables(
+            state_dir,
+            [
+                statedir.Table("sigs", MEDIA_SIGS_SCHEMA),
+                statedir.Table("index", MEDIA_INDEX_SCHEMA),
+                statedir.Table("matches", MEDIA_MATCHES_SCHEMA),
+            ],
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            fs=fs,
+        )
+        self.sigs_dir = self._tables.dir("sigs")
+        self.index_dir = self._tables.dir("index")
+        self.matches_dir = self._tables.dir("matches")
         self.id_col = id_col
         self.blob_col = blob_col
         self.grid_w = grid_w
         self.grid_h = grid_h
         self.max_hamming = max_hamming
         self.n_bands = n_bands
-        self.compact_every = compact_every
-        self.major_every = major_every
-        self.commit_files = commit_files
         self.fs = fs
         # cluster_state=True maintains media dup-CLUSTER membership (and
         # the min-id survivorship representative) continuously — the
@@ -104,12 +113,9 @@ class MediaDedupSnapshot:
             )
 
     # -- state ------------------------------------------------------------
-    def _read(self, spark, root: str, schema: str, batch_id: int) -> DataFrame:
-        return statedir.read_state(spark, root, schema, batch_id, fs=self.fs)
-
     def matches(self, spark) -> DataFrame:
         """All near-dup pairs emitted by committed batches."""
-        return self._read(spark, self.matches_dir, MEDIA_MATCHES_SCHEMA, 1 << 62)
+        return self._tables.read(spark, "matches")
 
     def clusters(self, spark) -> DataFrame:
         """(vertex, component) media dup-cluster membership over every
@@ -125,57 +131,23 @@ class MediaDedupSnapshot:
         return self._components.labels(spark)
 
     def processed(self, spark) -> DataFrame:
-        return self._read(spark, self.sigs_dir, MEDIA_SIGS_SCHEMA, 1 << 62)
+        return self._tables.read(spark, "sigs")
 
-    def _compact(self, spark, batch_id: int) -> None:
-        for root, schema in (
-            (self.sigs_dir, MEDIA_SIGS_SCHEMA),
-            (self.index_dir, MEDIA_INDEX_SCHEMA),
-            (self.matches_dir, MEDIA_MATCHES_SCHEMA),
-        ):
-            statedir.maybe_compact(
-                spark, root, schema, batch_id,
-                every=self.compact_every,
-                major_every=self.major_every,
-                fs=self.fs,
-            )
-
-    # -- the sink ---------------------------------------------------------
+    # -- the sink: the statedir.SinkTables protocol ------------------------
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # fold committed prefix first — a replayed batch re-folds the
-        # identical prefix, so compaction inherits replay idempotence
-        self._compact(spark, batch_id)
+        self._tables.fold(spark, batch_id)
         built = self._build(spark, batch_df, batch_id)
         if built is None:
             return  # empty trigger: commit nothing (missing == empty)
         sigs_new, index_new, matches = built
-
-        def commit(df: DataFrame, root: str) -> None:
-            df.coalesce(self.commit_files).write.mode("overwrite").parquet(
-                statedir.batch_dir(root, batch_id)
-            )
-
-        commit(matches, self.matches_dir)
-        commit(sigs_new, self.sigs_dir)
-        commit(index_new, self.index_dir)
+        self._tables.commit(
+            batch_id, {"matches": matches, "sigs": sigs_new, "index": index_new}
+        )
         if self._components is not None:
-            # fold the just-COMMITTED matches into the cluster forest
-            # (read back, no recompute; replay re-reads identical rows,
-            # so cluster state inherits the exactly-once rule)
-            edges = spark.read.parquet(
-                statedir.batch_dir(self.matches_dir, batch_id)
-            ).select("dup_of", "media_id")
-            if self._components.is_empty(batch_id):
-                # late-enabled cluster_state: backfill the committed
-                # match history so clusters() covers EVERY pair ever
-                # emitted (one-time cost, replay-exact — see the LSH
-                # sink's identical wiring)
-                history = self._read(
-                    spark, self.matches_dir, MEDIA_MATCHES_SCHEMA, batch_id
-                ).select("dup_of", "media_id")
-                edges = history.unionByName(edges)
-            self._components.foreach_batch(edges, batch_id)
+            self._components.fold_matches(
+                spark, self._tables, "matches", batch_id
+            )
 
     def _build(self, spark, batch_df: DataFrame, batch_id: int):
         """(sigs_new, index_new, matches) for one micro-batch, or None
@@ -188,28 +160,27 @@ class MediaDedupSnapshot:
             F.col(self.blob_col).alias(self.blob_col),
         ).dropDuplicates([self.id_col])
 
-        state_sigs = self._read(spark, self.sigs_dir, MEDIA_SIGS_SCHEMA, batch_id)
+        state_sigs = self._tables.read(spark, "sigs", batch_id)
         # redelivery guard: anything already processed is dropped whole
         media = media.join(
             state_sigs.select(F.col("media_id").alias(self.id_col)),
             self.id_col,
             "left_anti",
         )
-        sigs_new = dhash_bands(
-            media, self.id_col, self.blob_col,
-            self.grid_w, self.grid_h, self.n_bands,
-        ).withColumnRenamed("id", "media_id")
-        if not sigs_new.take(1):
-            return None
         # pinned: feeds the band explode, the verify join, and the commit
-        sigs_new = sigs_new.localCheckpoint(eager=True)
+        sigs_new = statedir.pinned_or_none(
+            dhash_bands(
+                media, self.id_col, self.blob_col,
+                self.grid_w, self.grid_h, self.n_bands,
+            ).withColumnRenamed("id", "media_id")
+        )
+        if sigs_new is None:
+            return None
 
         index_new = sigs_new.select(
             "media_id", F.posexplode("bands").alias("band_idx", "band_val")
         )
-        state_index = self._read(
-            spark, self.index_dir, MEDIA_INDEX_SCHEMA, batch_id
-        )
+        state_index = self._tables.read(spark, "index", batch_id)
         # candidates vs the admitted corpus: index side read in place,
         # batch side broadcast
         cand_corpus = (

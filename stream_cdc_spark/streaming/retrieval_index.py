@@ -104,7 +104,6 @@ from stream_cdc_spark.streaming import statedir
 RETR_DOCS_SCHEMA = "doc_id bigint, dl bigint"
 RETR_POSTINGS_SCHEMA = "doc_id bigint, word string, tf bigint, dl bigint"
 RETR_STATS_SCHEMA = "n bigint, l bigint"
-RETR_TOMBSTONES_SCHEMA = "doc_id bigint"
 
 # Versioned id of the tokenization + scoring algebra the persisted
 # postings bake in. A change here (different tokenizer, different idf
@@ -112,11 +111,80 @@ RETR_TOMBSTONES_SCHEMA = "doc_id bigint"
 # dedup.LSH_SCHEME / ann_index.ANN_SCHEME.
 RETR_SCHEME = "tok-whitespace/bm25-k1.2-b0.75-idfq1e6-int/tfidf-ppm/v1"
 
+# rebuild hints of the two retrieval sinks' stamp guards
+_RETR_HINT = (
+    "Postings are not comparable across tokenizers or scoring algebras — "
+    "a probe would silently mis-score. Rebuild by replaying the corpus "
+    "through a RetrievalIndexSnapshot over a fresh state dir."
+)
+_VRETR_HINT = (
+    "Versioned and plain postings layouts (and different tokenizers) are "
+    "not comparable — a probe would silently mis-score. Rebuild by "
+    "replaying the corpus through a matching sink over a fresh state dir."
+)
 
-class RetrievalIndexSnapshot:
+
+class _RetrievalSink:
+    """What both retrieval sinks share: the doc-level tombstone log, the
+    scheme-stamped postings/ table and the docs/ admission ledger. A
+    subclass declares its stamp guard's rebuild ``_HINT``."""
+
+    _HINT: str
+
+    def _init_tombstones(
+        self,
+        state_dir: str,
+        id_col: str,
+        compact_every: int,
+        major_every: int,
+        commit_files: int,
+        fs: statedir.LocalFS | None,
+        extra_read_roots: tuple[str, ...] = (),
+    ) -> None:
+        self.state_dir = state_dir
+        self.fs = fs
+        self._tomb = statedir.TombstoneLog(
+            os.path.join(state_dir, "tombstones"),
+            store_col="doc_id",
+            source_col=id_col,
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            # tombstones arriving over OTHER independently-checkpointed
+            # channels (the composed cdc_full pipeline's out-of-band
+            # deletion feed) — read-unioned, never written here
+            extra_read_roots=extra_read_roots,
+            fs=fs,
+        )
+        self.tombstones_dir = self._tomb.root
+
+    # -- state ------------------------------------------------------------
+    def _postings(self, spark, batch_id: int) -> DataFrame:
+        return self._tables.read_stamped(
+            spark, "postings", batch_id, "word", self._stamp,
+            "retrieval index scheme", self._HINT,
+        )
+
+    def docs(self, spark) -> DataFrame:
+        """Every admitted docs/ row — the admission ledger."""
+        return self._tables.read(spark, "docs")
+
+    def postings(self, spark) -> DataFrame:
+        """Every admitted postings/ row — the inverted index."""
+        return self._postings(spark, 1 << 62)
+
+    def tombstones(self, spark) -> DataFrame:
+        """Every deleted doc_id, distinct (a doc may be deleted from
+        several consumers; readers dedupe, folds dedupe too)."""
+        return self._tomb.read(spark)
+
+
+class RetrievalIndexSnapshot(_RetrievalSink):
     """foreachBatch sink: continuous inverted-index admission over a
     (doc_id, text) document stream, plus the BM25/TF-IDF probes over the
     persisted index. See module doc."""
+
+    _HINT = _RETR_HINT
 
     def __init__(
         self,
@@ -130,84 +198,72 @@ class RetrievalIndexSnapshot:
         num_buckets: int = 32,
         fs: statedir.LocalFS | None = None,
     ):
-        self.state_dir = state_dir
-        self.docs_dir = os.path.join(state_dir, "docs")
-        self.postings_dir = os.path.join(state_dir, "postings")
-        self.stats_dir = os.path.join(state_dir, "stats")
-        self._tomb = statedir.TombstoneLog(
-            os.path.join(state_dir, "tombstones"),
-            store_col="doc_id",
-            source_col=id_col,
-            compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
-            fs=fs,
+        self._init_tombstones(
+            state_dir, id_col, compact_every, major_every, commit_files, fs
         )
-        self.tombstones_dir = self._tomb.root
         self.id_col = id_col
         self.text_col = text_col
-        self.compact_every = compact_every
-        self.major_every = major_every
-        self.commit_files = commit_files
+        self._stamp = {"retr_scheme": RETR_SCHEME}
         # bucketed=True folds the docs/ admission ledger into a
         # doc_id-bucketed snapshot table, so the per-trigger redelivery
         # anti-join keeps the ledger side Exchange-free once the corpus
-        # outgrows broadcast (statedir.state_relations; plan-asserted) —
-        # the 100 TB shape. Off by default: below broadcast size the
-        # plain path is the same plan with less metadata.
-        self.bucketed = bucketed
-        self.num_buckets = num_buckets
-        self.fs = fs
-        self._stamp = {"retr_scheme": RETR_SCHEME}
-
-    # -- state ------------------------------------------------------------
-    def _validate_stamp(self, state: DataFrame) -> None:
-        meta = dict(state.schema["word"].metadata or {})
-        if not meta:
-            return  # schema-fallback read of an empty state
-        got = {k: meta.get(k) for k in self._stamp}
-        if got != self._stamp:
-            raise ValueError(
-                f"retrieval index scheme mismatch: state at "
-                f"{self.postings_dir!r} was built with {got!r} but this "
-                f"sink/probe uses {self._stamp!r}. Postings are not "
-                f"comparable across tokenizers or scoring algebras — a "
-                f"probe would silently mis-score. Rebuild by replaying "
-                f"the corpus through a RetrievalIndexSnapshot over a "
-                f"fresh state dir."
-            )
-
-    def _postings(self, spark, batch_id: int) -> DataFrame:
-        state = statedir.read_state(
-            spark, self.postings_dir, RETR_POSTINGS_SCHEMA, batch_id, fs=self.fs
+        # outgrows broadcast
+        # (statedir.state_relations; plan-asserted) — the 100 TB shape.
+        # Off by default: below broadcast size the plain path is the
+        # same plan with less metadata. postings re-sort by word on fold
+        # (row-preserving) so the probe's pushed IN filter keeps pruning
+        # row groups once most of the corpus lives in compacted
+        # snapshots, and APPLY the tombstones (live rows only in the
+        # folded tier — eventual physical erasure, module doc):
+        # read-equivalent because probes already exclude tombstoned
+        # docs, admission-safe because the guard reads docs/, which is
+        # never tombstone-folded. The tombstone read is cross-state, so
+        # the plain word-sort is its read-equivalent fallback. stats
+        # re-aggregate to one row (readers sum partials, so the
+        # reduction is read-equivalent — the counts/ pattern of
+        # lsh_snapshot.py).
+        self._tables = statedir.SinkTables(
+            state_dir,
+            [
+                statedir.Table(
+                    "docs", RETR_DOCS_SCHEMA, bucket_cols=("doc_id",)
+                ),
+                statedir.Table(
+                    "postings",
+                    RETR_POSTINGS_SCHEMA,
+                    fold=lambda df: self._tomb.exclude(
+                        df.sparkSession, df
+                    ).sortWithinPartitions("word"),
+                    fallback=lambda df: df.sortWithinPartitions("word"),
+                    sort_by="word",
+                ),
+                statedir.Table(
+                    "stats",
+                    RETR_STATS_SCHEMA,
+                    fold=lambda df: df.agg(
+                        F.sum("n").cast("bigint").alias("n"),
+                        F.sum("l").cast("bigint").alias("l"),
+                    ),
+                    files=1,
+                ),
+            ],
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            bucketed=bucketed,
+            num_buckets=num_buckets,
+            fs=fs,
         )
-        self._validate_stamp(state)
-        return state
-
-    def docs(self, spark) -> DataFrame:
-        """Every admitted (doc_id, dl) row — the admission ledger."""
-        return statedir.read_state(
-            spark, self.docs_dir, RETR_DOCS_SCHEMA, 1 << 62, fs=self.fs
-        )
-
-    def postings(self, spark) -> DataFrame:
-        """Every admitted (doc_id, word, tf, dl) row — the inverted index."""
-        return self._postings(spark, 1 << 62)
-
-    def tombstones(self, spark) -> DataFrame:
-        """Every deleted doc_id, distinct (a doc may be deleted from
-        several consumers; readers dedupe, folds dedupe too)."""
-        return self._tomb.read(spark)
+        self.docs_dir = self._tables.dir("docs")
+        self.postings_dir = self._tables.dir("postings")
+        self.stats_dir = self._tables.dir("stats")
 
     def corpus_stats(self, spark) -> DataFrame:
         """One-row (n, l) of the LIVE corpus: the admitted totals (summed
         from the O(#batches)-row integer partials) minus the tombstoned
         docs' contribution (tombstones joined against the slim ledger —
         two one/two-column relations; the postings are never touched)."""
-        partials = statedir.read_state(
-            spark, self.stats_dir, RETR_STATS_SCHEMA, 1 << 62, fs=self.fs
-        )
-        admitted = partials.agg(
+        admitted = self._tables.read(spark, "stats").agg(
             F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n"),
             F.coalesce(F.sum("l"), F.lit(0)).cast("bigint").alias("l"),
         )
@@ -261,100 +317,27 @@ class RetrievalIndexSnapshot:
         exactly-once proofs are untouched. Deleting a never-admitted id is
         a harmless no-op at read time (the ledger join finds nothing); a
         deleted id can never be re-admitted (first-wins ledger)."""
-        spark = batch_df.sparkSession
-        statedir.maybe_compact(
-            spark, self.tombstones_dir, RETR_TOMBSTONES_SCHEMA, batch_id,
-            every=self.compact_every, major_every=self.major_every,
-            # readers dedupe, so the fold may too (read-equivalent)
-            transform=lambda df: df.distinct(),
-            fs=self.fs,
-        )
-        ids = (
-            batch_df.select(F.col(self.id_col).cast("long").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if not ids.take(1):
-            return  # empty trigger: commit nothing (missing == empty)
-        (
-            ids.coalesce(self.commit_files)
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.tombstones_dir, batch_id))
-        )
+        self._tomb.append(batch_df, batch_id)
 
-    # -- the sink ---------------------------------------------------------
+    # -- the sink: the statedir.SinkTables protocol ------------------------
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # refuse mismatched state BEFORE restructuring any statedir
-        # (ann_index round-11 hardening: the guard's contract is "no
-        # operation at all on mismatched state")
-        self._postings(spark, batch_id)
-        # fold committed prefixes — a replayed batch re-folds the
-        # identical prefix, so compaction inherits replay idempotence.
-        # postings re-sort by word on fold (row-preserving) so the
-        # probe's pushed IN filter keeps pruning row groups once most of
-        # the corpus lives in compacted snapshots; stats re-aggregate to
-        # one row (readers sum partials, so the reduction is
-        # read-equivalent — the counts/ pattern of lsh_snapshot.py).
-        statedir.maybe_compact(
-            spark, self.docs_dir, RETR_DOCS_SCHEMA, batch_id,
-            every=self.compact_every, major_every=self.major_every,
-            # bucketed ledger snapshot: the admission anti-join's
-            # Exchange-free side at corpus scale (constructor doc)
-            bucket_cols=["doc_id"] if self.bucketed else None,
-            num_buckets=self.num_buckets,
-            fs=self.fs,
-        )
-        # postings folds APPLY the tombstones (live rows only in the
-        # folded tier — eventual physical erasure, module doc):
-        # read-equivalent because probes already exclude tombstoned
-        # docs, and admission-safe because the guard reads docs/, which
-        # is never tombstone-folded. The tombstone read is cross-state
-        # and a CONCURRENT delete-stream compaction can invalidate it
-        # mid-fold, so the application carries the plain word-sort as
-        # its read-equivalent fallback
-        # (statedir.maybe_compact_with_fallback doc).
-        statedir.maybe_compact_with_fallback(
-            spark, self.postings_dir, RETR_POSTINGS_SCHEMA, batch_id,
-            every=self.compact_every, major_every=self.major_every,
-            transform=lambda df: self._tomb.exclude(
-                df.sparkSession, df
-            ).sortWithinPartitions("word"),
-            fallback_transform=lambda df: df.sortWithinPartitions("word"),
-            fs=self.fs,
-        )
-        statedir.maybe_compact(
-            spark, self.stats_dir, RETR_STATS_SCHEMA, batch_id,
-            every=self.compact_every, major_every=self.major_every,
-            transform=lambda df: df.agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("l").cast("bigint").alias("l"),
-            ),
-            fs=self.fs,
-        )
+        self._postings(spark, batch_id)  # stamp guard
+        self._tables.fold(spark, batch_id)
         built = self._build(spark, batch_df, batch_id)
         if built is None:
             return  # empty trigger: commit nothing (missing == empty)
         new_docs, new_postings = built
-        (
-            new_docs.select("doc_id", "dl")
-            .coalesce(self.commit_files)
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.docs_dir, batch_id))
-        )
-        (
-            new_postings.coalesce(self.commit_files)
-            .sortWithinPartitions("word")
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.postings_dir, batch_id))
-        )
-        (
-            new_docs.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.sum("dl").cast("bigint").alias("l"),
-            )
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.stats_dir, batch_id))
+        self._tables.commit(
+            batch_id,
+            {
+                "docs": new_docs,
+                "postings": new_postings,
+                "stats": new_docs.agg(
+                    F.count(F.lit(1)).cast("bigint").alias("n"),
+                    F.sum("dl").cast("bigint").alias("l"),
+                ),
+            },
         )
 
     def _build(self, spark, batch_df: DataFrame, batch_id: int):
@@ -378,30 +361,18 @@ class RetrievalIndexSnapshot:
         # bucketed snapshot first, plain tail second — and the chained
         # anti-joins keep the snapshot side Exchange-free (anti-joins
         # compose over union; statedir.state_relations doc).
-        if self.bucketed:
-            ledger_rels = statedir.state_relations(
-                spark, self.docs_dir, RETR_DOCS_SCHEMA, batch_id,
-                ["doc_id"], self.num_buckets, fs=self.fs,
-            )
-        else:
-            ledger_rels = [
-                statedir.read_state(
-                    spark, self.docs_dir, RETR_DOCS_SCHEMA, batch_id,
-                    fs=self.fs,
-                )
-            ]
-        for rel in ledger_rels:
+        for rel in self._tables.relations(spark, "docs", batch_id):
             docs = docs.join(rel.select("doc_id"), "doc_id", "left_anti")
-        # emptiness decided on the LAZY plan first (take(1) early-exits,
-        # so an idle trigger never pays a materialization), then pin
-        # ONCE at the tokenized batch: all three commits (docs, postings,
-        # stats) derive from the pinned relation with cheap maps, so the
-        # ledger anti-join + tokenize run once per trigger (pinning the
-        # derived relations separately re-executed this pipeline per pin)
-        toks = docs.select("doc_id", text.tokens(F.col("text")).alias("t"))
-        if not toks.take(1):
+        # pin ONCE at the tokenized batch, then probe the pin: all three
+        # commits (docs, postings, stats) derive from the pinned relation
+        # with cheap maps, so the ledger anti-join + tokenize run once
+        # per trigger (pinning the derived relations separately
+        # re-executed this pipeline per pin)
+        toks = statedir.pinned_or_none(
+            docs.select("doc_id", text.tokens(F.col("text")).alias("t"))
+        )
+        if toks is None:
             return None
-        toks = toks.localCheckpoint(eager=True)
         new_docs = toks.select(
             "doc_id", F.size("t").cast("bigint").alias("dl")
         )
@@ -521,7 +492,7 @@ RETR_VPOSTINGS_SCHEMA = (
 RETR_SCHEME_VERSIONED = RETR_SCHEME + "+versioned-latest/v1"
 
 
-class VersionedRetrievalIndexSnapshot:
+class VersionedRetrievalIndexSnapshot(_RetrievalSink):
     """foreachBatch sink: continuous inverted-index maintenance over a
     (doc_id, version, text) UPSERT stream — the CDC-native retrieval
     index. The reference's central event is the Update carrying row
@@ -613,6 +584,8 @@ class VersionedRetrievalIndexSnapshot:
     envelopes.
     """
 
+    _HINT = _VRETR_HINT
+
     def __init__(
         self,
         state_dir: str,
@@ -628,30 +601,10 @@ class VersionedRetrievalIndexSnapshot:
         extra_tombstones_roots: tuple[str, ...] = (),
         fs: statedir.LocalFS | None = None,
     ):
-        self.state_dir = state_dir
-        self.docs_dir = os.path.join(state_dir, "docs")
-        self.postings_dir = os.path.join(state_dir, "postings")
-        # the fold-materialized latest-live tier (round-13): same slim
-        # (doc_id, version, dl) rows as docs/, but its FOLDS reduce to
-        # the per-doc version-max — probe-time reductions read this
-        # tier + the un-folded tail (O(live + recent)) instead of the
-        # full version history (O(corpus)). docs/ stays the complete
-        # admission ledger (never reduced).
-        self.latest_dir = os.path.join(state_dir, "latest")
-        self._tomb = statedir.TombstoneLog(
-            os.path.join(state_dir, "tombstones"),
-            store_col="doc_id",
-            source_col=id_col,
-            compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
-            # tombstones arriving over OTHER independently-checkpointed
-            # channels (the composed cdc_full pipeline's out-of-band
-            # deletion feed) — read-unioned, never written here
-            extra_read_roots=extra_tombstones_roots,
-            fs=fs,
+        self._init_tombstones(
+            state_dir, id_col, compact_every, major_every, commit_files, fs,
+            extra_tombstones_roots,
         )
-        self.tombstones_dir = self._tomb.root
         # in-band versioned deletes: (doc_id, version) rows killing the
         # version prefix <= the delete's CDC sequence (class doc)
         self._vtomb = statedir.VersionedTombstoneLog(
@@ -668,58 +621,76 @@ class VersionedRetrievalIndexSnapshot:
         self.id_col = id_col
         self.version_col = version_col
         self.text_col = text_col
-        self.compact_every = compact_every
-        self.major_every = major_every
-        self.commit_files = commit_files
-        self.bucketed = bucketed
-        self.num_buckets = num_buckets
         # cap on the matching-doc count the probe will force-broadcast:
         # a high-frequency query term can match an unbounded share of
         # the corpus, and an unconditional F.broadcast hint bypasses the
         # auto-broadcast threshold — driver OOM at 100 TB. Past the cap
         # the probe falls back to optimizer-chosen (shuffle) joins.
         self.broadcast_max_ids = broadcast_max_ids
-        self.fs = fs
         self._stamp = {"retr_scheme": RETR_SCHEME_VERSIONED}
+        #  - docs/ is the complete admission ledger (never reduced),
+        #    bucketed by the ADMISSION KEY (doc_id, version): the
+        #    anti-join's keys are exactly the bucket columns, so the
+        #    per-trigger guard reads the snapshot Exchange-free.
+        #  - latest/ is the fold-materialized latest-live tier (round
+        #    13): same slim rows as docs/, but its folds REDUCE to the
+        #    per-doc version-max with both delete channels' exclusions
+        #    (dead docs and killed version prefixes leave the tier
+        #    physically), so probe-time reductions read this tier + the
+        #    un-folded tail (O(live + recent)) instead of the full
+        #    version history. Correct under the union-then-reduce read
+        #    rule because per-doc version-argmax is an idempotent
+        #    commutative monoid, versions are monotone, and versioned
+        #    kills are a growing version PREFIX (admission never
+        #    consults this tier). Bucketed by doc_id — the probe-side
+        #    reduction's grouping key. Cross-state tombstone read ->
+        #    reduction-only fallback (the read rule re-applies the
+        #    exclusions).
+        #  - postings/ folds apply both delete channels (live rows only —
+        #    doc-level kills are append-only and versioned kills a
+        #    growing prefix, so a fold-dropped row can never become live
+        #    again). Superseded-but-live versions are NOT folded away:
+        #    the fold would need the cross-state version-max, and unlike
+        #    tombstones that rule is cheap to apply at read. Their
+        #    physical removal is the offline vacuum/rebuild. Cross-state
+        #    tombstone read -> plain word-sort fallback.
+        self._tables = statedir.SinkTables(
+            state_dir,
+            [
+                statedir.Table(
+                    "docs", RETR_VDOCS_SCHEMA, bucket_cols=("doc_id", "version")
+                ),
+                statedir.Table(
+                    "latest",
+                    RETR_VDOCS_SCHEMA,
+                    fold=lambda df: self._reduce_latest(
+                        self._live(df.sparkSession, df)
+                    ),
+                    fallback=self._reduce_latest,
+                    bucket_cols=("doc_id",),
+                ),
+                statedir.Table(
+                    "postings",
+                    RETR_VPOSTINGS_SCHEMA,
+                    fold=lambda df: self._live(
+                        df.sparkSession, df
+                    ).sortWithinPartitions("word"),
+                    fallback=lambda df: df.sortWithinPartitions("word"),
+                    sort_by="word",
+                ),
+            ],
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            bucketed=bucketed,
+            num_buckets=num_buckets,
+            fs=fs,
+        )
+        self.docs_dir = self._tables.dir("docs")
+        self.postings_dir = self._tables.dir("postings")
+        self.latest_dir = self._tables.dir("latest")
 
     # -- state ------------------------------------------------------------
-    def _validate_stamp(self, state: DataFrame) -> None:
-        meta = dict(state.schema["word"].metadata or {})
-        if not meta:
-            return  # schema-fallback read of an empty state
-        got = {k: meta.get(k) for k in self._stamp}
-        if got != self._stamp:
-            raise ValueError(
-                f"retrieval index scheme mismatch: state at "
-                f"{self.postings_dir!r} was built with {got!r} but this "
-                f"sink/probe uses {self._stamp!r}. Versioned and plain "
-                f"postings layouts (and different tokenizers) are not "
-                f"comparable — a probe would silently mis-score. Rebuild "
-                f"by replaying the corpus through a matching sink over a "
-                f"fresh state dir."
-            )
-
-    def _postings(self, spark, batch_id: int) -> DataFrame:
-        state = statedir.read_state(
-            spark, self.postings_dir, RETR_VPOSTINGS_SCHEMA, batch_id,
-            fs=self.fs,
-        )
-        self._validate_stamp(state)
-        return state
-
-    def docs(self, spark) -> DataFrame:
-        """Every admitted (doc_id, version, dl) row — the ledger."""
-        return statedir.read_state(
-            spark, self.docs_dir, RETR_VDOCS_SCHEMA, 1 << 62, fs=self.fs
-        )
-
-    def postings(self, spark) -> DataFrame:
-        """Every admitted (doc_id, version, word, tf, dl) row."""
-        return self._postings(spark, 1 << 62)
-
-    def tombstones(self, spark) -> DataFrame:
-        return self._tomb.read(spark)
-
     def versioned_tombstones(self, spark) -> DataFrame | None:
         """(doc_id, dead_version) kill watermarks of the in-band delete
         channel, or None when none was ever committed."""
@@ -745,11 +716,8 @@ class VersionedRetrievalIndexSnapshot:
         reduction and the tombstone exclusion, which is what makes the
         fold-time collapse a pure optimization (per-doc version-argmax
         is an idempotent, commutative monoid)."""
-        if statedir.state_paths(self.latest_dir, 1 << 62, self.fs):
-            return statedir.read_state(
-                spark, self.latest_dir, RETR_VDOCS_SCHEMA, 1 << 62,
-                fs=self.fs,
-            )
+        if self._tables.has_state("latest"):
+            return self._tables.read(spark, "latest")
         return self.docs(spark)
 
     @staticmethod
@@ -889,123 +857,38 @@ class VersionedRetrievalIndexSnapshot:
         batch dirs. Reading at ``batch_id`` keeps replays exact (the
         ann_index ledger-seeding rule), though here even an over-read
         would be harmless: the reduction is idempotent on duplicates."""
-        if statedir.state_paths(self.latest_dir, 1 << 62, self.fs):
+        if self._tables.has_state("latest"):
             return  # tier exists (normal path after the first trigger)
-        if not statedir.state_paths(self.docs_dir, batch_id, self.fs):
+        if not self._tables.has_state("docs", batch_id):
             return  # fresh root: nothing to seed
         statedir.publish_snapshot(
             spark,
             self.latest_dir,
-            statedir.read_state(
-                spark, self.docs_dir, RETR_VDOCS_SCHEMA, batch_id,
-                fs=self.fs,
-            ),
+            self._tables.read(spark, "docs", batch_id),
             fs=self.fs,
         )
 
-    # -- the sink ---------------------------------------------------------
+    # -- the sink: the statedir.SinkTables protocol ------------------------
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # refuse mismatched state BEFORE restructuring any statedir
-        self._postings(spark, batch_id)
+        self._postings(spark, batch_id)  # stamp guard
         # pre-tier roots seed the latest/ tier before any fold
         self._maybe_seed_latest(spark, batch_id)
-        statedir.maybe_compact(
-            spark, self.docs_dir, RETR_VDOCS_SCHEMA, batch_id,
-            every=self.compact_every, major_every=self.major_every,
-            # bucketed by the ADMISSION KEY (doc_id, version): the
-            # anti-join's keys are exactly the bucket columns, so the
-            # per-trigger guard reads the snapshot Exchange-free. The
-            # probe-side latest-live groupBy(doc_id) reads the
-            # materialized latest/ tier instead (below)
-            bucket_cols=["doc_id", "version"] if self.bucketed else None,
-            num_buckets=self.num_buckets,
-            fs=self.fs,
-        )
-        # latest/ folds REDUCE: per-doc version-max (+ both delete
-        # channels' exclusions — dead docs and killed version prefixes
-        # leave the tier physically) over the folded subset. Correct
-        # under the union-then-reduce read rule because per-doc
-        # version-argmax is an idempotent commutative monoid, versions
-        # are monotone, and versioned kills are a growing version
-        # PREFIX (docs/ keeps the full ledger, so admission never
-        # consults this tier). Cross-state tombstone read ->
-        # reduction-only fallback (read-equivalent: the read rule
-        # re-applies the exclusions).
-        statedir.maybe_compact_with_fallback(
-            spark, self.latest_dir, RETR_VDOCS_SCHEMA, batch_id,
-            every=self.compact_every, major_every=self.major_every,
-            transform=lambda df: self._reduce_latest(
-                self._live(df.sparkSession, df)
-            ),
-            fallback_transform=self._reduce_latest,
-            # bucketed by doc_id — the probe-side reduction's grouping
-            # key, so the tier side of the read-time groupBy is
-            # Exchange-free past broadcast size
-            bucket_cols=["doc_id"] if self.bucketed else None,
-            num_buckets=self.num_buckets,
-            fs=self.fs,
-        )
-        # postings folds apply tombstones (live rows only — the same
-        # eventual-erasure rule as the insert-only sink; doc-level, so
-        # every version of a deleted doc folds away). Superseded-but-
-        # live versions are NOT folded away: the fold would need the
-        # cross-state version-max, and unlike tombstones that rule is
-        # cheap to apply at read. Their physical removal is the offline
-        # vacuum/rebuild. Cross-state tombstone read -> read-equivalent
-        # plain-sort fallback under a concurrent delete-stream fold
-        # (statedir.maybe_compact_with_fallback doc).
-        statedir.maybe_compact_with_fallback(
-            spark, self.postings_dir, RETR_VPOSTINGS_SCHEMA, batch_id,
-            every=self.compact_every, major_every=self.major_every,
-            # both delete channels erase physically at fold time:
-            # doc-level kills are append-only and versioned kills are a
-            # growing prefix, so a fold-dropped row can never become
-            # live again (read-equivalent)
-            transform=lambda df: self._live(
-                df.sparkSession, df
-            ).sortWithinPartitions("word"),
-            fallback_transform=lambda df: df.sortWithinPartitions("word"),
-            fs=self.fs,
-        )
+        self._tables.fold(spark, batch_id)
         built = self._build(spark, batch_df, batch_id)
         if built is None:
             return  # empty trigger: commit nothing (missing == empty)
         new_docs, new_postings = built
-        (
-            new_docs.select("doc_id", "version", "dl")
-            .coalesce(self.commit_files)
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.docs_dir, batch_id))
-        )
         # the same slim rows feed the latest/ tier's un-folded tail (a
         # replayed batch overwrites identical rows, and duplicates are
         # harmless to the idempotent reduction either way)
-        (
-            new_docs.select("doc_id", "version", "dl")
-            .coalesce(self.commit_files)
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.latest_dir, batch_id))
-        )
-        (
-            new_postings.coalesce(self.commit_files)
-            .sortWithinPartitions("word")
-            .write.mode("overwrite")
-            .parquet(statedir.batch_dir(self.postings_dir, batch_id))
+        self._tables.commit(
+            batch_id,
+            {"docs": new_docs, "latest": new_docs, "postings": new_postings},
         )
 
     def _ledger_relations(self, spark, batch_id: int) -> list[DataFrame]:
-        if self.bucketed:
-            return statedir.state_relations(
-                spark, self.docs_dir, RETR_VDOCS_SCHEMA, batch_id,
-                ["doc_id", "version"], self.num_buckets, fs=self.fs,
-            )
-        return [
-            statedir.read_state(
-                spark, self.docs_dir, RETR_VDOCS_SCHEMA, batch_id,
-                fs=self.fs,
-            )
-        ]
+        return self._tables.relations(spark, "docs", batch_id)
 
     def _build(self, spark, batch_df: DataFrame, batch_id: int):
         docs = (
@@ -1030,14 +913,13 @@ class VersionedRetrievalIndexSnapshot:
                 "left_anti",
             )
         # pin ONCE at the tokenized batch (both commits derive from it —
-        # retrieval _build rule), THEN probe the pin for emptiness: a
-        # take(1) cannot exit early past the groupBy/anti-join shuffles,
-        # so probing the lazy plan first ran the whole admission plan
-        # twice (the ANN _build order)
-        toks = docs.select(
-            "doc_id", "version", text.tokens(F.col("text")).alias("t")
-        ).localCheckpoint(eager=True)
-        if not toks.take(1):
+        # retrieval _build rule)
+        toks = statedir.pinned_or_none(
+            docs.select(
+                "doc_id", "version", text.tokens(F.col("text")).alias("t")
+            )
+        )
+        if toks is None:
             return None
         new_docs = toks.select(
             "doc_id", "version", F.size("t").cast("bigint").alias("dl")

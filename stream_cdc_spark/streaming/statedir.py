@@ -1,8 +1,9 @@
 """Batch-versioned parquet state with compaction — bounded-metadata
 streaming state without sink transactions.
 
-Both foreachBatch sinks (streaming/curation.py, streaming/lsh_snapshot.py)
-persist their state as one parquet subdir per micro-batch:
+Every foreachBatch sink under streaming/ persists each of its state
+tables as one parquet subdir per micro-batch (``SinkTables`` below runs
+the per-trigger protocol over them once, for all sinks):
 
     <root>/batch=<id>/        output of micro-batch <id> (OVERWRITE of its
                               own subdir, so replay is idempotent)
@@ -127,6 +128,7 @@ import re
 import shutil
 import threading
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -375,13 +377,6 @@ def _chain(
         cur = hi
 
 
-def watermark(root: str, batch_id: int, fs: LocalFS | None = None) -> int:
-    """Largest valid compact watermark <= batch_id (0 if none)."""
-    compacts, _, _ = _scan(root, fs)
-    eligible = [w for w in compacts if w <= batch_id]
-    return max(eligible, default=0)
-
-
 def state_paths(
     root: str, batch_id: int, fs: LocalFS | None = None
 ) -> list[str]:
@@ -414,11 +409,16 @@ def read_state(
     paths = state_paths(root, batch_id, fs)
     if not paths:
         return spark.createDataFrame([], schema)
+    return _read_paths(spark, paths, schema)
+
+
+def _read_paths(spark: SparkSession, paths: list[str], schema: str) -> DataFrame:
+    """``paths`` read with schema inference (so column metadata
+    survives), ``schema`` only when every path is file-less (legacy
+    empty-batch commits: inference has nothing to read)."""
     try:
         return spark.read.parquet(*paths)
     except Exception:
-        # every visible dir is file-less (legacy empty-batch commits):
-        # schema inference has nothing to read
         return spark.read.schema(schema).parquet(*paths)
 
 
@@ -564,11 +564,7 @@ def compact_minor(
     fold = [(i, p) for i, p in sorted(batches.items()) if cover <= i < batch_id]
     if not fold:
         return False
-    try:
-        df = spark.read.parquet(*[p for _, p in fold])
-    except Exception:
-        # every fold dir is file-less (legacy empty-batch commits)
-        df = spark.read.schema(schema).parquet(*[p for _, p in fold])
+    df = _read_paths(spark, [p for _, p in fold], schema)
     if transform is not None:
         df = transform(df)
     dest = os.path.join(root, f"delta={cover:09d}-{batch_id:09d}")
@@ -676,11 +672,7 @@ def _fold_input(
         p for i, p in sorted(batches.items()) if cover <= i < batch_id
     )
     if plain_paths:
-        try:
-            tail = spark.read.parquet(*plain_paths)
-        except Exception:
-            # every plain dir is file-less (legacy empty-batch commits)
-            tail = spark.read.schema(schema).parquet(*plain_paths)
+        tail = _read_paths(spark, plain_paths, schema)
         # route the unbucketed tail into bucket-aligned partitions
         # BEFORE the union (repartition hashing == bucketBy hashing, so
         # partition index == bucket id): each tail task then writes one
@@ -1043,6 +1035,200 @@ def publish_snapshot(
     _publish_manifest(fs, dest)
 
 
+def pinned_or_none(df: DataFrame) -> DataFrame | None:
+    """``df`` pinned by an eager ``localCheckpoint``, or None when it
+    holds no row — the emptiness probe of every sink admission point.
+    The probe reads the PIN: ``take(1)`` cannot exit early past a
+    shuffle, so probing the lazy plan before pinning it runs the whole
+    admission plan twice per non-empty trigger."""
+    df = df.localCheckpoint(eager=True)
+    return df if df.take(1) else None
+
+
+@dataclass(frozen=True)
+class Table:
+    """One state table of a sink, stored under ``<root>/<name>/``.
+
+    ``fold``: the read-equivalent transform every compaction fold
+    applies (None folds the plain union). ``fallback``: set when
+    ``fold`` reads ANOTHER statedir root — the read-equivalent plain
+    fold to retry with (``maybe_compact_with_fallback``).
+    ``bucket_cols``: the folded snapshot's bucket spec, applied only
+    when the sink is ``bucketed``. ``sort_by``: the commit-time
+    ``sortWithinPartitions`` key. ``files``: a fixed commit file count
+    (None: the sink's ``commit_files``)."""
+
+    name: str
+    schema: str
+    fold: Callable[[DataFrame], DataFrame] | None = None
+    fallback: Callable[[DataFrame], DataFrame] | None = None
+    bucket_cols: tuple[str, ...] = ()
+    sort_by: str | None = None
+    files: int | None = None
+
+
+class SinkTables:
+    """The per-trigger kernel of every statedir sink: the sink's state
+    root, its declared tables, and the settings every sink takes.
+
+    Every sink's ``foreach_batch(batch_df, B)`` runs one protocol:
+
+      1. stamp guard — a sink whose state carries a parameter stamp
+         refuses mismatched state (``read_stamped``) BEFORE any fold:
+         the guard's contract is no operation at all on mismatched
+         state (a sink that upgrades an older layout seeds it here,
+         before the fold);
+      2. fold — each table's committed prefix (batch ids < B) folds in
+         declared order (``fold``). A replayed B re-folds the identical
+         prefix, so compaction inherits replay idempotence;
+      3. build — the sink reads state at bound B (``read``,
+         ``relations``), computes its admitted rows and pins them once
+         (``pinned_or_none``). An effectively-empty batch commits
+         NOTHING: the read-exclusion rule makes a missing batch dir
+         indistinguishable from an empty one, so replay stays exact and
+         idle triggers add no metadata;
+      4. commit — each table's own ``batch=<B>`` dir is OVERWRITTEN, in
+         the order the sink passes (``commit``). Reads at bound B never
+         see B's own dirs, so a crash between commits followed by the
+         same-id replay rewrites every table identically.
+
+    Instances hold no state beyond their settings, so sinks that commit
+    concurrently (cdc_full's two legs) each use their own."""
+
+    def __init__(
+        self,
+        root: str,
+        tables: list[Table],
+        compact_every: int = 16,
+        major_every: int = 0,
+        commit_files: int = 1,
+        bucketed: bool = False,
+        num_buckets: int = 32,
+        fs: LocalFS | None = None,
+    ):
+        self.root = root
+        self.tables = {t.name: t for t in tables}
+        self.compact_every = compact_every
+        # major_every=K: leveled compaction — pending batch dirs fold
+        # into L1 deltas (O(recent)); the full O(total state) fold runs
+        # only every K deltas (module doc)
+        self.major_every = major_every
+        # a micro-batch is small by construction, so each table's
+        # commit is ``commit_files`` files (default one): more files per
+        # trigger balloon the long-horizon file count and write latency
+        self.commit_files = commit_files
+        self.bucketed = bucketed
+        self.num_buckets = num_buckets
+        self.fs = fs
+
+    def dir(self, table: str) -> str:
+        return os.path.join(self.root, table)
+
+    def has_state(self, table: str, batch_id: int = 1 << 62) -> bool:
+        """True when ``table`` holds committed state visible to
+        ``batch_id`` (metadata only: no data file is read)."""
+        return bool(state_paths(self.dir(table), batch_id, self.fs))
+
+    def read(
+        self, spark: SparkSession, table: str, batch_id: int = 1 << 62
+    ) -> DataFrame:
+        """``table``'s state visible to ``batch_id`` (``read_state``)."""
+        return read_state(
+            spark, self.dir(table), self.tables[table].schema, batch_id,
+            self.fs,
+        )
+
+    def read_batch(
+        self, spark: SparkSession, table: str, batch_id: int
+    ) -> DataFrame:
+        """The rows batch ``batch_id`` itself committed to ``table``."""
+        return spark.read.parquet(batch_dir(self.dir(table), batch_id))
+
+    def relations(
+        self, spark: SparkSession, table: str, batch_id: int
+    ) -> list[DataFrame]:
+        """``table``'s state visible to ``batch_id`` as the relation list
+        an admission guard chains anti-joins over: when the sink is
+        ``bucketed`` and the table declares bucket columns, the bucketed
+        snapshot as its registered table plus the plain tail
+        (``state_relations``); otherwise one plain relation."""
+        spec = self.tables[table]
+        if self.bucketed and spec.bucket_cols:
+            return state_relations(
+                spark, self.dir(table), spec.schema, batch_id,
+                list(spec.bucket_cols), self.num_buckets, fs=self.fs,
+            )
+        return [self.read(spark, table, batch_id)]
+
+    def read_stamped(
+        self,
+        spark: SparkSession,
+        table: str,
+        batch_id: int,
+        column: str,
+        stamp: dict,
+        what: str,
+        hint: str,
+        defaults: dict | None = None,
+    ) -> DataFrame:
+        """``read``, refused with ``ValueError`` when the persisted
+        ``column`` metadata carries a stamp other than ``stamp``.
+        ``defaults`` fills stamp keys that older state predates;
+        ``what`` names the index and ``hint`` says how to rebuild."""
+        state = self.read(spark, table, batch_id)
+        meta = dict(state.schema[column].metadata or {})
+        if not meta:
+            # schema-fallback read of an empty state: nothing persisted
+            # yet, nothing to contradict
+            return state
+        got = {k: meta.get(k, (defaults or {}).get(k)) for k in stamp}
+        if got != stamp:
+            raise ValueError(
+                f"{what} mismatch: state at {self.dir(table)!r} was built "
+                f"with {got!r} but this sink/probe uses {stamp!r}. {hint}"
+            )
+        return state
+
+    def fold(self, spark: SparkSession, batch_id: int) -> None:
+        """Fold every table's committed prefix, in declared order."""
+        for t in self.tables.values():
+            kw = dict(
+                every=self.compact_every,
+                major_every=self.major_every,
+                transform=t.fold,
+                bucket_cols=(
+                    list(t.bucket_cols)
+                    if self.bucketed and t.bucket_cols
+                    else None
+                ),
+                num_buckets=self.num_buckets,
+                fs=self.fs,
+            )
+            if t.fallback is None:
+                maybe_compact(spark, self.dir(t.name), t.schema, batch_id, **kw)
+            else:
+                maybe_compact_with_fallback(
+                    spark, self.dir(t.name), t.schema, batch_id,
+                    fallback_transform=t.fallback, **kw,
+                )
+
+    def commit(
+        self, batch_id: int, tables: dict[str, DataFrame | None]
+    ) -> None:
+        """Overwrite each table's ``batch=<batch_id>`` dir, in the order
+        passed; a None table writes nothing."""
+        for name, df in tables.items():
+            if df is None:
+                continue
+            t = self.tables[name]
+            df = df.coalesce(t.files or self.commit_files)
+            if t.sort_by:
+                df = df.sortWithinPartitions(t.sort_by)
+            df.write.mode("overwrite").parquet(
+                batch_dir(self.dir(name), batch_id)
+            )
+
+
 class TombstoneLog:
     """Append-only deleted-id log shared by the deletion paths of the
     ANN and retrieval index sinks (streaming/ann_index.py,
@@ -1133,14 +1319,12 @@ class TombstoneLog:
             transform=lambda df: df.distinct(),
             fs=self.fs,
         )
-        ids = (
+        ids = pinned_or_none(
             batch_df.select(
                 F.col(self.source_col).cast("long").alias(self.store_col)
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
+            ).distinct()
         )
-        if not ids.take(1):
+        if ids is None:
             return  # empty trigger: commit nothing (missing == empty)
         (
             ids.coalesce(self.commit_files)
@@ -1251,9 +1435,9 @@ class VersionedTombstoneLog:
             )
             .groupBy(self.store_col)
             .agg(F.max("dead_version").alias("dead_version"))
-            .localCheckpoint(eager=True)
         )
-        if not rows.take(1):
+        rows = pinned_or_none(rows)
+        if rows is None:
             return  # empty trigger: commit nothing (missing == empty)
         if rows.filter(
             F.col(self.store_col).isNull()
@@ -1314,10 +1498,5 @@ def state_relations(
     tail = [p for p in state_paths(root, batch_id, fs) if p not in snap_files]
     out = [rel]
     if tail:
-        try:
-            out.append(spark.read.parquet(*tail))
-        except Exception:
-            # file-less legacy empty-batch dirs: schema fallback, like
-            # read_state
-            out.append(spark.read.schema(schema).parquet(*tail))
+        out.append(_read_paths(spark, tail, schema))
     return out

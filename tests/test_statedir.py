@@ -8,6 +8,7 @@ observes (streaming/statedir.py module doc)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -483,3 +484,220 @@ def test_fallback_fold_logs_on_every_occurrence(spark, tmp_path, caplog):
         )
     hits = [r for r in caplog.records if "plain fold" in r.getMessage()]
     assert len(hits) == 2
+
+
+# -- the sink kernel (statedir.SinkTables) ------------------------------
+
+
+class _ToySink:
+    """A three-table sink written the way every statedir sink is (the
+    SinkTables protocol): stamp guard, fold, build + pin, ordered
+    commits. ``a`` is the admission ledger, committed last."""
+
+    def __init__(self, root, stamp="v1", bucketed=False, compact_every=2):
+        self.stamp = {"toy_scheme": stamp}
+        self.folded: list[str] = []
+
+        def rec(name, fold=lambda df: df):
+            def f(df):
+                self.folded.append(name)
+                return fold(df)
+
+            return f
+
+        self.tables = statedir.SinkTables(
+            root,
+            [
+                statedir.Table("a", "id bigint, v string", fold=rec("a")),
+                statedir.Table(
+                    "b",
+                    "k bigint, n bigint",
+                    fold=rec(
+                        "b",
+                        lambda df: df.groupBy("k").agg(
+                            F.sum("n").cast("bigint").alias("n")
+                        ),
+                    ),
+                    bucket_cols=("k",),
+                ),
+                statedir.Table("c", "id bigint", fold=rec("c"), sort_by="id", files=1),
+            ],
+            compact_every=compact_every,
+            bucketed=bucketed,
+            num_buckets=4,
+        )
+
+    def foreach_batch(self, batch_df, batch_id):
+        spark = batch_df.sparkSession
+        self.tables.read_stamped(
+            spark, "a", batch_id, "id", self.stamp, "toy index scheme",
+            "Rebuild the toy index.",
+        )
+        self.tables.fold(spark, batch_id)
+        new = batch_df
+        for rel in self.tables.relations(spark, "a", batch_id):
+            new = new.join(rel.select("id"), "id", "left_anti")
+        new = statedir.pinned_or_none(new)
+        if new is None:
+            return
+        self.tables.commit(
+            batch_id,
+            {
+                "c": new.select("id"),
+                "b": new.groupBy((F.col("id") % 3).alias("k")).agg(
+                    F.count(F.lit(1)).alias("n")
+                ),
+                "a": new.select(
+                    F.col("id").alias("id", metadata=self.stamp), "v"
+                ),
+            },
+        )
+
+    def snapshot(self, spark):
+        return {
+            "a": sorted(map(tuple, self.tables.read(spark, "a").collect())),
+            "b": sorted(
+                map(
+                    tuple,
+                    self.tables.read(spark, "b")
+                    .groupBy("k")
+                    .agg(F.sum("n").alias("n"))
+                    .collect(),
+                )
+            ),
+            "c": sorted(map(tuple, self.tables.read(spark, "c").collect())),
+        }
+
+
+def _toy_batches(spark):
+    rows = [[(1, "x"), (2, "y")], [(2, "y"), (3, "z")], [(4, "w")], [(1, "x")]]
+    return [spark.createDataFrame(r, "id bigint, v string") for r in rows]
+
+
+def test_sink_tables_fold_and_commit_order(spark, tmp_path, monkeypatch):
+    """Folds run in declared order; commits run in the order passed and
+    a None table writes nothing; bucket columns apply only to a bucketed
+    sink."""
+    batches = _toy_batches(spark)
+    written: list[str] = []
+    real_batch_dir = statedir.batch_dir
+
+    def rec_batch_dir(root, batch_id):
+        written.append(os.path.basename(root))
+        return real_batch_dir(root, batch_id)
+
+    monkeypatch.setattr(statedir, "batch_dir", rec_batch_dir)
+    for bucketed in (False, True):
+        root = str(tmp_path / f"toy-{bucketed}")
+        toy = _ToySink(root, bucketed=bucketed, compact_every=1)
+        toy.foreach_batch(batches[0], 0)
+        assert written == ["c", "b", "a"]
+        toy.tables.fold(spark, 1)
+        assert toy.folded == ["a", "b", "c"]
+        # None skips its table; the rest keep the order passed
+        written.clear()
+        one = spark.createDataFrame([(9,)], "id bigint")
+        toy.tables.commit(7, {"c": one, "a": None, "b": None})
+        assert written == ["c"]
+        assert not os.path.exists(real_batch_dir(toy.tables.dir("a"), 7))
+        written.clear()
+        for name, bucket in (("a", None), ("b", ["k"])):
+            compact = [
+                d for d in os.listdir(toy.tables.dir(name))
+                if d.startswith("compact=") and d.endswith(".commit")
+            ]
+            with open(os.path.join(toy.tables.dir(name), compact[0])) as f:
+                spec = json.load(f).get("bucket")
+            assert (spec or {}).get("cols") == (bucket if bucketed else None), (
+                name, bucketed, spec,
+            )
+
+
+def test_sink_tables_stamp_mismatch_refuses_before_any_fold(spark, tmp_path):
+    batches = _toy_batches(spark)
+    root = str(tmp_path / "toy")
+    _ToySink(root, compact_every=1).foreach_batch(batches[0], 0)
+    before = {n: statedir.dir_counts(os.path.join(root, n)) for n in "abc"}
+    drifted = _ToySink(root, stamp="v2", compact_every=1)
+    with pytest.raises(ValueError, match="toy index scheme mismatch"):
+        drifted.foreach_batch(batches[1], 1)
+    assert drifted.folded == []
+    assert {n: statedir.dir_counts(os.path.join(root, n)) for n in "abc"} == before
+
+
+def test_sink_tables_crash_between_commits_then_replay(
+    spark, tmp_path, monkeypatch
+):
+    """Batch 2 fails at commit position 0, its same-id replay fails at
+    position 1, the next at position 2, the last succeeds: every table's
+    read then equals a clean run's — across the fold compact_every=2
+    runs at batch 2."""
+    import shutil
+
+    batches = _toy_batches(spark)[:3]
+    prefix = str(tmp_path / "prefix")
+    for i, b in enumerate(batches[:2]):
+        _ToySink(prefix).foreach_batch(b, i)
+    for name in ("clean", "torn"):
+        shutil.copytree(prefix, str(tmp_path / name))
+    clean = _ToySink(str(tmp_path / "clean"))
+    clean.foreach_batch(batches[2], 2)
+
+    toy = _ToySink(str(tmp_path / "torn"))
+    real_batch_dir = statedir.batch_dir
+    for crash_at in range(3):
+        calls = []
+
+        def failing_batch_dir(root, batch_id):
+            calls.append(root)
+            if len(calls) == crash_at + 1:
+                raise OSError("injected crash between commits")
+            return real_batch_dir(root, batch_id)
+
+        monkeypatch.setattr(statedir, "batch_dir", failing_batch_dir)
+        with pytest.raises(OSError, match="injected crash"):
+            toy.foreach_batch(batches[2], 2)
+        assert len(calls) == crash_at + 1
+    monkeypatch.setattr(statedir, "batch_dir", real_batch_dir)
+    toy.foreach_batch(batches[2], 2)
+    assert toy.snapshot(spark) == clean.snapshot(spark)
+
+
+def test_sinks_reach_statedir_only_through_the_kernel():
+    """Structure guard: outside statedir.py, no module under streaming/
+    uses the statedir primitives the per-trigger protocol is built from
+    — a sink declares its tables and goes through SinkTables instead of
+    hand-writing fold, pin and commit again."""
+    import ast
+
+    banned = {
+        "maybe_compact",
+        "maybe_compact_with_fallback",
+        "batch_dir",
+        "read_state",
+        "state_relations",
+    }
+    pkg = os.path.dirname(statedir.__file__)
+    hits = []
+    for name in sorted(os.listdir(pkg)):
+        if not name.endswith(".py") or name == "statedir.py":
+            continue
+        with open(os.path.join(pkg, name)) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in banned
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "statedir"
+            ):
+                hits.append(f"{name}:{node.lineno} statedir.{node.attr}")
+            elif isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).endswith("statedir"):
+                hits += [
+                    f"{name}:{node.lineno} imports {a.name}"
+                    for a in node.names
+                    if a.name in banned
+                ]
+    assert not hits, hits

@@ -1103,7 +1103,41 @@ def test_vacuum_handles_versioned_kills(spark, tmp_path):
     assert _snap_bm25(dst, spark) == _snap_bm25(src, spark)
 
 
-def test_build_runs_the_admission_plan_once(spark, tmp_path):
+def _admission_case(spark, sink, state):
+    """(sink, committed first batch, new second batch, its tables) for
+    the sinks whose admission plan runs a LeftAnti redelivery guard
+    past a shuffle."""
+    if sink == "versioned_retrieval":
+        return (
+            VersionedRetrievalIndexSnapshot(state), _v1(spark), _v2(spark),
+            ("docs", "postings"),
+        )
+    if sink == "media":
+        from stream_cdc_spark.plans.queries import _media_thumbs
+        from stream_cdc_spark.streaming.media_dedup import MediaDedupSnapshot
+
+        thumbs = _media_thumbs(_docs(spark).select("doc_id", "text"))
+        return (
+            MediaDedupSnapshot(state),
+            thumbs.filter(F.col("media_id") % 2 == 0),
+            thumbs.filter(F.col("media_id") % 2 == 1),
+            ("sigs", "index", "matches"),
+        )
+    docs = _docs(spark).select("doc_id", "text")
+    even, odd = docs.filter(F.col("doc_id") % 2 == 0), docs.filter(
+        F.col("doc_id") % 2 == 1
+    )
+    if sink == "retrieval":
+        return RetrievalIndexSnapshot(state), even, odd, ("docs", "postings", "stats")
+    from stream_cdc_spark.streaming.lsh_snapshot import LshDedupSnapshot
+
+    return LshDedupSnapshot(state), even, odd, ("sigs", "index", "counts")
+
+
+@pytest.mark.parametrize(
+    "sink", ["versioned_retrieval", "retrieval", "lsh", "media"]
+)
+def test_build_runs_the_admission_plan_once(spark, tmp_path, sink):
     """Pin, then probe the pin: a take(1) cannot exit early past the
     admission plan's groupBy/anti-join shuffles, so probing the lazy
     plan before pinning ran the whole admission plan twice per trigger.
@@ -1114,10 +1148,11 @@ def test_build_runs_the_admission_plan_once(spark, tmp_path):
         execs = store.executionsList()
         return [execs.apply(i) for i in range(execs.size())]
 
-    snap = VersionedRetrievalIndexSnapshot(str(tmp_path / "s"))
-    snap.foreach_batch(_v1(spark), 0)
+    state = str(tmp_path / "s")
+    snap, first, second, tables = _admission_case(spark, sink, state)
+    snap.foreach_batch(first, 0)
     seen = {int(e.executionId()) for e in executions()}
-    assert snap._build(spark, _v2(spark), 1) is not None
+    assert snap._build(spark, second, 1) is not None
     anti = [
         e
         for e in executions()
@@ -1126,7 +1161,7 @@ def test_build_runs_the_admission_plan_once(spark, tmp_path):
     ]
     assert len(anti) == 1, [e.description() for e in anti]
 
-    snap.foreach_batch(_v1(spark), 1)
-    for sub in ("docs", "postings"):
-        c = statedir.dir_counts(os.path.join(str(tmp_path / "s"), sub))
+    snap.foreach_batch(first, 1)
+    for sub in tables:
+        c = statedir.dir_counts(os.path.join(state, sub))
         assert c["batch"] == 1, (sub, c)
