@@ -7014,8 +7014,8 @@ assert len(_DRIVER_WINDOW_R11) == 50, len(_DRIVER_WINDOW_R11)
 #  (2) the query NEW this round (q138 versioned retrieval updates —
 #      never driver-green, so it must be in-window);
 #  (3) code-change anchor for this round's edits: q136 (the ANN sink
-#      gained the separate vec_id-bucketed admission ledger, legacy
-#      seeding, and tombstone-applying folds). q137's module changed
+#      gained the separate vec_id-bucketed admission ledger and
+#      tombstone-applying folds). q137's module changed
 #      too (postings folds apply tombstones; the versioned sink lives
 #      beside it) but its slot went to q138, which exercises the new
 #      versioned admission directly; q137 itself is r11-green (one

@@ -52,11 +52,7 @@ snapshot via statedir, and ``statedir.state_relations`` hands the
 guard the bucketed snapshot + plain tail as separate relations whose
 chained anti-joins keep the corpus-sized side Exchange-free —
 plan-asserted in tests/test_ann_index_stream.py), while vectors/
-stays cell-sorted for the probes. A pre-ledger state root (r11 and
-earlier: vectors/ only) is SEEDED on the next trigger: the admitted
-ids visible to that batch publish once as the ledger's compact=0 base
-snapshot — one column-pruned O(state) pass, after which admission
-never touches vectors/ again.
+stays cell-sorted for the probes.
 
 Because admission never reads vectors/, compaction folds of vectors/
 can apply tombstones: folded tiers keep LIVE rows only (the read-path
@@ -167,7 +163,6 @@ ANN_SCHEME_VERSIONED = ANN_SCHEME + "+versioned-maxread/v1"
 # into the index like the centroid digest.
 ANN_STORAGE_FLOAT = "float32"
 ANN_STORAGE_SQ8 = "sq8-dimrange/v1"
-_STAMP_DEFAULTS = {"ann_storage": ANN_STORAGE_FLOAT, "ann_sq_digest": "-"}
 
 
 def centroid_digest(centroids: list[tuple[int, list[float]]]) -> str:
@@ -530,11 +525,9 @@ class _AnnSink(_DriftMonitor):
         )
 
     def _state(self, spark, batch_id: int) -> DataFrame:
-        # pre-storage-tier state (round 10) carries no ann_storage key;
-        # it is float32 by construction (_STAMP_DEFAULTS)
         return self._tables.read_stamped(
             spark, "vectors", batch_id, "cell", self._stamp,
-            "ANN index parameter", self._HINT, _STAMP_DEFAULTS,
+            "ANN index parameter", self._HINT,
         )
 
     def vectors(self, spark) -> DataFrame:
@@ -558,9 +551,6 @@ class _AnnSink(_DriftMonitor):
         list the redelivery guard chains anti-joins over
         (``SinkTables.relations``)."""
         return self._tables.relations(spark, "ledger", batch_id)
-
-    def _maybe_seed_ledger(self, spark, batch_id: int) -> None:
-        """Only pre-ledger plain roots need a seed (AnnIndexSnapshot)."""
 
     def _assign(
         self, vecs: DataFrame, keep_residual: bool = False
@@ -603,9 +593,6 @@ class _AnnSink(_DriftMonitor):
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         self._state(spark, batch_id)  # stamp guard
-        # pre-ledger state roots seed their admission ledger before any
-        # fold of this trigger can apply tombstones to vectors/
-        self._maybe_seed_ledger(spark, batch_id)
         self._tables.fold(spark, batch_id)
         staged = self._build(spark, batch_df, batch_id)
         if staged is None:
@@ -675,28 +662,6 @@ class AnnIndexSnapshot(_AnnSink):
             ).sortWithinPartitions("cell"),
             compact_every, major_every, commit_files, bucketed, num_buckets,
             fs,
-        )
-
-    def _maybe_seed_ledger(self, spark, batch_id: int) -> None:
-        """Upgrade a pre-ledger state root (r11 and earlier: vectors/
-        doubled as the admission ledger) by publishing the admitted ids
-        VISIBLE TO THIS BATCH as the ledger's compact=0 base snapshot —
-        one column-pruned pass, once. Reading at ``batch_id`` (not the
-        unbounded watermark) keeps replays exact: a replayed batch must
-        not find its own first-attempt rows in the ledger, or the
-        anti-join would drop them and overwrite the batch dir empty.
-        Runs BEFORE any vectors/ fold of this trigger, so fold-time
-        tombstone application can never erase an admitted id ahead of
-        its seeding."""
-        if self._tables.has_state("ledger"):
-            return  # ledger exists (normal path after the first trigger)
-        if not self._tables.has_state("vectors", batch_id):
-            return  # fresh root: nothing to seed
-        statedir.publish_snapshot(
-            spark,
-            self.ledger_dir,
-            self._state(spark, batch_id).select("vec_id"),
-            fs=self.fs,
         )
 
     def _probe_relation(self, spark) -> DataFrame:

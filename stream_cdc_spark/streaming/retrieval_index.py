@@ -553,11 +553,9 @@ class VersionedRetrievalIndexSnapshot(_RetrievalSink):
     which is exact under the union-then-reduce read rule because
     per-doc version-argmax is an idempotent commutative monoid and
     versions are monotone (docs/ keeps the complete ledger — admission
-    never consults latest/). A pre-tier state root (r12 layout) keeps
-    working: reads fall back to the docs/ reduction and the next
-    trigger seeds the tier (``_maybe_seed_latest``). That closes the
-    round-12 design note: the probe-time reduction price of update
-    semantics is now O(recent), paid per probe, never per trigger.
+    never consults latest/). That closes the round-12 design note: the
+    probe-time reduction price of update semantics is now O(recent),
+    paid per probe, never per trigger.
 
     Scale shape per trigger (the hot path): identical to the
     insert-only sink — tokenize + per-doc tf is a narrow map over the
@@ -708,17 +706,13 @@ class VersionedRetrievalIndexSnapshot(_RetrievalSink):
     def _latest_source(self, spark) -> DataFrame:
         """The slim (doc_id, version, dl) relation the version-max read
         rule reduces: the fold-materialized latest/ tier + its un-folded
-        tail when the tier exists (O(live + recent) rows — folds already
-        collapsed superseded history), else the full docs/ ledger (a
-        pre-tier state root; the next trigger seeds the tier). Rows here
-        may still contain superseded versions (the tail) and tombstoned
-        ids (deletes after the fold) — every reader re-applies the
-        reduction and the tombstone exclusion, which is what makes the
-        fold-time collapse a pure optimization (per-doc version-argmax
-        is an idempotent, commutative monoid)."""
-        if self._tables.has_state("latest"):
-            return self._tables.read(spark, "latest")
-        return self.docs(spark)
+        tail (O(live + recent) rows — folds already collapsed superseded
+        history). Rows here may still contain superseded versions (the
+        tail) and tombstoned ids (deletes after the fold) — every reader
+        re-applies the reduction and the tombstone exclusion, which is
+        what makes the fold-time collapse a pure optimization (per-doc
+        version-argmax is an idempotent, commutative monoid)."""
+        return self._tables.read(spark, "latest")
 
     @staticmethod
     def _reduce_latest(df: DataFrame) -> DataFrame:
@@ -847,33 +841,10 @@ class VersionedRetrievalIndexSnapshot(_RetrievalSink):
         watermark kills nothing — the silent-no-op class)."""
         self._vtomb.append(batch_df, batch_id)
 
-    def _maybe_seed_latest(self, spark, batch_id: int) -> None:
-        """Upgrade a pre-tier state root (r12 layout: no latest/) by
-        publishing the docs ledger rows VISIBLE TO THIS BATCH as the
-        tier's compact=0 base snapshot — one column-pruned slim pass,
-        once. Probes on a never-again-written root keep working without
-        the seed (the read rule falls back to docs/); the seed is what
-        lets a RESUMED stream's tier cover history older than its own
-        batch dirs. Reading at ``batch_id`` keeps replays exact (the
-        ann_index ledger-seeding rule), though here even an over-read
-        would be harmless: the reduction is idempotent on duplicates."""
-        if self._tables.has_state("latest"):
-            return  # tier exists (normal path after the first trigger)
-        if not self._tables.has_state("docs", batch_id):
-            return  # fresh root: nothing to seed
-        statedir.publish_snapshot(
-            spark,
-            self.latest_dir,
-            self._tables.read(spark, "docs", batch_id),
-            fs=self.fs,
-        )
-
     # -- the sink: the statedir.SinkTables protocol ------------------------
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         self._postings(spark, batch_id)  # stamp guard
-        # pre-tier roots seed the latest/ tier before any fold
-        self._maybe_seed_latest(spark, batch_id)
         self._tables.fold(spark, batch_id)
         built = self._build(spark, batch_df, batch_id)
         if built is None:

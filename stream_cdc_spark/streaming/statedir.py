@@ -28,46 +28,34 @@ a partial dir complete with its _SUCCESS marker). Instead:
 
   1. Spark writes the snapshot data at its FINAL path ``compact=<W>/``
      (partial writes are unreadable by rule — see below);
-  2. the writer ensures the dir carries ``_SUCCESS`` (creating it if the
-     committer was configured not to — a publish must never depend on
-     ``mapreduce.fileoutputcommitter.marksuccessfuljobs``);
-  3. the writer PUTs a sibling manifest object ``compact=<W>.commit``
+  2. the writer PUTs a sibling manifest object ``compact=<W>.commit``
      listing the snapshot's data files. A single-object put is atomic on
      every backend (S3 PUT, GCS, HDFS create, POSIX rename of one file)
      — the reference's single-item checkpoint put gives the same
      single-object atomicity point (stream_cdc/state/dynamodb.py:76-91).
 
-A compact/delta dir is VALID iff its manifest exists (legacy tier: dirs
-published by the pre-r7 rename protocol carry ``_SUCCESS`` and no
-manifest; they are accepted and healed — given a manifest — by the next
-compaction pass. The legacy rule is sound for them because they were
-only ever produced where dir rename IS atomic. One documented legacy
-window remains: an INTERRUPTED pre-r7 ``shutil.rmtree`` of a published
-dir deletes files in arbitrary order, so ``_SUCCESS`` can outlive some
-data files — such a dir sits strictly below a valid cover and is never
-read, and the heal step refuses to stamp a manifest on one that lost
-ALL its data files unless it anchors a valid delta chain (then an
-empty-file manifest keeps the chain walkable — ``_reconcile`` doc); a
-partially-emptied one can still be healed but stays cover-excluded
-forever, so no read is affected either way. A
-deployment that asserts object-store semantics from day one sets
-``strict=True`` on its ``StateFS`` and the legacy tier is refused
-outright: ``_SUCCESS``-only dirs are treated as torn — never read,
-never healed, deleted by the next compaction pass). Readers of a
-manifested dir read EXACTLY the files the manifest names, so stray
-objects from a torn earlier overwrite attempt can never leak into a
-read. A dir with neither marker is a torn publish: never read, deleted
-by the next compaction attempt.
+One commit rule: a compact/delta dir is COMMITTED iff its manifest
+exists. Readers of a committed dir read EXACTLY the files the manifest
+names, so stray objects from a torn earlier attempt never leak into a
+read; ``_SUCCESS`` and every other marker mean nothing. Deletion of a
+committed dir removes the manifest FIRST, then the files. Folded dirs
+are deleted only after the covering manifest is durable, and only dirs
+strictly below a committed cover are ever deleted. Every state a crash
+can leave behind:
 
-Deletion of a published dir removes the manifest FIRST, then _SUCCESS,
-then the files — a crash mid-delete therefore leaves either a still-
-valid dir (manifest intact), or markerless garbage (torn by rule), never
-a manifest naming missing files. Folded/stale dirs are deleted only
-after the covering snapshot's manifest is durable, and only dirs
-strictly below a valid cover are ever deleted, so an interrupted delete
-can at worst resurrect a dir the read rule already ignores.
+  state                           read?  next fold (``_reconcile``)
+  ------------------------------  -----  -------------------------------
+  committed: manifest present     yes    kept (deleted once below a
+                                         committed cover)
+  torn: dir without manifest      no     deleted; its rows re-fold from
+  (crash before the manifest put,        the batch dirs, which stay in
+  or mid-delete after it went)           place until a cover is durable
+  ``.inprogress`` manifest temp   no     removed
+  interrupted delete below the    no     deleted by the stale cleanup
+  cover (batch dirs < C, off-            (the read rule already skips
+  chain deltas, older snapshots)         everything below the cover)
 
-All protocol metadata I/O (listing, marker/manifest puts, deletes) goes
+All protocol metadata I/O (listing, manifest puts, deletes) goes
 through an injectable ``StateFS``; ``LocalFS`` is the default. A real
 object-store deployment subclasses it with client calls — ``put_text``
 must be an atomic single-object put, nothing else needs atomicity. The
@@ -75,7 +63,7 @@ model test (tests/test_statedir_model.py) injects an S3-semantics fake
 (rename forbidden, crash injection between any two metadata mutations)
 and checks the read-set invariant at every crash point.
 
-Read rule for batch B (``state_paths``): take the LARGEST valid compact
+Read rule for batch B (``state_paths``): take the LARGEST committed compact
 watermark W <= B (0 if none), then read ``compact=W`` plus every
 ``batch=i`` with W <= i < B. Invariants:
 
@@ -90,10 +78,10 @@ watermark W <= B (0 if none), then read ``compact=W`` plus every
     interrupted — no double counting.
 
 Compaction itself is replay-idempotent: re-running ``compact(root, B)``
-when ``compact=B`` is already valid folds {compact=B} + [B, B) = itself
-and is skipped as a no-op (only the stale-dir cleanup reruns); if the
-previous attempt crashed between the data write and the manifest put,
-the heal step completes the publish instead of re-reading the sources.
+when ``compact=B`` is already committed folds {compact=B} + [B, B) =
+itself and is skipped as a no-op (only the stale-dir cleanup reruns); if
+the previous attempt crashed before its manifest put, the torn dir is
+deleted and the fold re-runs from the same sources.
 
 Scale notes: the fold is a single union-scan -> overwrite (optionally
 bucketed — see ``bucket_cols`` — so the compacted snapshot doubles as the
@@ -143,10 +131,7 @@ _AUTO_BUCKETED_SCAN_LOCK = threading.Lock()
 _BATCH_RE = re.compile(r"^batch=(\d+)$")
 _COMPACT_RE = re.compile(r"^compact=(\d+)$")
 _DELTA_RE = re.compile(r"^delta=(\d+)-(\d+)$")
-_TMP_PREFIX = ".tmp-compact-"  # legacy rename-protocol temp dirs
 _MANIFEST_SUFFIX = ".commit"
-_INTENT_SUFFIX = ".intent"
-_SUCCESS = "_SUCCESS"
 
 
 class LocalFS:
@@ -157,14 +142,7 @@ class LocalFS:
     (single-object put — atomic on S3/GCS/HDFS/POSIX alike); there is
     deliberately no directory-rename operation. Spark's own data writes
     do not pass through here — they are guarded by the manifest, not by
-    any filesystem property.
-
-    ``strict`` asserts the deployment never ran the pre-r7 rename
-    protocol (e.g. a from-scratch object-store state root): the legacy
-    ``_SUCCESS``-only acceptance tier is disabled — manifestless dirs
-    are torn, full stop (module doc)."""
-
-    strict = False
+    any filesystem property."""
 
     def listdir(self, path: str) -> list[str]:
         return os.listdir(path) if os.path.isdir(path) else []
@@ -195,9 +173,6 @@ class LocalFS:
     def read_text(self, path: str) -> str:
         with open(path) as f:
             return f.read()
-
-    def touch(self, path: str) -> None:
-        self.put_text(path, "")
 
     def remove(self, path: str) -> None:
         try:
@@ -232,50 +207,20 @@ def _manifest_path(dir_path: str) -> str:
     return dir_path + _MANIFEST_SUFFIX
 
 
-def _intent_path(dir_path: str) -> str:
-    return dir_path + _INTENT_SUFFIX
-
-
-def _put_bucket_intent(
-    fs: LocalFS, dest: str, bucket_cols: list[str], num_buckets: int
-) -> None:
-    """Record the bucket spec BEFORE a bucketed data write so a crash
-    between saveAsTable and the manifest put can be healed with the
-    TRUE spec of the files on disk. Without this, heal could only guess
-    from the caller's CURRENT constants — wrong if the deployment's
-    bucket_cols/num_buckets changed across the restart, and a
-    mislabeled spec makes the per-bucket fold skip an exchange the
-    files don't satisfy (code-review r9). The intent is removed once
-    the manifest (which carries the spec) is durable."""
-    fs.put_text(
-        _intent_path(dest),
-        json.dumps({"cols": list(bucket_cols), "n": num_buckets}),
-    )
-
-
 def _is_valid(fs: LocalFS, dir_path: str) -> bool:
-    """Manifest = committed; _SUCCESS-only = legacy rename-protocol
-    publish (pre-r7 layouts; healed by the next compaction pass) —
-    refused entirely when the fs asserts ``strict`` (no legacy history
-    exists, so a manifestless dir can only be torn)."""
-    if fs.exists(_manifest_path(dir_path)):
-        return True
-    if getattr(fs, "strict", False):
-        return False
-    return fs.exists(os.path.join(dir_path, _SUCCESS))
+    """The one commit rule: a compact/delta dir is committed iff its
+    manifest exists (module doc)."""
+    return fs.exists(_manifest_path(dir_path))
 
 
 def _publish_manifest(
     fs: LocalFS, dest: str, bucket_spec: dict | None = None
 ) -> None:
-    """Commit ``dest``: ensure _SUCCESS (never trust the committer config
-    to have written one), then atomically put the manifest naming the
-    data files. The manifest put is the commit point. ``bucket_spec``
+    """Commit ``dest``: atomically put the manifest naming its data
+    files. The manifest put is the commit point. ``bucket_spec``
     ({'cols': [...], 'n': int}) records that the dir was written as a
     Spark-bucketed layout, so the next major fold can read it one-
     partition-per-bucket and merge without re-shuffling it."""
-    if not fs.exists(os.path.join(dest, _SUCCESS)):
-        fs.touch(os.path.join(dest, _SUCCESS))
     files = [
         n
         for n in fs.list_files(dest)
@@ -295,33 +240,22 @@ def _manifest_info(fs: LocalFS, dir_path: str) -> dict | None:
 
 
 def _data_paths(fs: LocalFS, dir_path: str) -> list[str]:
-    """What a reader actually reads for a valid compact/delta dir: the
-    EXACT files its manifest names (stray objects from torn overwrite
-    attempts never leak into a read); the dir itself for a legacy
-    _SUCCESS-only publish."""
-    mp = _manifest_path(dir_path)
-    if fs.exists(mp):
-        names = json.loads(fs.read_text(mp))["files"]
-        return [os.path.join(dir_path, n) for n in names]
-    return [dir_path]
+    """What a reader reads for a committed compact/delta dir: the EXACT
+    files its manifest names (stray objects from torn overwrite
+    attempts never leak into a read)."""
+    names = json.loads(fs.read_text(_manifest_path(dir_path)))["files"]
+    return [os.path.join(dir_path, n) for n in names]
 
 
 def _delete_published(fs: LocalFS, dir_path: str) -> None:
-    """Manifest first, then _SUCCESS, then the files: a crash mid-delete
-    leaves either a still-valid dir or markerless (torn-by-rule) garbage,
-    never a manifest naming missing files."""
+    """Manifest first, then the files: a crash mid-delete leaves either
+    a still-committed dir or a torn one, never a manifest naming
+    missing files."""
     fs.remove(_manifest_path(dir_path))
-    fs.remove(_intent_path(dir_path))
-    fs.remove(os.path.join(dir_path, _SUCCESS))
     fs.rmtree(dir_path)
 
 
 def batch_dir(root: str, batch_id: int) -> str:
-    # pre-compaction layouts wrote batch=<id> unpadded; a replayed batch
-    # must OVERWRITE that dir, not create a padded sibling for the same id
-    legacy = os.path.join(root, f"batch={batch_id}")
-    if os.path.isdir(legacy):
-        return legacy
     return os.path.join(root, f"batch={batch_id:09d}")
 
 
@@ -329,8 +263,8 @@ def _scan(
     root: str, fs: LocalFS | None = None
 ) -> tuple[dict[int, str], dict[int, str], dict[tuple[int, int], str]]:
     """(compacts, batches, deltas) as {id: path} / {(lo, hi): path}. Only
-    compact/delta dirs that pass ``_is_valid`` count — an unmanifested,
-    markerless dir is a torn publish and must never be read."""
+    committed compact/delta dirs count — a manifestless dir is a torn
+    publish and must never be read."""
     fs = fs or _DEFAULT_FS
     compacts: dict[int, str] = {}
     batches: dict[int, str] = {}
@@ -409,17 +343,7 @@ def read_state(
     paths = state_paths(root, batch_id, fs)
     if not paths:
         return spark.createDataFrame([], schema)
-    return _read_paths(spark, paths, schema)
-
-
-def _read_paths(spark: SparkSession, paths: list[str], schema: str) -> DataFrame:
-    """``paths`` read with schema inference (so column metadata
-    survives), ``schema`` only when every path is file-less (legacy
-    empty-batch commits: inference has nothing to read)."""
-    try:
-        return spark.read.parquet(*paths)
-    except Exception:
-        return spark.read.schema(schema).parquet(*paths)
+    return spark.read.parquet(*paths)
 
 
 def compact(
@@ -469,7 +393,7 @@ def compact(
     ]
     stale_compacts = [p for i, p in compacts.items() if eligible and i < w]
     # Note: a replay after a COMPLETED publish needs no special case —
-    # compact=batch_id being valid makes cover == batch_id, the fold set
+    # compact=batch_id being committed makes cover == batch_id, the fold set
     # empty, and the folded dirs fall into the stale cleanup below.
     published = False
     if fold_batches or fold_deltas:
@@ -484,7 +408,6 @@ def compact(
             name = table_name or _default_table_name(root)
             spark.sql(f"DROP TABLE IF EXISTS {name}")
             fs.rmtree(dest)
-            _put_bucket_intent(fs, dest, list(bucket_cols), num_buckets)
             auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
             # force one-partition-per-bucket scans of the chain for the
             # duration of the fold job, so each write task holds exactly
@@ -510,7 +433,6 @@ def compact(
             _publish_manifest(
                 fs, dest, {"cols": list(bucket_cols), "n": num_buckets}
             )
-            fs.remove(_intent_path(dest))
         else:
             df = read_state(spark, root, schema, batch_id, fs)
             if transform is not None:
@@ -564,7 +486,7 @@ def compact_minor(
     fold = [(i, p) for i, p in sorted(batches.items()) if cover <= i < batch_id]
     if not fold:
         return False
-    df = _read_paths(spark, [p for _, p in fold], schema)
+    df = spark.read.parquet(*(p for _, p in fold))
     if transform is not None:
         df = transform(df)
     dest = os.path.join(root, f"delta={cover:09d}-{batch_id:09d}")
@@ -575,7 +497,6 @@ def compact_minor(
         )
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         fs.rmtree(dest)
-        _put_bucket_intent(fs, dest, list(bucket_cols), num_buckets)
         # Bound the delta at <= num_buckets files — every file the chain
         # carries is re-opened by EVERY trigger's state read until the
         # next major fold, so an unbounded per-fold file count is a
@@ -603,7 +524,6 @@ def compact_minor(
         _publish_manifest(
             fs, dest, {"cols": list(bucket_cols), "n": num_buckets}
         )
-        fs.remove(_intent_path(dest))
     else:
         df.write.mode("overwrite").parquet(dest)
         _publish_manifest(fs, dest)
@@ -643,7 +563,7 @@ def _fold_input(
     as a registered bucketed table so the fold scans it one-partition-
     per-bucket and the bucketed rewrite merges per bucket with NO
     Exchange over total state; only the unbucketed batch tail (and any
-    legacy/unaligned dir) is path-read and pays bucket routing. Returns
+    unaligned dir) is path-read and pays bucket routing. Returns
     (df, temp table names to drop after the fold job)."""
     compacts, batches, deltas = _scan(root, fs)
     chain, cover = _chain(compacts, deltas, batch_id)
@@ -672,7 +592,7 @@ def _fold_input(
         p for i, p in sorted(batches.items()) if cover <= i < batch_id
     )
     if plain_paths:
-        tail = _read_paths(spark, plain_paths, schema)
+        tail = spark.read.parquet(*plain_paths)
         # route the unbucketed tail into bucket-aligned partitions
         # BEFORE the union (repartition hashing == bucketBy hashing, so
         # partition index == bucket id): each tail task then writes one
@@ -696,133 +616,25 @@ def _fold_input(
     # the same files so the folded snapshot keeps the stamp
     paths = state_paths(root, batch_id, fs)
     if paths:
-        try:
-            for f in spark.read.parquet(*paths).schema.fields:
-                if f.metadata:
-                    df = df.withMetadata(f.name, f.metadata)
-        except Exception:
-            pass  # file-less legacy dirs: nothing to recover
+        for f in spark.read.parquet(*paths).schema.fields:
+            if f.metadata:
+                df = df.withMetadata(f.name, f.metadata)
     return df, tmp_tables
-
-
-# Spark bucketed writes name files ``part-NNNNN-<uuid>_BBBBB.cNNN.*`` —
-# the ``_BBBBB`` suffix is the bucket id the scan maps at read time.
-_BUCKET_FILE_RE = re.compile(r"_(\d{5})\.c\d+\.")
-
-
-def _heal_bucket_spec(fs: LocalFS, path: str) -> dict | None:
-    """The bucket spec to stamp when healing ``path``: the INTENT marker
-    the writer put before its bucketed data write — the spec of the
-    files actually on disk (ADVICE r8: healing a bucketed dir as
-    unbucketed silently cost the next major fold its per-bucket merge).
-    The caller's current constants are deliberately NOT used: they may
-    have drifted across the restart, and a mislabeled spec would let
-    the per-bucket fold skip an exchange the files don't satisfy
-    (code-review r9). Accepted only when every data file carries a
-    Spark bucket-id suffix below the intent's bucket count, so a
-    corrupt/stale intent can never mislabel a plain-parquet dir; a dir
-    with no intent (plain write, or a pre-intent-protocol crash) heals
-    without a spec — correct, merely ineligible for the per-bucket
-    merge until the next fold rewrites it."""
-    ip = _intent_path(path)
-    if not fs.exists(ip):
-        return None
-    try:
-        spec = json.loads(fs.read_text(ip))
-        cols, n = list(spec["cols"]), int(spec["n"])
-    except Exception:
-        return None
-    ids = []
-    for f in fs.list_files(path):
-        if f.startswith(("_", ".")):
-            continue
-        m = _BUCKET_FILE_RE.search(f)
-        if not m:
-            return None
-        ids.append(int(m.group(1)))
-    if ids and max(ids) < n:
-        return {"cols": cols, "n": n}
-    return None
 
 
 def _reconcile(root: str, fs: LocalFS) -> None:
     """Pre-fold housekeeping (writer-only — readers never mutate):
-
-    * HEAL: a compact/delta dir with _SUCCESS but no manifest is a
-      complete publish that crashed before its manifest put (or a legacy
-      rename-protocol dir) — finish the commit by writing the manifest.
-      Sound because under the manifest protocol no dir copy ever occurs,
-      so _SUCCESS can only be present on a dir our own writer completed.
-      When the dir carries the writer's INTENT marker and its data
-      files all carry matching Spark bucket-id suffixes, the healed
-      manifest records the bucket spec too, so a publish that crashed
-      between saveAsTable and the manifest put keeps its
-      per-bucket-merge eligibility (ADVICE r8 / code-review r9).
-      Legacy caveat: a pre-r7 ``shutil.rmtree`` interrupted mid-delete
-      removes files in arbitrary order, so _SUCCESS can survive the
-      data; a dir that lost ALL its data files is therefore treated as
-      torn, not healed — UNLESS it anchors a valid delta chain (some
-      valid delta's lo equals the dir's watermark), in which case it is
-      healed with an empty-file manifest: deleting a chain anchor would
-      orphan the deltas stacked on it and silently hide their rows
-      (ADVICE r8), while an empty-file manifest contributes zero rows
-      and keeps the chain walkable. (A files-lost anchor can only arise
-      mid-delete, i.e. under a higher cover the read rule already
-      prefers, so the empty heal is never read; a legitimately-empty
-      legacy fold is restored exactly.) A non-anchor with a partial
-      remainder stays below the valid cover that justified its deletion,
-      so it is never read — module doc. Under a ``strict`` fs there is
-      no legacy tier at all: every manifestless dir is torn.
-    * CLEAN: legacy temp dirs and dirs with neither marker are torn
-      publishes — unreadable by rule, deleted here."""
-    strict = getattr(fs, "strict", False)
-    entries = fs.listdir(root) if fs.isdir(root) else []
-    # chain anchors: a valid delta's lo names the watermark it stacks on
-    anchor_los: set[int] = set()
-    if not strict:
-        for n in entries:
-            m = _DELTA_RE.match(n)
-            if m and _is_valid(fs, os.path.join(root, n)):
-                anchor_los.add(int(m.group(1)))
-    for n in entries:
+    remove ``.inprogress`` manifest temps (puts that never reached their
+    replace) and delete every manifestless compact/delta dir — a torn
+    publish, never read (module doc's recovery table)."""
+    for n in fs.listdir(root) if fs.isdir(root) else []:
         path = os.path.join(root, n)
         if n.endswith(".inprogress"):
-            # LocalFS put_text temp that never reached its os.replace —
-            # by definition uncommitted; remove so it cannot accumulate
             fs.remove(path)
-            continue
-        if n.endswith(_MANIFEST_SUFFIX):
-            continue
-        if n.endswith(_INTENT_SUFFIX):
-            # stale once its dir's manifest is durable (the manifest
-            # carries the spec) or the dir itself is gone
-            d = path[: -len(_INTENT_SUFFIX)]
-            if fs.exists(_manifest_path(d)) or not fs.isdir(d):
-                fs.remove(path)
-            continue
-        if n.startswith(_TMP_PREFIX):
+        elif (_COMPACT_RE.match(n) or _DELTA_RE.match(n)) and not _is_valid(
+            fs, path
+        ):
             fs.rmtree(path)
-            continue
-        cm = _COMPACT_RE.match(n)
-        dm = _DELTA_RE.match(n)
-        if cm or dm:
-            if fs.exists(_manifest_path(path)):
-                continue
-            has_data = any(
-                not f.startswith(("_", "."))
-                for f in fs.list_files(path)
-            )
-            watermark_of_dir = int(cm.group(1)) if cm else int(dm.group(2))
-            anchors_chain = watermark_of_dir in anchor_los
-            if (
-                not strict
-                and (has_data or anchors_chain)
-                and fs.exists(os.path.join(path, _SUCCESS))
-            ):
-                _publish_manifest(fs, path, _heal_bucket_spec(fs, path))
-                fs.remove(_intent_path(path))
-            else:
-                _delete_published(fs, path)
 
 
 def maybe_compact(
@@ -1076,8 +888,7 @@ class SinkTables:
       1. stamp guard — a sink whose state carries a parameter stamp
          refuses mismatched state (``read_stamped``) BEFORE any fold:
          the guard's contract is no operation at all on mismatched
-         state (a sink that upgrades an older layout seeds it here,
-         before the fold);
+         state;
       2. fold — each table's committed prefix (batch ids < B) folds in
          declared order (``fold``). A replayed B re-folds the identical
          prefix, so compaction inherits replay idempotence;
@@ -1169,11 +980,9 @@ class SinkTables:
         stamp: dict,
         what: str,
         hint: str,
-        defaults: dict | None = None,
     ) -> DataFrame:
         """``read``, refused with ``ValueError`` when the persisted
         ``column`` metadata carries a stamp other than ``stamp``.
-        ``defaults`` fills stamp keys that older state predates;
         ``what`` names the index and ``hint`` says how to rebuild."""
         state = self.read(spark, table, batch_id)
         meta = dict(state.schema[column].metadata or {})
@@ -1181,7 +990,7 @@ class SinkTables:
             # schema-fallback read of an empty state: nothing persisted
             # yet, nothing to contradict
             return state
-        got = {k: meta.get(k, (defaults or {}).get(k)) for k in stamp}
+        got = {k: meta.get(k) for k in stamp}
         if got != stamp:
             raise ValueError(
                 f"{what} mismatch: state at {self.dir(table)!r} was built "
@@ -1498,5 +1307,5 @@ def state_relations(
     tail = [p for p in state_paths(root, batch_id, fs) if p not in snap_files]
     out = [rel]
     if tail:
-        out.append(_read_paths(spark, tail, schema))
+        out.append(spark.read.parquet(*tail))
     return out

@@ -631,12 +631,8 @@ LSH_DEDUP_OUT = StructType(
     ]
 )
 
-# NB on upgrades: the ``seen`` field was added in round 5. Spark's state
-# schema compatibility check rejects a checkpoint written with the older
-# 2-field (ids, sigs) struct, so such checkpoints must be discarded on
-# upgrade (the readers below additionally tolerate a short tuple for
-# runtimes that accept the widened struct); matches degrade to the
-# documented at-least-once emission for capped docs only.
+# NB on upgrades: Spark's state-schema check rejects a checkpoint written
+# before the ``seen`` field existed (round 5); discard such checkpoints.
 LSH_DEDUP_STATE = StructType(
     [
         StructField("ids", ArrayType(LongType()), True),
@@ -720,11 +716,7 @@ class _LshDedupProcessor:
 
     def handleInputRows(self, key, rows, timerValues):
         if self.bucket.exists():
-            got = self.bucket.get()
-            ids, sigs = got[0], got[1]
-            # pre-r5 checkpoints carry 2-field (ids, sigs) state — absent
-            # seen-list degrades to the documented at-least-once emission
-            seen = got[2] if len(got) > 2 and got[2] is not None else []
+            ids, sigs, seen = self.bucket.get()
             members = [
                 (int(i), tuple(int(x) for x in s)) for i, s in zip(ids, sigs)
             ]
@@ -761,14 +753,7 @@ def _lsh_dedup_legacy(num_hashes: int, min_agree: float, max_bucket: int):
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            got = state.get
-            ids, sigs = got[0], got[1]
-            # Defensive 2-field unpack for pre-seen-list state blobs. NB:
-            # the applyInPandasWithState runtime also schema-checks the
-            # checkpoint, so a pre-r5 (ids, sigs) checkpoint must be
-            # discarded on upgrade — this guard covers runtimes that
-            # accept the widened struct and hand back a short tuple.
-            seen = got[2] if len(got) > 2 and got[2] is not None else []
+            ids, sigs, seen = state.get
             members = [
                 (int(i), tuple(int(x) for x in s)) for i, s in zip(ids, sigs)
             ]

@@ -379,8 +379,7 @@ def test_sq8_tier_quarters_state_bytes(spark, tmp_path):
 
 
 def test_sq8_stamp_guards_tier_and_ranges(spark, tmp_path):
-    """Cross-tier probes and drifted quantizer ranges must refuse; a
-    pre-tier (round-10) stamp without the storage key reads as float32."""
+    """Cross-tier probes and drifted quantizer ranges must refuse."""
     cents, ranges = _centroids(spark), _sq_ranges(spark)
     slices = _slices(spark)
     sq8 = AnnIndexSnapshot(
@@ -543,34 +542,6 @@ def test_bucketed_ledger_equality_and_shuffle_free_admission(
     # bucketed ledger scan must not shuffle
     n_exchanges = len(re.findall(r"Exchange \(\d+\)", tree))
     assert n_exchanges == 1, plan
-
-
-@pytest.mark.slow
-def test_pre_ledger_state_seeds_ledger_and_keeps_first_wins(spark, tmp_path):
-    """An r11-layout state root (vectors/ only — it doubled as the
-    admission ledger) must upgrade in place: the next trigger seeds
-    ledger/ from the admitted ids visible to it, redelivered ids stay
-    dropped, new ids admit, and a replay of the seeding trigger is
-    exact (the seed reads at batch_id, never the unbounded watermark,
-    so a replayed batch cannot anti-join against its own first-attempt
-    rows and commit an empty dir)."""
-    import shutil
-
-    slices = _slices(spark)
-    snap = AnnIndexSnapshot(str(tmp_path / "s"), _centroids(spark))
-    for i, b in enumerate(slices[:2]):
-        snap.foreach_batch(b, i)
-    # forge the pre-r12 layout: drop the ledger state entirely
-    shutil.rmtree(snap.ledger_dir)
-    resumed = AnnIndexSnapshot(str(tmp_path / "s"), _centroids(spark))
-    resumed.foreach_batch(slices[1], 1)  # replay of the in-flight batch
-    assert statedir.state_paths(resumed.ledger_dir, 1 << 62)  # seeded
-    # the replayed batch's own rows survived (not dropped by its seed)
-    union01 = slices[0].unionByName(slices[1]).select("vec_id").distinct()
-    assert resumed.vectors(spark).count() == union01.count()
-    resumed.foreach_batch(slices[2], 2)
-    assert _snap_topk(resumed, spark) == _batch_topk(spark)
-    assert resumed.ledger(spark).count() == _emb(spark).count()
 
 
 @pytest.mark.slow

@@ -71,9 +71,9 @@ def test_interrupted_delete_does_not_double_count(spark, tmp_path):
         _write_batch(spark, root, b, [(b, f"v{b}")])
     # publish the snapshot by hand, leaving the folded dirs in place
     df = statedir.read_state(spark, root, SCHEMA, 3)
-    tmp = os.path.join(root, ".tmp-compact-000000003")
-    df.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, os.path.join(root, "compact=000000003"))
+    dest = os.path.join(root, "compact=000000003")
+    df.write.mode("overwrite").parquet(dest)
+    statedir._publish_manifest(statedir._DEFAULT_FS, dest)
     want = [(i, f"v{i}") for i in range(3)]
     assert _rows(spark, root, 3) == want  # not doubled
     # next compaction attempt cleans the leftovers
@@ -83,8 +83,8 @@ def test_interrupted_delete_does_not_double_count(spark, tmp_path):
 
 
 def test_torn_compact_publish_is_ignored_and_cleaned(spark, tmp_path):
-    """A compact dir without _SUCCESS (torn publish on a store without
-    atomic rename) is never read and is deleted by the next attempt."""
+    """A compact dir without a manifest (torn publish) is never read and
+    is deleted by the next attempt, which commits its own fold."""
     root = str(tmp_path / "s")
     for b in range(2):
         _write_batch(spark, root, b, [(b, f"v{b}")])
@@ -96,7 +96,7 @@ def test_torn_compact_publish_is_ignored_and_cleaned(spark, tmp_path):
     assert _rows(spark, root, 2) == want  # torn dir excluded
     assert statedir.compact(spark, root, SCHEMA, 2)
     assert _rows(spark, root, 2) == want
-    assert os.path.exists(os.path.join(torn, "_SUCCESS"))
+    assert os.path.exists(statedir._manifest_path(torn))
 
 
 def test_maybe_compact_threshold(spark, tmp_path):
@@ -339,9 +339,9 @@ def test_delta_interrupted_delete_does_not_double_count(spark, tmp_path):
     for b in range(3):
         _write_batch(spark, root, b, [(b, f"v{b}")])
     df = statedir.read_state(spark, root, SCHEMA, 3)
-    tmp = os.path.join(root, ".tmp-compact-d000000003")
-    df.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, os.path.join(root, "delta=000000000-000000003"))
+    dest = os.path.join(root, "delta=000000000-000000003")
+    df.write.mode("overwrite").parquet(dest)
+    statedir._publish_manifest(statedir._DEFAULT_FS, dest)
     want = [(i, f"v{i}") for i in range(3)]
     assert _rows(spark, root, 3) == want  # not doubled
     _write_batch(spark, root, 3, [(3, "v3")])

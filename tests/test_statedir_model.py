@@ -24,7 +24,7 @@ SCHEMA = "id bigint, v bigint"
 
 # ops: ("commit",) advances the stream one batch; ("compact",) folds at
 # the current head; ("torn_compact",) fakes a crash mid-publish (dir
-# without _SUCCESS); ("interrupted_delete",) publishes by hand but leaves
+# without manifest); ("interrupted_delete",) publishes by hand but leaves
 # the folded dirs in place.
 OPS = st.lists(
     st.sampled_from(
@@ -247,48 +247,6 @@ def test_object_store_crash_sweep(spark, tmp_path):
     assert observed(1 << 62) == expected(1 << 62)
 
 
-def test_heal_completes_publish_without_refolding(spark, tmp_path):
-    """Crash exactly between the snapshot data write (+_SUCCESS) and the
-    manifest put: the dir is complete; the next attempt's heal step
-    commits it by writing the manifest instead of deleting it as torn."""
-    fs = ObjectStoreFS()
-    root = str(tmp_path / "heal")
-    os.makedirs(root)
-    for b in range(3):
-        spark.createDataFrame(
-            [(b, b)], SCHEMA
-        ).write.mode("overwrite").parquet(statedir.batch_dir(root, b))
-    fs.ops = 0
-    fs.crash_after = 1  # survive touch(_SUCCESS-if-missing)? data write
-    # run until the manifest put is the op that crashes: find the crash
-    # point where the dest dir exists with _SUCCESS but no manifest
-    dest = os.path.join(root, "compact=000000003")
-    for k in range(50):
-        fs.ops = 0
-        fs.crash_after = k
-        try:
-            statedir.compact(spark, root, SCHEMA, 3, fs=fs)
-            break
-        except InjectedCrash:
-            pass
-        finally:
-            fs.crash_after = None
-        if os.path.exists(os.path.join(dest, "_SUCCESS")) and not os.path.exists(
-            dest + ".commit"
-        ):
-            # the torn-between state: heal must commit, not delete
-            statedir.compact(spark, root, SCHEMA, 3, fs=fs)
-            break
-    assert os.path.exists(dest + ".commit")
-    got = sorted(
-        map(
-            tuple,
-            statedir.read_state(spark, root, SCHEMA, 3, fs=fs).collect(),
-        )
-    )
-    assert got == [(0, 0), (1, 1), (2, 2)]
-
-
 OPS_S3 = st.lists(
     st.one_of(
         st.just(("commit", None)),
@@ -358,93 +316,58 @@ def test_random_interleavings_on_object_store_fake(spark, sd_root, ops):
         assert observed(1 << 62) == expected(1 << 62), (op, crash_after, head)
 
 
-def test_strict_fs_refuses_success_only_dirs(spark, tmp_path):
-    """Object-store torn copy-then-delete hazard: a ``compact=`` dir can
-    surface with data files AND ``_SUCCESS`` but no manifest (e.g. a
-    partially-copied legacy dir — the exact shape a pre-r7 rename could
-    expose on S3). A strict fs asserts the deployment has no legacy
-    history, so such a dir must be (a) invisible to reads, (b) refused by
-    the heal step and deleted, never manifest-stamped."""
-    fs = ObjectStoreFS()
-    fs.strict = True
-    root = str(tmp_path / "strict")
-    os.makedirs(root)
-    for b in range(2):
+def test_manifestless_dirs_are_torn_never_healed(spark, tmp_path):
+    """The one commit rule on the default fs: a ``compact=`` and a
+    ``delta=`` dir holding real data files, ``_SUCCESS`` and a sibling
+    ``.intent`` bucket-spec marker but no manifest (a crash before the
+    manifest put, or a torn copy on an object store) are (a) never read,
+    (b) deleted — not manifest-stamped — by the next fold, and (c) that
+    fold re-folds the batch dirs' rows."""
+    root = str(tmp_path / "torn")
+    for b in range(4):
         spark.createDataFrame([(b, b)], SCHEMA).write.mode(
             "overwrite"
         ).parquet(statedir.batch_dir(root, b))
-    # fabricate the torn-copy shape: real data files + _SUCCESS, no
-    # manifest — under the legacy tier this would be accepted and healed
-    fake = os.path.join(root, "compact=000000009")
-    spark.createDataFrame([(999, 999)], SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(fake)
-    assert os.path.exists(os.path.join(fake, "_SUCCESS"))
-    assert not os.path.exists(fake + ".commit")
+    # compact=2 with delta=[2, 4) stacked on it: a chain whose cover
+    # would hide every batch dir if either dir counted as committed
+    fakes = {
+        os.path.join(root, "compact=000000002"): 999,
+        os.path.join(root, "delta=000000002-000000004"): 888,
+    }
+    for path, v in fakes.items():
+        spark.createDataFrame([(v, v)], SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(path)
+        with open(path + ".intent", "w") as f:
+            f.write('{"cols": ["id"], "n": 4}')
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
+        assert not os.path.exists(statedir._manifest_path(path))
+    want = [(b, b) for b in range(4)]
 
-    # (a) never read: the fake snapshot must not shadow the batch dirs
-    got = sorted(
-        map(
-            tuple,
-            statedir.read_state(spark, root, SCHEMA, 1 << 62, fs=fs).collect(),
+    def rows(batch_id):
+        return sorted(
+            map(
+                tuple,
+                statedir.read_state(spark, root, SCHEMA, batch_id).collect(),
+            )
         )
-    )
-    assert got == [(0, 0), (1, 1)]
-    # (b) the next fold's reconcile deletes it instead of healing it
-    assert statedir.compact(spark, root, SCHEMA, 2, fs=fs)
-    assert not os.path.exists(fake)
-    assert not os.path.exists(fake + ".commit")
-    got = sorted(
-        map(
-            tuple,
-            statedir.read_state(spark, root, SCHEMA, 1 << 62, fs=fs).collect(),
-        )
-    )
-    assert got == [(0, 0), (1, 1)]
-    # sanity: the same shape under a non-strict fs IS the legacy tier
-    # (healed, readable) — strictness is what changed the outcome
-    fs2 = ObjectStoreFS()
-    root2 = str(tmp_path / "legacy")
-    os.makedirs(root2)
-    fake2 = os.path.join(root2, "compact=000000009")
-    spark.createDataFrame([(999, 999)], SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(fake2)
-    got2 = sorted(
-        map(
-            tuple,
-            statedir.read_state(
-                spark, root2, SCHEMA, 1 << 62, fs=fs2
-            ).collect(),
-        )
-    )
-    assert got2 == [(999, 999)]
 
-
-def test_heal_refuses_data_less_legacy_dir(spark, tmp_path):
-    """A legacy dir whose interrupted rmtree left _SUCCESS but deleted
-    every data file must be treated as torn (deleted), not healed into a
-    manifested empty snapshot — stamping it would launder an incomplete
-    delete into a committed (empty) publish."""
-    fs = ObjectStoreFS()
-    root = str(tmp_path / "dataless")
-    os.makedirs(root)
-    spark.createDataFrame([(0, 0)], SCHEMA).write.mode("overwrite").parquet(
-        statedir.batch_dir(root, 0)
+    # (a) never read: neither dir shadows the batch dirs
+    assert rows(4) == want
+    assert rows(1 << 62) == want
+    # (b) the next fold deletes both instead of healing them ...
+    assert statedir.compact(spark, root, SCHEMA, 4)
+    for path in fakes:
+        assert not os.path.exists(path)
+        assert not os.path.exists(statedir._manifest_path(path))
+    # (c) ... and commits its own fold of the batch dirs
+    assert os.path.exists(
+        statedir._manifest_path(os.path.join(root, "compact=000000004"))
     )
-    husk = os.path.join(root, "compact=000000007")
-    os.makedirs(husk)
-    with open(os.path.join(husk, "_SUCCESS"), "w"):
-        pass  # mid-rmtree remainder: marker survived, data did not
-    assert statedir.compact(spark, root, SCHEMA, 1, fs=fs)
-    assert not os.path.exists(husk), "data-less legacy dir must be torn"
-    got = sorted(
-        map(
-            tuple,
-            statedir.read_state(spark, root, SCHEMA, 1 << 62, fs=fs).collect(),
-        )
-    )
-    assert got == [(0, 0)]
+    assert rows(4) == want
+    assert rows(1 << 62) == want
+    c = statedir.dir_counts(root)
+    assert c["compact"] == 1 and c["delta"] == 0 and c["batch"] == 0
 
 
 def test_object_store_crash_sweep_bucketed(spark, tmp_path):
@@ -513,120 +436,3 @@ def test_object_store_crash_sweep_bucketed(spark, tmp_path):
     c = statedir.dir_counts(root, fs=fs)
     assert c["compact"] == 1 and c["delta"] == 0 and c["batch"] == 0
     assert observed(1 << 62) == expected(1 << 62)
-
-
-def test_heal_preserves_data_less_chain_anchor(spark, tmp_path):
-    """ADVICE r9: a legitimately-EMPTY legacy compact cover (pre-r7
-    empty-state snapshot that wrote no part files) with a valid delta
-    stacked on it (delta lo == the cover's watermark) must be HEALED
-    with an empty-file manifest, not deleted — deleting the chain
-    anchor would orphan the delta and silently hide its rows."""
-    root = str(tmp_path / "anchor")
-    os.makedirs(root)
-    # the data-less legacy anchor: _SUCCESS only, no data, no manifest
-    anchor = os.path.join(root, "compact=000000005")
-    os.makedirs(anchor)
-    with open(os.path.join(anchor, "_SUCCESS"), "w"):
-        pass
-    # a valid delta stacked on it, holding the rows of batches [5, 7)
-    delta = os.path.join(root, "delta=000000005-000000007")
-    spark.createDataFrame([(5, 50), (6, 60)], SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(delta)
-    statedir._publish_manifest(statedir._DEFAULT_FS, delta)
-    # one batch above the chain
-    spark.createDataFrame([(7, 70)], SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(statedir.batch_dir(root, 7))
-
-    want = [(5, 50), (6, 60), (7, 70)]
-    got_before = sorted(
-        map(tuple, statedir.read_state(spark, root, SCHEMA, 8).collect())
-    )
-    assert got_before == want
-    # the fold triggers _reconcile; the anchor must survive (healed)
-    assert statedir.compact(spark, root, SCHEMA, 8)
-    got_after = sorted(
-        map(
-            tuple,
-            statedir.read_state(spark, root, SCHEMA, 1 << 62).collect(),
-        )
-    )
-    assert got_after == want, "chain anchor was orphaned, delta rows lost"
-
-
-def test_heal_recovers_bucket_spec_from_intent(spark, tmp_path):
-    """ADVICE r8 / code-review r9: a bucketed publish that crashed
-    between saveAsTable and the manifest put must be healed WITH the
-    spec from the writer's INTENT marker — the truth of the files on
-    disk — even when the restarted deployment's constants have DRIFTED
-    (intent n=4, restart folds with n=8: the healed manifest must say
-    4, or the per-bucket fold would skip an exchange the files don't
-    satisfy)."""
-    import json as _json
-
-    root = str(tmp_path / "bspec")
-    os.makedirs(root)
-    for b in range(3):
-        spark.createDataFrame([(b, b * 10)], SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(statedir.batch_dir(root, b))
-    assert statedir.compact_minor(
-        spark, root, SCHEMA, 3, bucket_cols=["id"], num_buckets=4
-    )
-    delta = os.path.join(root, "delta=000000000-000000003")
-    mp = statedir._manifest_path(delta)
-    assert _json.loads(open(mp).read())["bucket"] == {"cols": ["id"], "n": 4}
-    # a completed publish removed its intent marker
-    assert not os.path.exists(statedir._intent_path(delta))
-    # simulate the real crash point: intent + data + _SUCCESS, no
-    # manifest (the state between saveAsTable and the manifest put)
-    os.remove(mp)
-    statedir._put_bucket_intent(statedir._DEFAULT_FS, delta, ["id"], 4)
-    # the restarted deployment folds with DIFFERENT constants (n=8)
-    spark.createDataFrame([(9, 90)], SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(statedir.batch_dir(root, 9))
-    assert statedir.compact_minor(
-        spark, root, SCHEMA, 10, bucket_cols=["id"], num_buckets=8
-    )
-    healed = _json.loads(open(mp).read())
-    assert healed["bucket"] == {"cols": ["id"], "n": 4}  # intent, not hint
-    assert not os.path.exists(statedir._intent_path(delta))  # consumed
-    got = sorted(
-        map(
-            tuple,
-            statedir.read_state(spark, root, SCHEMA, 1 << 62).collect(),
-        )
-    )
-    assert got == [(0, 0), (1, 10), (2, 20), (9, 90)]
-
-
-def test_heal_does_not_mislabel_plain_dir_as_bucketed(spark, tmp_path):
-    """The bucket hint is accepted only when the file names prove the
-    bucketed layout: healing a PLAIN-parquet dir under a bucket hint
-    must stamp a plain manifest (no bucket key)."""
-    root = str(tmp_path / "plainheal")
-    os.makedirs(root)
-    plain = os.path.join(root, "delta=000000000-000000002")
-    spark.createDataFrame([(1, 10)], SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(plain)  # plain write: _SUCCESS, no manifest, no bucket ids
-    spark.createDataFrame([(2, 20)], SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(statedir.batch_dir(root, 2))
-    # even a (bogus/stale) intent cannot mislabel it: the file names
-    # carry no bucket-id suffix, so the heal stamps a plain manifest
-    statedir._put_bucket_intent(statedir._DEFAULT_FS, plain, ["id"], 4)
-    statedir._reconcile(root, statedir._DEFAULT_FS)
-    import json as _json
-
-    info = _json.loads(open(statedir._manifest_path(plain)).read())
-    assert "bucket" not in info
-    got = sorted(
-        map(
-            tuple,
-            statedir.read_state(spark, root, SCHEMA, 1 << 62).collect(),
-        )
-    )
-    assert got == [(1, 10), (2, 20)]

@@ -816,32 +816,6 @@ def test_latest_tier_bounds_probe_reduction(spark, tmp_path):
     assert f"{os.sep}docs" not in plan, plan
 
 
-def test_pre_tier_root_falls_back_and_seeds(spark, tmp_path):
-    """An r12-layout state root (no latest/) keeps working: probes fall
-    back to the docs/ ledger reduction, and the next trigger seeds the
-    tier from the ledger rows visible to it — after which probes read
-    the tier and equality holds, including across a replayed batch."""
-    import shutil
-
-    events = _events(spark)
-    snap = VersionedRetrievalIndexSnapshot(str(tmp_path / "s"))
-    _drain(snap, spark)
-    shutil.rmtree(snap.latest_dir)  # forge the pre-r13 layout
-    resumed = VersionedRetrievalIndexSnapshot(str(tmp_path / "s"))
-    # pure probe on the old layout: docs/ fallback
-    assert _snap_bm25(resumed, spark) == _batch_bm25(spark)
-    # a replayed trigger seeds the tier (and admits nothing new)
-    resumed.foreach_batch(events[3][1], 3)
-    assert statedir.state_paths(resumed.latest_dir, 1 << 62)
-    assert _snap_bm25(resumed, spark) == _batch_bm25(spark)
-    # the seeded tier now serves the probe-time reduction
-    stats = resumed.corpus_stats(spark)
-    plan = stats._sc._jvm.PythonSQLUtils.explainString(
-        stats._jdf.queryExecution(), "formatted"
-    )
-    assert f"{os.sep}latest" in plan, plan
-
-
 def test_bucketed_latest_tier_folds_by_doc_id(spark, tmp_path):
     """bucketed=True buckets the latest/ tier by doc_id (the probe-side
     reduction's grouping key) while the docs/ ledger stays bucketed by
