@@ -66,7 +66,7 @@ def classify_event_type(raw: Column) -> Column:
     (mysql.py:386-393 drops events it cannot classify).
     """
     mapping = F.create_map(*[F.lit(x) for kv in _CLASSIFY.items() for x in kv])
-    return mapping.getItem(raw)
+    return mapping[raw]
 
 
 def explode_rows(df: DataFrame, rows_col: str = "rows") -> DataFrame:

@@ -118,7 +118,6 @@ def _register_builtins() -> None:
     def _lsh_dedup_sink(state_dir, **kw):
         from stream_cdc_spark.streaming.lsh_snapshot import LshDedupSnapshot
 
-        kw.pop("min_tokens", None)  # curation-only knob, shared env wiring
         return LshDedupSnapshot(state_dir, **kw).sink
 
     # Continuous near-dup match emission over a document feed — the
@@ -151,7 +150,6 @@ def _register_builtins() -> None:
     def _ann_index_sink(state_dir, centroids=None, centroids_path=None, **kw):
         from stream_cdc_spark.streaming.ann_index import AnnIndexSnapshot
 
-        kw.pop("min_tokens", None)  # curation-only knob, shared env wiring
         centroids = _load_centroids("ann_index", centroids, centroids_path)
         return AnnIndexSnapshot(state_dir, centroids, **kw).foreach_batch
 
@@ -166,7 +164,6 @@ def _register_builtins() -> None:
             VersionedAnnIndexSnapshot,
         )
 
-        kw.pop("min_tokens", None)  # curation-only knob, shared env wiring
         centroids = _load_centroids(
             "ann_index_versioned", centroids, centroids_path
         )
@@ -199,7 +196,6 @@ def _register_builtins() -> None:
             RetrievalIndexSnapshot,
         )
 
-        kw.pop("min_tokens", None)  # curation-only knob, shared env wiring
         return RetrievalIndexSnapshot(state_dir, **kw).foreach_batch
 
     # Continuous inverted-index (BM25/TF-IDF) admission over a
@@ -212,7 +208,6 @@ def _register_builtins() -> None:
             VersionedRetrievalIndexSnapshot,
         )
 
-        kw.pop("min_tokens", None)  # curation-only knob, shared env wiring
         return VersionedRetrievalIndexSnapshot(state_dir, **kw).foreach_batch
 
     # The CDC-native retrieval index: (doc_id, version, text) UPSERTS

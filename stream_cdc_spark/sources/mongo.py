@@ -73,7 +73,7 @@ def parse_change_stream(
     p = df.withColumn("_m", F.from_json(F.col(value_col), CHANGE_STREAM_SCHEMA))
     return (
         p.select(
-            mapping.getItem(F.col("_m.operationType")).alias("event_type"),
+            mapping[F.col("_m.operationType")].alias("event_type"),
             F.col("_m._id._data").alias("gtid"),
             F.col("_m.ns.db").alias("database"),
             F.col("_m.ns.coll").alias("table"),

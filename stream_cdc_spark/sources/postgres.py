@@ -82,7 +82,7 @@ def parse_wal2json(
     p = df.withColumn("_w", F.from_json(F.col(value_col), WAL2JSON_SCHEMA))
     return (
         p.select(
-            mapping.getItem(F.col("_w.action")).alias("event_type"),
+            mapping[F.col("_w.action")].alias("event_type"),
             F.col("_w.lsn").alias("gtid"),
             F.col("_w.schema").alias("database"),
             F.col("_w.table").alias("table"),

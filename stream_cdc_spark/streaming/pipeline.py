@@ -60,6 +60,40 @@ def replay_stream(
     return df
 
 
+# The engine's drain trigger: run triggers back to back until
+# drain_and_stop sees the engine report no new data.
+DRAIN_TRIGGER = {"processingTime": "0 seconds"}
+
+
+def drain_and_stop(queries) -> None:
+    """The engine's one drain rule: run each started query until the
+    engine reports no new data (processAllAvailable), then stop it.
+
+    Python stream readers have no admission control: in PySpark 4.1
+    `DataSourceStreamReader.latestOffset()` takes no start and no limit,
+    so an available-now trigger fixes its end at the first rate-limited
+    offset (cdc_replay's batchEvents) and drops the rest of the log.
+    This rule holds for every source; over a file source without a rate
+    limit it is still one micro-batch per drain. If a query fails, the
+    others are stopped before the failure propagates, so none outlives
+    the caller."""
+    try:
+        for q in queries:
+            q.processAllAvailable()
+    finally:
+        for q in queries:
+            q.stop()
+
+
+def with_payload(df: DataFrame) -> DataFrame:
+    """Serialize each event to a JSON payload column (serializer
+    semantics of O10: stringify at the boundary)."""
+    return df.withColumn(
+        "payload",
+        F.to_json(F.struct(*[F.col(c) for c in df.columns])),
+    )
+
+
 class CdcPipeline:
     """source -> filter chain -> serialize -> foreachBatch sink, with
     checkpointing. The whole reference object graph (main.py:16-66) in one
@@ -81,34 +115,30 @@ class CdcPipeline:
         self.config = config or AppConfig()
         self.filters = filters or FilterChain()
         self.query = None
+        self.drain = False
 
     def transformed(self) -> DataFrame:
-        """Apply the filter chain and serialize each event to a JSON payload
-        (serializer semantics of O10: stringify at the boundary)."""
-        df = self.filters.apply(self.source)
-        cols = df.columns
-        return df.withColumn(
-            "payload",
-            F.to_json(F.struct(*[F.col(c) for c in cols])),
-        )
+        """Apply the filter chain and serialize each event to a JSON
+        payload (`with_payload`)."""
+        return with_payload(self.filters.apply(self.source))
 
     def start(self, available_now: bool = True):
         """Start the streaming query.
 
-        available_now=True drains everything currently in the log then
-        stops — the deterministic test/replay mode. False uses the
+        available_now=True is the drain mode (deterministic test/replay):
+        the query runs on DRAIN_TRIGGER and `await_and_stop` drains it
+        to the end of the log, then stops it. False uses the
         ProcessingTime trigger from config (production pacing, O15).
         """
-        writer = (
+        self.drain = available_now
+        trigger = DRAIN_TRIGGER if available_now else self.config.trigger()
+        self.query = (
             self.transformed()
             .writeStream.foreachBatch(self.sink_fn)
             .option("checkpointLocation", self.checkpoint_dir)
+            .trigger(**trigger)
+            .start()
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(**self.config.trigger())
-        self.query = writer.start()
         from stream_cdc_spark.logging_utils import get_logger
 
         get_logger().info(
@@ -119,13 +149,18 @@ class CdcPipeline:
         return self.query
 
     def await_and_stop(self, timeout: int | None = None) -> None:
-        """Graceful shutdown (O27): drain, then stop. With availableNow the
-        query terminates itself once the log is consumed."""
+        """Graceful shutdown (O27). A drain-mode query runs until the
+        engine reports no new data (`drain_and_stop`; `timeout` does not
+        apply), then stops. Otherwise wait up to `timeout` seconds for
+        the query to end, then stop it."""
         if self.query is None:
             return
-        self.query.awaitTermination(timeout)
-        if self.query.isActive:
-            self.query.stop()
+        if self.drain:
+            drain_and_stop([self.query])
+        else:
+            self.query.awaitTermination(timeout)
+            if self.query.isActive:
+                self.query.stop()
         from stream_cdc_spark.logging_utils import get_logger
 
         get_logger().info("pipeline stopped: checkpoint=%s", self.checkpoint_dir)

@@ -265,7 +265,7 @@ def test_in_memory_fold_matches_batch(spark):
 def test_ann_index_cli_mode_drains_corpus_and_deletes(
     spark, tmp_path, monkeypatch
 ):
-    """PIPELINE=ann_index entrypoint: one availableNow drain over the
+    """PIPELINE=ann_index entrypoint: one drain over the
     sf0.001 embeddings admits the whole corpus into the persisted index
     — plus a DELETES_PATH id feed drained into the TombstoneLog as a
     second query — and the probe equals the batch operator over the

@@ -325,7 +325,7 @@ def test_deletes_only_batch_commits_no_index_rows(spark, tmp_path):
 def test_cdc_full_cli_drains_envelopes_and_delete_feed(
     spark, tmp_path, monkeypatch
 ):
-    """PIPELINE=cdc_full entrypoint: one availableNow drain of the
+    """PIPELINE=cdc_full entrypoint: one drain of the
     envelope feed (inserts + good/bad updates + in-band Deletes) AND an
     out-of-band DELETES_PATH feed; both probes equal the batch
     references with both delete channels applied."""

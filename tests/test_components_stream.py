@@ -270,8 +270,8 @@ def test_lsh_snapshot_cluster_state_matches_batch_rollup(spark, tmp_path):
 @pytest.mark.slow
 def test_lsh_dedup_cli_cluster_state_env_knob(spark, tmp_path, monkeypatch):
     """CLUSTER_STATE=1 on the PIPELINE=lsh_dedup entrypoint wires the
-    forest through the registry/env config: after one availableNow
-    drain, clusters() equals connected_components over the emitted
+    forest through the registry/env config: after one drain,
+    clusters() equals connected_components over the emitted
     match set."""
     from stream_cdc_spark import main as M
     from stream_cdc_spark.streaming.lsh_snapshot import LshDedupSnapshot

@@ -144,7 +144,7 @@ def test_curation_replayed_batch_is_idempotent(spark, tmp_path):
 
 @pytest.mark.slow
 def test_curation_cli_mode_drains_corpus(spark, tmp_path, monkeypatch):
-    """PIPELINE=curation entrypoint: one availableNow drain over the
+    """PIPELINE=curation entrypoint: one drain over the
     sf0.001 corpus produces a decision per doc and a non-trivial kept
     corpus (the CLI twin of the restart e2e)."""
     from stream_cdc_spark import main as M

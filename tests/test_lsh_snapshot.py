@@ -214,7 +214,7 @@ def test_snapshot_index_never_rides_a_shuffle_join(spark, tmp_path):
 
 @pytest.mark.slow
 def test_lsh_dedup_cli_mode_drains_corpus(spark, tmp_path, monkeypatch):
-    """PIPELINE=lsh_dedup entrypoint: one availableNow drain over the
+    """PIPELINE=lsh_dedup entrypoint: one drain over the
     sf0.001 corpus emits the batch LSH candidate pairs and registers
     every shingled doc — the snapshot sink wired through the registry +
     env config exactly like the curation mode."""

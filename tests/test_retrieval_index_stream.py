@@ -218,7 +218,7 @@ def test_compaction_keeps_postings_word_sorted(spark, tmp_path):
 
 
 def test_retrieval_index_cli_mode_drains_corpus(spark, tmp_path, monkeypatch):
-    """PIPELINE=retrieval_index entrypoint: one availableNow drain over
+    """PIPELINE=retrieval_index entrypoint: one drain over
     the sf0.001 documents admits the whole corpus into the persisted
     inverted index and the probe equals the batch scorer — the sink wired
     through the registry + env config exactly like the ann_index mode."""

@@ -485,7 +485,7 @@ def test_empty_batch_commits_nothing(spark, tmp_path):
 def test_versioned_cli_mode_drains_upsert_and_delete_feeds(
     spark, tmp_path, monkeypatch
 ):
-    """PIPELINE=ann_index_versioned entrypoint: one availableNow drain
+    """PIPELINE=ann_index_versioned entrypoint: one drain
     over a (vec_id, version, embedding) upsert feed — inserts plus
     version-2 re-embeddings in one feed — AND a DELETES_PATH id feed
     drained into the TombstoneLog as a second query; the probe equals

@@ -438,7 +438,7 @@ def test_empty_batch_commits_nothing(spark, tmp_path):
 def test_versioned_cli_mode_drains_upsert_and_delete_feeds(
     spark, tmp_path, monkeypatch
 ):
-    """PIPELINE=retrieval_index_versioned entrypoint: one availableNow
+    """PIPELINE=retrieval_index_versioned entrypoint: one
     drain over a (doc_id, version, text) upsert feed — inserts plus
     version-2 updates in one feed — AND a DELETES_PATH id feed drained
     into the TombstoneLog as a second query; the probe equals the batch
@@ -568,7 +568,7 @@ def test_tombstone_applying_fold_falls_back_under_race(spark, tmp_path):
 def test_cli_bucketed_ledger_env(spark, tmp_path, monkeypatch):
     """STATE_BUCKETED=1 / STATE_NUM_BUCKETS wire the bucketed admission
     tier through the CLI into the sink constructor (asserted via a
-    registry spy — an availableNow drain of a single-file feed is one
+    registry spy — a drain of a single-file feed is one
     micro-batch, so no fold fires during the drain itself), and the
     drained index still equals the batch scorer."""
     from stream_cdc_spark import main as M
