@@ -1,10 +1,12 @@
 #!/usr/bin/env python
 """Quantify the ANN probe's pushed-IN cell pruning: build a persisted
-index over a synthetic corpus large enough that scan cost matters, then
-time `topk` probes with cell pruning ON (the AnnIndexSnapshot.topk path:
-probed-cell IN filter pushed into the parquet scan of the cell-clustered
-state) vs OFF (same shared probe body, no filter — the scan feeds the
-whole corpus into the broadcast join).
+index over a synthetic insert-only corpus (every vector at version 0)
+large enough that scan cost matters, then time `topk` probes with cell
+pruning ON (VersionedAnnIndexSnapshot.topk: probed-cell IN filter pushed
+into the parquet scan of the cell-clustered state) vs OFF
+(similarity.ivf_probe_topk over the same state's vectors — the same
+probe and scoring bodies, no filter: the scan feeds the whole corpus
+into the broadcast join).
 
 Both paths return identical rows (asserted) — pruning only skips cells
 that cannot contribute — so this isolates the scan-side saving the
@@ -50,7 +52,9 @@ def main() -> None:
 
     from pyspark.sql import functions as F  # noqa: E402
     from stream_cdc_spark.operators import similarity  # noqa: E402
-    from stream_cdc_spark.streaming.ann_index import AnnIndexSnapshot  # noqa: E402
+    from stream_cdc_spark.streaming.ann_index import (  # noqa: E402
+        VersionedAnnIndexSnapshot,
+    )
 
     def vec(vid: int) -> list[float]:
         # near-continuous jitter (9973 levels) so the payload carries
@@ -67,11 +71,11 @@ def main() -> None:
         ]
 
     centroids = [(c, vec(c)) for c in range(num_cells)]
-    snap = AnnIndexSnapshot(state, centroids, compact_every=4)
+    snap = VersionedAnnIndexSnapshot(state, centroids, compact_every=4)
     # per-dim ranges of the synthetic generator: sin(...) in [-1, 1]
     # plus the 0..0.06 jitter term
     sq_ranges = [(-1.0, 1.06)] * dim
-    snap_sq8 = AnnIndexSnapshot(
+    snap_sq8 = VersionedAnnIndexSnapshot(
         state_sq8, centroids, compact_every=4,
         storage="sq8", sq_ranges=sq_ranges,
     )
@@ -94,7 +98,11 @@ def main() -> None:
                 6,
             ).cast("float"),
         )
-        batch = ids.select("vec_id", expr.alias("embedding"))
+        batch = ids.select(
+            "vec_id",
+            F.lit(0).cast("bigint").alias("version"),
+            expr.alias("embedding"),
+        )
         snap.foreach_batch(batch, b)
         snap_sq8.foreach_batch(batch, b)
 
@@ -104,29 +112,33 @@ def main() -> None:
     ).localCheckpoint(eager=True)
     cents_df = spark.createDataFrame(centroids, "cid bigint, cv array<float>")
 
-    def run(prune: bool):
-        out = similarity.ivf_probe_topk(
-            snap.vectors(spark), queries, cents_df,
-            k=5, nprobe=2, quantize_bp=10000, prune_cells=prune,
+    def unpruned():
+        # every stored vector is its id's latest (insert-only feed)
+        return similarity.ivf_probe_topk(
+            snap.vectors(spark).select("vec_id", "vv", "cell"), queries,
+            cents_df, k=5, nprobe=2, quantize_bp=10000,
         )
+
+    def run(probe):
+        out = probe()
         t0 = time.time()
         rows = sorted(map(tuple, out.collect()))
         return round(time.time() - t0, 3), rows
 
-    def run_sq8():
-        out = snap_sq8.topk(spark, queries, k=5, nprobe=2)
-        t0 = time.time()
-        rows = sorted(map(tuple, out.collect()))
-        return round(time.time() - t0, 3), rows
+    def pruned():
+        return snap.topk(spark, queries, k=5, nprobe=2)
+
+    def pruned_sq8():
+        return snap_sq8.topk(spark, queries, k=5, nprobe=2)
 
     # warm the file-listing/footer caches once so both sides compare hot
-    run(False)
-    run_sq8()
+    run(unpruned)
+    run(pruned_sq8)
     # min over the timed runs, reusing THEIR rows for the equality check
     # (no extra untimed execution per side)
-    wall_off, rows_off = min(run(False) for _ in range(3))
-    wall_on, rows_on = min(run(True) for _ in range(3))
-    wall_sq8, rows_sq8 = min(run_sq8() for _ in range(3))
+    wall_off, rows_off = min(run(unpruned) for _ in range(3))
+    wall_on, rows_on = min(run(pruned) for _ in range(3))
+    wall_sq8, rows_sq8 = min(run(pruned_sq8) for _ in range(3))
 
     def state_bytes(root):
         total = 0

@@ -6,22 +6,24 @@ equality check against the batch reference over the modelled corpus.
 
 Every generator is adversarial on the admission path: batches redeliver
 already-admitted ids (the exactly-once guard must drop them and commit
-nothing for them), and the versioned surfaces also update and delete.
+nothing for them), and the index surfaces also update and delete.
 
 Usage: python scripts/soak.py SURFACE [n_batches] [per_batch] [--bucketed]
+                              [--insert-only]
 
   components           near-dup edges into IncrementalComponentsSnapshot
-  ann_index            embeddings into AnnIndexSnapshot
-  retrieval_index      documents into RetrievalIndexSnapshot
   versioned_ann        re-embeddings + deletes into VersionedAnnIndexSnapshot
   versioned_retrieval  doc updates + deletes into
                        VersionedRetrievalIndexSnapshot
   cdc_full             CDC envelopes into CdcFullPipeline (both indexes)
 
 n_batches defaults to 120, per_batch to the surface's own default.
---bucketed soaks the bucketed admission ledger (ann_index, versioned_ann):
-the ledger folds into an id-bucketed snapshot and the per-trigger
-redelivery anti-join reads it Exchange-free.
+--bucketed soaks the bucketed admission ledger (versioned_ann): the
+ledger folds into a snapshot bucketed by (vec_id, version) and the
+per-trigger redelivery anti-join reads it Exchange-free.
+--insert-only drops the updates and deletes of the versioned surfaces:
+every row arrives at version 0 (redeliveries kept), the version-less
+feed the index sinks also serve.
 Prints one JSON line: the surface's counts, probe walls and equality
 flags, plus the first/mid/last-10 median batch walls.
 """
@@ -30,7 +32,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import math
 import os
 import shutil
 import sys
@@ -69,15 +70,6 @@ def _seed(doc_id: int, version: int) -> int:
     return doc_id if version == 0 else doc_id * 1009 + version
 
 
-def _hot_vec(vid: int, dim: int) -> list[float]:
-    # hot-cell skew: 70% of ids point near one of 4 of the 32 anchors
-    anchor = (vid % 4) if vid % 10 < 7 else (vid % 32)
-    return [
-        round(math.sin(0.7 * anchor + 0.13 * d) + 0.01 * ((vid * 31 + d) % 7), 6)
-        for d in range(dim)
-    ]
-
-
 def _rows(df) -> list[tuple]:
     return sorted(map(tuple, df.collect()))
 
@@ -96,10 +88,14 @@ class Surface:
     unit = "docs"
     per_batch = 500
     bucketable = False
+    versioned = False
 
-    def __init__(self, spark, state: str, per_batch: int, bucketed: bool):
+    def __init__(
+        self, spark, state: str, per_batch: int, bucketed: bool,
+        insert_only: bool = False,
+    ):
         self.spark, self.state, self.n = spark, state, per_batch
-        self.bucketed = bucketed
+        self.bucketed, self.insert_only = bucketed, insert_only
         self.seen = 0
         self.setup()
 
@@ -174,124 +170,6 @@ class Components(Surface):
         }
 
 
-class _Redelivering(Surface):
-    """Each batch admits `n` new ids and redelivers a rolling slice of
-    ALREADY-admitted ids (1/5 of a batch) — the guard must drop them
-    without committing anything for them, every batch after the first."""
-
-    def batch(self, b, timed):
-        seen, n = self.seen, self.n
-        new = [(seen + i, self.payload(seen + i)) for i in range(n)]
-        redeliver = [
-            (v, self.payload(v)) for v in range(max(0, seen - n // 5), seen)
-        ]
-        self.seen += n
-        df = self.spark.createDataFrame(new + redeliver, self.schema)
-        timed(self.snap.foreach_batch, df, b)
-
-
-class AnnIndex(_Redelivering):
-    """Vectors are skewed toward a few hot cells (uneven cell growth —
-    the pruned probe must stay cheap anyway), and the centroid set is
-    fixed up front like a production offline-trained quantizer."""
-
-    unit, bucketable = "vecs", True
-    dim = 16
-    schema = "vec_id bigint, embedding array<float>"
-
-    def setup(self):
-        from stream_cdc_spark.streaming.ann_index import AnnIndexSnapshot
-
-        self.centroids = [(c, _hot_vec(c * 97 + 5, self.dim)) for c in range(32)]
-        self.snap = AnnIndexSnapshot(
-            self.state, self.centroids, compact_every=8, major_every=4,
-            bucketed=self.bucketed, num_buckets=32,
-        )
-
-    def payload(self, vid):
-        return _hot_vec(vid, self.dim)
-
-    def result(self):
-        from stream_cdc_spark.operators import similarity
-
-        spark, dim = self.spark, self.dim
-        queries = spark.createDataFrame(
-            [(10_000_000 + i, _hot_vec(10_000_000 + i, dim)) for i in range(16)],
-            self.schema,
-        ).localCheckpoint(eager=True)
-        got, probe_s = _timed_s(
-            lambda: _rows(self.snap.topk(spark, queries, k=5, nprobe=2))
-        )
-        corpus = spark.createDataFrame(
-            [(v, _hot_vec(v, dim)) for v in range(self.seen)], self.schema
-        )
-        cents_df = spark.createDataFrame(self.centroids, "cid bigint, cv array<float>")
-        want = _rows(similarity.ivf_ann_topk(
-            corpus, queries, cents_df, k=5, nprobe=2, quantize_bp=10000
-        ))
-        return {
-            "bucketed_ledger": self.bucketed,
-            "dim": dim,
-            "admitted": self.snap.vectors(spark).count(),
-            "expected_admitted": self.seen,
-            "probe_topk_s": probe_s,
-            "vectors_dirs": self.dirs("vectors"),
-            "ledger_dirs": self.dirs("ledger"),
-            "equal_to_batch_ivf": got == want,
-        }
-
-
-class RetrievalIndex(_Redelivering):
-    """Vocabulary is Zipf-skewed (hot head words — the df monoid and the
-    word-sorted postings must stay cheap anyway)."""
-
-    schema = "doc_id bigint, text string"
-
-    def setup(self):
-        from stream_cdc_spark.streaming.retrieval_index import (
-            RetrievalIndexSnapshot,
-        )
-
-        self.snap = RetrievalIndexSnapshot(
-            self.state, compact_every=8, major_every=4
-        )
-
-    payload = staticmethod(_text)
-
-    def result(self):
-        from pyspark.sql import functions as F
-
-        from stream_cdc_spark.operators import text as T
-
-        spark = self.spark
-        got_bm25, probe_bm25_s = _timed_s(
-            lambda: _rows(self.snap.bm25_topk(spark, TERMS, top_k=20))
-        )
-        got_tfidf, probe_tfidf_s = _timed_s(
-            lambda: _rows(self.snap.tfidf_top_terms(spark))
-        )
-        corpus = spark.createDataFrame(
-            [(d, _text(d)) for d in range(self.seen)], self.schema
-        )
-        want_bm25 = _rows(T.bm25_topk(corpus, TERMS, top_k=20))
-        toks = corpus.select(
-            "doc_id", F.explode(T.tokens(F.col("text"))).alias("tok")
-        )
-        tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-        n_docs = corpus.agg(F.count(F.lit(1)).alias("n_docs"))
-        want_tfidf = _rows(T.tfidf_top_terms_from_tf(tf, n_docs))
-        return {
-            "admitted": self.snap.docs(spark).count(),
-            "expected_admitted": self.seen,
-            "probe_bm25_s": probe_bm25_s,
-            "probe_tfidf_s": probe_tfidf_s,
-            "postings_dirs": self.dirs("postings"),
-            "stats_dirs": self.dirs("stats"),
-            "bm25_equal_to_batch": got_bm25 == want_bm25,
-            "tfidf_equal_to_batch": got_tfidf == want_tfidf,
-        }
-
-
 class _Versioned(Surface):
     """Per batch b: `n` NEW ids (version 0); UPDATES: the tail quarter of
     the previous batch's ids get a version-(b) image — supersession every
@@ -299,7 +177,10 @@ class _Versioned(Surface):
     and must drop whole (exactly-once on the (id, version) key); at
     batches 10/50/90 every admitted id % 97 == 3 is deleted (rolling
     right-to-be-forgotten; folds erase superseded AND tombstoned rows
-    from the folded tiers as the stream runs)."""
+    from the folded tiers as the stream runs). ``insert_only`` keeps
+    only the new ids and the redelivery."""
+
+    versioned = True
 
     def setup(self):
         self.snap = self.sink()
@@ -310,16 +191,17 @@ class _Versioned(Surface):
     def batch(self, b, timed):
         seen, n, image = self.seen, self.n, self.image
         rows = [(seen + i, 0, image(seen + i, 0)) for i in range(n)]
-        if b > 0:
+        if b > 0 and not self.insert_only:
             lo = seen - n + 3 * n // 4
             rows += [(d, b, image(d, b)) for d in range(lo, seen)]
             self.upd_hi = seen
+        if b > 0:
             rows += [(d, 0, image(d, 0)) for d in range(seen - n // 5, seen)]
         self.seen = seen = seen + n
         df = self.spark.createDataFrame(rows, self.schema)
         timed(self.snap.foreach_batch, df, self.sid)
         self.sid += 1
-        if b in DELETE_AT:
+        if b in DELETE_AT and not self.insert_only:
             dead = [(d,) for d in range(0, seen) if d % 97 == 3]
             self.snap.delete_batch(
                 self.spark.createDataFrame(dead, f"{self.id_col} bigint"),
@@ -576,8 +458,6 @@ class CdcFull(Surface):
 
 SURFACES = {
     "components": Components,
-    "ann_index": AnnIndex,
-    "retrieval_index": RetrievalIndex,
     "versioned_ann": VersionedAnn,
     "versioned_retrieval": VersionedRetrieval,
     "cdc_full": CdcFull,
@@ -590,11 +470,15 @@ def main() -> None:
     ap.add_argument("n_batches", nargs="?", type=int, default=120)
     ap.add_argument("per_batch", nargs="?", type=int)
     ap.add_argument("--bucketed", action="store_true",
-                    help="bucketed admission ledger (ann_index, versioned_ann)")
+                    help="bucketed admission ledger (versioned_ann)")
+    ap.add_argument("--insert-only", action="store_true",
+                    help="version-0 inserts only (versioned surfaces)")
     a = ap.parse_args()
     cls = SURFACES[a.surface]
     if a.bucketed and not cls.bucketable:
         ap.error(f"--bucketed does not apply to {a.surface}")
+    if a.insert_only and not cls.versioned:
+        ap.error(f"--insert-only does not apply to {a.surface}")
     per_batch = a.per_batch or cls.per_batch
     slug = a.surface.replace("_", "-")
     state = f".scale/{slug}-soak-state"
@@ -602,7 +486,7 @@ def main() -> None:
 
     spark = get_spark(app_name=f"{slug}-soak")
     spark.sparkContext.setLogLevel("ERROR")
-    surface = cls(spark, state, per_batch, a.bucketed)
+    surface = cls(spark, state, per_batch, a.bucketed, a.insert_only)
     walls: list[float] = []
 
     def timed(fn, *args):
@@ -620,6 +504,7 @@ def main() -> None:
     n = a.n_batches
     print(json.dumps({
         "metric": f"{a.surface}_soak",
+        "insert_only": a.insert_only,
         "n_batches": n,
         f"{cls.unit}_per_batch": per_batch,
         "wall_first10_median_s": seg(0, 10),

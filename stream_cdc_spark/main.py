@@ -6,7 +6,7 @@ through the registries (O28) from the same env names (O29):
 
   DS_TYPE=cdc_replay|events_replay   source (default cdc_replay)
   DS_PATH=<events parquet path>      source path
-  STREAM_TYPE=memory_queue           sink (FileQueue dir via QUEUE_DIR)
+  QUEUE_DIR=<dir>                    the FileQueue sink's dir
   CHECKPOINT_DIR=<dir>               offset/state checkpoint (O18-O20)
   BATCH_SIZE / FLUSH_INTERVAL        rate cap / trigger (O15)
   DRAIN_AND_EXIT=1                   drain and exit (backfill/replay): a
@@ -32,34 +32,22 @@ incremental near-dup admission with durable batch-versioned state:
                                      cluster membership continuously
                                      (incremental union-find forest)
 
-ANN index mode (PIPELINE=ann_index): stream a (vec_id, embedding) feed
-into the persisted IVF index (streaming/ann_index.py) — continuous
-similarity-search admission against a fixed offline-trained quantizer:
+Index modes: PIPELINE=ann_index_versioned streams a (vec_id, version,
+embedding) UPSERT feed into the persisted IVF index (streaming/
+ann_index.py) against a fixed offline-trained quantizer, and
+PIPELINE=retrieval_index_versioned a (doc_id, version, text) feed into
+the persisted BM25/TF-IDF inverted index (streaming/retrieval_index.py);
+updates supersede prior images under the version-max read rule. A
+version-less feed uses the same modes with EMB_VERSION_COL= or
+RETR_VERSION_COL= set empty: every row admits as version 0.
 
-  PIPELINE=ann_index EMB_PATH=<embeddings parquet dir>
+  EMB_PATH=<embeddings parquet dir> / DOCS_PATH=<documents parquet dir>
   CENTROIDS_PATH=<parquet of (cid bigint, cv array<float>)>  REQUIRED
-  ANN_STATE_DIR=<dir>                vectors/ state table
+                                     by the ANN mode
+  ANN_STATE_DIR / RETR_STATE_DIR     the index state dir
+  EMB_VERSION_COL / RETR_VERSION_COL the version column (default
+                                     version; empty: version 0)
   COMPACT_EVERY / COMPACT_MAJOR_EVERY  same fold knobs as curation
-
-Retrieval index mode (PIPELINE=retrieval_index): stream a (doc_id,
-text) feed into the persisted inverted index (streaming/
-retrieval_index.py) — continuous BM25/TF-IDF corpus-statistics
-maintenance:
-
-  PIPELINE=retrieval_index DOCS_PATH=<documents parquet dir>
-  RETR_STATE_DIR=<dir>               docs/ postings/ stats/ state tables
-  COMPACT_EVERY / COMPACT_MAJOR_EVERY  same fold knobs as curation
-
-Versioned retrieval mode (PIPELINE=retrieval_index_versioned): the
-CDC-native variant over a (doc_id, version, text) UPSERT feed — updates
-supersede prior images under the version-max read rule
-(RETR_VERSION_COL overrides the version column name; explicitly empty
-opts a version-less feed in as version 0).
-
-Versioned ANN mode (PIPELINE=ann_index_versioned): the CDC-native
-variant over a (vec_id, version, embedding) UPSERT feed — re-embeddings
-supersede prior vectors under the version-max read rule
-(EMB_VERSION_COL mirrors RETR_VERSION_COL).
 
 Composed mode (PIPELINE=cdc_full): one typed CDC envelope feed
 (event_type, gtid_seq, content struct with doc_id/text/embedding) drives
@@ -72,9 +60,9 @@ versioned ANN index under ONE checkpoint (streaming/cdc_full.py):
   CENTROIDS_PATH=<(cid, cv) parquet> REQUIRED (IVF quantizer)
   MIN_TOKENS / COMPACT_EVERY / COMPACT_MAJOR_EVERY  as above
 
-Knobs shared by the index modes (ann_index, ann_index_versioned,
-retrieval_index, retrieval_index_versioned, cdc_full — whose deletion
-feed is applied to both indexes):
+Knobs shared by the index modes (ann_index_versioned,
+retrieval_index_versioned, cdc_full — whose deletion feed is applied to
+both indexes):
 
   DELETES_PATH=<parquet dir of ids>  right-to-be-forgotten feed: a
                                      second query draining ids into the
@@ -117,7 +105,6 @@ from stream_cdc_spark.streaming.pipeline import (
 
 _SF_DIR = "/root/testdata/sf0.001"
 _DOCS = ("doc_id bigint, text string", ["doc_id", "text"])
-_EMBS = ("vec_id bigint, embedding array<float>", ["vec_id", "embedding"])
 
 
 def _feed_schema(spark, path: str, glob: str):
@@ -171,7 +158,7 @@ def _replay_feed(spark, cfg: AppConfig):
     the queue payload."""
     from stream_cdc_spark.sources import datasource_registry
 
-    ds_type = os.environ.get("DS_TYPE", "cdc_replay")
+    ds_type = cfg.source_type
     ds_path = os.environ.get("DS_PATH", f"{_SF_DIR}/events.parquet")
     if ds_type == "cdc_replay":
         source = datasource_registry.create(
@@ -355,11 +342,6 @@ PIPELINES = {
         "lsh_dedup", "CURATION_STATE_DIR", "/tmp/stream-cdc-spark-lsh_dedup",
         Feed(*_DOCS_FEED, lambda: _DOCS), own_kw=_lsh_kw,
     ),
-    "ann_index": Mode(
-        "ann_index", "ANN_STATE_DIR", "/tmp/stream-cdc-spark-ann",
-        Feed(*_EMB_FEED, lambda: _EMBS),
-        knobs=_INDEX + ("centroids",), delete_id="vec_id",
-    ),
     "ann_index_versioned": Mode(
         "ann_index_versioned", "ANN_STATE_DIR", "/tmp/stream-cdc-spark-ann",
         Feed(
@@ -370,10 +352,6 @@ PIPELINES = {
             ),
         ),
         knobs=_INDEX + ("centroids",), delete_id="vec_id",
-    ),
-    "retrieval_index": Mode(
-        "retrieval_index", "RETR_STATE_DIR", "/tmp/stream-cdc-spark-retr",
-        Feed(*_DOCS_FEED, lambda: _DOCS), knobs=_INDEX, delete_id="doc_id",
     ),
     "retrieval_index_versioned": Mode(
         "retrieval_index_versioned", "RETR_STATE_DIR",

@@ -25,23 +25,22 @@ What can be migrated without the original corpus:
     admitted vectors are in the state (sq8 codes dequantize through the
     stamped affine map — a rebuild FROM the sq8 tier re-assigns cells
     from the reconstructed vectors, documented loss ≤ half a
-    quantization step per element). The rebuild reads only the LIVE
-    set (tombstoned ids excluded), so a same-parameter rebuild is also
-    the vacuum that physically erases deleted vectors.
+    quantization step per element). The rebuild reads only the latest
+    LIVE vector of each id, so a same-parameter rebuild is also the
+    vacuum that physically erases deleted and superseded vectors.
   - LSH dedup snapshot → a different band count: band keys are hashes
     of signature slices, and the signatures are in the state, so
     re-banding recomputes (band, key) from sigs/ alone.
-  - Retrieval index → vacuum: physically drop tombstoned docs (the
+  - Retrieval index → vacuum: physically drops tombstoned docs (the
     erasure half of the right-to-be-forgotten path — tombstones hide a
     doc from every probe instantly; vacuum reclaims the bytes and hard-
-    erases the content) by rewriting only the LIVE rows of docs/ and
-    postings/ plus a re-aggregated stats partial into a fresh statedir
-    with an empty tombstone set.
-  - Versioned retrieval index → vacuum: additionally drops SUPERSEDED
-    images from postings/ (the bulk of an update-heavy corpus — the
-    streaming folds can erase tombstoned docs but never superseded
-    versions), while the ledger keeps every live (doc_id, version) row
-    so exactly-once admission survives the rewrite.
+    erases the content) and SUPERSEDED images from postings/ (the bulk
+    of an update-heavy corpus — the streaming folds can erase
+    tombstoned docs but never superseded versions), while the ledger
+    keeps every live (doc_id, version) row so exactly-once admission
+    survives the rewrite. An insert-only index (every row at version
+    0) has no superseded images, so its vacuum drops tombstoned docs
+    only.
 
 What CANNOT: anything that changes the underlying sketch — LSH k /
 num_hashes / hash-scheme version, a different ANN assignment scheme, a
@@ -51,8 +50,8 @@ rather than writing an index that looks valid and scores garbage.
 
 Scale shape: every rebuild is one distributed pass over the source
 state; assignment/banding/sorting run through the destination sink's
-own helpers (AnnIndexSnapshot._assign, dedup.band_buckets, the word/
-cell sort rules), so equality to a from-scratch build is by
+own helpers (VersionedAnnIndexSnapshot._assign, dedup.band_buckets,
+the word/cell sort rules), so equality to a from-scratch build is by
 construction and the row-group-clustering invariants the probes rely
 on survive the migration.
 """
@@ -81,22 +80,69 @@ def _require_empty(snapshotish: str, roots: dict[str, str]) -> None:
         )
 
 
-def rebuild_ann_index(spark, src, dst) -> int:
-    """Rebuild the persisted ANN index at ``src`` (an AnnIndexSnapshot)
-    into the fresh statedir of ``dst`` (another AnnIndexSnapshot — new
-    centroids, new storage tier, or both). Returns the number of vectors
-    migrated.
+def _carry_kills(spark, src, dst, dead: DataFrame, id_col: str) -> None:
+    """Publish ``src``'s in-band kill watermarks, minus the
+    doc-tombstoned ids (hard-erased with their deletion history), as
+    ``dst``'s vtombstones/ — both vacuums and the rebuild do. The kept
+    ledger rows only stop a redelivered ADMITTED version; a killed
+    version src never admitted (a late arrival, or one arriving before
+    its delete's sequence was seen) would otherwise admit in dst and be
+    served."""
+    kills = src.versioned_tombstones(spark)
+    if kills is not None:
+        kept = statedir.pinned_or_none(kills.join(dead, id_col, "left_anti"))
+        if kept is not None:
+            statedir.publish_snapshot(
+                spark, dst.vtombstones_dir, kept, fs=dst.fs
+            )
 
-    The LIVE vectors are read from the source state (tombstoned ids
-    excluded — a same-parameter rebuild is therefore also the vacuum
-    that physically erases deleted vectors; dequantized through the
-    stamped affine map when the source is the sq8 tier) and re-assigned
-    through ``dst._assign`` — the destination's own per-trigger
-    assignment body, so cells, quantization and the stamp are bit-equal
-    to a from-scratch drain of the same vectors (tests assert it) and
-    the result passes ``dst``'s stamp guard by construction. Published
-    as dst's compact=0 snapshot, cell-sorted within every file (module
-    doc)."""
+
+def _live_ann_selection(spark, src, dst):
+    """(live ledger, latest-live vectors) of the versioned ANN index at
+    ``src`` — the selection both ANN migrations publish — after
+    carrying its kill watermarks into ``dst`` (``_carry_kills``). The
+    ledger keeps EVERY (vec_id, version) row of an id that is not
+    doc-tombstoned: superseded and version-KILLED rows stay (dropping
+    them would let a redelivered old version re-admit). Doc-tombstoned
+    ids are hard-erased (erasure removes the deletion history too, by
+    design). The vectors are the stored rows (vec_id, version, vv|code,
+    cell) of each live id's max live version; a fully-killed id keeps
+    ledger rows but no vector, so the version-max probe join finds
+    nothing for it."""
+    dead = src.tombstones(spark).localCheckpoint(eager=True)
+    live_ledger = (
+        src.ledger(spark).join(dead, "vec_id", "left_anti")
+        .localCheckpoint(eager=True)
+    )
+    latest = (
+        src._live(spark, live_ledger)
+        .groupBy("vec_id")
+        .agg(F.max("version").alias("version"))
+    )
+    latest_vectors = src._live(spark, src.vectors(spark)).join(
+        latest, ["vec_id", "version"], "left_semi"
+    )
+    _carry_kills(spark, src, dst, dead, "vec_id")
+    return live_ledger, latest_vectors
+
+
+def rebuild_ann_index(spark, src, dst) -> int:
+    """Rebuild the versioned ANN index at ``src`` into the fresh
+    statedir of ``dst`` (another VersionedAnnIndexSnapshot — new
+    centroids, new storage tier, or both). Returns the number of live
+    vectors migrated.
+
+    The live ledger, the latest-live vectors and the surviving kill
+    watermarks are selected exactly as ``vacuum_versioned_ann_index``
+    selects them (``_live_ann_selection`` — so a same-parameter rebuild
+    is also that vacuum), the vectors dequantized
+    through the stamped affine map when the source is the sq8 tier, and
+    re-assigned through ``dst._assign`` — the destination's own
+    per-trigger assignment body, so cells, quantization and the stamp
+    are bit-equal to a from-scratch drain of the same vectors (tests
+    assert it) and the result passes ``dst``'s stamp guard by
+    construction. Published as dst's compact=0 snapshot, cell-sorted
+    within every file (module doc)."""
     if src.state_dir == dst.state_dir:
         raise ValueError(
             "rebuild_ann_index: src and dst share a state dir — a "
@@ -109,24 +155,21 @@ def rebuild_ann_index(spark, src, dst) -> int:
             "vectors": dst.vectors_dir,
             "ledger": dst.ledger_dir,
             "tombstones": dst.tombstones_dir,
+            "vtombstones": dst.vtombstones_dir,
         },
     )
-    vecs = src._probe_relation(spark).select("vec_id", "vv")
-    # pinned: feeds both the vectors and ledger publishes (unpinned, the
+    live_ledger, latest = _live_ann_selection(spark, src, dst)
+    # pinned: feeds the vectors publish and the count (unpinned, the
     # source scan + re-assignment would run twice)
-    assigned = dst._assign(vecs).localCheckpoint(eager=True)
+    assigned = dst._assign(
+        latest.select("vec_id", "version", src._float_vectors())
+    ).localCheckpoint(eager=True)
     statedir.publish_snapshot(
         spark, dst.vectors_dir, assigned.sortWithinPartitions("cell"),
         fs=dst.fs,
     )
-    # the destination's admission ledger: the migrated (live) ids. Like
-    # the retrieval vacuum, the rebuild erases deletion history — dst
-    # starts with no tombstones, and a physically-erased id CAN be
-    # re-admitted there (the erasure half of right-to-be-forgotten).
-    statedir.publish_snapshot(
-        spark, dst.ledger_dir, assigned.select("vec_id"), fs=dst.fs
-    )
-    return dst.vectors(spark).count()
+    statedir.publish_snapshot(spark, dst.ledger_dir, live_ledger, fs=dst.fs)
+    return assigned.count()
 
 
 def rebuild_lsh_snapshot(spark, src, dst) -> int:
@@ -211,73 +254,6 @@ def rebuild_lsh_snapshot(spark, src, dst) -> int:
     return n
 
 
-def vacuum_retrieval_index(spark, src, dst) -> int:
-    """Physically remove tombstoned documents from the retrieval index at
-    ``src`` (a RetrievalIndexSnapshot) by rewriting only the LIVE rows
-    into the fresh statedir of ``dst``. Returns the number of live docs.
-
-    Tombstones make a deleted doc invisible to every probe instantly but
-    its postings stay on disk; vacuum is the erasure/reclaim half —
-    docs/ and postings/ are anti-joined against the tombstone set (one
-    distributed pass, postings word-sorted within every published file
-    so row-group pruning survives), stats/ is re-aggregated from the
-    live ledger, and the destination starts with an empty tombstone set.
-    Probes against the vacuumed index are bit-equal to the
-    tombstone-aware probes of the source (tests assert it). All states
-    publish as compact=0 snapshots (module doc).
-
-    ``dst`` must share ``src``'s scheme stamp (a vacuum is not a
-    re-tokenization — that path is a corpus replay), must be a different
-    state dir, and must be empty.
-    """
-    if src.state_dir == dst.state_dir:
-        raise ValueError(
-            "vacuum_retrieval_index: src and dst share a state dir — a "
-            "vacuum writes a FRESH statedir (an in-place rewrite that "
-            "crashes halfway would drop admitted documents)"
-        )
-    if src._stamp != dst._stamp:
-        raise ValueError(
-            f"vacuum_retrieval_index: scheme mismatch (src "
-            f"{src._stamp!r}, dst {dst._stamp!r}) — a vacuum preserves "
-            f"the index scheme; re-tokenization needs a corpus replay"
-        )
-    _require_empty(
-        "vacuum_retrieval_index",
-        {
-            "docs": dst.docs_dir,
-            "postings": dst.postings_dir,
-            "stats": dst.stats_dir,
-            "tombstones": dst.tombstones_dir,
-        },
-    )
-    dead = src.tombstones(spark).localCheckpoint(eager=True)
-    live_docs = (
-        src.docs(spark).join(dead, "doc_id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    live_postings = src.postings(spark).join(dead, "doc_id", "left_anti")
-    statedir.publish_snapshot(
-        spark, dst.docs_dir, live_docs.select("doc_id", "dl"), fs=dst.fs
-    )
-    statedir.publish_snapshot(
-        spark,
-        dst.postings_dir,
-        live_postings.sortWithinPartitions("word"),
-        fs=dst.fs,
-    )
-    statedir.publish_snapshot(
-        spark,
-        dst.stats_dir,
-        live_docs.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("l"),
-        ),
-        fs=dst.fs,
-    )
-    return live_docs.count()
-
-
 def vacuum_versioned_retrieval_index(spark, src, dst) -> int:
     """Physically remove tombstoned documents AND superseded images from
     the versioned retrieval index at ``src`` (a
@@ -295,9 +271,10 @@ def vacuum_versioned_retrieval_index(spark, src, dst) -> int:
     to a redelivered superseded version (harmless to reads under the
     version-max rule, but exactly-once would silently degrade to
     at-least-once on the ledger). Tombstoned docs are erased from both
-    (hard erasure, like vacuum_retrieval_index: the destination starts
-    with no tombstones, so a vacuumed-away doc_id CAN be re-ingested —
-    erasure removes the deletion history too, by design).
+    (hard erasure: the destination starts with no tombstones, so a
+    vacuumed-away doc_id CAN be re-ingested — erasure removes the
+    deletion history too, by design). The in-band kill watermarks of
+    every other doc carry over (``_carry_kills``).
 
     Probes against the vacuumed index are bit-equal to the source's
     (tests assert it): _latest_live reduces the same live ledger to the
@@ -331,12 +308,10 @@ def vacuum_versioned_retrieval_index(spark, src, dst) -> int:
     dead = src.tombstones(spark).localCheckpoint(eager=True)
     # doc-tombstoned ids are hard-erased from every state (re-ingest
     # allowed — deletion history removed by design). Version-KILLED
-    # ledger rows (the in-band channel) are KEPT in docs/: the
-    # destination starts with no vtombstones, so dropping them would
-    # re-open first-wins admission to a redelivered killed version and
-    # resurrect it. Kept, they stay invisible — their payload is
-    # erased below and probes read the latest/ tier, which holds only
-    # truly-live rows.
+    # ledger rows (the in-band channel) are KEPT in docs/, so a
+    # redelivered killed version still drops at admission; their
+    # payload is erased below, and the published kill watermarks keep
+    # every killed version dead, admitted or not.
     live_docs = (
         src.docs(spark).join(dead, "doc_id", "left_anti")
         .localCheckpoint(eager=True)
@@ -369,6 +344,7 @@ def vacuum_versioned_retrieval_index(spark, src, dst) -> int:
         latest_postings.sortWithinPartitions("word"),
         fs=dst.fs,
     )
+    _carry_kills(spark, src, dst, dead, "doc_id")
     return latest.count()
 
 
@@ -387,14 +363,13 @@ def vacuum_versioned_ann_index(spark, src, dst) -> int:
     version (exactly-once would silently degrade to at-least-once).
     Tombstoned ids are erased from both, and the destination starts
     with no tombstones — a vacuumed-away vec_id CAN be re-ingested
-    (erasure removes the deletion history too, by design). Probes
+    (erasure removes the deletion history too, by design); the in-band
+    kill watermarks of every other id carry over. Probes
     against the vacuumed index are bit-equal to the source's (tests
     assert it): the version-max reduction of the same live ledger finds
     exactly the latest rows, which the vacuum preserved. Storage tier,
     stamp and cell-sorted layout carry over unchanged (a vacuum
     preserves the scheme; re-quantization needs rebuild_ann_index)."""
-    from pyspark.sql import functions as F
-
     if src.state_dir == dst.state_dir:
         raise ValueError(
             "vacuum_versioned_ann_index: src and dst share a state dir "
@@ -404,8 +379,8 @@ def vacuum_versioned_ann_index(spark, src, dst) -> int:
         raise ValueError(
             f"vacuum_versioned_ann_index: scheme mismatch (src "
             f"{src._stamp!r}, dst {dst._stamp!r}) — a vacuum preserves "
-            f"centroids, tier and scheme; changing any needs "
-            f"rebuild_ann_index over a corpus replay"
+            f"centroids, tier and scheme; new centroids or a new tier "
+            f"need rebuild_ann_index"
         )
     _require_empty(
         "vacuum_versioned_ann_index",
@@ -416,24 +391,7 @@ def vacuum_versioned_ann_index(spark, src, dst) -> int:
             "vtombstones": dst.vtombstones_dir,
         },
     )
-    dead = src.tombstones(spark).localCheckpoint(eager=True)
-    # version-KILLED ledger rows are kept (admission closure — the
-    # destination has no vtombstones, so dropping them would let a
-    # redelivered killed version re-admit and resurrect); their
-    # payload is erased, so the version-max probe join finds nothing
-    # for a fully-killed id. Doc-tombstoned ids are hard-erased from
-    # both states (the retrieval vacuum's rationale).
-    live_ledger = (
-        src.ledger(spark).join(dead, "vec_id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    truly_live = src._live(spark, live_ledger)
-    latest = truly_live.groupBy("vec_id").agg(
-        F.max("version").alias("version")
-    )
-    latest_vectors = src._live(spark, src.vectors(spark)).join(
-        latest, ["vec_id", "version"], "left_semi"
-    )
+    live_ledger, latest_vectors = _live_ann_selection(spark, src, dst)
     statedir.publish_snapshot(
         spark,
         dst.vectors_dir,
@@ -443,4 +401,4 @@ def vacuum_versioned_ann_index(spark, src, dst) -> int:
     statedir.publish_snapshot(
         spark, dst.ledger_dir, live_ledger, fs=dst.fs
     )
-    return latest.count()
+    return dst.vectors(spark).count()

@@ -681,36 +681,17 @@ def ivf_probe_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quantize_bp: int | None = None,
-    prune_cells: bool = False,
 ) -> DataFrame:
     """The probe half of ``ivf_ann_topk`` over a PRECOMPUTED cell
     assignment ``assigned`` (canonical columns vec_id, vv, cell — e.g.
-    `ivf_assign` output, or a persisted index maintained incrementally
-    by streaming/ann_index.AnnIndexSnapshot). Both callers share this
-    body, so the drained streaming index is bit-equal to the batch
-    operator by construction.
-
-    ``prune_cells=True``: collect the distinct probed cells (bounded by
-    |queries| x nprobe — a planning collect, not a data path) and apply
-    them as an IN filter on ``assigned`` so a cell-clustered parquet
-    index scan prunes row groups — the probe then reads ~nprobe/num_cells
-    of the corpus instead of scanning it all to feed the join."""
+    `ivf_assign` output). Scores every row of ``assigned`` against the
+    probes — the persisted index (streaming/ann_index
+    .VersionedAnnIndexSnapshot.topk) prunes its scan to the probed
+    cells instead, over the same ``ivf_query_probes`` /
+    ``ivf_score_probes`` bodies, so the two rankings are equal by
+    construction."""
     probes = ivf_query_probes(queries, centroids, nprobe, id_col, vec_col)
-    cells = assigned
-    if prune_cells:
-        # pin: the probe relation feeds both the planning collect below
-        # and the scoring join — unpinned it would recompute per action
-        probes = probes.localCheckpoint(eager=True)
-        probed = sorted(
-            r["cell"] for r in probes.select("cell").distinct().collect()
-        )
-        # no queries -> no probed cells -> nothing to score
-        cells = (
-            cells.filter(F.col("cell").isin(probed))
-            if probed
-            else cells.filter(F.lit(False))
-        )
-    return ivf_score_probes(cells, probes, k, quantize_bp)
+    return ivf_score_probes(assigned, probes, k, quantize_bp)
 
 
 def split_hot_buckets(

@@ -6060,22 +6060,24 @@ def q135(spark: SparkSession, sf: str) -> DataFrame:
     headline=True,
     eager=True,
     doc="INCREMENTAL ANN index maintenance (streaming/ann_index.py "
-    "ann_topk_over_batches): the embedding corpus arrives as three "
-    "OVERLAPPING micro-batch slices (slice i owns vec_id%3==i and "
-    "redelivers vec_id%7==i) admitted one batch at a time into the "
-    "cell-assigned IVF index — redelivered ids dropped by the exactly-"
-    "once guard, each batch coarse-quantized against the fixed broadcast "
-    "centroid set — then probed at nprobe=2/k=5. The oracle is q44's "
-    "one-shot SQL over the WHOLE corpus, so the driver check proves "
-    "drain equality AND order/redelivery insensitivity: batch-at-a-time "
-    "admission reaches the exact one-shot index. Both paths share "
-    "similarity.ivf_probe_topk, and the statedir-persisted twin "
-    "(AnnIndexSnapshot — centroid-digest stamp guard, cell-sorted "
-    "commits, IN-pruned probes) holds the same equality across restarts "
-    "and replays in tests/test_ann_index_stream.py.",
+    "versioned_ann_topk_over_events): the embedding corpus arrives as "
+    "three OVERLAPPING micro-batch slices (slice i owns vec_id%3==i and "
+    "redelivers vec_id%7==i), each one upsert event at version 0 — the "
+    "insert-only feed — folded through first-wins admission into the "
+    "cell-assigned IVF index (redelivered ids dropped by the exactly-"
+    "once guard, cells assigned against the fixed broadcast centroid "
+    "set), then probed at nprobe=2/k=5. The oracle is q44's one-shot "
+    "SQL over the WHOLE corpus, so the driver check proves drain "
+    "equality AND order/redelivery insensitivity: batch-at-a-time "
+    "admission reaches the exact one-shot index. The statedir-persisted "
+    "sink (VersionedAnnIndexSnapshot — centroid-digest stamp guard, "
+    "cell-sorted commits, IN-pruned probes) holds the same equality "
+    "across restarts and replays in tests/test_ann_index_stream.py.",
 )
 def q136(spark: SparkSession, sf: str) -> DataFrame:
-    from stream_cdc_spark.streaming.ann_index import ann_topk_over_batches
+    from stream_cdc_spark.streaming.ann_index import (
+        versioned_ann_topk_over_events,
+    )
 
     emb = load(spark, sf, "embeddings")
     cents = emb.filter(F.col("vec_id") % 100 == 0).select(
@@ -6083,12 +6085,15 @@ def q136(spark: SparkSession, sf: str) -> DataFrame:
         F.col("embedding").cast("array<float>").alias("cv"),
     )
     q = emb.filter(F.col("vec_id") < 5)
-    slices = [
-        emb.filter((F.col("vec_id") % 3 == i) | (F.col("vec_id") % 7 == i))
+    v0 = emb.withColumn("version", F.lit(0).cast("bigint"))
+    events = [
+        ("upsert", v0.filter(
+            (F.col("vec_id") % 3 == i) | (F.col("vec_id") % 7 == i)
+        ))
         for i in range(3)
     ]
-    return ann_topk_over_batches(
-        slices, cents, q, k=5, nprobe=2, quantize_bp=10000
+    return versioned_ann_topk_over_events(
+        events, cents, q, k=5, nprobe=2, quantize_bp=10000
     ).orderBy("q_id", "rank")
 
 
@@ -6123,32 +6128,39 @@ def q136(spark: SparkSession, sf: str) -> DataFrame:
     headline=True,
     eager=True,
     doc="INCREMENTAL retrieval-index maintenance (streaming/"
-    "retrieval_index.py bm25_topk_over_batches): the document corpus "
+    "retrieval_index.py versioned_bm25_over_events): the document corpus "
     "arrives as three OVERLAPPING micro-batch slices (slice i owns "
-    "doc_id%3==i and redelivers doc_id%7==i) admitted one batch at a "
-    "time into the inverted index — redelivered ids dropped by the "
+    "doc_id%3==i and redelivers doc_id%7==i), each one upsert event at "
+    "version 0 — the insert-only feed — folded through first-wins "
+    "admission into the inverted index (redelivered ids dropped by the "
     "exactly-once guard, per-doc tf/dl computed once at admission, "
-    "df/N/L maintained as mergeable integer monoids, idf re-quantized "
-    "at read. The oracle is q89's one-shot SQL over the WHOLE corpus, so "
-    "the driver check proves drain equality AND order/redelivery "
+    "df/N/L reduced over the latest images, idf re-quantized at read). "
+    "The oracle is q89's one-shot SQL over the WHOLE corpus, so the "
+    "driver check proves drain equality AND order/redelivery "
     "insensitivity: batch-at-a-time admission reaches the exact one-shot "
     "BM25 ranking. Both paths share text.bm25_topk_from_postings, and "
-    "the statedir-persisted twin (RetrievalIndexSnapshot — scheme stamp "
-    "guard, word-sorted commits, IN-pruned probes, stats partials) holds "
+    "the statedir-persisted sink (VersionedRetrievalIndexSnapshot — "
+    "scheme stamp guard, word-sorted commits, IN-pruned probes) holds "
     "the same equality across restarts, replays and folds in "
     "tests/test_retrieval_index_stream.py.",
 )
 def q137(spark: SparkSession, sf: str) -> DataFrame:
     from stream_cdc_spark.streaming.retrieval_index import (
-        bm25_topk_over_batches,
+        versioned_bm25_over_events,
     )
 
-    d = load(spark, sf, "documents")
-    slices = [
-        d.filter((F.col("doc_id") % 3 == i) | (F.col("doc_id") % 7 == i))
+    d = load(spark, sf, "documents").withColumn(
+        "version", F.lit(0).cast("bigint")
+    )
+    events = [
+        ("upsert", d.filter(
+            (F.col("doc_id") % 3 == i) | (F.col("doc_id") % 7 == i)
+        ))
         for i in range(3)
     ]
-    return bm25_topk_over_batches(slices, ["stream", "vector", "join"], top_k=15)
+    return versioned_bm25_over_events(
+        events, ["stream", "vector", "join"], top_k=15
+    )
 
 
 @_register(

@@ -4,9 +4,10 @@ Reference: three name->class registries with case-insensitive lookup and
 import-time registration (stream_cdc/datasources/factory.py:7-60,
 streams/factory.py:7-56, state/factory.py:7-47). Here the same contract
 resolves names to reader/sink/state constructors, so a config-driven
-pipeline (`DS_TYPE=events_replay STREAM_TYPE=memory_queue`) wires itself
-exactly like the reference's main() — but each registered source returns a
-(streaming) DataFrame and each sink a foreachBatch function.
+pipeline (`DS_TYPE=cdc_replay PIPELINE=curation`; main.py's `PIPELINES`
+rows name their sinks here) wires itself like the reference's main() —
+but each registered source returns a (streaming) DataFrame and each sink
+a foreachBatch function.
 """
 
 from __future__ import annotations
@@ -112,7 +113,7 @@ def _register_builtins() -> None:
 
     # Continuous corpus curation (quality gates + incremental dedup
     # admission with durable batch-versioned state) as a config-wirable
-    # sink: STREAM_TYPE=curation STATE_DIR=...
+    # sink: PIPELINE=curation CURATION_STATE_DIR=...
     sink_registry.register("curation", _curation_sink)
 
     def _lsh_dedup_sink(state_dir, **kw):
@@ -147,17 +148,6 @@ def _register_builtins() -> None:
             )
         return [(r["cid"], list(r["cv"])) for r in table.to_pylist()]
 
-    def _ann_index_sink(state_dir, centroids=None, centroids_path=None, **kw):
-        from stream_cdc_spark.streaming.ann_index import AnnIndexSnapshot
-
-        centroids = _load_centroids("ann_index", centroids, centroids_path)
-        return AnnIndexSnapshot(state_dir, centroids, **kw).foreach_batch
-
-    # Continuous IVF ANN index admission over a (vec_id, embedding)
-    # feed — the streaming twin of q44's batch index build:
-    # PIPELINE=ann_index CENTROIDS_PATH=... (streaming/ann_index.py)
-    sink_registry.register("ann_index", _ann_index_sink)
-
     def _versioned_ann_sink(state_dir, centroids=None, centroids_path=None,
                             **kw):
         from stream_cdc_spark.streaming.ann_index import (
@@ -171,9 +161,11 @@ def _register_builtins() -> None:
             state_dir, centroids, **kw
         ).foreach_batch
 
-    # The CDC-native ANN index: (vec_id, version, embedding) UPSERTS
-    # with version-max reads — re-embeddings supersede prior vectors:
-    # PIPELINE=ann_index_versioned (streaming/ann_index.py)
+    # Continuous IVF ANN index admission over a (vec_id, version,
+    # embedding) UPSERT feed with version-max reads — re-embeddings
+    # supersede prior vectors; a version-less feed admits at version 0
+    # (the streaming twin of q44's batch index build):
+    # PIPELINE=ann_index_versioned CENTROIDS_PATH=... (streaming/ann_index.py)
     sink_registry.register("ann_index_versioned", _versioned_ann_sink)
 
     def _cdc_full_sink(state_dir, centroids=None, centroids_path=None,
@@ -191,18 +183,6 @@ def _register_builtins() -> None:
     # checkpoint: PIPELINE=cdc_full (streaming/cdc_full.py)
     sink_registry.register("cdc_full", _cdc_full_sink)
 
-    def _retrieval_index_sink(state_dir, **kw):
-        from stream_cdc_spark.streaming.retrieval_index import (
-            RetrievalIndexSnapshot,
-        )
-
-        return RetrievalIndexSnapshot(state_dir, **kw).foreach_batch
-
-    # Continuous inverted-index (BM25/TF-IDF) admission over a
-    # (doc_id, text) feed — the streaming twin of q89/q54's batch
-    # scorers: PIPELINE=retrieval_index (streaming/retrieval_index.py)
-    sink_registry.register("retrieval_index", _retrieval_index_sink)
-
     def _versioned_retrieval_sink(state_dir, **kw):
         from stream_cdc_spark.streaming.retrieval_index import (
             VersionedRetrievalIndexSnapshot,
@@ -210,8 +190,10 @@ def _register_builtins() -> None:
 
         return VersionedRetrievalIndexSnapshot(state_dir, **kw).foreach_batch
 
-    # The CDC-native retrieval index: (doc_id, version, text) UPSERTS
-    # with version-max reads — document updates supersede prior images:
+    # Continuous inverted-index (BM25/TF-IDF) admission over a (doc_id,
+    # version, text) UPSERT feed with version-max reads — document
+    # updates supersede prior images; a version-less feed admits at
+    # version 0 (the streaming twin of q89/q54's batch scorers):
     # PIPELINE=retrieval_index_versioned (streaming/retrieval_index.py)
     sink_registry.register(
         "retrieval_index_versioned", _versioned_retrieval_sink

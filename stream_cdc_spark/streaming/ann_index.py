@@ -3,30 +3,27 @@ IVF pipeline (similarity.ivf_assign / ivf_ann_topk, q44), on the same
 batch-versioned statedir state as the LSH and media dedup sinks.
 
 A production embedding corpus is not built once: vectors arrive
-continuously (new documents embedded) and the similarity-search index
-has to admit them without rebuilding. Admission is FIRST-WINS per
-vec_id: the redelivery guard treats the id as the identity of the
-vector, so a later row with the same vec_id — including a re-embedding
-with a different vector — is dropped, by design (that is what makes
-replayed/overlapping micro-batches exactly-once). Re-embedding a
-document therefore requires a new vec_id, or rebuilding into a fresh
-index (see operators/migration.rebuild_ann_index). Within one batch,
-duplicate vec_ids keep the lexicographically-smallest vector, so
-admission is replay-stable even for conflicting intra-batch duplicates.
-Every
-micro-batch of (vec_id, embedding) rows here is coarse-quantized against
-the FIXED centroid set (IVF centroids are trained once, offline — e.g.
+continuously (new documents embedded, changed documents re-embedded)
+and the similarity-search index has to admit them without rebuilding.
+``VersionedAnnIndexSnapshot`` admits a (vec_id, version, embedding)
+UPSERT stream — a re-embedding arrives as a HIGHER version of the same
+vec_id and supersedes the prior vector under the version-max read rule.
+An insert-only feed is the same stream with every row at version 0
+(main.py's ``EMB_VERSION_COL=`` empty): its
+admission is first-wins per vec_id, and a re-embedding needs a new
+vec_id, a higher version, or a rebuild (operators/migration
+.rebuild_ann_index). Every micro-batch is coarse-quantized against the
+FIXED centroid set (IVF centroids are trained once, offline — e.g.
 operators/clustering's k-means — exactly like a FAISS IVF index) and
 appended to the persisted cell-assigned vector table:
 
-    <root>/vectors/   (vec_id, vv, cell)   admitted vectors, cell-sorted
-    <root>/ledger/    (vec_id)             admission ledger — the slim
+    <root>/vectors/   (vec_id, version, vv|code, cell)  admitted
+                                           vectors, cell-sorted
+    <root>/ledger/    (vec_id, version)    admission ledger — the slim
                                            relation the redelivery guard
-                                           reads (bucketable by vec_id)
-    <root>/tombstones/ (vec_id)            deleted ids (delete_batch —
-                                           reads-only exclusion, same
-                                           design as the retrieval
-                                           index's; rebuild = vacuum)
+                                           reads (bucketable by the key)
+    <root>/tombstones/ (vec_id)            doc-level deletes
+    <root>/vtombstones/ (vec_id, dead_version)  in-band CDC deletes
     <root>/moments/   (cell, n, s, s2)     per-cell quantization-residual
                                            moments — the centroid-drift
                                            monitor (drift_report): free
@@ -40,63 +37,52 @@ appended to the persisted cell-assigned vector table:
                                            exists (drift is a property
                                            of the ARRIVING stream).
 
-The ledger/ state closes the sink's own round-11 scale boundary
-(SCALE_BENCH_r11.md §1): vectors/ used to double as the admission
-ledger, and bucketing IT by vec_id would destroy the cell clustering
-the probe's pushed IN pruning needs — so past broadcast size the
-per-trigger redelivery anti-join fell to a sort-merge join that
-shuffled the admitted-id column every trigger. The retrieval sink's
-separate-relations design applies instead: admission reads ONLY the
-slim ledger (``bucketed=True`` folds it into a vec_id-bucketed
-snapshot via statedir, and ``statedir.state_relations`` hands the
-guard the bucketed snapshot + plain tail as separate relations whose
-chained anti-joins keep the corpus-sized side Exchange-free —
+The ledger/ state closes the sink's round-11 scale boundary
+(SCALE_BENCH_r11.md §1): bucketing vectors/ by id would destroy the
+cell clustering the probe's pushed IN pruning needs, so admission reads
+ONLY the slim ledger (``bucketed=True`` folds it into a snapshot
+bucketed by the admission key, and ``statedir.state_relations`` hands
+the guard the bucketed snapshot + plain tail as separate relations
+whose chained anti-joins keep the corpus-sized side Exchange-free —
 plan-asserted in tests/test_ann_index_stream.py), while vectors/
-stays cell-sorted for the probes.
-
-Because admission never reads vectors/, compaction folds of vectors/
-can apply tombstones: folded tiers keep LIVE rows only (the read-path
-exclusion still covers the un-folded batch tail), so physical erasure
-of deleted vectors is eventual — every fold is a partial vacuum — and
-fold cost drops with the delete ratio. Fold-applied exclusion is
-read-equivalent by construction: probes already exclude tombstoned
-ids, tombstones are append-only (never un-deleted), and the ledger —
-which MUST keep deleted ids so they are never re-admitted — is never
-tombstone-folded. The offline rebuild remains the immediate-erasure
-path.
+stays cell-sorted for the probes. Because admission never reads
+vectors/, compaction folds of vectors/ erase deleted and superseded rows
+(class doc); the ledger — which MUST keep every admitted key so it is
+never re-admitted — is never erased. The offline rebuild remains the
+immediate-erasure path.
 
 Two storage tiers (``storage=``): ``float32`` (default) persists raw
 ``array<float>`` vectors — 4 B/dim forever; ``sq8`` persists int8 codes
-(vec_id, code, cell) under an offline-trained per-dimension affine
-quantizer (``train_sq_ranges`` — the SQ8 tier every vector store ships:
-faiss IndexScalarQuantizer / Milvus SQ8), quartering index state and
-probe scan bandwidth at 100 TB. Cells are always assigned from the
-full-precision vectors, so the two tiers share the exact cell geometry;
+under an offline-trained per-dimension affine quantizer
+(``train_sq_ranges`` — the SQ8 tier every vector store ships: faiss
+IndexScalarQuantizer / Milvus SQ8), quartering index state and probe
+scan bandwidth at 100 TB. Cells are always assigned from the full-
+precision vectors, so the two tiers share the exact cell geometry;
 probes dequantize in a narrow codegen'd map and run the same scoring
 body. The quantizer ranges are stamped (digest) like the centroids —
 codes are meaningless under different ranges, so mismatches refuse.
 
-Scale shape per trigger: the centroid relation broadcasts (num_cells ~
-sqrt(corpus) rows by the usual IVF sizing — a planning relation), the
-assignment argmin is a narrow map over the micro-batch, and the commit
-sorts by cell so parquet row-group min/max stats cluster each cell's
-rows. `topk` probes the nprobe nearest cells per query over the
+Scale shape per trigger: the centroid rows are held by the sink (a
+planning relation — num_cells ~ sqrt(corpus) by the usual IVF sizing),
+the assignment argmin is a narrow map over the micro-batch, and the
+commit sorts by cell so parquet row-group min/max stats cluster each
+cell's rows. `topk` probes the nprobe nearest cells per query over the
 persisted index: the probed-cell set (|queries| x nprobe values — a
 planning collect) becomes an IN filter on the index scan, so the read
-prunes to ~nprobe/num_cells of the corpus; the query side broadcasts
-into the scoring join and the corpus side never rides an Exchange
-(plan-asserted in tests/test_ann_index_stream.py). The redelivery guard
-(left-anti against admitted vec_ids) feeds only the column-pruned
-vec_id column of the index into the join — 8 bytes per admitted row,
-never the vectors — the same admission discipline as the LSH sinks.
+prunes to ~nprobe/num_cells of the corpus and the corpus side never
+rides an Exchange (plan-asserted in tests/test_ann_index_stream.py).
+The redelivery guard feeds only the column-pruned key columns of the
+ledger into the join — never the vectors.
 
 Equality contract (the standard set by tests/test_lsh_snapshot.py):
 after any drain — restarts, replays, overlapping redeliveries,
 compaction folds crossing the stream — `topk` is bit-equal to the batch
-operator `similarity.ivf_ann_topk` over the union of all admitted
-batches. Both paths share `similarity.ivf_probe_topk` verbatim, so the
+operator `similarity.ivf_ann_topk` over the latest live vector of every
+id (the union of all admitted batches for an insert-only feed). Both
+paths share `similarity.ivf_query_probes` / `ivf_score_probes`, so the
 equality is by construction once admission is exactly-once; the q136
-registry entry value-checks the fold against the q44 SQL oracle.
+and q139 registry entries value-check the fold against the q44 SQL
+oracle.
 
 The index is self-describing: the `cell` column carries a parameter
 stamp (centroid digest, scheme id, quantization) as column metadata —
@@ -122,14 +108,9 @@ from pyspark.sql import DataFrame, functions as F
 from stream_cdc_spark.operators import similarity
 from stream_cdc_spark.streaming import statedir
 
-ANN_VECTORS_SCHEMA = "vec_id bigint, vv array<float>, cell bigint"
-ANN_VECTORS_SCHEMA_SQ8 = "vec_id bigint, code array<tinyint>, cell bigint"
-ANN_LEDGER_SCHEMA = "vec_id bigint"
-
-# versioned variant (VersionedAnnIndexSnapshot): admission key is
-# (vec_id, version) — a re-embedding arrives as a higher version of the
-# same vec_id and supersedes the prior vector under the version-max read
-# rule, exactly the q138 design on the retrieval index
+# admission key (vec_id, version): a re-embedding arrives as a higher
+# version of the same vec_id and supersedes the prior vector under the
+# version-max read rule, exactly the q138 design on the retrieval index
 ANN_VVECTORS_SCHEMA = (
     "vec_id bigint, version bigint, vv array<float>, cell bigint"
 )
@@ -145,17 +126,15 @@ ANN_VLEDGER_SCHEMA = "vec_id bigint, version bigint"
 # dist_bp^2 summed over 100 TB of rows overflows BIGINT.
 ANN_MOMENTS_SCHEMA = "cell bigint, n bigint, s decimal(38,0), s2 decimal(38,0)"
 
-# Versioned id of the assignment/scoring math the persisted cells bake
-# in: argmin of FLOOR(10000 * squared distance) with min-cid ties, cosine
-# scoring. A change here (different quantization, different tie rule)
-# invalidates every persisted assignment, exactly like dedup.LSH_SCHEME.
-ANN_SCHEME = "ivf-argmin-sqdist-bp10000-mincid/cosine/v1"
-
-# The UPDATE-capable layout is a different scheme id, so a plain index
-# opened by the versioned sink (or vice versa) refuses instead of
-# silently misreading the row shape — same cross-mode guard as
-# retrieval_index.RETR_SCHEME_VERSIONED.
-ANN_SCHEME_VERSIONED = ANN_SCHEME + "+versioned-maxread/v1"
+# Versioned id of the assignment/scoring math and the row layout the
+# persisted cells bake in: argmin of FLOOR(10000 * squared distance)
+# with min-cid ties, cosine scoring, (vec_id, version) rows read under
+# the version-max rule. A change here invalidates every persisted
+# assignment, exactly like dedup.LSH_SCHEME — every index root stores
+# this exact string (tests pin it).
+ANN_SCHEME_VERSIONED = (
+    "ivf-argmin-sqdist-bp10000-mincid/cosine/v1+versioned-maxread/v1"
+)
 
 # Storage-tier ids. float32 stores raw vectors (4 B/dim); sq8 stores
 # int8 codes under a per-dimension affine quantizer trained offline
@@ -209,7 +188,7 @@ def train_residual_baseline(
     given centroids — (cell, n_train, mean_bp, std_bp) of the
     assignment dist_bp. Recorded once, offline, next to the centroids
     themselves (the same artifact family as train_sq_ranges): it is the
-    yardstick ``AnnIndexSnapshot.drift_report`` compares the live
+    yardstick ``VersionedAnnIndexSnapshot.drift_report`` compares the live
     corpus against. One distributed agg; num_cells rows."""
     assigned = similarity.ivf_assign(df, centroids, id_col, vec_col)
     return assigned.groupBy("cell").agg(
@@ -285,7 +264,7 @@ def _sq8_decode(code, ranges: list[tuple[float, float]]):
 
 
 class _DriftMonitor:
-    """The centroid-drift monitor shared by BOTH ANN sinks (round-13):
+    """The ANN index's centroid-drift monitor (round-13):
     per-cell quantization-residual moments maintained in a ``moments/``
     statedir (the owning sink commits ``_moments_of(staged)`` per
     trigger and folds with ``_reduce_moments`` — a commutative
@@ -329,11 +308,10 @@ class _DriftMonitor:
         exceeds mean_bp + z * std_bp (with at least ``min_n`` live
         admissions) is flagged. A flagged report is the documented
         trigger for operators/migration.rebuild_ann_index with
-        re-trained centroids. On the versioned sink the moments cover
-        every ADMITTED version (drift is a property of the arriving
-        stream — superseded re-embeddings still measured what arrived).
-        Returns (cell, n, live_mean_bp, mean_bp, std_bp, drifted),
-        num_cells rows."""
+        re-trained centroids. The moments cover every ADMITTED version
+        (drift is a property of the arriving stream — superseded
+        re-embeddings still measured what arrived). Returns (cell, n,
+        live_mean_bp, mean_bp, std_bp, drifted), num_cells rows."""
         live = self.moments(spark).withColumn(
             "live_mean_bp",
             (F.col("s") / F.col("n")).cast("double"),
@@ -363,470 +341,26 @@ class _DriftMonitor:
         )
 
 
-# the drift monitor's moments table, shared by both ANN sinks: folds are
-# component-wise sums per cell (a commutative monoid — minor/major folds
-# and the read-time reduction all compose); each trigger commits
-# num_cells rows as one file
+# the drift monitor's moments table: folds are component-wise sums per
+# cell (a commutative monoid — minor/major folds and the read-time
+# reduction all compose); each trigger commits num_cells rows as one
+# file
 _MOMENTS = statedir.Table(
     "moments", ANN_MOMENTS_SCHEMA, fold=_DriftMonitor._reduce_moments, files=1
 )
 
-# rebuild hints of the two ANN sinks' stamp guards
-_ANN_HINT = (
-    "Persisted cell assignments are not comparable across centroid sets "
-    "or schemes — a probe would silently score the wrong cells. Rebuild "
-    "the index by replaying the corpus through an AnnIndexSnapshot over a "
-    "fresh state dir with the new centroids."
-)
-_VANN_HINT = (
-    "Persisted cell assignments are not comparable across centroid sets, "
-    "schemes or the plain/versioned layout — a probe would silently score "
-    "the wrong cells or misread the row shape. Rebuild the index by "
-    "replaying the corpus through a VersionedAnnIndexSnapshot over a "
-    "fresh state dir with the new parameters."
-)
 
-
-class _AnnSink(_DriftMonitor):
-    """What both ANN sinks share: the centroid set and storage tier
-    stamped into the index, the doc-level tombstones, and the
-    statedir.SinkTables protocol over three tables — ledger/ (the slim
-    admission ledger, keyed and bucketed by the subclass's admission key
-    ``_KEY``), vectors/ (cell-sorted commits) and moments/ — folded in
-    that order and committed vectors, moments, ledger.
-
-    The ledger commits LAST because it is the admission commit point (a
-    redelivery of these rows under a LATER batch id anti-joins to empty
-    and writes nothing), so every state the batch owns must be durable
-    before the ledger rows are: a crash between two commits leaves the
-    earlier tables written, and a same-id replay overwrites them
-    identically while the ledger dir is still absent (ADVICE r13)."""
-
-    _KEY: tuple[str, ...]
-    _HINT: str
-
-    def _init_index(
-        self,
-        centroids: list[tuple[int, list[float]]],
-        quantize_bp: int | None,
-        storage: str,
-        sq_ranges: list[tuple[float, float]] | None,
-        scheme: str,
-    ) -> None:
-        """Validate and keep the parameters stamped into the index."""
-        if not centroids:
-            raise ValueError(
-                f"{type(self).__name__} needs a non-empty centroid set"
-            )
-        if storage not in ("float32", "sq8"):
-            raise ValueError(
-                f"storage must be 'float32' or 'sq8', got {storage!r}"
-            )
-        if storage == "sq8":
-            if not sq_ranges:
-                raise ValueError(
-                    "sq8 storage needs sq_ranges — the offline-trained "
-                    "per-dim (min, max) quantizer (train_sq_ranges)"
-                )
-            dim = len(centroids[0][1])
-            if len(sq_ranges) != dim:
-                raise ValueError(
-                    f"sq_ranges has {len(sq_ranges)} dims but centroids "
-                    f"have {dim}"
-                )
-        self.centroids = [(int(c), [float(x) for x in v]) for c, v in centroids]
-        self._assignment_rows = _assignment_rows(self.centroids)
-        self.quantize_bp = quantize_bp
-        self.storage = storage
-        self.sq_ranges = (
-            [(float(lo), float(hi)) for lo, hi in sq_ranges]
-            if sq_ranges
-            else None
-        )
-        self._stamp = {
-            "ann_scheme": scheme,
-            "ann_centroid_digest": centroid_digest(self.centroids),
-            "ann_num_cells": len(self.centroids),
-            "ann_quantize_bp": -1 if quantize_bp is None else int(quantize_bp),
-            "ann_storage": (
-                ANN_STORAGE_SQ8 if storage == "sq8" else ANN_STORAGE_FLOAT
-            ),
-            "ann_sq_digest": (
-                sq_ranges_digest(self.sq_ranges) if self.sq_ranges else "-"
-            ),
-        }
-
-    def _init_tables(
-        self,
-        state_dir: str,
-        id_col: str,
-        ledger_schema: str,
-        vectors_schema: str,
-        vectors_fold,
-        compact_every: int,
-        major_every: int,
-        commit_files: int,
-        bucketed: bool,
-        num_buckets: int,
-        fs: statedir.LocalFS | None,
-        extra_tombstones_roots: tuple[str, ...] = (),
-    ) -> None:
-        """The tombstone log and the three tables. ``vectors_fold``
-        applies the deletes (it reads the tombstone roots cross-state),
-        so the plain cell-sort is its read-equivalent fallback; both
-        re-sort by cell (row-preserving): batch commits are cell-sorted,
-        and without this a fold would interleave cells across its output
-        row groups — the probe's pushed IN filter would stop pruning
-        exactly when most of the corpus lives in compacted snapshots."""
-        self.state_dir = state_dir
-        self.fs = fs
-        self._tomb = statedir.TombstoneLog(
-            os.path.join(state_dir, "tombstones"),
-            store_col="vec_id",
-            source_col=id_col,
-            compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
-            # read-unioned second-channel tombstones (cdc_full's
-            # out-of-band deletion feed) — never written here
-            extra_read_roots=extra_tombstones_roots,
-            fs=fs,
-        )
-        self.tombstones_dir = self._tomb.root
-        self._schema = vectors_schema
-        self._tables = statedir.SinkTables(
-            state_dir,
-            [
-                statedir.Table("ledger", ledger_schema, bucket_cols=self._KEY),
-                statedir.Table(
-                    "vectors",
-                    vectors_schema,
-                    fold=vectors_fold,
-                    fallback=lambda df: df.sortWithinPartitions("cell"),
-                    sort_by="cell",
-                ),
-                _MOMENTS,
-            ],
-            compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
-            bucketed=bucketed,
-            num_buckets=num_buckets,
-            fs=fs,
-        )
-        self.vectors_dir = self._tables.dir("vectors")
-        self.ledger_dir = self._tables.dir("ledger")
-        self.moments_dir = self._tables.dir("moments")
-
-    # -- state ------------------------------------------------------------
-    def _centroids_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(
-            self.centroids, "cid bigint, cv array<float>"
-        )
-
-    def _state(self, spark, batch_id: int) -> DataFrame:
-        return self._tables.read_stamped(
-            spark, "vectors", batch_id, "cell", self._stamp,
-            "ANN index parameter", self._HINT,
-        )
-
-    def vectors(self, spark) -> DataFrame:
-        """Every admitted row as stored — (vec_id[, version], vv, cell)
-        on the float32 tier, code instead of vv on the sq8 tier.
-        Tombstoned (and, versioned, superseded) rows persist in the
-        un-folded tail until a compaction fold erases them (probes never
-        read them either way)."""
-        return self._state(spark, 1 << 62)
-
-    def ledger(self, spark) -> DataFrame:
-        """Every admitted admission key (``_KEY``) — the slim ledger the
-        redelivery guard (and the versioned version-max read rule)
-        reads. Never erased: a deleted id must never be re-admitted, so
-        it keeps tombstoned ids and is a superset of the post-fold
-        vectors/ keys whenever deletions exist."""
-        return self._tables.read(spark, "ledger")
-
-    def _ledger_relations(self, spark, batch_id: int) -> list[DataFrame]:
-        """The admission ledger visible to ``batch_id``, as the relation
-        list the redelivery guard chains anti-joins over
-        (``SinkTables.relations``)."""
-        return self._tables.relations(spark, "ledger", batch_id)
-
-    def _assign(
-        self, vecs: DataFrame, keep_residual: bool = False
-    ) -> DataFrame:
-        """(``_KEY``, vv) -> the stamped storage relation: cells assigned
-        from the FULL-precision vector (same geometry on both tiers; on
-        the versioned sink the vector of THAT version, carried through
-        the per-row argmin, so a re-embedding lands in its own correct
-        cell), payload quantized only for sq8 storage (1 B/dim on disk).
-        Shared by the per-trigger _build and the offline migration
-        publish (operators/migration.rebuild_ann_index), so the two
-        paths cannot drift. ``keep_residual`` carries dist_bp through
-        for the drift monitor's partials (the per-trigger _build
-        path)."""
-        raw = similarity.ivf_assign_rows(
-            vecs,
-            self._assignment_rows,
-            id_col="vec_id",
-            vec_col="vv",
-            carry_cols=self._KEY[1:],
-        )
-        payload = (
-            _sq8_encode(F.col("vv"), self.sq_ranges).alias("code")
-            if self.storage == "sq8"
-            else F.col("vv")
-        )
-        extra = [F.col("dist_bp")] if keep_residual else []
-        return raw.select(
-            *self._KEY,
-            payload,
-            F.col("cell").alias("cell", metadata=self._stamp),
-            *extra,
-        )
-
-    def tombstones(self, spark) -> DataFrame:
-        """Every deleted vec_id, distinct."""
-        return self._tomb.read(spark)
-
-    # -- the sink: the statedir.SinkTables protocol ------------------------
-    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        self._state(spark, batch_id)  # stamp guard
-        self._tables.fold(spark, batch_id)
-        staged = self._build(spark, batch_df, batch_id)
-        if staged is None:
-            return  # empty trigger: commit nothing (missing == empty)
-        # the drift monitor's per-cell residual partials: the argmin's
-        # own dist_bp, reduced to num_cells rows — free at ingest (no
-        # extra scoring); the ledger last (class doc)
-        self._tables.commit(
-            batch_id,
-            {
-                "vectors": staged.drop("dist_bp"),
-                "moments": self._moments_of(staged),
-                "ledger": staged.select(*self._KEY),
-            },
-        )
-
-
-class AnnIndexSnapshot(_AnnSink):
-    """foreachBatch sink: continuous IVF index admission over a
-    (vec_id, embedding) stream, plus the `topk` probe over the persisted
-    index. See module doc.
+class VersionedAnnIndexSnapshot(_DriftMonitor):
+    """foreachBatch sink: UPDATE-capable continuous IVF index over a
+    (vec_id, version, embedding) stream, plus the `topk` probe over the
+    persisted index — the exact q138 design the versioned retrieval
+    index uses (streaming/retrieval_index.py
+    VersionedRetrievalIndexSnapshot), applied to embeddings. See module
+    doc; an insert-only feed is this stream at version 0.
 
     ``centroids``: list of (cid, vector) — the offline-trained coarse
     quantizer. Broadcast-small by IVF design; its digest is stamped into
     the persisted index and enforced on every admit/probe.
-    """
-
-    _KEY = ("vec_id",)
-    _HINT = _ANN_HINT
-
-    def __init__(
-        self,
-        state_dir: str,
-        centroids: list[tuple[int, list[float]]],
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        quantize_bp: int | None = 10000,
-        compact_every: int = 16,
-        major_every: int = 0,
-        commit_files: int = 1,
-        storage: str = "float32",
-        sq_ranges: list[tuple[float, float]] | None = None,
-        bucketed: bool = False,
-        num_buckets: int = 32,
-        fs: statedir.LocalFS | None = None,
-    ):
-        self._init_index(centroids, quantize_bp, storage, sq_ranges, ANN_SCHEME)
-        self.id_col = id_col
-        self.vec_col = vec_col
-        # bucketed=True folds the ledger/ admission state into a
-        # vec_id-bucketed snapshot table, so the per-trigger redelivery
-        # anti-join keeps the ledger side Exchange-free once the corpus
-        # outgrows broadcast (statedir.state_relations; plan-asserted) —
-        # the 100 TB shape, same switch as RetrievalIndexSnapshot's.
-        # vectors/ folds APPLY the tombstones (live rows only in the
-        # folded tier — eventual physical erasure, module doc):
-        # read-equivalent because probes already exclude tombstoned ids
-        # and tombstones are append-only, and admission-safe because the
-        # guard reads ledger/, never vectors/.
-        self._init_tables(
-            state_dir,
-            id_col,
-            ANN_LEDGER_SCHEMA,
-            ANN_VECTORS_SCHEMA_SQ8 if storage == "sq8" else ANN_VECTORS_SCHEMA,
-            lambda df: self._tomb.exclude(
-                df.sparkSession, df
-            ).sortWithinPartitions("cell"),
-            compact_every, major_every, commit_files, bucketed, num_buckets,
-            fs,
-        )
-
-    def _probe_relation(self, spark) -> DataFrame:
-        """The LIVE index as (vec_id, vv, cell) float vectors: tombstoned
-        rows excluded (slim anti-join, skipped when no deletion exists).
-        The sq8 tier scans 1 B/dim codes and dequantizes in a narrow
-        codegen'd map — the disk/network read (what dominates a 100 TB
-        probe) is a quarter of the float tier's; the cell column (and its
-        pushed IN pruning) is identical across tiers."""
-        state = self._tomb.exclude(spark, self.vectors(spark))
-        if self.storage != "sq8":
-            return state
-        return state.select(
-            "vec_id",
-            _sq8_decode(F.col("code"), self.sq_ranges).alias("vv"),
-            "cell",
-        )
-
-    def delete_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch sink over a (vec_id) deletion stream — the
-        right-to-be-forgotten path for the embedding corpus, mirroring
-        RetrievalIndexSnapshot.delete_batch (shared
-        statedir.TombstoneLog: reads-only exclusion, no write-path
-        coupling, replay rewrites identical rows). A deleted vec_id can
-        never be re-admitted (first-wins ledger). Physical erasure is
-        eventual — every vectors/ compaction fold drops tombstoned rows
-        from the folded tier (module doc) — or immediate via the offline
-        `operators/migration.rebuild_ann_index` (which reads only the
-        live set, so a same-parameter rebuild IS the vacuum)."""
-        self._tomb.append(batch_df, batch_id)
-
-    def topk(
-        self, spark, queries: DataFrame, k: int = 5, nprobe: int = 2
-    ) -> DataFrame:
-        """ANN top-k over the persisted index: on the float32 tier,
-        bit-equal to batch `similarity.ivf_ann_topk` over the LIVE set
-        (admitted minus tombstoned — the union of all admitted batches
-        when nothing was deleted; same probe body, same centroids, same
-        quantization). On the sq8 tier the same probe body runs over the
-        dequantized codes — deterministic and fold/restart-invariant,
-        equal to the float tier's ranking whenever the per-element
-        quantization error (≤ half a step of (hi-lo)/254) does not
-        reorder neighbors (tests/test_ann_index_stream.py measures this
-        on the real corpus)."""
-        return similarity.ivf_probe_topk(
-            self._probe_relation(spark),
-            queries,
-            self._centroids_df(spark),
-            k=k,
-            nprobe=nprobe,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            quantize_bp=self.quantize_bp,
-            prune_cells=True,
-        )
-
-    def _build(self, spark, batch_df: DataFrame, batch_id: int):
-        """The micro-batch's new STORAGE rows plus the residual column
-        (vec_id, vv|code, cell, dist_bp), or None for an effectively-
-        empty batch. The pin happens on this projection — on the sq8
-        tier that is 1 B/dim codes, not the 4 B/dim full-precision
-        vectors (pinning raw would quadruple per-trigger checkpoint
-        bytes on the tier whose point is quartering state). Separated
-        from the commit so plan tests can assert scale shape on the
-        exact relation written."""
-        vecs = (
-            batch_df.select(
-                F.col(self.id_col).cast("long").alias("vec_id"),
-                F.col(self.vec_col).cast("array<float>").alias("vv"),
-            )
-            # deterministic intra-batch tie-break: conflicting duplicate
-            # ids keep the lexicographically-smallest vector, so a replay
-            # of the same batch admits the same row (dropDuplicates would
-            # pick an arbitrary one). Same shuffle shape as dropDuplicates.
-            .groupBy("vec_id")
-            .agg(F.min("vv").alias("vv"))
-        )
-        # redelivery guard: an already-admitted vec_id is dropped whole.
-        # The guard reads ONLY the slim ledger/ state (8 bytes/row, never
-        # the vectors); with bucketed=True it arrives as separate
-        # relations — bucketed snapshot first, plain tail second — and
-        # the chained anti-joins keep the snapshot side Exchange-free
-        # (anti-joins compose over union; statedir.state_relations doc).
-        for rel in self._ledger_relations(spark, batch_id):
-            vecs = vecs.join(rel.select("vec_id"), "vec_id", "left_anti")
-        # pin: feeds the emptiness probe and all three commit writes —
-        # unpinned, the assignment (and the state anti-join behind it)
-        # would recompute per action. Pinned AFTER the storage
-        # projection (class doc: code-size blocks on the sq8 tier).
-        return statedir.pinned_or_none(self._assign(vecs, keep_residual=True))
-
-
-def ann_topk_over_batches(
-    vec_batches: list[DataFrame],
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quantize_bp: int | None = 10000,
-) -> DataFrame:
-    """Fold vector micro-batches through the incremental admission
-    (exactly-once per vec_id, overlapping redeliveries dropped) and probe
-    the accumulated index — the in-memory harness for the q136 registry
-    entry and the equality tests. Bit-equal to `similarity.ivf_ann_topk`
-    over the union of the batches.
-
-    The fold is computed as ONE plan (guide §1.2-1 / §5): first-wins
-    admission per vec_id is, by definition, "the row from the EARLIEST
-    batch containing the id, with the lexicographically-smallest vector
-    as the intra-batch tie-break" — exactly
-    ``min(struct(batch_index, vv_is_null, vv))`` per vec_id over the
-    tagged union of the batches (min ignores null vectors within the
-    winning batch, like the per-batch ``F.min(vv)`` aggregate it
-    replaces, and keeps a null only when the winning batch has nothing
-    else — the struct's null flag sorts non-null first). The former
-    batch-at-a-time loop materialized the ENTIRE accumulated prefix with
-    an eager localCheckpoint per batch — O(batches * corpus) checkpoint
-    bytes and 3+ serial driver jobs per drain, the measured r14 floor of
-    this bench entry (8->32-core scaling 0.66). One aggregate admits the
-    identical member set with a single map-side-combined shuffle and
-    leaves the whole drain lazy for AQE. The statedir sink
-    (AnnIndexSnapshot) keeps the true per-trigger incremental path — a
-    real stream cannot see future batches; this harness is handed the
-    full drain up front, so folding it pairwise was pure overhead."""
-    if not vec_batches:
-        raise ValueError("ann_topk_over_batches: no vector batches given")
-    tagged = [
-        b.select(
-            F.col(id_col).cast("long").alias("vec_id"),
-            F.col(vec_col).cast("array<float>").alias("vv"),
-            F.lit(i).alias("__bi"),
-        )
-        for i, b in enumerate(vec_batches)
-    ]
-    allb = tagged[0]
-    for t in tagged[1:]:
-        allb = allb.unionByName(t)
-    members = (
-        allb.groupBy("vec_id")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("__bi"),
-                    F.col("vv").isNull().alias("__vnull"),
-                    F.col("vv"),
-                )
-            ).alias("__first")
-        )
-        .select("vec_id", F.col("__first.vv").alias("vv"))
-    )
-    assigned = similarity.ivf_assign(
-        members, centroids, id_col="vec_id", vec_col="vv"
-    ).select("vec_id", "vv", "cell")
-    return similarity.ivf_probe_topk(
-        assigned, queries, centroids, k, nprobe, id_col, vec_col, quantize_bp
-    )
-
-
-class VersionedAnnIndexSnapshot(_AnnSink):
-    """foreachBatch sink: UPDATE-capable continuous IVF index — the
-    CDC-native widening of AnnIndexSnapshot, the exact q138 design the
-    versioned retrieval index uses (streaming/retrieval_index.py
-    VersionedRetrievalIndexSnapshot), applied to embeddings.
 
     A CDC Update event re-embeds a changed document (reference
     stream_cdc/datasources/mysql.py:416-426 emits the full after-image):
@@ -857,20 +391,32 @@ class VersionedAnnIndexSnapshot(_AnnSink):
                           growing version prefix — what keeps
                           fold-time erasure read-equivalent)
 
+    The tables are folded ledger, vectors, moments and committed
+    vectors, moments, ledger. The ledger commits LAST because it is the
+    admission commit point (a redelivery of these rows under a LATER
+    batch id anti-joins to empty and writes nothing), so every state
+    the batch owns must be durable before the ledger rows are: a crash
+    between two commits leaves the earlier tables written, and a
+    same-id replay overwrites them identically while the ledger dir is
+    still absent (ADVICE r13).
+
     Probe scale shape (mirrors the versioned retrieval probe): the
     probed-cell set enters the vectors/ scan as a pushed IN filter
-    (pruned read, same as the plain sink), the max-version lookup
-    touches only the PRUNED rows' ids (semi-join of the slim ledger
-    against the matching-id set), and the final (vec_id, version)
-    equi-join restricts to latest live — both small relations broadcast
-    only under a bounded count probe (``broadcast_max_ids``; past the
-    cap the optimizer picks shuffle joins). The max-version lookup MUST
-    come from the ledger, not the pruned scan: a re-embedding can move
-    an id to a DIFFERENT cell, and scoring the pruned cells' stale
-    version when the latest lives in an unprobed cell would resurrect
-    the old vector. With the ledger lookup the stale row fails the
-    version-max join and the id simply does not match — exact IVF
-    semantics (the latest vector's cell was not probed).
+    (pruned read), the max-version lookup touches only the PRUNED rows'
+    ids (semi-join of the slim ledger against the matching-id set), and
+    the final (vec_id, version) equi-join restricts to latest live —
+    both small relations broadcast only under a bounded count probe
+    (``broadcast_max_ids``; past the cap the optimizer picks shuffle
+    joins). The max-version lookup MUST come from the ledger, not the
+    pruned scan: a re-embedding can move an id to a DIFFERENT cell, and
+    scoring the pruned cells' stale version when the latest lives in an
+    unprobed cell would resurrect the old vector. With the ledger lookup
+    the stale row fails the version-max join and the id simply does not
+    match — exact IVF semantics (the latest vector's cell was not
+    probed). When the ledger's parquet footers prove that every row
+    carries one version (an insert-only feed), an id has at most one
+    admitted row and both the lookup and the folds' ledger read are
+    skipped: a row is latest iff it is live (``_latest_rows``).
 
     Folds erase superseded and tombstoned codes: every vectors/
     compaction keeps only rows that are the latest live version AT FOLD
@@ -882,18 +428,24 @@ class VersionedAnnIndexSnapshot(_AnnSink):
     cell-sort as its read-equivalent TOCTOU fallback
     (statedir.maybe_compact_with_fallback).
 
-    Both storage tiers of the plain sink apply unchanged: cells are
-    always assigned from the full-precision vectors, sq8 stores 1 B/dim
-    codes and dequantizes in a narrow codegen'd map after the latest
-    join. Equality contract: after any interleaving of inserts,
-    updates, deletes, replays, restarts and folds, `topk` is bit-equal
-    to batch `similarity.ivf_ann_topk` over the latest live image of
-    every id (q139 value-checks against the q44 SQL composed with
-    q03-style latest-image compaction).
+    Equality contract: after any interleaving of inserts, updates,
+    deletes, replays, restarts and folds, `topk` is bit-equal to batch
+    `similarity.ivf_ann_topk` over the latest live image of every id
+    (q139 value-checks against the q44 SQL composed with q03-style
+    latest-image compaction).
     """
 
     _KEY = ("vec_id", "version")
-    _HINT = _VANN_HINT
+    _HINT = (
+        "Persisted cell assignments are not comparable across centroid "
+        "sets, storage tiers or schemes — a probe would silently score "
+        "the wrong cells or misread the row shape. Migrate the index with "
+        "operators/migration.rebuild_ann_index (new centroids or tier), "
+        "or replay the corpus into a fresh state dir (a new scheme). A "
+        "root written by the removed insert-only ANN sink (a scheme "
+        "without '+versioned-maxread') has no version column and can "
+        "only be replayed."
+    )
 
     def __init__(
         self,
@@ -914,38 +466,70 @@ class VersionedAnnIndexSnapshot(_AnnSink):
         extra_tombstones_roots: tuple[str, ...] = (),
         fs: statedir.LocalFS | None = None,
     ):
-        self._init_index(
-            centroids, quantize_bp, storage, sq_ranges, ANN_SCHEME_VERSIONED
+        if not centroids:
+            raise ValueError(
+                f"{type(self).__name__} needs a non-empty centroid set"
+            )
+        if storage not in ("float32", "sq8"):
+            raise ValueError(
+                f"storage must be 'float32' or 'sq8', got {storage!r}"
+            )
+        if storage == "sq8":
+            if not sq_ranges:
+                raise ValueError(
+                    "sq8 storage needs sq_ranges — the offline-trained "
+                    "per-dim (min, max) quantizer (train_sq_ranges)"
+                )
+            dim = len(centroids[0][1])
+            if len(sq_ranges) != dim:
+                raise ValueError(
+                    f"sq_ranges has {len(sq_ranges)} dims but centroids "
+                    f"have {dim}"
+                )
+        self.centroids = [(int(c), [float(x) for x in v]) for c, v in centroids]
+        self._assignment_rows = _assignment_rows(self.centroids)
+        self.quantize_bp = quantize_bp
+        self.storage = storage
+        self.sq_ranges = (
+            [(float(lo), float(hi)) for lo, hi in sq_ranges]
+            if sq_ranges
+            else None
         )
+        self._stamp = {
+            "ann_scheme": ANN_SCHEME_VERSIONED,
+            "ann_centroid_digest": centroid_digest(self.centroids),
+            "ann_num_cells": len(self.centroids),
+            "ann_quantize_bp": -1 if quantize_bp is None else int(quantize_bp),
+            "ann_storage": (
+                ANN_STORAGE_SQ8 if storage == "sq8" else ANN_STORAGE_FLOAT
+            ),
+            "ann_sq_digest": (
+                sq_ranges_digest(self.sq_ranges) if self.sq_ranges else "-"
+            ),
+        }
         self.id_col = id_col
         self.version_col = version_col
         self.vec_col = vec_col
-        # cap on the matching-id count the probe will force-broadcast —
+        # cap on the pruned-id rows the probe will force-broadcast —
         # same guard as the versioned retrieval probe (a hot probed cell
         # can hold an unbounded corpus share; an unconditional hint
         # bypasses the auto-broadcast threshold)
         self.broadcast_max_ids = broadcast_max_ids
-        # The ledger is bucketed by the ADMISSION KEY so the redelivery
-        # anti-join reads the snapshot side Exchange-free at corpus
-        # scale. vectors/ folds keep only rows that are the latest live
-        # version at fold time — every fold erases superseded
-        # re-embeddings and tombstoned ids physically (read-equivalent:
-        # the ledger still drives the version-max read and versions are
-        # monotone, class doc). The moments measure every ADMITTED
-        # version.
-        self._init_tables(
-            state_dir,
-            id_col,
-            ANN_VLEDGER_SCHEMA,
-            ANN_VVECTORS_SCHEMA_SQ8 if storage == "sq8" else ANN_VVECTORS_SCHEMA,
-            lambda df: df.join(
-                self._latest_live(df.sparkSession),
-                ["vec_id", "version"],
-                "left_semi",
-            ).sortWithinPartitions("cell"),
-            compact_every, major_every, commit_files, bucketed, num_buckets,
-            fs, extra_tombstones_roots,
+        self.state_dir = state_dir
+        self.fs = fs
+        self._tomb = statedir.TombstoneLog(
+            os.path.join(state_dir, "tombstones"),
+            store_col="vec_id",
+            source_col=id_col,
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            # read-unioned second-channel tombstones (cdc_full's
+            # out-of-band deletion feed) — never written here
+            extra_read_roots=extra_tombstones_roots,
+            fs=fs,
         )
+        self.tombstones_dir = self._tomb.root
         # in-band versioned deletes: (vec_id, version) rows killing the
         # version prefix <= the delete's CDC sequence (class doc)
         self._vtomb = statedir.VersionedTombstoneLog(
@@ -959,6 +543,129 @@ class VersionedAnnIndexSnapshot(_AnnSink):
             fs=fs,
         )
         self.vtombstones_dir = self._vtomb.root
+        self._schema = (
+            ANN_VVECTORS_SCHEMA_SQ8 if storage == "sq8" else ANN_VVECTORS_SCHEMA
+        )
+        # The ledger is bucketed by the ADMISSION KEY so the redelivery
+        # anti-join reads the snapshot side Exchange-free at corpus
+        # scale. vectors/ folds keep only rows that are the latest live
+        # version at fold time — every fold erases superseded
+        # re-embeddings and tombstoned ids physically (read-equivalent:
+        # the ledger still drives the version-max read and versions are
+        # monotone, class doc); the fold reads the tombstone roots
+        # cross-state, so the plain cell-sort is its read-equivalent
+        # fallback. Both re-sort by cell (row-preserving): batch commits
+        # are cell-sorted, and without this a fold would interleave
+        # cells across its output row groups — the probe's pushed IN
+        # filter would stop pruning exactly when most of the corpus
+        # lives in compacted snapshots. The moments measure every
+        # ADMITTED version.
+        self._tables = statedir.SinkTables(
+            state_dir,
+            [
+                statedir.Table(
+                    "ledger", ANN_VLEDGER_SCHEMA, bucket_cols=self._KEY
+                ),
+                statedir.Table(
+                    "vectors",
+                    self._schema,
+                    fold=lambda df: self._latest_rows(
+                        df.sparkSession, df
+                    ).sortWithinPartitions("cell"),
+                    fallback=lambda df: df.sortWithinPartitions("cell"),
+                    sort_by="cell",
+                ),
+                _MOMENTS,
+            ],
+            compact_every=compact_every,
+            major_every=major_every,
+            commit_files=commit_files,
+            bucketed=bucketed,
+            num_buckets=num_buckets,
+            fs=fs,
+        )
+        self.vectors_dir = self._tables.dir("vectors")
+        self.ledger_dir = self._tables.dir("ledger")
+        self.moments_dir = self._tables.dir("moments")
+
+    # -- state ------------------------------------------------------------
+    def _centroids_df(self, spark) -> DataFrame:
+        return spark.createDataFrame(
+            self.centroids, "cid bigint, cv array<float>"
+        )
+
+    def _state(self, spark, batch_id: int) -> DataFrame:
+        return self._tables.read_stamped(
+            spark, "vectors", batch_id, "cell", self._stamp,
+            "ANN index parameter", self._HINT,
+        )
+
+    def vectors(self, spark) -> DataFrame:
+        """Every admitted row as stored — (vec_id, version, vv, cell) on
+        the float32 tier, code instead of vv on the sq8 tier.
+        Tombstoned and superseded rows persist in the un-folded tail
+        until a compaction fold erases them (probes never read them
+        either way)."""
+        return self._state(spark, 1 << 62)
+
+    def ledger(self, spark) -> DataFrame:
+        """Every admitted admission key (vec_id, version) — the slim
+        ledger the redelivery guard and the version-max read rule read.
+        Never erased: a deleted id must never be re-admitted, so it
+        keeps tombstoned ids and is a superset of the post-fold
+        vectors/ keys whenever deletions or updates exist."""
+        return self._tables.read(spark, "ledger")
+
+    def _ledger_relations(self, spark, batch_id: int) -> list[DataFrame]:
+        """The admission ledger visible to ``batch_id``, as the relation
+        list the redelivery guard chains anti-joins over
+        (``SinkTables.relations``)."""
+        return self._tables.relations(spark, "ledger", batch_id)
+
+    def _assign(
+        self, vecs: DataFrame, keep_residual: bool = False
+    ) -> DataFrame:
+        """(vec_id, version, vv) -> the stamped storage relation: cells
+        assigned from the FULL-precision vector of THAT version (same
+        geometry on both tiers, carried through the per-row argmin, so a
+        re-embedding lands in its own correct cell), payload quantized
+        only for sq8 storage (1 B/dim on disk). Shared by the
+        per-trigger _build and the offline migration publish
+        (operators/migration.rebuild_ann_index), so the two paths cannot
+        drift. ``keep_residual`` carries dist_bp through for the drift
+        monitor's partials (the per-trigger _build path)."""
+        raw = similarity.ivf_assign_rows(
+            vecs,
+            self._assignment_rows,
+            id_col="vec_id",
+            vec_col="vv",
+            carry_cols=self._KEY[1:],
+        )
+        payload = (
+            _sq8_encode(F.col("vv"), self.sq_ranges).alias("code")
+            if self.storage == "sq8"
+            else F.col("vv")
+        )
+        extra = [F.col("dist_bp")] if keep_residual else []
+        return raw.select(
+            *self._KEY,
+            payload,
+            F.col("cell").alias("cell", metadata=self._stamp),
+            *extra,
+        )
+
+    def _float_vectors(self):
+        """The stored payload as ``vv`` float vectors: sq8 codes
+        dequantize in a narrow codegen'd map — the disk/network read
+        (what dominates a 100 TB probe) is a quarter of the float
+        tier's."""
+        if self.storage == "sq8":
+            return _sq8_decode(F.col("code"), self.sq_ranges).alias("vv")
+        return F.col("vv")
+
+    def tombstones(self, spark) -> DataFrame:
+        """Every deleted vec_id, distinct."""
+        return self._tomb.read(spark)
 
     def versioned_tombstones(self, spark) -> DataFrame | None:
         """(vec_id, dead_version) kill watermarks of the in-band delete
@@ -986,8 +693,12 @@ class VersionedAnnIndexSnapshot(_AnnSink):
         """foreachBatch sink over a (vec_id) deletion stream — doc-level
         right-to-be-forgotten: every version of the id, already admitted
         or still in flight, stops matching (the version-max read rule
-        excludes tombstoned ids before taking the max). Physical erasure
-        of all versions is eventual via the fold (module doc). This is
+        excludes tombstoned ids before taking the max). No cross-state
+        read (shared statedir.TombstoneLog: reads-only exclusion, replay
+        rewrites identical rows). Physical erasure of all versions is
+        eventual via the fold (class doc), or immediate via the offline
+        `operators/migration.rebuild_ann_index` (which reads only the
+        live set, so a same-parameter rebuild IS the vacuum). This is
         the OUT-OF-BAND channel; in-band CDC Delete envelopes carry a
         sequence and route through ``delete_versions_batch``."""
         self._tomb.append(batch_df, batch_id)
@@ -1006,10 +717,15 @@ class VersionedAnnIndexSnapshot(_AnnSink):
     ) -> DataFrame:
         """ANN top-k over the latest live image of every id: bit-equal
         to batch `similarity.ivf_ann_topk` over the compacted corpus
-        (max-version vector per live vec_id). Shares
-        similarity.ivf_query_probes / ivf_score_probes with the batch
-        probe, so the geometry and ranking cannot drift (class doc for
-        the pruning + version-max plan shape)."""
+        (max-version vector per live vec_id) on the float32 tier. On
+        the sq8 tier the same probe body runs over the dequantized codes
+        — deterministic and fold/restart-invariant, equal to the float
+        tier's ranking whenever the per-element quantization error (≤
+        half a step of (hi-lo)/254) does not reorder neighbors
+        (tests/test_ann_index_stream.py measures this on the real
+        corpus). Shares similarity.ivf_query_probes / ivf_score_probes
+        with the batch probe, so the geometry and ranking cannot drift
+        (class doc for the pruning + version-max plan shape)."""
         probes = similarity.ivf_query_probes(
             queries, self._centroids_df(spark), nprobe,
             self.id_col, self.vec_col,
@@ -1023,13 +739,41 @@ class VersionedAnnIndexSnapshot(_AnnSink):
             if probed
             else state.filter(F.lit(False))
         )
-        # pinned: the distinct-id set (bounded by the pruned scan's
-        # distinct ids) feeds the broadcast-cap count probe AND the
-        # max-version semi-join — unpinned, each would re-run the
-        # probed-cell parquet scan and its distinct (ADVICE r13)
-        ids = pruned.select("vec_id").distinct().localCheckpoint(eager=True)
-        cap = self.broadcast_max_ids
-        small = ids.limit(cap + 1).count() <= cap
+        latest = self._latest_rows(spark, pruned, probe=True)
+        return similarity.ivf_score_probes(
+            latest.select("vec_id", self._float_vectors(), "cell"),
+            probes, k=k, quantize_bp=self.quantize_bp,
+        )
+
+    def _latest_rows(
+        self, spark, rows: DataFrame, probe: bool = False
+    ) -> DataFrame:
+        """The stored ``rows`` that are their id's latest live version —
+        what a vectors/ fold keeps and a probe scores. When every ledger
+        row carries one version (an insert-only feed; proven from the
+        ledger's parquet footers, no Spark job) an id has at most one
+        admitted row, so the version-max rule is the row-level live
+        filter and the ledger is never read. Otherwise the rows join the
+        version-max of the live ledger: the whole of it for a fold, and
+        for a ``probe`` only the pruned ids' ledger rows, through the
+        guarded broadcasts of the class doc."""
+        one = self._tables.one_value("ledger", "version")
+        if one is not None:
+            return self._live(
+                spark, rows.filter(F.col("version") == F.lit(one))
+            )
+        if not probe:
+            return rows.join(
+                self._latest_live(spark), ["vec_id", "version"], "left_semi"
+            )
+        # pinned with its row count in one job: the pruned ids feed the
+        # broadcast-cap decision AND the max-version semi-join —
+        # unpinned, each would re-run the probed-cell parquet scan
+        # (ADVICE r13). No distinct (a shuffle): the semi-join's
+        # broadcast build drops duplicate keys, and the row count bounds
+        # the distinct ids from above
+        ids, n_ids = statedir.pinned_with_count(rows.select("vec_id"))
+        small = n_ids <= self.broadcast_max_ids
         hint = F.broadcast if small else (lambda df: df)
         mx = (
             # LIVE ledger rows only (both delete channels) BEFORE the
@@ -1041,44 +785,70 @@ class VersionedAnnIndexSnapshot(_AnnSink):
             .groupBy("vec_id")
             .agg(F.max("version").alias("version"))
         )
-        latest = pruned.join(hint(mx), ["vec_id", "version"])
-        if self.storage == "sq8":
-            latest = latest.select(
-                "vec_id",
-                _sq8_decode(F.col("code"), self.sq_ranges).alias("vv"),
-                "cell",
-            )
-        else:
-            latest = latest.select("vec_id", "vv", "cell")
-        return similarity.ivf_score_probes(
-            latest, probes, k=k, quantize_bp=self.quantize_bp
+        return rows.join(hint(mx), ["vec_id", "version"])
+
+    # -- the sink: the statedir.SinkTables protocol ------------------------
+    def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        self._state(spark, batch_id)  # stamp guard
+        self._tables.fold(spark, batch_id)
+        staged = self._build(spark, batch_df, batch_id)
+        if staged is None:
+            return  # empty trigger: commit nothing (missing == empty)
+        # the drift monitor's per-cell residual partials: the argmin's
+        # own dist_bp, reduced to num_cells rows — free at ingest (no
+        # extra scoring); the ledger last (class doc)
+        self._tables.commit(
+            batch_id,
+            {
+                "vectors": staged.drop("dist_bp"),
+                "moments": self._moments_of(staged),
+                "ledger": staged.select(*self._KEY),
+            },
         )
 
     def _build(self, spark, batch_df: DataFrame, batch_id: int):
         """The micro-batch's new STORAGE rows plus the residual column
         (vec_id, version, vv|code, cell, dist_bp), or None for an
-        effectively-empty batch. The pin happens on this projection —
-        code-size blocks on the sq8 tier (the plain sink's rule)."""
+        effectively-empty batch. The pin happens on this projection — on
+        the sq8 tier that is 1 B/dim codes, not the 4 B/dim
+        full-precision vectors (pinning raw would quadruple per-trigger
+        checkpoint bytes on the tier whose point is quartering state).
+        Separated from the commit so plan tests can assert scale shape
+        on the exact relation written."""
+        vec_id = F.col(self.id_col).cast("long")
         vecs = (
             batch_df.select(
-                F.col(self.id_col).cast("long").alias("vec_id"),
-                F.col(self.version_col).cast("long").alias("version"),
+                vec_id.alias("vec_id"),
+                statedir.key_version(
+                    F.col(self.version_col).cast("long"), vec_id
+                ).alias("version"),
                 F.col(self.vec_col).cast("array<float>").alias("vv"),
             )
             # deterministic intra-batch tie-break per ADMISSION KEY:
             # conflicting duplicate (id, version) rows keep the
-            # lexicographically-smallest vector (replay-stable)
+            # lexicographically-smallest vector, so a replay of the same
+            # batch admits the same row (dropDuplicates would pick an
+            # arbitrary one). Same shuffle shape as dropDuplicates.
             .groupBy("vec_id", "version")
             .agg(F.min("vv").alias("vv"))
         )
         # redelivery guard on the admission key — reads ONLY the slim
-        # (vec_id, version) ledger, never the vectors
+        # (vec_id, version) ledger, never the vectors; with
+        # bucketed=True it arrives as separate relations — bucketed
+        # snapshot first, plain tail second — and the chained anti-joins
+        # keep the snapshot side Exchange-free (anti-joins compose over
+        # union; statedir.state_relations doc)
         for rel in self._ledger_relations(spark, batch_id):
             vecs = vecs.join(
                 rel.select("vec_id", "version"),
                 ["vec_id", "version"],
                 "left_anti",
             )
+        # pin: feeds the emptiness probe and all three commit writes —
+        # unpinned, the assignment (and the state anti-join behind it)
+        # would recompute per action. Pinned AFTER the storage
+        # projection (docstring: code-size blocks on the sq8 tier).
         return statedir.pinned_or_none(self._assign(vecs, keep_residual=True))
 
 
@@ -1096,28 +866,31 @@ def versioned_ann_topk_over_events(
     """Fold ("upsert", (vec_id, version, embedding) df) / ("delete",
     (vec_id) df) / ("vdelete", (vec_id, version) df) event slices
     through versioned first-wins admission and probe the latest live
-    image — the in-memory harness for the q139 registry entry,
-    mirroring retrieval_index.versioned_bm25_over_events. 'delete' is
-    the permanent doc-level channel; 'vdelete' the in-band CDC Delete
+    image — the in-memory harness for the q136 and q139 registry entries
+    (q136: one upsert event per slice at version 0), mirroring
+    retrieval_index.versioned_bm25_over_events. 'delete' is the
+    permanent doc-level channel; 'vdelete' the in-band CDC Delete
     carrying its sequence (kills versions <= it; a later re-insert is
     live again — ADVICE r13). Bit-equal to `similarity.ivf_ann_topk`
     over the version-max compaction of the live events.
 
-    Computed as ONE plan (guide §1.2-1 / §5, same collapse as
-    ann_topk_over_batches): first-wins admission per (vec_id, version)
-    is ``min(struct(event_index, vv_is_null, vv))`` over the tagged
-    union of the upsert events; both delete channels are
-    order-insensitive accumulations (a distinct id set, a max-version
-    watermark per id) so they fold as plain aggregates; and the
-    version-max read rule is ``max(struct(version, vv))`` per live id
-    (versions are unique per id after the admission aggregate, so the
-    vv field never decides). Cells are assigned AFTER latest-live
-    selection — cell is a pure function of the vector, so assigning
+    Computed as ONE plan with ONE aggregate (guide §1.2-1 / §5): both
+    delete channels are order-insensitive accumulations (a distinct id
+    set, a max-version watermark per id) whose exclusions are per-row
+    filters on (vec_id, version), so they apply to the tagged union of
+    the upsert events BEFORE admission; the version-max read rule and
+    first-wins admission per (vec_id, version) are then one
+    ``min(struct(~version, event_index, vv_is_null, vv))`` per vec_id —
+    the highest live version, and within it the earliest event's
+    smallest non-null vector (``~version`` orders versions descending
+    without the overflow a negation has). Cells are assigned AFTER
+    latest-live selection
+    — cell is a pure function of the vector, so assigning
     superseded/tombstoned versions (as the former per-event loop did)
     was discarded work. The former loop also re-materialized the whole
-    accumulated member set with an eager localCheckpoint per event —
-    5+ serial driver jobs per drain, the measured r14 floor of this
-    bench entry (8->32-core scaling 0.97). The statedir sink
+    accumulated member set with an eager localCheckpoint per event — 5+
+    serial driver jobs per drain, the measured r14 floor of this bench
+    entry (8->32-core scaling 0.97). The statedir sink
     (VersionedAnnIndexSnapshot) keeps the true per-trigger incremental
     path; this harness is handed the full event sequence up front, so
     folding it pairwise was pure overhead. Precondition (as before):
@@ -1150,23 +923,9 @@ def versioned_ann_topk_over_events(
         )
     if not upserts:
         raise ValueError("versioned_ann_topk_over_events: no upsert events")
-    allu = upserts[0]
+    live = upserts[0]
     for u in upserts[1:]:
-        allu = allu.unionByName(u)
-    members = (
-        allu.groupBy("vec_id", "version")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("__ei"),
-                    F.col("vv").isNull().alias("__vnull"),
-                    F.col("vv"),
-                )
-            ).alias("__first")
-        )
-        .select("vec_id", "version", F.col("__first.vv").alias("vv"))
-    )
-    live = members
+        live = live.unionByName(u)
     if tomb_ids:
         tombs = tomb_ids[0]
         for t in tomb_ids[1:]:
@@ -1189,7 +948,16 @@ def versioned_ann_topk_over_events(
         )
     latest = (
         live.groupBy("vec_id")
-        .agg(F.max(F.struct("version", "vv")).alias("__latest"))
+        .agg(
+            F.min(
+                F.struct(
+                    F.bitwise_not("version").alias("__nv"),
+                    F.col("__ei"),
+                    F.col("vv").isNull().alias("__vnull"),
+                    F.col("vv"),
+                )
+            ).alias("__latest")
+        )
         .select("vec_id", F.col("__latest.vv").alias("vv"))
     )
     assigned = similarity.ivf_assign(

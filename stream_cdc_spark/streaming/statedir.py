@@ -118,7 +118,7 @@ import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 _LOG = logging.getLogger(__name__)
 
@@ -949,6 +949,40 @@ class SinkTables:
             self.fs,
         )
 
+    def one_value(self, table: str, column: str):
+        """The one value every row of ``table`` holds in ``column``, or
+        None when the state is empty or the parquet footers do not prove
+        a single value (two values, nulls, or no min/max statistics).
+        Reads only the footers of the visible files, on the driver — no
+        Spark job."""
+        import pyarrow.parquet as pq
+
+        value = None
+        for p in state_paths(self.dir(table), 1 << 62, self.fs):
+            files = (
+                [os.path.join(p, n) for n in sorted(os.listdir(p))
+                 if not n.startswith(("_", "."))]  # Spark's hidden files
+                if os.path.isdir(p)
+                else [p]
+            )
+            for f in files:
+                meta = pq.read_metadata(f)
+                i = meta.schema.names.index(column)
+                for g in range(meta.num_row_groups):
+                    if not meta.row_group(g).num_rows:
+                        continue
+                    st = meta.row_group(g).column(i).statistics
+                    if (
+                        st is None
+                        or not (st.has_min_max and st.has_null_count)
+                        or st.null_count
+                        or st.min != st.max
+                        or value not in (None, st.min)
+                    ):
+                        return None
+                    value = st.min
+        return value
+
     def read_batch(
         self, spark: SparkSession, table: str, batch_id: int
     ) -> DataFrame:
@@ -1309,3 +1343,28 @@ def state_relations(
     if tail:
         out.append(spark.read.parquet(*tail))
     return out
+
+
+def pinned_with_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` pinned (eager localCheckpoint) and its row count, counted
+    by the pinning job itself through an ``Observation`` — a separate
+    count over the pin runs one or two more jobs."""
+    from pyspark.sql import Observation
+
+    seen = Observation()
+    pin = df.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    return pin, seen.get["n"]
+
+
+def key_version(version: Column, id_: Column) -> Column:
+    """The admission-key version a versioned sink derives from its
+    feed's (long) ``version`` and ``id_`` columns: the same value, tied
+    to the row so the optimizer cannot constant-fold it. A literal
+    version — an insert-only feed at version 0 — would otherwise be
+    folded out of the (id, version) redelivery anti-join keys, and a
+    ledger bucketed by both columns would then be read through a
+    shuffle (``state_relations``' point lost). The coalesce keeps the
+    version of a row whose id is null."""
+    return F.coalesce(version + id_ * F.lit(0).cast("long"), version)

@@ -1,8 +1,10 @@
-"""Continuous IVF ANN index maintenance: after any drain the persisted
-index's topk must equal batch similarity.ivf_ann_topk over the union of
-all admitted batches, bit-for-bit, across replays / restarts /
-overlapping redeliveries / compaction folds — the equality standard set
-by tests/test_lsh_snapshot.py. The probe must also keep its scale shape:
+"""Continuous IVF ANN index maintenance over an INSERT-ONLY feed — the
+versioned sink with every row at version 0, the shape a version-less
+feed takes: after any drain the persisted index's topk must equal batch
+similarity.ivf_ann_topk over the union of all admitted batches,
+bit-for-bit, across replays / restarts / overlapping redeliveries /
+compaction folds — the equality standard set by
+tests/test_lsh_snapshot.py. The probe must also keep its scale shape:
 query side broadcast, index side pruned by the probed-cell IN filter,
 no corpus-sized Exchange."""
 
@@ -16,9 +18,10 @@ from pyspark.sql import functions as F
 from stream_cdc_spark.operators import similarity
 from stream_cdc_spark.streaming import statedir
 from stream_cdc_spark.streaming.ann_index import (
-    AnnIndexSnapshot,
-    ann_topk_over_batches,
+    ANN_VLEDGER_SCHEMA,
+    VersionedAnnIndexSnapshot,
     centroid_digest,
+    versioned_ann_topk_over_events,
 )
 from stream_cdc_spark.tables import load
 from tests.conftest import SF_SMALL
@@ -26,6 +29,22 @@ from tests.conftest import SF_SMALL
 
 def _emb(spark):
     return load(spark, SF_SMALL, "embeddings")
+
+
+def _v0(df):
+    """An insert-only feed as the index admits it: every row at
+    version 0."""
+    return df.withColumn("version", F.lit(0).cast("bigint"))
+
+
+def _snap(path, centroids, **kw):
+    return VersionedAnnIndexSnapshot(str(path), centroids, **kw)
+
+
+def _vecs(spark, rows):
+    return _v0(
+        spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    )
 
 
 def _centroids_df(spark):
@@ -47,7 +66,7 @@ def _slices(spark):
     """Overlapping micro-batches: slice i redelivers every vec_id that is
     i mod 7 as well as owning i mod 3 — the union covers the corpus and
     the overlaps exercise the exactly-once admission guard."""
-    emb = _emb(spark)
+    emb = _v0(_emb(spark))
     return [
         emb.filter((F.col("vec_id") % 3 == i) | (F.col("vec_id") % 7 == i))
         for i in range(3)
@@ -71,9 +90,7 @@ def _snap_topk(snap, spark):
 
 
 def test_drained_topk_equals_batch_operator(spark, tmp_path):
-    snap = AnnIndexSnapshot(
-        str(tmp_path / "s"), _centroids(spark), compact_every=2
-    )
+    snap = _snap(tmp_path / "s", _centroids(spark), compact_every=2)
     for i, b in enumerate(_slices(spark)):
         snap.foreach_batch(b, i)
     assert _snap_topk(snap, spark) == _batch_topk(spark)
@@ -81,7 +98,7 @@ def test_drained_topk_equals_batch_operator(spark, tmp_path):
 
 @pytest.mark.slow
 def test_overlapping_batches_admit_exactly_once(spark, tmp_path):
-    snap = AnnIndexSnapshot(str(tmp_path / "s"), _centroids(spark))
+    snap = _snap(tmp_path / "s", _centroids(spark))
     for i, b in enumerate(_slices(spark)):
         snap.foreach_batch(b, i)
     vecs = snap.vectors(spark)
@@ -96,15 +113,11 @@ def test_replay_and_restart_preserve_equality(spark, tmp_path):
     continuing through a fresh sink object over the same state dir — the
     checkpoint-restart shape — changes nothing."""
     slices = _slices(spark)
-    snap = AnnIndexSnapshot(
-        str(tmp_path / "s"), _centroids(spark), compact_every=2
-    )
+    snap = _snap(tmp_path / "s", _centroids(spark), compact_every=2)
     for i, b in enumerate(slices[:2]):
         snap.foreach_batch(b, i)
     snap.foreach_batch(slices[1], 1)  # replay of the last in-flight batch
-    snap2 = AnnIndexSnapshot(
-        str(tmp_path / "s"), _centroids(spark), compact_every=2
-    )
+    snap2 = _snap(tmp_path / "s", _centroids(spark), compact_every=2)
     snap2.foreach_batch(slices[2], 2)
     assert _snap_topk(snap2, spark) == _batch_topk(spark)
 
@@ -120,10 +133,8 @@ def test_conflicting_intra_batch_duplicates_admit_deterministically(
     cents = _centroids(spark)
     dim = len(cents[0][1])
     lo, hi = [0.25] * dim, [0.75] * dim
-    conflicted = spark.createDataFrame(
-        [(1, hi), (1, lo), (2, lo)], "vec_id bigint, embedding array<float>"
-    )
-    snap = AnnIndexSnapshot(str(tmp_path / "s"), cents)
+    conflicted = _vecs(spark, [(1, hi), (1, lo), (2, lo)])
+    snap = _snap(tmp_path / "s", cents)
     snap.foreach_batch(conflicted, 0)
     got = {
         r["vec_id"]: [round(x, 6) for x in r["vv"]]
@@ -132,10 +143,7 @@ def test_conflicting_intra_batch_duplicates_admit_deterministically(
     want = [round(x, 6) for x in lo]
     assert got == {1: want, 2: want}
     # first-wins across batches: a re-embedding of id 2 is dropped whole
-    snap.foreach_batch(
-        spark.createDataFrame([(2, hi)], "vec_id bigint, embedding array<float>"),
-        1,
-    )
+    snap.foreach_batch(_vecs(spark, [(2, hi)]), 1)
     got2 = {
         r["vec_id"]: [round(x, 6) for x in r["vv"]]
         for r in snap.vectors(spark).collect()
@@ -152,24 +160,21 @@ def test_drifted_sink_refuses_before_restructuring_statedir(spark, tmp_path):
     cents = _centroids(spark)
     slices = _slices(spark)
     root = os.path.join(str(tmp_path / "s"), "vectors")
-    snap = AnnIndexSnapshot(str(tmp_path / "s"), cents, compact_every=10**9)
+    snap = _snap(tmp_path / "s", cents, compact_every=10**9)
     for i in range(2):
         snap.foreach_batch(slices[i], i)
     before = statedir.dir_counts(root)
     dim = len(cents[0][1])
-    drifted = AnnIndexSnapshot(
-        str(tmp_path / "s"), [(0, [1.0] * dim)], compact_every=1
-    )
+    drifted = _snap(tmp_path / "s", [(0, [1.0] * dim)], compact_every=1)
     with pytest.raises(ValueError, match="parameter mismatch"):
         drifted.foreach_batch(slices[2], 2)
     assert statedir.dir_counts(root) == before  # statedir untouched
 
 
 def test_empty_batch_commits_nothing(spark, tmp_path):
-    snap = AnnIndexSnapshot(str(tmp_path / "s"), _centroids(spark))
+    snap = _snap(tmp_path / "s", _centroids(spark))
     snap.foreach_batch(_slices(spark)[0], 0)
-    empty = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
-    snap.foreach_batch(empty, 1)
+    snap.foreach_batch(_vecs(spark, []), 1)
     c = statedir.dir_counts(os.path.join(str(tmp_path / "s"), "vectors"))
     assert c["batch"] == 1, c
 
@@ -182,17 +187,15 @@ def test_centroid_drift_refused_on_probe_and_admit(spark, tmp_path):
     matching sink keeps working, across a compaction fold too."""
     cents = _centroids(spark)
     slices = _slices(spark)
-    snap = AnnIndexSnapshot(str(tmp_path / "s"), cents, compact_every=1)
+    snap = _snap(tmp_path / "s", cents, compact_every=1)
     snap.foreach_batch(slices[0], 0)
     dim = len(cents[0][1])
-    drifted = AnnIndexSnapshot(
-        str(tmp_path / "s"), [(0, [1.0] * dim), (1, [-1.0] * dim)]
-    )
+    drifted = _snap(tmp_path / "s", [(0, [1.0] * dim), (1, [-1.0] * dim)])
     with pytest.raises(ValueError, match="parameter mismatch"):
         drifted.topk(spark, _queries(spark))
     with pytest.raises(ValueError, match="parameter mismatch"):
         drifted.foreach_batch(slices[1], 1)
-    ok = AnnIndexSnapshot(str(tmp_path / "s"), cents, compact_every=1)
+    ok = _snap(tmp_path / "s", cents, compact_every=1)
     for i, b in enumerate(slices[1:], start=1):
         ok.foreach_batch(b, i)  # fold fires every batch; stamp survives
     assert _snap_topk(ok, spark) == _batch_topk(spark)
@@ -204,7 +207,7 @@ def test_probe_plan_prunes_cells_and_never_shuffles_corpus(spark, tmp_path):
     scan as a pushed IN filter (row-group pruning on the cell-sorted
     index) and the scoring join broadcasts the query side — the corpus
     never rides an Exchange or a sort-merge join."""
-    snap = AnnIndexSnapshot(str(tmp_path / "s"), _centroids(spark))
+    snap = _snap(tmp_path / "s", _centroids(spark))
     for i, b in enumerate(_slices(spark)):
         snap.foreach_batch(b, i)
     out = snap.topk(spark, _queries(spark))
@@ -229,9 +232,7 @@ def test_compaction_keeps_cells_clustered(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    snap = AnnIndexSnapshot(
-        str(tmp_path / "s"), _centroids(spark), compact_every=1
-    )
+    snap = _snap(tmp_path / "s", _centroids(spark), compact_every=1)
     for i, b in enumerate(_slices(spark)):
         snap.foreach_batch(b, i)
     compact_dirs = [
@@ -252,8 +253,9 @@ def test_in_memory_fold_matches_batch(spark):
     got = sorted(
         map(
             tuple,
-            ann_topk_over_batches(
-                _slices(spark), _centroids_df(spark), _queries(spark),
+            versioned_ann_topk_over_events(
+                [("upsert", b) for b in _slices(spark)],
+                _centroids_df(spark), _queries(spark),
                 k=5, nprobe=2, quantize_bp=10000,
             ).collect(),
         )
@@ -265,7 +267,8 @@ def test_in_memory_fold_matches_batch(spark):
 def test_ann_index_cli_mode_drains_corpus_and_deletes(
     spark, tmp_path, monkeypatch
 ):
-    """PIPELINE=ann_index entrypoint: one drain over the
+    """PIPELINE=ann_index_versioned with EMB_VERSION_COL= empty (the
+    version-less feed, every row at version 0): one drain over the
     sf0.001 embeddings admits the whole corpus into the persisted index
     — plus a DELETES_PATH id feed drained into the TombstoneLog as a
     second query — and the probe equals the batch operator over the
@@ -282,7 +285,8 @@ def test_ann_index_cli_mode_drains_corpus_and_deletes(
     deletes_dir = str(tmp_path / "deletes")
     dead.coalesce(1).write.mode("overwrite").parquet(deletes_dir)
     state = str(tmp_path / "cli-state")
-    monkeypatch.setenv("PIPELINE", "ann_index")
+    monkeypatch.setenv("PIPELINE", "ann_index_versioned")
+    monkeypatch.setenv("EMB_VERSION_COL", "")
     monkeypatch.setenv("DRAIN_AND_EXIT", "1")
     monkeypatch.setenv("EMB_PATH", "/root/testdata/sf0.001")
     monkeypatch.setenv("CENTROIDS_PATH", cpath)
@@ -300,7 +304,7 @@ def test_ann_index_cli_mode_drains_corpus_and_deletes(
     assert not spark.streams.active
     monkeypatch.delenv("DELETES_ID_COL")
     assert M.main() == 0
-    snap = AnnIndexSnapshot(state, cents)
+    snap = _snap(state, cents)
     live = _emb(spark).join(dead, "vec_id", "left_anti")
     want = sorted(
         map(
@@ -329,9 +333,9 @@ def test_sq8_tier_matches_float_tier_ranking(spark, tmp_path):
     be fold/restart-bit-invariant on its own scores."""
     cents, ranges = _centroids(spark), _sq_ranges(spark)
     slices = _slices(spark)
-    f32 = AnnIndexSnapshot(str(tmp_path / "f"), cents, compact_every=2)
-    sq8 = AnnIndexSnapshot(
-        str(tmp_path / "q"), cents, compact_every=2,
+    f32 = _snap(tmp_path / "f", cents, compact_every=2)
+    sq8 = _snap(
+        tmp_path / "q", cents, compact_every=2,
         storage="sq8", sq_ranges=ranges,
     )
     for i, b in enumerate(slices):
@@ -344,8 +348,8 @@ def test_sq8_tier_matches_float_tier_ranking(spark, tmp_path):
     assert rank_q == rank_f
     # replay + restart through a fresh sink: scores bit-equal
     sq8.foreach_batch(slices[2], 2)
-    again = AnnIndexSnapshot(
-        str(tmp_path / "q"), cents, compact_every=2,
+    again = _snap(
+        tmp_path / "q", cents, compact_every=2,
         storage="sq8", sq_ranges=ranges,
     )
     assert sorted(map(tuple, again.topk(spark, _queries(spark)).collect())) == got
@@ -357,9 +361,9 @@ def test_sq8_tier_quarters_state_bytes(spark, tmp_path):
     4 B/dim. Assert the sq8 state dir is well under half the float one
     (parquet framing overhead keeps it above a pure 4x)."""
     cents, ranges = _centroids(spark), _sq_ranges(spark)
-    f32 = AnnIndexSnapshot(str(tmp_path / "f"), cents, compact_every=1)
-    sq8 = AnnIndexSnapshot(
-        str(tmp_path / "q"), cents, compact_every=1,
+    f32 = _snap(tmp_path / "f", cents, compact_every=1)
+    sq8 = _snap(
+        tmp_path / "q", cents, compact_every=1,
         storage="sq8", sq_ranges=ranges,
     )
     for i, b in enumerate(_slices(spark)):
@@ -382,23 +386,21 @@ def test_sq8_stamp_guards_tier_and_ranges(spark, tmp_path):
     """Cross-tier probes and drifted quantizer ranges must refuse."""
     cents, ranges = _centroids(spark), _sq_ranges(spark)
     slices = _slices(spark)
-    sq8 = AnnIndexSnapshot(
-        str(tmp_path / "s"), cents, storage="sq8", sq_ranges=ranges
-    )
+    sq8 = _snap(tmp_path / "s", cents, storage="sq8", sq_ranges=ranges)
     sq8.foreach_batch(slices[0], 0)
-    f32 = AnnIndexSnapshot(str(tmp_path / "s"), cents)
+    f32 = _snap(tmp_path / "s", cents)
     with pytest.raises(ValueError, match="parameter mismatch"):
         f32.topk(spark, _queries(spark))
-    drifted = AnnIndexSnapshot(
-        str(tmp_path / "s"), cents, storage="sq8",
+    drifted = _snap(
+        tmp_path / "s", cents, storage="sq8",
         sq_ranges=[(lo - 1.0, hi + 1.0) for lo, hi in ranges],
     )
     with pytest.raises(ValueError, match="parameter mismatch"):
         drifted.foreach_batch(slices[1], 1)
     with pytest.raises(ValueError):
-        AnnIndexSnapshot(str(tmp_path / "x"), cents, storage="sq8")
+        _snap(tmp_path / "x", cents, storage="sq8")
     with pytest.raises(ValueError, match="storage"):
-        AnnIndexSnapshot(str(tmp_path / "x"), cents, storage="int4")
+        _snap(tmp_path / "x", cents, storage="int4")
 
 
 @pytest.mark.slow
@@ -408,8 +410,7 @@ def test_deletions_hide_vectors_from_probes(spark, tmp_path):
     never-readmit rule behave like the retrieval index's."""
     emb = _emb(spark)
     slices = _slices(spark)
-    snap = AnnIndexSnapshot(str(tmp_path / "s"), _centroids(spark),
-                            compact_every=2)
+    snap = _snap(tmp_path / "s", _centroids(spark), compact_every=2)
     snap.foreach_batch(slices[0], 0)
     snap.foreach_batch(slices[1], 1)
     dead = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id")
@@ -433,7 +434,7 @@ def test_deletions_hide_vectors_from_probes(spark, tmp_path):
     )
     assert _snap_topk(snap, spark) == want
     # a deleted id can never be re-admitted (first-wins ledger)
-    snap.foreach_batch(emb.filter(F.col("vec_id") % 5 == 0), 3)
+    snap.foreach_batch(_v0(emb.filter(F.col("vec_id") % 5 == 0)), 3)
     assert _snap_topk(snap, spark) == want
 
 
@@ -446,12 +447,12 @@ def test_rebuild_is_the_vacuum_for_deleted_vectors(spark, tmp_path):
 
     emb = _emb(spark)
     cents = _centroids(spark)
-    src = AnnIndexSnapshot(str(tmp_path / "src"), cents)
+    src = _snap(tmp_path / "src", cents)
     for i, b in enumerate(_slices(spark)):
         src.foreach_batch(b, i)
     dead = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id")
     src.delete_batch(dead, 0)
-    dst = AnnIndexSnapshot(str(tmp_path / "dst"), cents)
+    dst = _snap(tmp_path / "dst", cents)
     n = rebuild_ann_index(spark, src, dst)
     assert n == emb.count() - dead.count()
     assert dst.vectors(spark).join(dead, "vec_id", "left_semi").count() == 0
@@ -468,7 +469,8 @@ def test_ann_index_sink_rejects_misnamed_centroid_columns(spark, tmp_path):
     _centroids_df(spark).toDF("centroid_id", "vec").toPandas().to_parquet(bad)
     with pytest.raises(ValueError, match="cid bigint, cv array<float>"):
         sink_registry.create(
-            "ann_index", state_dir=str(tmp_path / "s"), centroids_path=bad
+            "ann_index_versioned", state_dir=str(tmp_path / "s"),
+            centroids_path=bad,
         )
 
 
@@ -479,7 +481,7 @@ def test_centroid_digest_is_order_insensitive_and_exact():
     # any bitwise vector change is a different index
     assert centroid_digest(a) != centroid_digest([(1, [0.5, 0.25]), (2, [1.0, -0.999999])])
     with pytest.raises(ValueError):
-        AnnIndexSnapshot("/tmp/x", [])
+        _snap("/tmp/x", [])
 
 
 @pytest.mark.slow
@@ -487,7 +489,7 @@ def test_bucketed_ledger_equality_and_shuffle_free_admission(
     spark, tmp_path
 ):
     """bucketed=True folds the slim ledger/ admission state into a
-    vec_id-bucketed snapshot (vectors/ stays cell-sorted for the probe):
+    snapshot bucketed by the admission key (vec_id, version) (vectors/ stays cell-sorted for the probe):
     (1) everything stays bit-equal through bucketed folds, replays and
     restarts; (2) the redelivery anti-join against the snapshot is a
     SortMergeJoin whose LEDGER side reads the bucketed table with NO
@@ -497,18 +499,16 @@ def test_bucketed_ledger_equality_and_shuffle_free_admission(
     untouched because admission never reads vectors/)."""
     import re
 
-    from stream_cdc_spark.streaming.ann_index import ANN_LEDGER_SCHEMA
-
     slices = _slices(spark)
-    snap = AnnIndexSnapshot(
-        str(tmp_path / "s"), _centroids(spark), compact_every=1,
+    snap = _snap(
+        tmp_path / "s", _centroids(spark), compact_every=1,
         bucketed=True, num_buckets=4,
     )
     for i, b in enumerate(slices[:2]):
         snap.foreach_batch(b, i)
     snap.foreach_batch(slices[1], 1)  # replay across a bucketed fold
-    snap2 = AnnIndexSnapshot(
-        str(tmp_path / "s"), _centroids(spark), compact_every=1,
+    snap2 = _snap(
+        tmp_path / "s", _centroids(spark), compact_every=1,
         bucketed=True, num_buckets=4,
     )
     snap2.foreach_batch(slices[2], 2)
@@ -517,16 +517,25 @@ def test_bucketed_ledger_equality_and_shuffle_free_admission(
     # then inspect the admission join plan with broadcast disabled —
     # at real scale the ledger exceeds broadcast, so SMJ is the shape
     # that matters
+    key = list(snap2._KEY)  # the ledger's bucket columns
     statedir.compact(
-        spark, snap2.ledger_dir, ANN_LEDGER_SCHEMA, 3,
-        bucket_cols=["vec_id"], num_buckets=4,
+        spark, snap2.ledger_dir, ANN_VLEDGER_SCHEMA, 3,
+        bucket_cols=key, num_buckets=4,
     )
     rels = snap2._ledger_relations(spark, 3)
     assert len(rels) == 1  # snapshot only, no tail
-    probe = _emb(spark).select("vec_id").filter(F.col("vec_id") % 7 == 0)
+    # the batch side keyed the way the sink's _build keys it: the
+    # version-0 literal goes through statedir.key_version, which keeps
+    # it in the join keys
+    probe = _slices(spark)[0].select(
+        "vec_id",
+        statedir.key_version(F.col("version"), F.col("vec_id")).alias(
+            "version"
+        ),
+    )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = probe.join(rels[0].select("vec_id"), "vec_id", "left_anti")
+        j = probe.join(rels[0].select(*key), key, "left_anti")
         j.collect()
         plan = j._sc._jvm.PythonSQLUtils.explainString(
             j._jdf.queryExecution(), "formatted"
@@ -554,9 +563,7 @@ def test_folds_apply_tombstones_to_vectors(spark, tmp_path):
     the tombstone-applying fold changes nothing."""
     emb = _emb(spark)
     slices = _slices(spark)
-    snap = AnnIndexSnapshot(
-        str(tmp_path / "s"), _centroids(spark), compact_every=1
-    )
+    snap = _snap(tmp_path / "s", _centroids(spark), compact_every=1)
     snap.foreach_batch(slices[0], 0)
     snap.foreach_batch(slices[1], 1)
     dead = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id")
@@ -564,9 +571,7 @@ def test_folds_apply_tombstones_to_vectors(spark, tmp_path):
     snap.foreach_batch(slices[2], 2)   # compact_every=1: folds 0..1
     snap.foreach_batch(slices[2], 2)   # replay across the applying fold
     # one more trigger so batch=2 itself folds under the tombstones
-    snap.foreach_batch(
-        spark.createDataFrame([], "vec_id bigint, embedding array<float>"), 3
-    )
+    snap.foreach_batch(_vecs(spark, []), 3)
     live = emb.join(dead, "vec_id", "left_anti")
     want = sorted(
         map(
@@ -583,7 +588,7 @@ def test_folds_apply_tombstones_to_vectors(spark, tmp_path):
     assert snap.vectors(spark).join(dead, "vec_id", "left_semi").count() == 0
     # the ledger still remembers them: never-readmit
     assert snap.ledger(spark).join(dead, "vec_id", "left_semi").count() == dead.count()
-    snap.foreach_batch(emb.filter(F.col("vec_id") % 5 == 0), 4)
+    snap.foreach_batch(_v0(emb.filter(F.col("vec_id") % 5 == 0)), 4)
     assert _snap_topk(snap, spark) == want
     assert snap.vectors(spark).join(dead, "vec_id", "left_semi").count() == 0
 
@@ -618,15 +623,11 @@ def test_drift_moments_equal_batch_across_folds_and_restart(
     moments equal the one-shot batch reduction over the admitted
     corpus."""
     slices = _slices(spark)
-    snap = AnnIndexSnapshot(
-        str(tmp_path / "s"), _centroids(spark), compact_every=1
-    )
+    snap = _snap(tmp_path / "s", _centroids(spark), compact_every=1)
     for i, b in enumerate(slices[:2]):
         snap.foreach_batch(b, i)
     snap.foreach_batch(slices[1], 1)  # replay across a fold
-    snap2 = AnnIndexSnapshot(  # restart
-        str(tmp_path / "s"), _centroids(spark), compact_every=1
-    )
+    snap2 = _snap(tmp_path / "s", _centroids(spark), compact_every=1)  # restart
     snap2.foreach_batch(slices[2], 2)
     got = sorted(map(tuple, snap2.moments(spark).collect()))
     assert got == _moments_ref(spark)
@@ -655,23 +656,20 @@ def test_drift_report_flags_synthetic_drift_and_stays_quiet(
     )
     baseline = train_residual_baseline(train, cents_df)
     # stationary ingest: same distribution, new ids
-    snap = AnnIndexSnapshot(
-        str(tmp_path / "s"), cents, compact_every=1
-    )
-    stationary = spark.createDataFrame(
+    snap = _snap(tmp_path / "s", cents, compact_every=1)
+    stationary = _vecs(
+        spark,
         [(1000 + i, [1.0 + 0.01 * (i % 5), 0.01 * (i % 3)])
          for i in range(200)]
         + [(2000 + i, [-1.0 - 0.01 * (i % 5), 0.01 * (i % 3)])
            for i in range(200)],
-        "vec_id bigint, embedding array<float>",
     )
     snap.foreach_batch(stationary, 0)
     quiet = snap.drift_report(spark, baseline, z=3.0, min_n=100)
     assert quiet.filter(F.col("drifted")).count() == 0, quiet.collect()
     # drifted ingest: cell 0's arrivals move far off its centroid
-    drifted = spark.createDataFrame(
-        [(3000 + i, [0.3, 0.9 + 0.01 * (i % 5)]) for i in range(200)],
-        "vec_id bigint, embedding array<float>",
+    drifted = _vecs(
+        spark, [(3000 + i, [0.3, 0.9 + 0.01 * (i % 5)]) for i in range(200)]
     )
     snap.foreach_batch(drifted, 1)
     # materialize NOW: a later fold deletes the files this lazy plan
@@ -687,11 +685,8 @@ def test_drift_report_flags_synthetic_drift_and_stays_quiet(
     # cell 1 saw only stationary arrivals: still quiet
     assert 1 not in flagged
     # restart + fold invariance of the report
-    snap.foreach_batch(
-        spark.createDataFrame([], "vec_id bigint, embedding array<float>"),
-        2,
-    )
-    again = AnnIndexSnapshot(str(tmp_path / "s"), cents, compact_every=1)
+    snap.foreach_batch(_vecs(spark, []), 2)
+    again = _snap(tmp_path / "s", cents, compact_every=1)
     r2 = sorted(
         map(
             tuple,
@@ -699,3 +694,44 @@ def test_drift_report_flags_synthetic_drift_and_stays_quiet(
         )
     )
     assert r2 == report
+
+
+def test_single_version_read_switches_off_at_the_first_update(
+    spark, tmp_path
+):
+    """An insert-only state proves its one version from the ledger's
+    parquet footers, and the probe then scores live rows without the
+    version-max lookup. The first re-embedding (version 1, moved onto
+    query 0's vector) ends the proof, and the lookup takes over: both
+    reads stay bit-equal to the batch operator over the latest images."""
+    snap = _snap(tmp_path / "s", _centroids(spark), compact_every=2)
+    for i, b in enumerate(_slices(spark)):
+        snap.foreach_batch(b, i)
+    assert snap._tables.one_value("ledger", "version") == 0
+    assert _snap_topk(snap, spark) == _batch_topk(spark)
+    q0 = _emb(spark).filter(F.col("vec_id") == 0).first()["embedding"]
+    snap.foreach_batch(
+        spark.createDataFrame(
+            [(7, 1, q0)],
+            "vec_id bigint, version bigint, embedding array<float>",
+        ),
+        3,
+    )
+    assert snap._tables.one_value("ledger", "version") is None
+    latest = _emb(spark).select(
+        "vec_id",
+        F.when(F.col("vec_id") == 7, F.lit(q0).cast("array<float>"))
+        .otherwise(F.col("embedding"))
+        .alias("embedding"),
+    )
+    want = sorted(
+        map(
+            tuple,
+            similarity.ivf_ann_topk(
+                latest, _queries(spark), _centroids_df(spark),
+                k=5, nprobe=2, quantize_bp=10000,
+            ).collect(),
+        )
+    )
+    assert _snap_topk(snap, spark) == want
+    assert (0, 7) in {(r[0], r[1]) for r in want}

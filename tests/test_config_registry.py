@@ -13,9 +13,12 @@ from stream_cdc_spark.sources.state import ParquetKVState
 def test_config_defaults_and_env():
     cfg = AppConfig.load(env={})
     assert cfg.batch_size == 10 and cfg.flush_interval == 5.0  # loader.py:29-30
+    # one default for DS_TYPE, the source main.py's cdc mode builds
+    assert cfg.source_type == "cdc_replay" == AppConfig().source_type
     cfg2 = AppConfig.load(
-        env={"BATCH_SIZE": "25", "FLUSH_INTERVAL": "0.5", "STREAM_TYPE": "MEMORY_QUEUE"}
+        env={"BATCH_SIZE": "25", "FLUSH_INTERVAL": "0.5", "DS_TYPE": "events_replay"}
     )
+    assert cfg2.source_type == "events_replay"
     assert cfg2.batch_size == 25
     assert cfg2.flush_interval == 0.5
     assert cfg2.trigger() == {"processingTime": "0.5 seconds"}

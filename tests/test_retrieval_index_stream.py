@@ -1,5 +1,6 @@
-"""Incremental retrieval-index maintenance (streaming/retrieval_index.py):
-drain equality with the batch BM25/TF-IDF scorers, exactly-once admission
+"""Incremental retrieval-index maintenance (streaming/retrieval_index.py)
+over an INSERT-ONLY feed — the versioned sink with every row at version
+0, the shape a version-less feed takes: drain equality with the batch BM25/TF-IDF scorers, exactly-once admission
 under overlapping redelivery, restart/replay/fold invariance, the scheme
 stamp guard, and the probe's scale shape (pushed IN filter, broadcast
 stats, no corpus-side sort-merge join)."""
@@ -14,24 +15,41 @@ from pyspark.sql import functions as F
 from stream_cdc_spark.operators import text
 from stream_cdc_spark.streaming import statedir
 from stream_cdc_spark.streaming.retrieval_index import (
-    RetrievalIndexSnapshot,
-    bm25_topk_over_batches,
+    RETR_VDOCS_SCHEMA,
+    VersionedRetrievalIndexSnapshot,
+    versioned_bm25_over_events,
 )
 from stream_cdc_spark.tables import load
 from tests.conftest import SF_SMALL
 
 TERMS = ["stream", "vector", "join"]
+# the sink's state tables, each committed once per non-empty trigger
+TABLES = ("docs", "latest", "postings")
 
 
 def _docs(spark):
     return load(spark, SF_SMALL, "documents")
 
 
+def _v0(df):
+    """An insert-only feed as the index admits it: every row at
+    version 0."""
+    return df.withColumn("version", F.lit(0).cast("bigint"))
+
+
+def _snap(path, **kw):
+    return VersionedRetrievalIndexSnapshot(str(path), **kw)
+
+
+def _texts(spark, rows):
+    return _v0(spark.createDataFrame(rows, "doc_id bigint, text string"))
+
+
 def _slices(spark):
     """Overlapping micro-batches: slice i redelivers every doc_id that is
     i mod 7 as well as owning i mod 3 — the union covers the corpus and
     the overlaps exercise the exactly-once admission guard."""
-    d = _docs(spark)
+    d = _v0(_docs(spark))
     return [
         d.filter((F.col("doc_id") % 3 == i) | (F.col("doc_id") % 7 == i))
         for i in range(3)
@@ -57,7 +75,7 @@ def _snap_bm25(snap, spark):
 
 
 def test_drained_probes_equal_batch_scorers(spark, tmp_path):
-    snap = RetrievalIndexSnapshot(str(tmp_path / "s"), compact_every=2)
+    snap = _snap(tmp_path / "s", compact_every=2)
     for i, b in enumerate(_slices(spark)):
         snap.foreach_batch(b, i)
     assert _snap_bm25(snap, spark) == _batch_bm25(spark)
@@ -68,7 +86,7 @@ def test_drained_probes_equal_batch_scorers(spark, tmp_path):
 
 
 def test_overlapping_batches_admit_exactly_once(spark, tmp_path):
-    snap = RetrievalIndexSnapshot(str(tmp_path / "s"))
+    snap = _snap(tmp_path / "s")
     for i, b in enumerate(_slices(spark)):
         snap.foreach_batch(b, i)
     n = _docs(spark).count()
@@ -91,21 +109,20 @@ def test_replay_and_restart_preserve_equality(spark, tmp_path):
     continuing through a fresh sink object over the same state dir — the
     checkpoint-restart shape — changes nothing."""
     slices = _slices(spark)
-    snap = RetrievalIndexSnapshot(str(tmp_path / "s"), compact_every=2)
+    snap = _snap(tmp_path / "s", compact_every=2)
     for i, b in enumerate(slices[:2]):
         snap.foreach_batch(b, i)
     snap.foreach_batch(slices[1], 1)  # replay of the last in-flight batch
-    snap2 = RetrievalIndexSnapshot(str(tmp_path / "s"), compact_every=2)
+    snap2 = _snap(tmp_path / "s", compact_every=2)
     snap2.foreach_batch(slices[2], 2)
     assert _snap_bm25(snap2, spark) == _batch_bm25(spark)
 
 
 def test_empty_batch_commits_nothing(spark, tmp_path):
-    snap = RetrievalIndexSnapshot(str(tmp_path / "s"))
+    snap = _snap(tmp_path / "s")
     snap.foreach_batch(_slices(spark)[0], 0)
-    empty = spark.createDataFrame([], "doc_id bigint, text string")
-    snap.foreach_batch(empty, 1)
-    for sub in ("docs", "postings", "stats"):
+    snap.foreach_batch(_texts(spark, []), 1)
+    for sub in TABLES:
         c = statedir.dir_counts(os.path.join(str(tmp_path / "s"), sub))
         assert c["batch"] == 1, (sub, c)
 
@@ -116,11 +133,10 @@ def test_conflicting_intra_batch_duplicates_admit_deterministically(
     """The same doc_id carrying DIFFERENT texts inside one batch admits
     the lexicographically-smallest text; a later re-ingest of an admitted
     id is dropped whole (first-wins)."""
-    conflicted = spark.createDataFrame(
-        [(1, "zebra zebra"), (1, "apple pie"), (2, "apple pie")],
-        "doc_id bigint, text string",
+    conflicted = _texts(
+        spark, [(1, "zebra zebra"), (1, "apple pie"), (2, "apple pie")]
     )
-    snap = RetrievalIndexSnapshot(str(tmp_path / "s"))
+    snap = _snap(tmp_path / "s")
     snap.foreach_batch(conflicted, 0)
     got = {
         (r["doc_id"], r["word"]): (r["tf"], r["dl"])
@@ -130,9 +146,7 @@ def test_conflicting_intra_batch_duplicates_admit_deterministically(
         (1, "apple"): (1, 2), (1, "pie"): (1, 2),
         (2, "apple"): (1, 2), (2, "pie"): (1, 2),
     }
-    snap.foreach_batch(
-        spark.createDataFrame([(2, "zebra")], "doc_id bigint, text string"), 1
-    )
+    snap.foreach_batch(_texts(spark, [(2, "zebra")]), 1)
     assert snap.docs(spark).count() == 2  # re-ingest dropped
 
 
@@ -140,13 +154,12 @@ def test_scheme_drift_refused_before_restructuring_statedir(spark, tmp_path):
     """A probe or sink with a different tokenizer/scoring scheme must
     refuse — and must refuse BEFORE maybe_compact touches the statedir."""
     slices = _slices(spark)
-    snap = RetrievalIndexSnapshot(str(tmp_path / "s"), compact_every=10**9)
+    snap = _snap(tmp_path / "s", compact_every=10**9)
     for i in range(2):
         snap.foreach_batch(slices[i], i)
-    roots = [os.path.join(str(tmp_path / "s"), d) for d in
-             ("docs", "postings", "stats")]
+    roots = [os.path.join(str(tmp_path / "s"), d) for d in TABLES]
     before = [statedir.dir_counts(r) for r in roots]
-    drifted = RetrievalIndexSnapshot(str(tmp_path / "s"), compact_every=1)
+    drifted = _snap(tmp_path / "s", compact_every=1)
     drifted._stamp = {"retr_scheme": "tok-bpe/other/v9"}
     with pytest.raises(ValueError, match="scheme mismatch"):
         drifted.foreach_batch(slices[2], 2)
@@ -154,7 +167,7 @@ def test_scheme_drift_refused_before_restructuring_statedir(spark, tmp_path):
         drifted.bm25_topk(spark, TERMS)
     assert [statedir.dir_counts(r) for r in roots] == before
     # the matching sink keeps working, across a fold too
-    ok = RetrievalIndexSnapshot(str(tmp_path / "s"), compact_every=1)
+    ok = _snap(tmp_path / "s", compact_every=1)
     ok.foreach_batch(slices[2], 2)
     assert _snap_bm25(ok, spark) == _batch_bm25(spark)
 
@@ -167,7 +180,7 @@ def test_probe_plan_pushes_terms_and_never_shuffles_postings_wide(
     index — the inverted-index lookup as a predicate), corpus stats and
     idf enter as broadcasts, and nothing joins the corpus-sized ledger
     (dl rides the postings rows)."""
-    snap = RetrievalIndexSnapshot(str(tmp_path / "s"))
+    snap = _snap(tmp_path / "s")
     for i, b in enumerate(_slices(spark)):
         snap.foreach_batch(b, i)
     out = snap.bm25_topk(spark, TERMS)
@@ -186,13 +199,14 @@ def test_probe_plan_pushes_terms_and_never_shuffles_postings_wide(
 
 def test_compaction_keeps_postings_word_sorted(spark, tmp_path):
     """Folds must keep the compacted postings word-sorted within every
-    file (row-group stats keep pruning) and must re-aggregate the stats
-    partials to one row; equality and the stamp survive the fold."""
+    file (row-group stats keep pruning) and must reduce the latest/
+    tier to one row per doc; equality and the stamp survive the
+    fold."""
     import glob
 
     import pyarrow.parquet as pq
 
-    snap = RetrievalIndexSnapshot(str(tmp_path / "s"), compact_every=1)
+    snap = _snap(tmp_path / "s", compact_every=1)
     for i, b in enumerate(_slices(spark)):
         snap.foreach_batch(b, i)
     compact_dirs = [
@@ -206,36 +220,44 @@ def test_compaction_keeps_postings_word_sorted(spark, tmp_path):
     for f in files:
         words = pq.read_table(f, columns=["word"])["word"].to_pylist()
         assert words == sorted(words), f
-    stats_files = [
+    latest_files = [
         f
-        for d in glob.glob(str(tmp_path / "s" / "stats" / "compact=*"))
+        for d in glob.glob(str(tmp_path / "s" / "latest" / "compact=*"))
         if os.path.isdir(d)
         for f in glob.glob(os.path.join(d, "*.parquet"))
     ]
-    folded_rows = sum(pq.read_table(f).num_rows for f in stats_files)
-    assert folded_rows == 1, "stats fold must re-aggregate partials"
+    folded = [
+        i for f in latest_files
+        for i in pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
+    ]
+    assert folded and len(folded) == len(set(folded)), (
+        "latest/ fold must reduce to one row per doc"
+    )
     assert _snap_bm25(snap, spark) == _batch_bm25(spark)
 
 
 def test_retrieval_index_cli_mode_drains_corpus(spark, tmp_path, monkeypatch):
-    """PIPELINE=retrieval_index entrypoint: one drain over
-    the sf0.001 documents admits the whole corpus into the persisted
-    inverted index and the probe equals the batch scorer — the sink wired
-    through the registry + env config exactly like the ann_index mode."""
+    """PIPELINE=retrieval_index_versioned with RETR_VERSION_COL= empty
+    (the version-less feed, every row at version 0): one drain over the
+    sf0.001 documents admits the whole corpus into the persisted
+    inverted index and the probe equals the batch scorer over the live
+    set — the sink wired through the registry + env config exactly like
+    the ANN mode."""
     from stream_cdc_spark import main as M
 
     dead = _docs(spark).filter(F.col("doc_id") % 5 == 0).select("doc_id")
     deletes_dir = str(tmp_path / "deletes")
     dead.coalesce(1).write.mode("overwrite").parquet(deletes_dir)
     state = str(tmp_path / "cli-state")
-    monkeypatch.setenv("PIPELINE", "retrieval_index")
+    monkeypatch.setenv("PIPELINE", "retrieval_index_versioned")
+    monkeypatch.setenv("RETR_VERSION_COL", "")
     monkeypatch.setenv("DRAIN_AND_EXIT", "1")
     monkeypatch.setenv("DOCS_PATH", "/root/testdata/sf0.001")
     monkeypatch.setenv("DELETES_PATH", deletes_dir)
     monkeypatch.setenv("RETR_STATE_DIR", state)
     monkeypatch.setenv("CHECKPOINT_DIR", str(tmp_path / "cli-ckpt"))
     assert M.main() == 0
-    snap = RetrievalIndexSnapshot(state)
+    snap = _snap(state)
     live = _docs(spark).join(dead, "doc_id", "left_anti")
     assert _snap_bm25(snap, spark) == _live_bm25(spark, live)
 
@@ -243,8 +265,8 @@ def test_retrieval_index_cli_mode_drains_corpus(spark, tmp_path, monkeypatch):
 def test_bucketed_ledger_equality_and_shuffle_free_admission(
     spark, tmp_path
 ):
-    """bucketed=True folds the admission ledger into a doc_id-bucketed
-    snapshot: (1) everything stays bit-equal through bucketed folds,
+    """bucketed=True folds the admission ledger into a snapshot bucketed
+    by the admission key (doc_id, version): (1) everything stays bit-equal through bucketed folds,
     replays and restarts; (2) the redelivery anti-join against the
     snapshot is a SortMergeJoin whose LEDGER side reads the bucketed
     table with NO Exchange — only the incoming batch shuffles (the
@@ -253,14 +275,12 @@ def test_bucketed_ledger_equality_and_shuffle_free_admission(
     import re
 
     slices = _slices(spark)
-    snap = RetrievalIndexSnapshot(
-        str(tmp_path / "s"), compact_every=1, bucketed=True, num_buckets=4
-    )
+    snap = _snap(tmp_path / "s", compact_every=1, bucketed=True, num_buckets=4)
     for i, b in enumerate(slices[:2]):
         snap.foreach_batch(b, i)
     snap.foreach_batch(slices[1], 1)  # replay across a bucketed fold
-    snap2 = RetrievalIndexSnapshot(
-        str(tmp_path / "s"), compact_every=1, bucketed=True, num_buckets=4
+    snap2 = _snap(
+        tmp_path / "s", compact_every=1, bucketed=True, num_buckets=4
     )
     snap2.foreach_batch(slices[2], 2)
     assert _snap_bm25(snap2, spark) == _batch_bm25(spark)
@@ -268,19 +288,25 @@ def test_bucketed_ledger_equality_and_shuffle_free_admission(
     # then inspect the admission join plan with broadcast disabled —
     # at real scale the ledger exceeds broadcast, so SMJ is the shape
     # that matters
+    key = ["doc_id", "version"]  # the ledger's bucket columns
     statedir.compact(
-        spark, snap2.docs_dir, "doc_id bigint, dl bigint", 3,
-        bucket_cols=["doc_id"], num_buckets=4,
+        spark, snap2.docs_dir, RETR_VDOCS_SCHEMA, 3,
+        bucket_cols=key, num_buckets=4,
     )
-    rels = statedir.state_relations(
-        spark, snap2.docs_dir, "doc_id bigint, dl bigint", 3,
-        ["doc_id"], 4,
-    )
+    rels = snap2._ledger_relations(spark, 3)
     assert len(rels) == 1  # snapshot only, no tail
-    probe = _docs(spark).select("doc_id").filter(F.col("doc_id") % 7 == 0)
+    # the batch side keyed the way the sink's _build keys it: the
+    # version-0 literal goes through statedir.key_version, which keeps
+    # it in the join keys
+    probe = _slices(spark)[0].select(
+        "doc_id",
+        statedir.key_version(F.col("version"), F.col("doc_id")).alias(
+            "version"
+        ),
+    )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = probe.join(rels[0].select("doc_id"), "doc_id", "left_anti")
+        j = probe.join(rels[0].select(*key), key, "left_anti")
         j.collect()
         plan = j._sc._jvm.PythonSQLUtils.explainString(
             j._jdf.queryExecution(), "formatted"
@@ -302,7 +328,9 @@ def test_in_memory_fold_matches_batch(spark):
     got = sorted(
         map(
             tuple,
-            bm25_topk_over_batches(_slices(spark), TERMS, top_k=15).collect(),
+            versioned_bm25_over_events(
+                [("upsert", b) for b in _slices(spark)], TERMS, top_k=15
+            ).collect(),
         )
     )
     assert got == _batch_bm25(spark)
@@ -322,7 +350,7 @@ def test_deletions_hide_docs_from_every_probe(spark, tmp_path):
     changes nothing."""
     d = _docs(spark)
     slices = _slices(spark)
-    snap = RetrievalIndexSnapshot(str(tmp_path / "s"), compact_every=2)
+    snap = _snap(tmp_path / "s", compact_every=2)
     snap.foreach_batch(slices[0], 0)
     snap.foreach_batch(slices[1], 1)
     # delete every doc_id % 5 == 0, plus ids far outside the corpus
@@ -354,25 +382,28 @@ def test_deletions_hide_docs_from_every_probe(spark, tmp_path):
     )
     assert (n_l["n"], n_l["l"]) == (want[0], want[1])
     # a deleted id can never be re-admitted (first-wins ledger)
-    snap.foreach_batch(d.filter(F.col("doc_id") % 5 == 0), 3)
+    snap.foreach_batch(_v0(d.filter(F.col("doc_id") % 5 == 0)), 3)
     assert _snap_bm25(snap, spark) == _live_bm25(spark, live)
 
 
 def test_vacuum_physically_removes_tombstoned_docs(spark, tmp_path):
-    """vacuum_retrieval_index rewrites only the live rows into a fresh
-    statedir: probes bit-equal the tombstone-aware source, the deleted
-    docs' postings are physically gone, stats re-aggregate, and the
-    destination carries no tombstones. Scheme/occupancy guards refuse."""
-    from stream_cdc_spark.operators.migration import vacuum_retrieval_index
+    """vacuum_versioned_retrieval_index rewrites only the live rows into
+    a fresh statedir: probes bit-equal the tombstone-aware source, the
+    deleted docs' postings are physically gone, corpus stats match, and
+    the destination carries no tombstones. Scheme/occupancy guards
+    refuse."""
+    from stream_cdc_spark.operators.migration import (
+        vacuum_versioned_retrieval_index as vacuum,
+    )
 
     d = _docs(spark)
-    src = RetrievalIndexSnapshot(str(tmp_path / "src"), compact_every=2)
+    src = _snap(tmp_path / "src", compact_every=2)
     for i, b in enumerate(_slices(spark)):
         src.foreach_batch(b, i)
     dead = d.filter(F.col("doc_id") % 5 == 0).select("doc_id")
     src.delete_batch(dead, 0)
-    dst = RetrievalIndexSnapshot(str(tmp_path / "dst"))
-    n = vacuum_retrieval_index(spark, src, dst)
+    dst = _snap(tmp_path / "dst")
+    n = vacuum(spark, src, dst)
     live = d.join(dead, "doc_id", "left_anti")
     assert n == live.count()
     assert _snap_bm25(dst, spark) == _snap_bm25(src, spark)
@@ -386,22 +417,20 @@ def test_vacuum_physically_removes_tombstoned_docs(spark, tmp_path):
     # a stream resuming into the vacuumed dir at batch_id 0 (fresh
     # checkpoint) sees the compact=0 ledger: redelivered live ids drop,
     # only the genuinely-new doc admits, nothing is overwritten
-    new_doc = spark.createDataFrame(
-        [(10**9, "brand new document")], "doc_id bigint, text string"
-    )
+    new_doc = _texts(spark, [(10**9, "brand new document")])
     dst.foreach_batch(
-        live.select("doc_id", "text").limit(5).unionByName(new_doc), 0
+        _v0(live.select("doc_id", "text").limit(5)).unionByName(new_doc), 0
     )
     assert dst.docs(spark).count() == live.count() + 1
     # guards
     with pytest.raises(ValueError, match="share a state dir"):
-        vacuum_retrieval_index(spark, src, src)
+        vacuum(spark, src, src)
     with pytest.raises(ValueError, match="not\\s+empty"):
-        vacuum_retrieval_index(spark, src, dst)
-    drifted = RetrievalIndexSnapshot(str(tmp_path / "x"))
+        vacuum(spark, src, dst)
+    drifted = _snap(tmp_path / "x")
     drifted._stamp = {"retr_scheme": "tok-bpe/other/v9"}
     with pytest.raises(ValueError, match="scheme mismatch"):
-        vacuum_retrieval_index(spark, src, drifted)
+        vacuum(spark, src, drifted)
 
 
 def test_folds_apply_tombstones_to_postings(spark, tmp_path):
@@ -410,11 +439,10 @@ def test_folds_apply_tombstones_to_postings(spark, tmp_path):
     equality to the live-corpus batch scorer holds across the applying
     fold (including a replay over it), the deleted docs' postings are
     physically gone from the folded tier, and the docs/ ledger still
-    carries the deleted ids (never-readmit + the dead (n, l) stats
-    correction both need them)."""
+    carries the deleted ids (never-readmit needs them)."""
     d = _docs(spark)
     slices = _slices(spark)
-    snap = RetrievalIndexSnapshot(str(tmp_path / "s"), compact_every=1)
+    snap = _snap(tmp_path / "s", compact_every=1)
     snap.foreach_batch(slices[0], 0)
     snap.foreach_batch(slices[1], 1)
     dead = d.filter(F.col("doc_id") % 5 == 0).select("doc_id")
@@ -422,15 +450,13 @@ def test_folds_apply_tombstones_to_postings(spark, tmp_path):
     snap.foreach_batch(slices[2], 2)   # compact_every=1: folds 0..1
     snap.foreach_batch(slices[2], 2)   # replay across the applying fold
     # one more trigger so batch=2 itself folds under the tombstones
-    snap.foreach_batch(
-        spark.createDataFrame([], "doc_id bigint, text string"), 3
-    )
+    snap.foreach_batch(_texts(spark, []), 3)
     live = d.join(dead, "doc_id", "left_anti")
     assert _snap_bm25(snap, spark) == _live_bm25(spark, live)
     # physically gone from the folded tier (raw state, before the
     # read-path exclusion)
     assert snap.postings(spark).join(dead, "doc_id", "left_semi").count() == 0
-    # the ledger still remembers them: never-readmit + stats correction
+    # the ledger still remembers them: never-readmit
     assert snap.docs(spark).join(dead, "doc_id", "left_semi").count() == dead.count()
     n_l = snap.corpus_stats(spark).collect()[0]
     want = (
@@ -439,5 +465,37 @@ def test_folds_apply_tombstones_to_postings(spark, tmp_path):
         .collect()[0]
     )
     assert (n_l["n"], n_l["l"]) == (want[0], want[1])
-    snap.foreach_batch(d.filter(F.col("doc_id") % 5 == 0), 4)
+    snap.foreach_batch(_v0(d.filter(F.col("doc_id") % 5 == 0)), 4)
     assert _snap_bm25(snap, spark) == _live_bm25(spark, live)
+
+
+def test_single_version_read_switches_off_at_the_first_update(
+    spark, tmp_path
+):
+    """An insert-only state proves its one version from the docs/
+    ledger's parquet footers, and the probes then read live rows
+    without the version-max lookup. The first update (version 1) ends
+    the proof, and the lookup takes over: both reads stay bit-equal to
+    the batch scorers over the latest images."""
+    snap = _snap(tmp_path / "s", compact_every=2)
+    for i, b in enumerate(_slices(spark)):
+        snap.foreach_batch(b, i)
+    assert snap._tables.one_value("docs", "version") == 0
+    assert _snap_bm25(snap, spark) == _batch_bm25(spark)
+    new_text = "stream stream vector join"
+    snap.foreach_batch(
+        spark.createDataFrame(
+            [(1, 1, new_text)], "doc_id bigint, version bigint, text string"
+        ),
+        3,
+    )
+    assert snap._tables.one_value("docs", "version") is None
+    latest = _docs(spark).select(
+        "doc_id",
+        F.when(F.col("doc_id") == 1, F.lit(new_text))
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    assert _snap_bm25(snap, spark) == sorted(
+        map(tuple, text.bm25_topk(latest, TERMS, top_k=15).collect())
+    )

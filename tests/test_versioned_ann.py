@@ -5,8 +5,8 @@ widening of q138. After any interleaving of inserts, re-embeddings
 out-of-order and redelivered versions, `topk` must be bit-equal to
 batch similarity.ivf_ann_topk over the LATEST LIVE vector of every id
 (q03-style version-max compaction composed with q44's IVF probe). Plus
-the scheme stamp guard (cross-mode refusal against the plain layout),
-both storage tiers, and the scale shape of admission and probes."""
+the scheme stamp guard (refusal of a root written under another
+scheme), both storage tiers, and the scale shape of admission and probes."""
 
 from __future__ import annotations
 
@@ -19,7 +19,6 @@ from stream_cdc_spark.operators import similarity
 from stream_cdc_spark.streaming import statedir
 from stream_cdc_spark.streaming.ann_index import (
     ANN_VLEDGER_SCHEMA,
-    AnnIndexSnapshot,
     VersionedAnnIndexSnapshot,
     train_sq_ranges,
     versioned_ann_topk_over_events,
@@ -296,19 +295,27 @@ def test_conflicting_intra_batch_duplicates_admit_deterministically(
 @pytest.mark.slow
 def test_scheme_stamp_refuses_cross_mode_and_drift(spark, tmp_path):
     cents = _centroids(spark)
-    plain = AnnIndexSnapshot(str(tmp_path / "s"), cents)
-    plain.foreach_batch(_emb(spark).limit(50), 0)
-    # the PLAIN layout opened by the versioned sink refuses (and vice
-    # versa): different scheme ids, the rows are not comparable
+
+    def foreign(path):
+        # a sink under another scheme id — the first-wins layout's,
+        # which roots written before the versioned layout carry
+        snap = VersionedAnnIndexSnapshot(str(path), cents)
+        snap._stamp = {
+            **snap._stamp,
+            "ann_scheme": "ivf-argmin-sqdist-bp10000-mincid/cosine/v1",
+        }
+        return snap
+
+    foreign(tmp_path / "s").foreach_batch(_v1(spark).limit(50), 0)
+    # a root under the other scheme opened by this sink refuses (and
+    # vice versa): different scheme ids, the rows are not comparable
     versioned = VersionedAnnIndexSnapshot(str(tmp_path / "s"), cents)
     with pytest.raises(ValueError, match="parameter mismatch"):
         versioned.foreach_batch(_v1(spark).limit(5), 1)
     vsnap = VersionedAnnIndexSnapshot(str(tmp_path / "v"), cents)
     vsnap.foreach_batch(_v1(spark).limit(50), 0)
     with pytest.raises(ValueError, match="parameter mismatch"):
-        AnnIndexSnapshot(str(tmp_path / "v"), cents).foreach_batch(
-            _emb(spark).limit(5), 1
-        )
+        foreign(tmp_path / "v").foreach_batch(_v1(spark).limit(5), 1)
     # centroid drift refuses too
     drifted = [(c, [x + 0.25 for x in v]) for c, v in cents]
     with pytest.raises(ValueError, match="parameter mismatch"):
@@ -566,6 +573,13 @@ def test_vacuum_drops_superseded_and_tombstoned_vectors(spark, tmp_path):
     cents = _centroids(spark)
     src = VersionedAnnIndexSnapshot(str(tmp_path / "src"), cents)
     _drain(src, spark)
+    # an in-band delete at sequence 5 of an id src never admitted: its
+    # kill watermark must carry over, or a late version 3 would serve
+    unseen = 10**9
+    src.delete_versions_batch(
+        spark.createDataFrame([(unseen, 5)], "vec_id bigint, version bigint"),
+        0,
+    )
     dst = VersionedAnnIndexSnapshot(str(tmp_path / "dst"), cents)
     n = vacuum_versioned_ann_index(spark, src, dst)
     live_n = _latest_live(spark).count()
@@ -594,14 +608,16 @@ def test_vacuum_drops_superseded_and_tombstoned_vectors(spark, tmp_path):
     # a genuinely new update admits
     live_v1 = _v1(spark).join(_dead_ids(spark), "vec_id", "left_anti")
     new_upd = spark.createDataFrame(
-        [(1, 9, [0.5] * len(cents[0][1]))],
+        [(1, 9, [0.5] * len(cents[0][1])), (unseen, 3, [0.5] * len(cents[0][1]))],
         "vec_id bigint, version bigint, embedding array<float>",
     )
     before = dst.ledger(spark).count()
     dst.foreach_batch(live_v1.limit(20).unionByName(new_upd), 0)
-    assert dst.ledger(spark).count() == before + 1
+    assert dst.ledger(spark).count() == before + 2
     mx = dst._latest_live(spark).filter(F.col("vec_id") == 1).collect()
     assert mx and mx[0]["version"] == 9
+    # the late killed version admitted but stays dead
+    assert dst._latest_live(spark).filter(F.col("vec_id") == unseen).count() == 0
     # guards
     with pytest.raises(ValueError, match="share a state dir"):
         vacuum_versioned_ann_index(spark, src, src)
@@ -808,7 +824,7 @@ def test_vdelete_harness_matches_statedir_ann(spark, tmp_path):
 
 def test_assignment_plan_runs_no_job(spark, tmp_path):
     """A trigger's assignment plan (groupBy + ledger anti-join + argmin)
-    builds without a job: the sinks hold their centroid rows, so nothing
+    builds without a job: the sink holds its centroid rows, so nothing
     is collected, and ensure_parallelism leaves the shuffled input alone.
     The precomputed rows are exactly what a collect of the stored
     array<float> centroid relation returns, so the cells cannot move."""
@@ -817,15 +833,14 @@ def test_assignment_plan_runs_no_job(spark, tmp_path):
     rnd = random.Random(7)
     cents = [(c, [rnd.uniform(-1, 1) for _ in range(8)]) for c in range(12)]
     cents.append((12, [1e-40, -0.0, 3.0, 1.0 / 3, 0.1, -2.5, 7.0, 1e-7]))
-    for cls in (AnnIndexSnapshot, VersionedAnnIndexSnapshot):
-        sink = cls(str(tmp_path / cls.__name__), cents)
-        collected = [
-            (r[0], list(r[1]))
-            for r in sink._centroids_df(spark)
-            .select("cid", F.col("cv").cast("array<double>"))
-            .collect()
-        ]
-        assert sink._assignment_rows == collected, cls.__name__
+    sink = VersionedAnnIndexSnapshot(str(tmp_path / "c"), cents)
+    collected = [
+        (r[0], list(r[1]))
+        for r in sink._centroids_df(spark)
+        .select("cid", F.col("cv").cast("array<double>"))
+        .collect()
+    ]
+    assert sink._assignment_rows == collected
 
     snap = VersionedAnnIndexSnapshot(str(tmp_path / "s"), _centroids(spark))
     snap.foreach_batch(_v1(spark), 0)

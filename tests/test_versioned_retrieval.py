@@ -4,8 +4,8 @@ widening. After any interleaving of inserts, updates, deletes, replays,
 restarts, folds, out-of-order and redelivered versions, the probes must
 be bit-equal to the batch scorers over the LATEST LIVE image of every
 doc (q03-style compaction composed with q89's scorer). Plus the scheme
-stamp guard (including cross-mode refusal against the plain layout) and
-the scale shape of admission and probes."""
+stamp guard (including refusal of a root written under another scheme)
+and the scale shape of admission and probes."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 from stream_cdc_spark.operators import text
 from stream_cdc_spark.streaming import statedir
 from stream_cdc_spark.streaming.retrieval_index import (
-    RetrievalIndexSnapshot,
     VersionedRetrievalIndexSnapshot,
     cdc_upserts_and_deletes,
     versioned_bm25_over_events,
@@ -268,28 +267,35 @@ def test_conflicting_intra_batch_duplicates_admit_deterministically(
 
 
 def test_scheme_stamp_refuses_cross_mode_and_drift(spark, tmp_path):
-    """The versioned layout carries its own scheme id: a plain
-    RetrievalIndexSnapshot refuses versioned state (and vice versa)
+    """The layout carries its own scheme id: a sink under another scheme
+    — here the first-wins layout's id, which roots written before the
+    versioned layout carry — refuses versioned state (and vice versa)
     BEFORE any statedir restructuring — scoring every version of every
     doc would be silently wrong."""
+    other = "tok-whitespace/bm25-k1.2-b0.75-idfq1e6-int/tfidf-ppm/v1"
     snap = VersionedRetrievalIndexSnapshot(
         str(tmp_path / "s"), compact_every=10**9
     )
     snap.foreach_batch(_v1(spark), 0)
     roots = [os.path.join(str(tmp_path / "s"), d) for d in ("docs", "postings")]
     before = [statedir.dir_counts(r) for r in roots]
-    plain = RetrievalIndexSnapshot(str(tmp_path / "s"), compact_every=1)
+    crossed = VersionedRetrievalIndexSnapshot(
+        str(tmp_path / "s"), compact_every=1
+    )
+    crossed._stamp = {"retr_scheme": other}
     with pytest.raises(ValueError, match="scheme mismatch"):
-        plain.foreach_batch(_docs(spark), 1)
-    with pytest.raises(ValueError, match="scheme mismatch"):
-        plain.bm25_topk(spark, TERMS)
-    assert [statedir.dir_counts(r) for r in roots] == before
-    # and the other direction: versioned sink on plain state
-    plain2 = RetrievalIndexSnapshot(str(tmp_path / "p"))
-    plain2.foreach_batch(_docs(spark), 0)
-    crossed = VersionedRetrievalIndexSnapshot(str(tmp_path / "p"))
+        crossed.foreach_batch(_v1(spark), 1)
     with pytest.raises(ValueError, match="scheme mismatch"):
         crossed.bm25_topk(spark, TERMS)
+    assert [statedir.dir_counts(r) for r in roots] == before
+    # and the other direction: a root stamped with the other scheme
+    foreign = VersionedRetrievalIndexSnapshot(str(tmp_path / "p"))
+    foreign._stamp = {"retr_scheme": other}
+    foreign.foreach_batch(_v1(spark), 0)
+    with pytest.raises(ValueError, match="scheme mismatch"):
+        VersionedRetrievalIndexSnapshot(str(tmp_path / "p")).bm25_topk(
+            spark, TERMS
+        )
 
 
 def test_probe_plan_pushes_terms_and_broadcasts_latest(spark, tmp_path):
@@ -476,6 +482,13 @@ def test_vacuum_drops_superseded_and_tombstoned_rows(spark, tmp_path):
 
     src = VersionedRetrievalIndexSnapshot(str(tmp_path / "src"), compact_every=2)
     _drain(src, spark)
+    # an in-band delete at sequence 5 of a doc src never admitted: its
+    # kill watermark must carry over, or a late version 3 would serve
+    unseen = 10**9
+    src.delete_versions_batch(
+        spark.createDataFrame([(unseen, 5)], "doc_id bigint, version bigint"),
+        0,
+    )
     dst = VersionedRetrievalIndexSnapshot(str(tmp_path / "dst"))
     n = vacuum_versioned_retrieval_index(spark, src, dst)
     live = _latest_live(spark)
@@ -503,7 +516,7 @@ def test_vacuum_drops_superseded_and_tombstoned_rows(spark, tmp_path):
     # a stream resuming at batch_id 0: redelivered superseded versions
     # and live latest versions drop; a genuinely new update admits
     new_upd = spark.createDataFrame(
-        [(1, 9, "stream stream vector")],
+        [(1, 9, "stream stream vector"), (unseen, 3, "stream stream")],
         "doc_id bigint, version bigint, text string",
     )
     before = dst.docs(spark).count()
@@ -512,17 +525,20 @@ def test_vacuum_drops_superseded_and_tombstoned_rows(spark, tmp_path):
     # erasure removes the deletion history by design)
     live_v1 = _v1(spark).join(_dead_ids(spark), "doc_id", "left_anti")
     dst.foreach_batch(live_v1.limit(20).unionByName(new_upd), 0)
-    assert dst.docs(spark).count() == before + 1
+    assert dst.docs(spark).count() == before + 2
     latest1 = dst._latest_live(spark).filter(F.col("doc_id") == 1).collect()
     assert latest1 and latest1[0]["version"] == 9
+    # the late killed version admitted but stays dead
+    assert dst._latest_live(spark).filter(F.col("doc_id") == unseen).count() == 0
     # guards
     with pytest.raises(ValueError, match="share a state dir"):
         vacuum_versioned_retrieval_index(spark, src, src)
     with pytest.raises(ValueError, match="not\\s+empty"):
         vacuum_versioned_retrieval_index(spark, src, dst)
-    plain = RetrievalIndexSnapshot(str(tmp_path / "x"))
+    drifted = VersionedRetrievalIndexSnapshot(str(tmp_path / "x"))
+    drifted._stamp = {"retr_scheme": "tok-bpe/other/v9"}
     with pytest.raises(ValueError, match="scheme mismatch"):
-        vacuum_versioned_retrieval_index(spark, src, plain)
+        vacuum_versioned_retrieval_index(spark, src, drifted)
 
 
 def test_tombstone_applying_fold_falls_back_under_race(spark, tmp_path):
@@ -1101,8 +1117,14 @@ def _admission_case(spark, sink, state):
     even, odd = docs.filter(F.col("doc_id") % 2 == 0), docs.filter(
         F.col("doc_id") % 2 == 1
     )
-    if sink == "retrieval":
-        return RetrievalIndexSnapshot(state), even, odd, ("docs", "postings", "stats")
+    if sink == "retrieval":  # the insert-only feed: every row at version 0
+        v0 = F.lit(0).cast("bigint")
+        return (
+            VersionedRetrievalIndexSnapshot(state),
+            even.withColumn("version", v0),
+            odd.withColumn("version", v0),
+            ("docs", "latest", "postings"),
+        )
     from stream_cdc_spark.streaming.lsh_snapshot import LshDedupSnapshot
 
     return LshDedupSnapshot(state), even, odd, ("sigs", "index", "counts")
