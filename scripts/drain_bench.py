@@ -56,18 +56,12 @@ def main() -> None:
     )
     t0 = time.time()
     if stateful:
-        from stream_cdc_spark.streaming.stateful import (
-            lsh_dedup_stream,
-            transform_with_state_available,
-        )
+        from stream_cdc_spark.streaming.stateful import lsh_dedup_stream
 
         q = (
-            # the bench DELIBERATELY drains a backlog through the gated
-            # slow path to record its number; explicit opt-in required
-            lsh_dedup_stream(
-                stream,
-                use_transform_with_state=transform_with_state_available(),
-            )
+            # the bench DELIBERATELY drains a backlog through the
+            # per-bucket operator to record its number
+            lsh_dedup_stream(stream)
             .writeStream.foreachBatch(
                 lambda df, bid: df.write.mode("append").parquet(out)
             )

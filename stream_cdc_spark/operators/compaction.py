@@ -21,6 +21,7 @@ physical strategies:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -95,12 +96,95 @@ def apply_changes(
     ).drop("__k", "__op")
 
 
-def dedup_exact(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """At-least-once consumer dedup: suppress redelivered duplicates by
-    deterministic id (fixes the reference's ephemeral `Id=str(id(msg))`,
-    stream_cdc/streams/sqs.py:205-234). Hash-shuffle on keys; map-side
-    combine makes redelivery storms cheap."""
-    return df.dropDuplicates(list(keys))
+def versioned_latest_live(
+    events: Sequence[tuple[str, DataFrame]],
+    id_col: str,
+    version_col: str,
+    payload_col: str,
+) -> DataFrame:
+    """The latest live image per id of a versioned CDC event sequence:
+    (id_col, payload_col), one row per id that still has a live version.
+
+    ``events``: ``[(kind, df), ...]`` in arrival order, where ``kind`` is
+      - ``"upsert"``: (id, version, payload) images, admitted first-wins
+        per (id, version) — a redelivered or conflicting later image of
+        an admitted (id, version) never displaces the first;
+      - ``"delete"``: (id) rows, the doc-level channel — every version of
+        the id is dead, present and future;
+      - ``"vdelete"``: (id, version) rows, the in-band CDC Delete — it
+        kills the versions <= its sequence, so a later re-insert with a
+        higher version is live again.
+
+    The result is the batch answer the versioned statedir sinks
+    (streaming/ann_index.py, streaming/retrieval_index.py) maintain
+    incrementally; it is order-insensitive except for first-wins
+    within one (id, version). Both delete channels are order-insensitive
+    accumulations (a distinct id set, a max-version watermark per id)
+    whose exclusions are per-row filters on (id, version), so they apply
+    to the tagged union of the upserts BEFORE admission; the version-max
+    read rule and first-wins admission are then ONE aggregate per id,
+    ``min(struct(~version, event_index, payload_is_null, payload))`` —
+    the highest live version, and within it the earliest event's
+    smallest non-null payload (``~version`` orders versions descending
+    without the overflow a negation has). Ids and versions are read as
+    BIGINT; upsert versions must be non-null (the sinks'
+    VersionedTombstoneLog refuses null versions on the real path).
+    """
+    upserts: list[DataFrame] = []
+    tombs: list[DataFrame] = []
+    marks: list[DataFrame] = []
+    the_id = F.col(id_col).cast("long").alias(id_col)
+    for ei, (kind, df) in enumerate(events):
+        if kind == "delete":
+            tombs.append(df.select(the_id))
+        elif kind == "vdelete":
+            marks.append(
+                df.select(
+                    the_id, F.col(version_col).cast("long").alias("__dead")
+                )
+            )
+        elif kind == "upsert":
+            upserts.append(
+                df.select(
+                    the_id,
+                    F.col(version_col).cast("long").alias("__v"),
+                    F.col(payload_col),
+                    F.lit(ei).alias("__ei"),
+                )
+            )
+        else:
+            raise ValueError(f"unknown event kind {kind!r}")
+    if not upserts:
+        raise ValueError("versioned_latest_live: no upsert events")
+    live = reduce(DataFrame.unionByName, upserts)
+    if tombs:
+        dead = reduce(DataFrame.unionByName, tombs).distinct()
+        live = live.join(dead, id_col, "left_anti")
+    if marks:
+        watermark = (
+            reduce(DataFrame.unionByName, marks)
+            .groupBy(id_col)
+            .agg(F.max("__dead").alias("__dead"))
+        )
+        live = (
+            live.join(watermark, id_col, "left")
+            .filter(F.col("__dead").isNull() | (F.col("__v") > F.col("__dead")))
+            .drop("__dead")
+        )
+    return (
+        live.groupBy(id_col)
+        .agg(
+            F.min(
+                F.struct(
+                    F.bitwise_not("__v"),
+                    F.col("__ei"),
+                    F.col(payload_col).isNull(),
+                    F.col(payload_col),
+                )
+            ).alias("__latest")
+        )
+        .select(id_col, F.col(f"__latest.{payload_col}").alias(payload_col))
+    )
 
 
 def snapshot_as_of(

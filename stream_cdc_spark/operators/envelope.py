@@ -79,24 +79,6 @@ def explode_rows(df: DataFrame, rows_col: str = "rows") -> DataFrame:
     return df.select(*other, F.explode(F.col(rows_col)).alias("row"))
 
 
-def project_envelope(
-    df: DataFrame,
-    event_type: Column,
-    gtid: Column,
-    database: Column,
-    table: Column,
-    content: Column,
-) -> DataFrame:
-    """Build the five-field envelope (mysql.py:416-426) as one projection."""
-    return df.select(
-        event_type.alias("event_type"),
-        gtid.alias("gtid"),
-        database.alias("database"),
-        table.alias("table"),
-        content.alias("content"),
-    )
-
-
 def drop_non_row_events(df: DataFrame, rows_col: str = "rows") -> DataFrame:
     """Skip events without row images; DDL (QueryEvent) is decoded then
     dropped by the reference (mysql.py:354-365, :387-389)."""

@@ -42,15 +42,6 @@ def match_count(col: Column, name: str, patterns=None) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(pattern), 0))
 
 
-def redact_columns(
-    df: DataFrame,
-    cols: list[str],
-    patterns: dict[str, tuple[str, str]] | None = None,
-) -> DataFrame:
-    """Replace each named column with its redacted form."""
-    return df.withColumns({c: redact(F.col(c), patterns) for c in cols})
-
-
 def redaction_report(
     df: DataFrame, col: str, group_by: str
 ) -> DataFrame:

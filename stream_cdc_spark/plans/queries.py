@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -4221,151 +4222,6 @@ def q104(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# Round-4 rotation: after round 3 every one of the 99 registry queries has
-# at least one fully-green driver row (never-green set is empty,
-# CORRECTNESS_r01∪r02∪r03). Priority order inside the 50-slot window:
-# (1) the 10 queries ADDED this round (q100-q109) — never driver-checked,
-# so they outrank freshness; (2) queries whose latest green row is from
-# round 1 or 2 (predating the ts-loader fix and the current testdata
-# generation); (3) one continuity anchor for the operator whose code
-# changed this round (SizeFilter grew the real claim-check offload ->
-# q06). The 10 round-1-stale queries displaced by (1) — q04 q09 q11 q16
-# q33 q35 q36 q45 q46 q50 — are the ones whose plan shape is duplicated
-# by an in-window sibling (window fns: q32/q49; set ops: q17-green-r3;
-# rollup: q18; correlated subqueries: TPC-H q17/q22; string exprs: q41)
-# and all 109 stay value-checked every session by
-# tests/test_queries_oracle.py at sf0.001.
-_DRIVER_WINDOW_R4 = [
-    # 18 queries added in round 4 — never driver-checked:
-    "q110_incremental_dedup",
-    "q111_containment_pairs",
-    "q112_gram_matrix",
-    "q113_fuzzy_prefix_pairs",
-    "q114_leakage_safe_split",
-    "q115_document_chunks",
-    "q116_equidepth_histogram",
-    "q117_soft_dedup_weights",
-    "q100_language_mix_report",
-    "q101_cross_source_duplication",
-    "q102_vocab_growth",
-    "q103_lm_doc_fluency",
-    "q104_semantic_dedup",
-    "q105_segment_removal",
-    "q106_gapfill_locf",
-    "q107_sq8_ann_topk",
-    "q108_heavy_hitters",
-    "q109_source_capped_sample",
-    # 5 queries last driver-green in round 1 (q32/q37/q38/q40/q41/q42/
-    # q39/q23 displaced by the eight late round-4 additions — their shapes
-    # are covered by in-window siblings q49/q97-r02, q18/q47-r03,
-    # q68-r03, q20+q54, q50-green-r03 for the string-expression family,
-    # q25/q43 for the embedding-array expressions, and q110/q111 for the
-    # near-dedup-filter consumer shape):
-    "q14_tpch_q3",
-    "q15_star_join_revenue",
-    "q18_rollup_value",
-    "q20_token_stats",
-    "q22_lang_id",
-    # 26 queries last driver-green in round 2:
-    "q21_quality_scores",
-    "q25_ann_bruteforce_topk",
-    "q26_multimodal_meta",
-    "q34_tpch_q6",
-    "q43_ivf_cells",
-    "q49_topk_per_group",
-    "q53_tpch_q18",
-    "q54_tfidf_top_terms",
-    "q55_tpch_q10",
-    "q57_tpch_q5_local_supplier",
-    "q58_tpch_q12_priority_counts",
-    "q59_tpch_q4_late_orders",
-    "q60_tpch_q2_min_cost_supplier",
-    "q61_tpch_q16_supplier_variety",
-    "q62_tpch_q11_value_concentration",
-    "q63_tpch_q22_dormant_customers",
-    "q65_kmeans_assign",
-    "q69_tpch_q7_nation_volume",
-    "q70_tpch_q9_product_profit",
-    "q71_tpch_q13_order_distribution",
-    "q72_tpch_q17_small_quantity",
-    "q73_tpch_q21_waiting_suppliers",
-    "q79_stratified_sample",
-    "q80_doc_repetition",
-    "q88_pagerank",
-    "q89_bm25_topk",
-    # continuity anchor — SizeFilter gained the durable claim-check store
-    # this round; re-prove its oracle under the new code:
-    "q06_claim_check_routing",
-]
-
-assert len(_DRIVER_WINDOW_R4) == 50, len(_DRIVER_WINDOW_R4)
-
-_DRIVER_WINDOW_R3 = [
-    # 12 round-1-green events queries invalidated by the round-2 ts
-    # regression — re-prove after the loader fix:
-    "q01_envelope_filter_project",
-    "q02_classify_count",
-    "q03_log_compaction",
-    "q05_batch_assembly",
-    "q06_claim_check_routing",
-    "q08_delete_anti_join",
-    "q10_hourly_window",
-    "q12_consumer_dedup",
-    "q17_set_intersect",
-    "q31_sessionization",
-    "q47_cube_counts",
-    "q48_cdc_merge_apply",
-    # 7 continuity anchors (flagship / code-changed-this-round operators):
-    "q07_cdc_apply_join",
-    "q13_tpch_q1",
-    "q19_exact_dedup",
-    "q24_ngram_jaccard_pairs",
-    "q30_embedding_near_dup",
-    "q64_dedup_components",
-    "q66_winnow_fingerprints",
-    # 4 formerly rows-only sketches, now candidate-then-verify with oracles:
-    "q27_minhash_lsh_pairs",
-    "q28_simhash_near_pairs",
-    "q29_ann_lsh_topk",
-    "q44_ivf_ann_topk",
-    # 6 queries that entered the window in round 2 and ERR'd on the ts
-    # regression before ever earning a green row:
-    "q51_asof_join",
-    "q52_range_join",
-    "q56_scd2_history",
-    "q67_approx_distinct_bounded",
-    "q68_approx_percentile_bounded",
-    "q87_incremental_agg",
-    # 21 queries that have never been inside the driver's window:
-    "q74_tpch_q8_market_share",
-    "q75_tpch_q14_promo_effect",
-    "q76_tpch_q15_top_supplier",
-    "q77_tpch_q19_disjunctive_filter",
-    "q78_tpch_q20_heavy_shippers",
-    "q81_pii_redaction",
-    "q82_sequence_packing",
-    "q83_decontamination",
-    "q84_sliding_window",
-    "q85_full_outer_reconcile",
-    "q86_except_all_multiset",
-    "q90_incremental_distinct_hll",
-    "q91_funnel_conversion",
-    "q92_retention_cohorts",
-    "q93_duplicated_spans",
-    "q94_bigram_lm",
-    "q95_shard_balance",
-    "q96_json_field_rollup",
-    "q97_window_rank_zoo",
-    "q98_column_profile",
-    "q99_curation_decisions",
-]
-
-assert len(_DRIVER_WINDOW_R3) == 50, len(_DRIVER_WINDOW_R3)
-# NOTE: the registry reorder that puts _DRIVER_WINDOW_R4 first happens at
-# the very bottom of this module, AFTER every @_register call — q105-q109
-# are registered below this point and must be reorderable into the window.
-
-
 @_register(
     "q105_segment_removal",
     """
@@ -5980,23 +5836,23 @@ _patch_bpe_oracle()
     SELECT u AS vertex, MIN(v) AS component FROM reach GROUP BY u
     ORDER BY vertex
     """,
-    doc="INCREMENTAL dedup-cluster maintenance (streaming/components.py "
-    "components_over_batches): the q64 edge set arrives as three "
-    "interleaved micro-batch slices and is folded through the append-"
-    "only union-find forest — members stamped with their insertion "
-    "root, merges as O(1) parent-log rows, labels resolved by path-"
-    "compressing the component-granular log and ONE broadcast join "
-    "(the corpus-sized member table never shuffles). The oracle is the "
-    "one-shot recursive-CTE fixpoint over the SAME edge set, so the "
-    "driver check proves order-insensitivity: batch-at-a-time folding "
-    "reaches the exact one-shot clusters. The streaming twin "
-    "(IncrementalComponentsSnapshot) persists the identical forest on "
-    "statedir state — tests/test_components_stream.py holds the "
-    "restart/replay equality to batch connected_components.",
+    doc="INCREMENTAL dedup-cluster maintenance as a batch plan: the q64 "
+    "edge set, cut into the three micro-batch slices (id_a % 3) the "
+    "streaming sink drains, labelled by dedup.connected_components over "
+    "their union. The oracle is the one-shot recursive-CTE fixpoint over "
+    "the same edge set. That IncrementalComponentsSnapshot, fed the "
+    "same slices one trigger each, reaches exactly these labels is "
+    "proven by tests/test_sink_equals_query.py; its restart/replay "
+    "equality by tests/test_components_stream.py.",
 )
 def q135(spark: SparkSession, sf: str) -> DataFrame:
-    from stream_cdc_spark.streaming.components import components_over_batches
+    edges = reduce(DataFrame.unionByName, _q135_slices(spark, sf))
+    return dedup.connected_components(edges).orderBy("vertex")
 
+
+def _q135_slices(spark: SparkSession, sf: str) -> list[DataFrame]:
+    """q64's near-dup edge set (>= 0.5 shingle Jaccard) as the three
+    micro-batch slices id_a % 3 == i."""
     d = load(spark, sf, "documents")
     joined, ratio = _shingle_pair_stats(d)
     edges = (
@@ -6004,8 +5860,109 @@ def q135(spark: SparkSession, sf: str) -> DataFrame:
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
-    slices = [edges.filter(F.col("id_a") % 3 == i) for i in range(3)]
-    return components_over_batches(slices).orderBy("vertex")
+    return [edges.filter(F.col("id_a") % 3 == i) for i in range(3)]
+
+
+def _redelivered_v0_events(df: DataFrame, id_col: str) -> list:
+    """The insert-only feed of q136/q137: three OVERLAPPING upsert
+    slices at version 0 — slice i owns id % 3 == i and redelivers
+    id % 7 == i."""
+    v0 = df.withColumn("version", F.lit(0).cast("bigint"))
+    return [
+        ("upsert", v0.filter(
+            (F.col(id_col) % 3 == i) | (F.col(id_col) % 7 == i)
+        ))
+        for i in range(3)
+    ]
+
+
+def _update_events(
+    df: DataFrame, id_col: str, payload_col: str, updated: Column
+) -> list:
+    """The CDC update feed of q138/q139: every id is inserted at version
+    1; every id % 4 == 1 id is UPDATED to a version-2 image ``updated``;
+    every id % 10 == 3 id is deleted mid-stream and the delete replayed.
+    Version 2 arrives BEFORE version 1 for id % 3 == 2 (out of order),
+    and both versions are redelivered."""
+    i = F.col(id_col)
+    v1 = df.select(id_col, F.lit(1).cast("bigint").alias("version"), payload_col)
+    v2 = df.filter(i % 4 == 1).select(
+        id_col, F.lit(2).cast("bigint").alias("version"),
+        updated.alias(payload_col),
+    )
+    dead = df.filter(i % 10 == 3).select(id_col)
+    return [
+        ("upsert", v1.filter(i % 3 != 2)),
+        # v2 precedes v1 for %3==2 ids (out-of-order); redelivered v1s
+        ("upsert", v2.unionByName(v1.filter((i % 3 != 2) & (i % 7 == 0)))),
+        ("delete", dead),
+        # late v1 images (must not displace v2 or resurrect deletes);
+        # redelivered v2s
+        ("upsert", v1.filter(i % 3 == 2).unionByName(v2.filter(i % 7 == 1))),
+        ("delete", dead),  # delete replay
+    ]
+
+
+def _ivf_probe_inputs(spark: SparkSession, sf: str):
+    """(centroids, queries) of q136/q139: every 100th vector is a
+    centroid (cid, cv); vec_id < 5 are the queries."""
+    emb = load(spark, sf, "embeddings")
+    cents = emb.filter(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").cast("array<float>").alias("cv"),
+    )
+    return cents, emb.filter(F.col("vec_id") < 5)
+
+
+def _q136_events(spark: SparkSession, sf: str) -> list:
+    return _redelivered_v0_events(load(spark, sf, "embeddings"), "vec_id")
+
+
+def _q137_events(spark: SparkSession, sf: str) -> list:
+    return _redelivered_v0_events(load(spark, sf, "documents"), "doc_id")
+
+
+def _q138_events(spark: SparkSession, sf: str) -> list:
+    return _update_events(
+        load(spark, sf, "documents"), "doc_id", "text",
+        F.concat(F.col("text"), F.lit(" vector stream")),
+    )
+
+
+def _q139_events(spark: SparkSession, sf: str) -> list:
+    # the reversed embedding: exact in every engine, moves cells,
+    # neighbors and scores
+    return _update_events(
+        load(spark, sf, "embeddings"), "vec_id", "embedding",
+        F.reverse(F.col("embedding")),
+    )
+
+
+def _latest_ivf_topk(spark: SparkSession, sf: str, events: list) -> DataFrame:
+    """q136/q139's plan: IVF top-k (nprobe=2, k=5) over the latest live
+    vector per id of ``events``."""
+    cents, q = _ivf_probe_inputs(spark, sf)
+    live = compaction.versioned_latest_live(
+        events, "vec_id", "version", "embedding"
+    )
+    return similarity.ivf_ann_topk(
+        live, q, cents, k=5, nprobe=2, quantize_bp=10000
+    ).orderBy("q_id", "rank")
+
+
+_BM25_TERMS = ["stream", "vector", "join"]
+
+
+def _latest_bm25(events: list) -> DataFrame:
+    """q137/q138/q140's plan: q89's BM25 over the latest live text per
+    doc of ``events``. The latest-live relation is pinned: bm25_topk
+    reads it three times (doc lengths, corpus stats, term counts), and
+    unpinned each read re-ran the admission aggregate — q137/q138 read
+    43-62% slower in bench.py's sf0.1 detail on a 4-CPU local[4] host."""
+    live = compaction.versioned_latest_live(events, "doc_id", "version", "text")
+    return text.bm25_topk(
+        live.localCheckpoint(eager=True), _BM25_TERMS, top_k=15
+    )
 
 
 @_register(
@@ -6059,42 +6016,20 @@ def q135(spark: SparkSession, sf: str) -> DataFrame:
     """,
     headline=True,
     eager=True,
-    doc="INCREMENTAL ANN index maintenance (streaming/ann_index.py "
-    "versioned_ann_topk_over_events): the embedding corpus arrives as "
-    "three OVERLAPPING micro-batch slices (slice i owns vec_id%3==i and "
-    "redelivers vec_id%7==i), each one upsert event at version 0 — the "
-    "insert-only feed — folded through first-wins admission into the "
-    "cell-assigned IVF index (redelivered ids dropped by the exactly-"
-    "once guard, cells assigned against the fixed broadcast centroid "
-    "set), then probed at nprobe=2/k=5. The oracle is q44's one-shot "
-    "SQL over the WHOLE corpus, so the driver check proves drain "
-    "equality AND order/redelivery insensitivity: batch-at-a-time "
-    "admission reaches the exact one-shot index. The statedir-persisted "
-    "sink (VersionedAnnIndexSnapshot — centroid-digest stamp guard, "
-    "cell-sorted commits, IN-pruned probes) holds the same equality "
-    "across restarts and replays in tests/test_ann_index_stream.py.",
+    doc="INCREMENTAL ANN index as a batch plan: the embedding corpus as "
+    "three OVERLAPPING upsert slices at version 0 (slice i owns "
+    "vec_id%3==i and redelivers vec_id%7==i — the insert-only feed), "
+    "compacted to the latest live vector per id by "
+    "compaction.versioned_latest_live and probed by "
+    "similarity.ivf_ann_topk at nprobe=2/k=5 against the fixed "
+    "centroid set. The oracle is q44's one-shot SQL over the whole "
+    "corpus. That VersionedAnnIndexSnapshot, fed the same slices one "
+    "trigger each, probes exactly these rows is proven by "
+    "tests/test_sink_equals_query.py; restarts, replays and folds by "
+    "tests/test_ann_index_stream.py.",
 )
 def q136(spark: SparkSession, sf: str) -> DataFrame:
-    from stream_cdc_spark.streaming.ann_index import (
-        versioned_ann_topk_over_events,
-    )
-
-    emb = load(spark, sf, "embeddings")
-    cents = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").cast("array<float>").alias("cv"),
-    )
-    q = emb.filter(F.col("vec_id") < 5)
-    v0 = emb.withColumn("version", F.lit(0).cast("bigint"))
-    events = [
-        ("upsert", v0.filter(
-            (F.col("vec_id") % 3 == i) | (F.col("vec_id") % 7 == i)
-        ))
-        for i in range(3)
-    ]
-    return versioned_ann_topk_over_events(
-        events, cents, q, k=5, nprobe=2, quantize_bp=10000
-    ).orderBy("q_id", "rank")
+    return _latest_ivf_topk(spark, sf, _q136_events(spark, sf))
 
 
 @_register(
@@ -6127,40 +6062,19 @@ def q136(spark: SparkSession, sf: str) -> DataFrame:
     """,
     headline=True,
     eager=True,
-    doc="INCREMENTAL retrieval-index maintenance (streaming/"
-    "retrieval_index.py versioned_bm25_over_events): the document corpus "
-    "arrives as three OVERLAPPING micro-batch slices (slice i owns "
-    "doc_id%3==i and redelivers doc_id%7==i), each one upsert event at "
-    "version 0 — the insert-only feed — folded through first-wins "
-    "admission into the inverted index (redelivered ids dropped by the "
-    "exactly-once guard, per-doc tf/dl computed once at admission, "
-    "df/N/L reduced over the latest images, idf re-quantized at read). "
-    "The oracle is q89's one-shot SQL over the WHOLE corpus, so the "
-    "driver check proves drain equality AND order/redelivery "
-    "insensitivity: batch-at-a-time admission reaches the exact one-shot "
-    "BM25 ranking. Both paths share text.bm25_topk_from_postings, and "
-    "the statedir-persisted sink (VersionedRetrievalIndexSnapshot — "
-    "scheme stamp guard, word-sorted commits, IN-pruned probes) holds "
-    "the same equality across restarts, replays and folds in "
+    doc="INCREMENTAL retrieval index as a batch plan: the document corpus "
+    "as three OVERLAPPING upsert slices at version 0 (slice i owns "
+    "doc_id%3==i and redelivers doc_id%7==i — the insert-only feed), "
+    "compacted to the latest live text per doc by "
+    "compaction.versioned_latest_live and ranked by q89's "
+    "text.bm25_topk. The oracle is q89's one-shot SQL over the whole "
+    "corpus. That VersionedRetrievalIndexSnapshot, fed the same slices "
+    "one trigger each, ranks exactly these rows is proven by "
+    "tests/test_sink_equals_query.py; restarts, replays and folds by "
     "tests/test_retrieval_index_stream.py.",
 )
 def q137(spark: SparkSession, sf: str) -> DataFrame:
-    from stream_cdc_spark.streaming.retrieval_index import (
-        versioned_bm25_over_events,
-    )
-
-    d = load(spark, sf, "documents").withColumn(
-        "version", F.lit(0).cast("bigint")
-    )
-    events = [
-        ("upsert", d.filter(
-            (F.col("doc_id") % 3 == i) | (F.col("doc_id") % 7 == i)
-        ))
-        for i in range(3)
-    ]
-    return versioned_bm25_over_events(
-        events, ["stream", "vector", "join"], top_k=15
-    )
+    return _latest_bm25(_q137_events(spark, sf))
 
 
 @_register(
@@ -6206,55 +6120,23 @@ def q137(spark: SparkSession, sf: str) -> DataFrame:
     """,
     headline=True,
     eager=True,
-    doc="VERSIONED retrieval-index maintenance with document UPDATES — "
-    "the CDC-native widening (streaming/retrieval_index.py "
-    "versioned_bm25_over_events / VersionedRetrievalIndexSnapshot): the "
-    "corpus arrives as interleaved insert/update/delete events — every "
-    "doc_id%4==1 doc is UPDATED to a version-2 image (two query terms "
-    "appended), every doc_id%10==3 doc is deleted mid-stream (and the "
-    "delete replayed), version 2 of some docs arrives BEFORE version 1 "
-    "(out-of-order), and both versions are redelivered — folded through "
-    "versioned first-wins admission (exactly-once per (doc_id, version), "
-    "append-only writes, version-max read rule) and scored with BM25 "
-    "over only the LATEST LIVE image of each doc. The oracle composes "
+    doc="VERSIONED retrieval index with document UPDATES as a batch plan: "
+    "the corpus as interleaved insert/update/delete events — every "
+    "doc_id%4==1 doc UPDATED to a version-2 image (two query terms "
+    "appended), every doc_id%10==3 doc deleted mid-stream (and the "
+    "delete replayed), version 2 of some docs BEFORE version 1 "
+    "(out of order), both versions redelivered — compacted to the "
+    "latest live image per doc by compaction.versioned_latest_live "
+    "(first-wins per (doc_id, version), version-max read, doc-level "
+    "deletes) and ranked by q89's text.bm25_topk. The oracle composes "
     "q03-style latest-image compaction (ROW_NUMBER over version DESC) "
-    "with q89's exact integer BM25 recurrence over the compacted corpus, "
-    "so the driver check proves update supersession, delete permanence, "
-    "and order/redelivery insensitivity in one hash. The statedir-"
-    "persisted twin holds the same equality across restarts, replays, "
-    "bucketed folds and tombstone-applying folds in "
-    "tests/test_versioned_retrieval.py.",
+    "with q89's exact integer BM25. That VersionedRetrievalIndexSnapshot, "
+    "fed the same events one trigger each, ranks exactly these rows is "
+    "proven by tests/test_sink_equals_query.py; restarts, replays and "
+    "folds by tests/test_versioned_retrieval.py.",
 )
 def q138(spark: SparkSession, sf: str) -> DataFrame:
-    from stream_cdc_spark.streaming.retrieval_index import (
-        versioned_bm25_over_events,
-    )
-
-    d = load(spark, sf, "documents")
-    v1 = d.select("doc_id", F.lit(1).cast("bigint").alias("version"), "text")
-    v2 = d.filter(F.col("doc_id") % 4 == 1).select(
-        "doc_id",
-        F.lit(2).cast("bigint").alias("version"),
-        F.concat(F.col("text"), F.lit(" vector stream")).alias("text"),
-    )
-    dead = d.filter(F.col("doc_id") % 10 == 3).select("doc_id")
-    events = [
-        ("upsert", v1.filter(F.col("doc_id") % 3 != 2)),
-        # v2 precedes v1 for %3==2 docs (out-of-order); redelivered v1s
-        ("upsert", v2.unionByName(
-            v1.filter((F.col("doc_id") % 3 != 2) & (F.col("doc_id") % 7 == 0))
-        )),
-        ("delete", dead),
-        # late v1 images (must not displace v2 or resurrect deletes);
-        # redelivered v2s
-        ("upsert", v1.filter(F.col("doc_id") % 3 == 2).unionByName(
-            v2.filter(F.col("doc_id") % 7 == 1)
-        )),
-        ("delete", dead),  # delete replay
-    ]
-    return versioned_bm25_over_events(
-        events, ["stream", "vector", "join"], top_k=15
-    )
+    return _latest_bm25(_q138_events(spark, sf))
 
 
 @_register(
@@ -6327,64 +6209,23 @@ def q138(spark: SparkSession, sf: str) -> DataFrame:
     """,
     headline=True,
     eager=True,
-    doc="VERSIONED ANN index with embedding UPDATES — the symmetric "
-    "CDC widening of q138 (streaming/ann_index.py "
-    "versioned_ann_topk_over_events / VersionedAnnIndexSnapshot): the "
-    "embedding corpus arrives as interleaved insert/update/delete "
-    "events — every vec_id%4==1 vector is RE-EMBEDDED to a version-2 "
-    "image (the reversed embedding: exact in every engine, moves "
-    "cells, neighbors and scores), every vec_id%10==3 id is deleted "
-    "mid-stream (and the delete replayed), version 2 of some ids "
-    "arrives BEFORE version 1 (out-of-order), and both versions are "
-    "redelivered — folded through versioned first-wins admission "
-    "(exactly-once per (vec_id, version), append-only writes, "
-    "version-max read rule) and probed at nprobe=2/k=5 over only the "
-    "LATEST LIVE vector of each id. The oracle composes q03-style "
-    "latest-image compaction (ROW_NUMBER over version DESC) with "
-    "q44's one-shot IVF SQL over the compacted corpus, so the driver "
-    "check proves update supersession, delete permanence, and "
-    "order/redelivery insensitivity in one hash. The statedir-"
-    "persisted twin holds the same equality across restarts, replays, "
-    "bucketed folds, superseded-code-erasing folds and both storage "
-    "tiers in tests/test_versioned_ann.py.",
+    doc="VERSIONED ANN index with embedding UPDATES as a batch plan, the "
+    "symmetric widening of q138: every vec_id%4==1 vector RE-EMBEDDED "
+    "to a version-2 image (the reversed embedding: exact in every "
+    "engine, moves cells, neighbors and scores), every vec_id%10==3 id "
+    "deleted mid-stream (and the delete replayed), version 2 of some "
+    "ids BEFORE version 1 (out of order), both versions redelivered — "
+    "compacted to the latest live vector per id by "
+    "compaction.versioned_latest_live and probed by "
+    "similarity.ivf_ann_topk at nprobe=2/k=5. The oracle composes "
+    "q03-style latest-image compaction with q44's one-shot IVF SQL. "
+    "That VersionedAnnIndexSnapshot, fed the same events one trigger "
+    "each, probes exactly these rows is proven by "
+    "tests/test_sink_equals_query.py; restarts, replays, folds and both "
+    "storage tiers by tests/test_versioned_ann.py.",
 )
 def q139(spark: SparkSession, sf: str) -> DataFrame:
-    from stream_cdc_spark.streaming.ann_index import (
-        versioned_ann_topk_over_events,
-    )
-
-    emb = load(spark, sf, "embeddings")
-    cents = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").cast("array<float>").alias("cv"),
-    )
-    q = emb.filter(F.col("vec_id") < 5)
-    v1 = emb.select(
-        "vec_id", F.lit(1).cast("bigint").alias("version"), "embedding"
-    )
-    v2 = emb.filter(F.col("vec_id") % 4 == 1).select(
-        "vec_id",
-        F.lit(2).cast("bigint").alias("version"),
-        F.reverse(F.col("embedding")).alias("embedding"),
-    )
-    dead = emb.filter(F.col("vec_id") % 10 == 3).select("vec_id")
-    events = [
-        ("upsert", v1.filter(F.col("vec_id") % 3 != 2)),
-        # v2 precedes v1 for %3==2 ids (out-of-order); redelivered v1s
-        ("upsert", v2.unionByName(
-            v1.filter((F.col("vec_id") % 3 != 2) & (F.col("vec_id") % 7 == 0))
-        )),
-        ("delete", dead),
-        # late v1 vectors (must not displace v2 or resurrect deletes);
-        # redelivered v2s
-        ("upsert", v1.filter(F.col("vec_id") % 3 == 2).unionByName(
-            v2.filter(F.col("vec_id") % 7 == 1)
-        )),
-        ("delete", dead),  # delete replay
-    ]
-    return versioned_ann_topk_over_events(
-        events, cents, q, k=5, nprobe=2, quantize_bp=10000
-    ).orderBy("q_id", "rank")
+    return _latest_ivf_topk(spark, sf, _q139_events(spark, sf))
 
 
 @_register(
@@ -6436,30 +6277,28 @@ def q139(spark: SparkSession, sf: str) -> DataFrame:
     SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(score AS BIGINT) AS score
     FROM scored ORDER BY score DESC, doc_id LIMIT 15
     """,
-    doc="COMPOSED pipeline semantics — the curation quality gate inside "
-    "the CDC update flow (streaming/cdc_full.py "
-    "composed_bm25_over_envelopes / CdcFullPipeline): typed envelope "
-    "batches carry inserts, GOOD updates (two query terms appended), "
-    "LOW-QUALITY updates (an image below the 5-token gate — it must be "
-    "admitted NOWHERE, and the version-max read keeps serving the last "
-    "image that PASSED), VERSIONED in-band deletes (sequence 2, killing "
-    "versions <= it) and their replay, a delete-then-RECREATE slice "
-    "(%20==3 docs re-inserted at version 3 > the kill watermark — live "
-    "again, the reference's routine Delete-then-Insert re-creation, "
-    "round-13 advice; the %20==13 half stays dead), out-of-order and "
-    "redelivered versions — split and gated by the exact CdcFullPipeline "
-    "path (curation.default_quality_predicate + cdc_upserts_and_deletes "
-    "on the gate-filtered envelope stream) and folded through versioned "
-    "first-wins admission. The oracle composes the gate predicate with "
+    doc="COMPOSED pipeline semantics as a batch plan — the curation "
+    "quality gate inside the CDC update flow: typed envelope batches "
+    "carry inserts, GOOD updates (two query terms appended), "
+    "LOW-QUALITY updates (an image below the 5-token gate — admitted "
+    "nowhere, so the last image that PASSED keeps serving), VERSIONED "
+    "in-band deletes (sequence 2, killing versions <= it) and their "
+    "replay, a delete-then-RECREATE slice (%20==3 docs re-inserted at "
+    "version 3 > the kill watermark — live again; the %20==13 half "
+    "stays dead), out-of-order and redelivered versions. Each batch is "
+    "gated and split by CdcFullPipeline's own functions "
+    "(curation.default_quality_predicate, cdc_upserts_and_deletes), "
+    "then compacted by compaction.versioned_latest_live and ranked by "
+    "q89's text.bm25_topk. The oracle composes the gate predicate with "
     "q138's latest-image compaction, the versioned-kill rule and q89's "
-    "integer BM25, so one hash proves the gate-supersession AND "
-    "delete-recreate interactions. The statedir twin holds the same "
-    "equality with mid-stream restarts and both delete channels in "
+    "integer BM25. The statedir pipeline's equality to the batch "
+    "scorers, with mid-stream restarts and both delete channels, is "
     "tests/test_cdc_full.py.",
 )
 def q140(spark: SparkSession, sf: str) -> DataFrame:
-    from stream_cdc_spark.streaming.cdc_full import (
-        composed_bm25_over_envelopes,
+    from stream_cdc_spark.streaming.curation import default_quality_predicate
+    from stream_cdc_spark.streaming.retrieval_index import (
+        cdc_upserts_and_deletes,
     )
 
     d = load(spark, sf, "documents")
@@ -6521,578 +6360,18 @@ def q140(spark: SparkSession, sf: str) -> DataFrame:
         .unionByName(delete_env(dead))
         .unionByName(env(v3, "Insert")),
     ]
-    return composed_bm25_over_envelopes(
-        batches, ["stream", "vector", "join"], min_tokens=5, top_k=15
-    )
+    # the CdcFullPipeline split: the gate filters the ENVELOPE stream
+    # (Deletes always pass), in-band deletes are VERSIONED
+    is_upsert = F.col("event_type").isin("Insert", "Update")
+    gate = default_quality_predicate("content.text", 5)
+    events = []
+    for batch in batches:
+        upserts, deletes = cdc_upserts_and_deletes(
+            batch.filter(~is_upsert | gate)
+        )
+        events += [("upsert", upserts), ("vdelete", deletes)]
+    return _latest_bm25(events)
 
-
-# Driver verification window, round 6 — the rotation policy (round-5
-# verdict task 4): every query's most-recent driver-green row should be
-# no older than two rounds.
-#  (1) the 25 queries whose latest driver-green dates to r3 (q47, q67,
-#      q68, q74-q78, q81-q87, q90-q99) lead the window — several sit on
-#      code touched in r4/r5 (q94/q103 text ops, q87/q90 incremental),
-#      and q99 additionally covers the curation state layer rewritten
-#      this round (statedir compaction);
-#  (2) continuity anchors for code changed THIS round: q122 (survivorship
-#      rewritten join-free — canonical id now reaches rows through the
-#      ordered window itself), q110 (the LSH index stamp now survives the
-#      persisted-state read path);
-#  (3) the four headline bench queries whose latest green is r4 (q14,
-#      q15, q25, q34);
-#  (4) remaining slots: oldest-green (r4) representatives, one per
-#      operator family (the out-of-window r4 TPC-H shapes q55-q63/
-#      q69-q73 are re-proven in-window by the q74-q78 rotation and stay
-#      value-checked every session by tests/test_queries_oracle.py);
-#  (5) the three queries ADDED in round 6 (q124-q126) — never driver-
-#      green yet, so they take window slots from three r4-green entries
-#      whose families stay represented in-window (q18 rollup -> q47
-#      cube, q49 per-group top-k -> q97 rank zoo, q53 TPC-H -> q14/q34/
-#      q74-q78, q43 embedding arrays -> q25/q104/q112/q127, q54 tf-idf
-#      -> q20 token stats + out-of-window value checks); the displaced
-#      five rotate back in r7.
-_DRIVER_WINDOW_R6 = [
-    # (1) 25 stale r3-green queries:
-    "q47_cube_counts",
-    "q67_approx_distinct_bounded",
-    "q68_approx_percentile_bounded",
-    "q74_tpch_q8_market_share",
-    "q75_tpch_q14_promo_effect",
-    "q76_tpch_q15_top_supplier",
-    "q77_tpch_q19_disjunctive_filter",
-    "q78_tpch_q20_heavy_shippers",
-    "q81_pii_redaction",
-    "q82_sequence_packing",
-    "q83_decontamination",
-    "q84_sliding_window",
-    "q85_full_outer_reconcile",
-    "q86_except_all_multiset",
-    "q87_incremental_agg",
-    "q90_incremental_distinct_hll",
-    "q91_funnel_conversion",
-    "q92_retention_cohorts",
-    "q93_duplicated_spans",
-    "q94_bigram_lm",
-    "q95_shard_balance",
-    "q96_json_field_rollup",
-    "q97_window_rank_zoo",
-    "q98_column_profile",
-    "q99_curation_decisions",
-    # (2) anchors on round-6 code changes:
-    "q122_dedup_survivorship",
-    "q110_incremental_dedup",
-    # (3) r4-green headline bench queries:
-    "q14_tpch_q3",
-    "q15_star_join_revenue",
-    "q25_ann_bruteforce_topk",
-    "q34_tpch_q6",
-    # (4) oldest-green (r4) family representatives:
-    "q06_claim_check_routing",
-    "q20_token_stats",
-    "q21_quality_scores",
-    "q22_lang_id",
-    "q26_multimodal_meta",
-    "q65_kmeans_assign",
-    "q79_stratified_sample",
-    "q80_doc_repetition",
-    "q104_semantic_dedup",
-    "q105_segment_removal",
-    "q112_gram_matrix",
-    "q113_fuzzy_prefix_pairs",
-    "q114_leakage_safe_split",
-    "q117_soft_dedup_weights",
-    # (5) round-6 additions, never driver-green yet:
-    "q124_quality_percentile_gate",
-    "q125_source_drift_kl",
-    "q126_zscore_anomaly",
-    "q127_centroid_similarity",
-    "q128_cross_source_near_dup",
-]
-
-assert len(_DRIVER_WINDOW_R6) == 50, len(_DRIVER_WINDOW_R6)
-
-# Driver verification window, round 7 — rotation policy unchanged (no
-# query's most-recent driver-green row older than two rounds):
-#  (1) the 30 queries whose latest driver-green dates to r4 (the round-6
-#      verdict's task-2 list: q18, q43, q49, q53-q55, q57-q63, q69-q73,
-#      q88, q89, q100-q103, q106-q109, q115, q116) lead the window —
-#      several sit on code touched since (text.py, incremental.py);
-#  (2) anchors for code changed THIS round: q126 (zscore singleton-key
-#      ANSI guard), q127 (zero-norm centroid guard), q99 + q110 (the
-#      statedir commit protocol these state layers ride was rewritten
-#      rename-free / manifest-based this round);
-#  (3) q129 + q130 — NEW this round (multimodal perceptual near-dup
-#      pairs + their dedup-cluster rollup), never driver-green;
-#  (4) r6-addition continuity: q124, q125, q128 (one green row each);
-#  (5) headline-bench continuity anchors (q01, q02, q07, q10, q13, q19,
-#      q24, q27, q31, q48, q51, q66) so every bench query stays
-#      value-verified in the round it is timed.
-#  Displaced r5/r6-green families remain value-checked every session by
-#  tests/test_queries_oracle.py and rotate back in r8.
-_DRIVER_WINDOW_R7 = [
-    # (1) 30 stale r4-green queries:
-    "q18_rollup_value",
-    "q43_ivf_cells",
-    "q49_topk_per_group",
-    "q53_tpch_q18",
-    "q54_tfidf_top_terms",
-    "q55_tpch_q10",
-    "q57_tpch_q5_local_supplier",
-    "q58_tpch_q12_priority_counts",
-    "q59_tpch_q4_late_orders",
-    "q60_tpch_q2_min_cost_supplier",
-    "q61_tpch_q16_supplier_variety",
-    "q62_tpch_q11_value_concentration",
-    "q63_tpch_q22_dormant_customers",
-    "q69_tpch_q7_nation_volume",
-    "q70_tpch_q9_product_profit",
-    "q71_tpch_q13_order_distribution",
-    "q72_tpch_q17_small_quantity",
-    "q73_tpch_q21_waiting_suppliers",
-    "q88_pagerank",
-    "q89_bm25_topk",
-    "q100_language_mix_report",
-    "q101_cross_source_duplication",
-    "q102_vocab_growth",
-    "q103_lm_doc_fluency",
-    "q106_gapfill_locf",
-    "q107_sq8_ann_topk",
-    "q108_heavy_hitters",
-    "q109_source_capped_sample",
-    "q115_document_chunks",
-    "q116_equidepth_histogram",
-    # (2) round-7 code-change anchors:
-    "q126_zscore_anomaly",
-    "q127_centroid_similarity",
-    "q99_curation_decisions",
-    "q110_incremental_dedup",
-    # (3) new this round:
-    "q129_phash_near_dup",
-    "q130_media_dup_clusters",
-    # (4) round-6-addition continuity:
-    "q124_quality_percentile_gate",
-    "q125_source_drift_kl",
-    "q128_cross_source_near_dup",
-    # (5) headline-bench continuity (q02 yields its slot to q130: it is
-    # r6-green, and the envelope family stays covered by q01/q07):
-    "q01_envelope_filter_project",
-    "q07_cdc_apply_join",
-    "q10_hourly_window",
-    "q13_tpch_q1",
-    "q19_exact_dedup",
-    "q24_ngram_jaccard_pairs",
-    "q27_minhash_lsh_pairs",
-    "q31_sessionization",
-    "q48_cdc_merge_apply",
-    "q51_asof_join",
-    "q66_winnow_fingerprints",
-]
-
-assert len(_DRIVER_WINDOW_R7) == 50, len(_DRIVER_WINDOW_R7)
-
-# Driver verification window, round 8 — rotation policy unchanged (no
-# query's most-recent driver-green row older than two rounds):
-#  (1) the 37 queries whose latest driver-green dates to r5 (the round-7
-#      verdict's task-1 list: q02-q05, q08, q09, q11, q12, q16, q17,
-#      q23, q28-q30, q32, q33, q35-q42, q44-q46, q50, q52, q56, q64,
-#      q111, q118-q121, q123) lead the window — several sit on code
-#      touched since (dedup.py, similarity.py, text.py);
-#  (2) NEW this round: q131 (BPE tokenizer application, operators/
-#      bpe.py), q132 (multimodal curation decisions — the media_dup
-#      reason), and q133 (BPE-unit chunk windows), never driver-green;
-#  (3) anchors for code changed THIS round: q110 + q99 (their statedir
-#      state layer gained bucketed L1 deltas / per-bucket major folds
-#      and the strict manifest mode), q124 (the streaming percentile
-#      gate's unseen-group policy changed), q129 (dhash_bands now also
-#      feeds the CurationPipeline media stage);
-#  (4) headline-bench continuity anchors, prioritizing the four whose
-#      latest green is r6 (q14, q15, q25, q34) plus the heaviest r7
-#      plans (q13, q24, q27) so every perf-critical bench query is
-#      value-verified at most one round from when it is timed (q13
-#      yields its slot to q133: it is r7-green); the remaining
-#      headliners (q01, q03, q07, q10, q13, q19, q31, q48, q51, q66)
-#      are r7-green — one round old — and rotate back in r9.
-#  Displaced r6/r7-green families remain value-checked every session by
-#  tests/test_queries_oracle.py.
-_DRIVER_WINDOW_R8 = [
-    # (1) 37 stale r5-green queries:
-    "q02_classify_count",
-    "q03_log_compaction",
-    "q04_last_position",
-    "q05_batch_assembly",
-    "q08_delete_anti_join",
-    "q09_changed_keys_semi_join",
-    "q11_scalar_pipeline",
-    "q12_consumer_dedup",
-    "q16_top_k_orders",
-    "q17_set_intersect",
-    "q23_doc_fingerprint",
-    "q28_simhash_near_pairs",
-    "q29_ann_lsh_topk",
-    "q30_embedding_near_dup",
-    "q32_running_total",
-    "q33_lag_delta",
-    "q35_having_filter",
-    "q36_set_except",
-    "q37_pivot_counts",
-    "q38_discrete_percentiles",
-    "q39_near_dedup_filter",
-    "q40_token_frequencies",
-    "q41_regex_tokens",
-    "q42_vector_stats",
-    "q44_ivf_ann_topk",
-    "q45_date_rollup",
-    "q46_above_customer_avg",
-    "q50_string_pipeline",
-    "q52_range_join",
-    "q56_scd2_history",
-    "q64_dedup_components",
-    "q111_containment_pairs",
-    "q118_snapshot_as_of",
-    "q119_vocab_coverage",
-    "q120_quality_report",
-    "q121_snapshot_delta",
-    "q123_mixture_weights",
-    # (2) new this round:
-    "q131_bpe_token_stats",
-    "q132_multimodal_curation_decisions",
-    "q133_bpe_chunks",
-    # (3) round-8 code-change anchors:
-    "q110_incremental_dedup",
-    "q99_curation_decisions",
-    "q124_quality_percentile_gate",
-    "q129_phash_near_dup",
-    # (4) headline-bench continuity (q13 — r7-green, one round old —
-    # yields its slot to the never-green q133):
-    "q14_tpch_q3",
-    "q15_star_join_revenue",
-    "q24_ngram_jaccard_pairs",
-    "q25_ann_bruteforce_topk",
-    "q27_minhash_lsh_pairs",
-    "q34_tpch_q6",
-]
-
-assert len(_DRIVER_WINDOW_R8) == 50, len(_DRIVER_WINDOW_R8)
-
-# Driver verification window, round 9 — rotation policy unchanged (no
-# query's most-recent driver-green row older than two rounds):
-#  (1) the 39 queries whose latest driver-green dates to r6 lead the
-#      window (the round-8 verdict's task-5 cohort — after the r8
-#      rotation the latest-green distribution was 50 r8 / 44 r7 /
-#      39 r6, and the r6 block is the staleness frontier);
-#  (2) NEW this round: q134 (byte-level BPE — lossless GPT-2-style
-#      byte-fallback alphabet), never driver-green;
-#  (3) anchors for code changed THIS round: q131 + q133 (operators/
-#      bpe.py was rewritten — tiered application, scan-free trainer),
-#      q132 (the curation pipeline gained BPE-exact streaming budgets),
-#      q110 + q99 (statedir gained the cached-catalog fold path and the
-#      reconcile/heal guards from ADVICE r8);
-#  (4) headline-bench continuity anchors: 5 of the 10 r7-green
-#      headliners (q13 the heaviest TPC-H plan, q66, q03, q10, and q51
-#      whose r8 drift ratio 1.10 was watch-listed) — the other five
-#      (q01, q07, q19, q31, q48) remain r7-green, exactly two rounds
-#      old at this round's gate, and lead the r10 rotation.
-#  Displaced r7/r8-green families remain value-checked every session by
-#  tests/test_queries_oracle.py.
-_DRIVER_WINDOW_R9 = [
-    # (1) 39 stale r6-green queries:
-    "q06_claim_check_routing",
-    "q20_token_stats",
-    "q21_quality_scores",
-    "q22_lang_id",
-    "q26_multimodal_meta",
-    "q47_cube_counts",
-    "q65_kmeans_assign",
-    "q67_approx_distinct_bounded",
-    "q68_approx_percentile_bounded",
-    "q74_tpch_q8_market_share",
-    "q75_tpch_q14_promo_effect",
-    "q76_tpch_q15_top_supplier",
-    "q77_tpch_q19_disjunctive_filter",
-    "q78_tpch_q20_heavy_shippers",
-    "q79_stratified_sample",
-    "q80_doc_repetition",
-    "q81_pii_redaction",
-    "q82_sequence_packing",
-    "q83_decontamination",
-    "q84_sliding_window",
-    "q85_full_outer_reconcile",
-    "q86_except_all_multiset",
-    "q87_incremental_agg",
-    "q90_incremental_distinct_hll",
-    "q91_funnel_conversion",
-    "q92_retention_cohorts",
-    "q93_duplicated_spans",
-    "q94_bigram_lm",
-    "q95_shard_balance",
-    "q96_json_field_rollup",
-    "q97_window_rank_zoo",
-    "q98_column_profile",
-    "q104_semantic_dedup",
-    "q105_segment_removal",
-    "q112_gram_matrix",
-    "q113_fuzzy_prefix_pairs",
-    "q114_leakage_safe_split",
-    "q117_soft_dedup_weights",
-    "q122_dedup_survivorship",
-    # (2) new this round:
-    "q134_bpe_byte_stats",
-    # (3) round-9 code-change anchors:
-    "q131_bpe_token_stats",
-    "q133_bpe_chunks",
-    "q132_multimodal_curation_decisions",
-    "q110_incremental_dedup",
-    "q99_curation_decisions",
-    # (4) headline-bench continuity (5 slots; q01/q07/q19/q31/q48 are
-    # two rounds old at this gate and lead the r10 rotation):
-    "q13_tpch_q1",
-    "q66_winnow_fingerprints",
-    "q03_log_compaction",
-    "q10_hourly_window",
-    "q51_asof_join",
-]
-
-assert len(_DRIVER_WINDOW_R9) == 50, len(_DRIVER_WINDOW_R9)
-
-# Driver verification window, round 10 — rotation policy unchanged (no
-# query's most-recent driver-green row older than two rounds):
-#  (1) the 40 queries whose latest driver-green dates to r7 lead the
-#      window (the round-9 verdict's task-3 cohort — after the r9
-#      rotation the latest-green distribution was 50 r9 / 44 r8 /
-#      40 r7, and the r7 block is the staleness frontier); this cohort
-#      already contains five headliners (q01, q07, q19, q31, q48),
-#      exactly the five the r9 rotation note promised would lead here;
-#  (2) NEW this round: q135 (incremental connected components — the
-#      q64 edge set folded through streaming/components.py's append-
-#      only union-find forest as three micro-batch slices) and q136
-#      (incremental ANN index admission — overlapping embedding slices
-#      folded through streaming/ann_index.py and probed against q44's
-#      one-shot oracle), both never driver-green;
-#  (3) anchor for code changed THIS round: q110 (the LSH index stamp
-#      gained the signature-scheme id + probe-side refusal guard in
-#      operators/dedup.py). q64, the batch connected_components twin,
-#      ceded its slot to q136: it is r9-green (one round old), its
-#      batch code did not change this round, and the changed incremental
-#      path is exercised in-window by q135 directly (including the new
-#      driver union-find, which q135's batch-bounded slices take);
-#  (4) headline-bench continuity anchors: the six r8-green headliners
-#      (q14, q15, q24, q25, q27, q34 — exactly two rounds old at this
-#      gate, including the two heaviest bench plans q24/q27) plus q13,
-#      the heaviest TPC-H plan, value-verified in the round it is
-#      timed. The remaining headliners (q03, q10, q51, q66) are
-#      r9-green — one round old — and rotate back in r11 with the r8
-#      cohort.
-#  Displaced r8/r9-green families remain value-checked every session by
-#  tests/test_queries_oracle.py.
-_DRIVER_WINDOW_R10 = [
-    # (1) 40 stale r7-green queries:
-    "q18_rollup_value",
-    "q43_ivf_cells",
-    "q49_topk_per_group",
-    "q53_tpch_q18",
-    "q54_tfidf_top_terms",
-    "q55_tpch_q10",
-    "q57_tpch_q5_local_supplier",
-    "q58_tpch_q12_priority_counts",
-    "q59_tpch_q4_late_orders",
-    "q60_tpch_q2_min_cost_supplier",
-    "q61_tpch_q16_supplier_variety",
-    "q62_tpch_q11_value_concentration",
-    "q63_tpch_q22_dormant_customers",
-    "q69_tpch_q7_nation_volume",
-    "q70_tpch_q9_product_profit",
-    "q71_tpch_q13_order_distribution",
-    "q72_tpch_q17_small_quantity",
-    "q73_tpch_q21_waiting_suppliers",
-    "q88_pagerank",
-    "q89_bm25_topk",
-    "q100_language_mix_report",
-    "q101_cross_source_duplication",
-    "q102_vocab_growth",
-    "q103_lm_doc_fluency",
-    "q106_gapfill_locf",
-    "q107_sq8_ann_topk",
-    "q108_heavy_hitters",
-    "q109_source_capped_sample",
-    "q115_document_chunks",
-    "q116_equidepth_histogram",
-    "q125_source_drift_kl",
-    "q126_zscore_anomaly",
-    "q127_centroid_similarity",
-    "q128_cross_source_near_dup",
-    "q130_media_dup_clusters",
-    "q01_envelope_filter_project",
-    "q07_cdc_apply_join",
-    "q19_exact_dedup",
-    "q31_sessionization",
-    "q48_cdc_merge_apply",
-    # (2) new this round:
-    "q135_incremental_components",
-    "q136_incremental_ann_index",
-    # (3) round-10 code-change anchor:
-    "q110_incremental_dedup",
-    # (4) headline-bench continuity:
-    "q13_tpch_q1",
-    "q14_tpch_q3",
-    "q15_star_join_revenue",
-    "q24_ngram_jaccard_pairs",
-    "q25_ann_bruteforce_topk",
-    "q27_minhash_lsh_pairs",
-    "q34_tpch_q6",
-]
-
-assert len(_DRIVER_WINDOW_R10) == 50, len(_DRIVER_WINDOW_R10)
-
-# Driver verification window, round 11 — rotation policy: nothing's
-# most-recent driver-green row older than two rounds.
-#  (1) the 38 queries whose latest driver-green dates to r8 (the
-#      round-10 verdict's task-2 cohort) lead the window;
-#  (2) the query NEW this round (q137 incremental retrieval index —
-#      never driver-green, so it must be in-window);
-#  (3) code-change anchors for this round's edits: q136 (ann_index
-#      deterministic intra-batch admission + stamp-before-compact),
-#      q89/q54 (BM25/TF-IDF scoring bodies refactored into the shared
-#      text.bm25_topk_from_postings / tfidf_top_terms_from_tf that the
-#      new retrieval index probes route through), q107 (the batch SQ8
-#      scorer whose scheme the new ann_index sq8 storage tier extends);
-#  (4) headline-bench continuity: q13/q14/q15/q24/q25/q27/q34.
-_DRIVER_WINDOW_R11 = [
-    # (1) 38 stale r8-green queries:
-    "q02_classify_count",
-    "q04_last_position",
-    "q05_batch_assembly",
-    "q08_delete_anti_join",
-    "q09_changed_keys_semi_join",
-    "q11_scalar_pipeline",
-    "q12_consumer_dedup",
-    "q16_top_k_orders",
-    "q17_set_intersect",
-    "q23_doc_fingerprint",
-    "q28_simhash_near_pairs",
-    "q29_ann_lsh_topk",
-    "q30_embedding_near_dup",
-    "q32_running_total",
-    "q33_lag_delta",
-    "q35_having_filter",
-    "q36_set_except",
-    "q37_pivot_counts",
-    "q38_discrete_percentiles",
-    "q39_near_dedup_filter",
-    "q40_token_frequencies",
-    "q41_regex_tokens",
-    "q42_vector_stats",
-    "q44_ivf_ann_topk",
-    "q45_date_rollup",
-    "q46_above_customer_avg",
-    "q50_string_pipeline",
-    "q52_range_join",
-    "q56_scd2_history",
-    "q64_dedup_components",
-    "q111_containment_pairs",
-    "q118_snapshot_as_of",
-    "q119_vocab_coverage",
-    "q120_quality_report",
-    "q121_snapshot_delta",
-    "q123_mixture_weights",
-    "q124_quality_percentile_gate",
-    "q129_phash_near_dup",
-    # (2) new this round:
-    "q137_incremental_retrieval_index",
-    # (3) round-11 code-change anchors:
-    "q136_incremental_ann_index",
-    "q89_bm25_topk",
-    "q54_tfidf_top_terms",
-    "q107_sq8_ann_topk",
-    # (4) headline-bench continuity:
-    "q13_tpch_q1",
-    "q14_tpch_q3",
-    "q15_star_join_revenue",
-    "q24_ngram_jaccard_pairs",
-    "q25_ann_bruteforce_topk",
-    "q27_minhash_lsh_pairs",
-    "q34_tpch_q6",
-]
-
-assert len(_DRIVER_WINDOW_R11) == 50, len(_DRIVER_WINDOW_R11)
-
-# Driver verification window, round 12 — rotation policy: nothing's
-# most-recent driver-green row older than two rounds.
-#  (1) the 48 queries whose latest driver-green dates to r9 (the
-#      round-11 verdict's task-3 cohort — after the r11 rotation the
-#      latest-green distribution was 50 r11 / 39 r10 / 48 r9, and the
-#      r9 block is the staleness frontier) lead the window; they
-#      include three headliners (q03, q10, q51) and q66, the heaviest
-#      headline plan — timed and value-verified in the same round;
-#  (2) the query NEW this round (q138 versioned retrieval updates —
-#      never driver-green, so it must be in-window);
-#  (3) code-change anchor for this round's edits: q136 (the ANN sink
-#      gained the separate vec_id-bucketed admission ledger and
-#      tombstone-applying folds). q137's module changed
-#      too (postings folds apply tombstones; the versioned sink lives
-#      beside it) but its slot went to q138, which exercises the new
-#      versioned admission directly; q137 itself is r11-green (one
-#      round old) and its changed fold path is unit-covered by
-#      tests/test_retrieval_index_stream.py, rotating back by r13.
-#  The remaining r10/r11-green families (including headliners q13/q14/
-#  q15/q24/q25/q27/q34, all r11-green) stay value-checked every session
-#  by tests/test_queries_oracle.py and rotate back next round.
-_DRIVER_WINDOW_R12 = [
-    # (1) 48 stale r9-green queries:
-    "q03_log_compaction",
-    "q06_claim_check_routing",
-    "q10_hourly_window",
-    "q20_token_stats",
-    "q21_quality_scores",
-    "q22_lang_id",
-    "q26_multimodal_meta",
-    "q47_cube_counts",
-    "q51_asof_join",
-    "q65_kmeans_assign",
-    "q66_winnow_fingerprints",
-    "q67_approx_distinct_bounded",
-    "q68_approx_percentile_bounded",
-    "q74_tpch_q8_market_share",
-    "q75_tpch_q14_promo_effect",
-    "q76_tpch_q15_top_supplier",
-    "q77_tpch_q19_disjunctive_filter",
-    "q78_tpch_q20_heavy_shippers",
-    "q79_stratified_sample",
-    "q80_doc_repetition",
-    "q81_pii_redaction",
-    "q82_sequence_packing",
-    "q83_decontamination",
-    "q84_sliding_window",
-    "q85_full_outer_reconcile",
-    "q86_except_all_multiset",
-    "q87_incremental_agg",
-    "q90_incremental_distinct_hll",
-    "q91_funnel_conversion",
-    "q92_retention_cohorts",
-    "q93_duplicated_spans",
-    "q94_bigram_lm",
-    "q95_shard_balance",
-    "q96_json_field_rollup",
-    "q97_window_rank_zoo",
-    "q98_column_profile",
-    "q99_curation_decisions",
-    "q104_semantic_dedup",
-    "q105_segment_removal",
-    "q112_gram_matrix",
-    "q113_fuzzy_prefix_pairs",
-    "q114_leakage_safe_split",
-    "q117_soft_dedup_weights",
-    "q122_dedup_survivorship",
-    "q131_bpe_token_stats",
-    "q132_multimodal_curation_decisions",
-    "q133_bpe_chunks",
-    "q134_bpe_byte_stats",
-    # (2) new this round:
-    "q138_versioned_retrieval_updates",
-    # (3) round-12 code-change anchor:
-    "q136_incremental_ann_index",
-]
-
-assert len(_DRIVER_WINDOW_R12) == 50, len(_DRIVER_WINDOW_R12)
 
 # Driver verification window, round 13 — the round-12 verdict's task 3:
 # after the r12 rotation the latest-green distribution was 50 r12 /

@@ -80,9 +80,11 @@ compaction folds crossing the stream — `topk` is bit-equal to the batch
 operator `similarity.ivf_ann_topk` over the latest live vector of every
 id (the union of all admitted batches for an insert-only feed). Both
 paths share `similarity.ivf_query_probes` / `ivf_score_probes`, so the
-equality is by construction once admission is exactly-once; the q136
-and q139 registry entries value-check the fold against the q44 SQL
-oracle.
+equality is by construction once admission is exactly-once. The q136
+and q139 registry entries are the batch side (compaction.
+versioned_latest_live + ivf_ann_topk over their event slices, oracled
+against the q44 SQL); tests/test_sink_equals_query.py drains this sink
+with the same slices and asserts the equality.
 
 The index is self-describing: the `cell` column carries a parameter
 stamp (centroid digest, scheme id, quantization) as column metadata —
@@ -431,8 +433,7 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
     Equality contract: after any interleaving of inserts, updates,
     deletes, replays, restarts and folds, `topk` is bit-equal to batch
     `similarity.ivf_ann_topk` over the latest live image of every id
-    (q139 value-checks against the q44 SQL composed with q03-style
-    latest-image compaction).
+    (q139's batch plan; tests/test_sink_equals_query.py).
     """
 
     _KEY = ("vec_id", "version")
@@ -850,119 +851,3 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
         # would recompute per action. Pinned AFTER the storage
         # projection (docstring: code-size blocks on the sq8 tier).
         return statedir.pinned_or_none(self._assign(vecs, keep_residual=True))
-
-
-def versioned_ann_topk_over_events(
-    events: list[tuple[str, DataFrame]],
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    version_col: str = "version",
-    vec_col: str = "embedding",
-    quantize_bp: int | None = 10000,
-) -> DataFrame:
-    """Fold ("upsert", (vec_id, version, embedding) df) / ("delete",
-    (vec_id) df) / ("vdelete", (vec_id, version) df) event slices
-    through versioned first-wins admission and probe the latest live
-    image — the in-memory harness for the q136 and q139 registry entries
-    (q136: one upsert event per slice at version 0), mirroring
-    retrieval_index.versioned_bm25_over_events. 'delete' is the
-    permanent doc-level channel; 'vdelete' the in-band CDC Delete
-    carrying its sequence (kills versions <= it; a later re-insert is
-    live again — ADVICE r13). Bit-equal to `similarity.ivf_ann_topk`
-    over the version-max compaction of the live events.
-
-    Computed as ONE plan with ONE aggregate (guide §1.2-1 / §5): both
-    delete channels are order-insensitive accumulations (a distinct id
-    set, a max-version watermark per id) whose exclusions are per-row
-    filters on (vec_id, version), so they apply to the tagged union of
-    the upsert events BEFORE admission; the version-max read rule and
-    first-wins admission per (vec_id, version) are then one
-    ``min(struct(~version, event_index, vv_is_null, vv))`` per vec_id —
-    the highest live version, and within it the earliest event's
-    smallest non-null vector (``~version`` orders versions descending
-    without the overflow a negation has). Cells are assigned AFTER
-    latest-live selection
-    — cell is a pure function of the vector, so assigning
-    superseded/tombstoned versions (as the former per-event loop did)
-    was discarded work. The former loop also re-materialized the whole
-    accumulated member set with an eager localCheckpoint per event — 5+
-    serial driver jobs per drain, the measured r14 floor of this bench
-    entry (8->32-core scaling 0.97). The statedir sink
-    (VersionedAnnIndexSnapshot) keeps the true per-trigger incremental
-    path; this harness is handed the full event sequence up front, so
-    folding it pairwise was pure overhead. Precondition (as before):
-    upsert versions are non-null — the sinks' VersionedTombstoneLog
-    refuses null versions loudly on the real path."""
-    upserts: list[DataFrame] = []
-    tomb_ids: list[DataFrame] = []
-    vtomb_marks: list[DataFrame] = []
-    for ei, (kind, df) in enumerate(events):
-        if kind == "delete":
-            tomb_ids.append(
-                df.select(F.col(id_col).cast("long").alias("vec_id"))
-            )
-            continue
-        if kind == "vdelete":
-            vtomb_marks.append(
-                df.select(
-                    F.col(id_col).cast("long").alias("vec_id"),
-                    F.col(version_col).cast("long").alias("dead_version"),
-                )
-            )
-            continue
-        upserts.append(
-            df.select(
-                F.col(id_col).cast("long").alias("vec_id"),
-                F.col(version_col).cast("long").alias("version"),
-                F.col(vec_col).cast("array<float>").alias("vv"),
-                F.lit(ei).alias("__ei"),
-            )
-        )
-    if not upserts:
-        raise ValueError("versioned_ann_topk_over_events: no upsert events")
-    live = upserts[0]
-    for u in upserts[1:]:
-        live = live.unionByName(u)
-    if tomb_ids:
-        tombs = tomb_ids[0]
-        for t in tomb_ids[1:]:
-            tombs = tombs.unionByName(t)
-        live = live.join(tombs.distinct(), "vec_id", "left_anti")
-    if vtomb_marks:
-        vt = vtomb_marks[0]
-        for v in vtomb_marks[1:]:
-            vt = vt.unionByName(v)
-        vtombs = vt.groupBy("vec_id").agg(
-            F.max("dead_version").alias("dead_version")
-        )
-        live = (
-            live.join(vtombs, "vec_id", "left")
-            .filter(
-                F.col("dead_version").isNull()
-                | (F.col("version") > F.col("dead_version"))
-            )
-            .drop("dead_version")
-        )
-    latest = (
-        live.groupBy("vec_id")
-        .agg(
-            F.min(
-                F.struct(
-                    F.bitwise_not("version").alias("__nv"),
-                    F.col("__ei"),
-                    F.col("vv").isNull().alias("__vnull"),
-                    F.col("vv"),
-                )
-            ).alias("__latest")
-        )
-        .select("vec_id", F.col("__latest.vv").alias("vv"))
-    )
-    assigned = similarity.ivf_assign(
-        latest, centroids, id_col="vec_id", vec_col="vv"
-    ).select("vec_id", "vv", "cell")
-    return similarity.ivf_probe_topk(
-        assigned, queries, centroids, k, nprobe, id_col, vec_col, quantize_bp
-    )

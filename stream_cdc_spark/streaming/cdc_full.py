@@ -347,50 +347,3 @@ def _concurrently(worker: Callable[[], None], caller: Callable[[], None]) -> Non
     t.join()
     if errors:
         raise errors[0]
-
-
-def composed_bm25_over_envelopes(
-    envelope_batches: list[DataFrame],
-    query_terms: list[str],
-    min_tokens: int = 5,
-    top_k: int = 15,
-    id_field: str = "doc_id",
-    text_field: str = "text",
-    event_type_col: str = "event_type",
-    version_col: str = "gtid_seq",
-    content_col: str = "content",
-) -> DataFrame:
-    """Fold typed CDC envelope batches through the composed pipeline's
-    GATE + versioned-admission semantics and score the latest live
-    GATED images — the in-memory harness for the q140 registry entry.
-    The gate and the split are the exact CdcFullPipeline path
-    (default_quality_predicate + cdc_upserts_and_deletes applied to the
-    gate-filtered envelope stream), then the events fold through
-    retrieval_index.versioned_bm25_over_events — so the harness proves
-    the same composition the statedir sink runs: a version failing the
-    gate is admitted nowhere, and the version-max read serves the last
-    image that PASSED."""
-    from stream_cdc_spark.streaming.retrieval_index import (
-        versioned_bm25_over_events,
-    )
-
-    is_upsert = F.col(event_type_col).isin("Insert", "Update")
-    gate = default_quality_predicate(
-        f"{content_col}.{text_field}", min_tokens
-    )
-    events: list[tuple[str, DataFrame]] = []
-    for env in envelope_batches:
-        kept = env.filter(~is_upsert | gate)
-        upserts, deletes = cdc_upserts_and_deletes(
-            kept,
-            id_field=id_field,
-            text_field=text_field,
-            event_type_col=event_type_col,
-            version_col=version_col,
-            content_col=content_col,
-        )
-        events.append(("upsert", upserts))
-        # in-band deletes are VERSIONED (kill versions <= the delete's
-        # sequence — the CdcFullPipeline channel semantics, module doc)
-        events.append(("vdelete", deletes))
-    return versioned_bm25_over_events(events, query_terms, top_k=top_k)

@@ -45,8 +45,9 @@ Equality contract (tests/test_incremental_graph.py, mirroring
 test_lsh_snapshot.py's standard): after any sequence of edge batches —
 including across a restart from on-disk state — labels() is bit-equal
 to dedup.connected_components over the union of all edges. Registry
-twin: q135 folds the q64 edge set through this path in three
-micro-batch slices against the same recursive-CTE oracle.
+twin: q135 is that batch plan over the q64 edge set's three
+micro-batch slices (recursive-CTE oracle); tests/test_sink_equals_query
+.py drains this sink with the same slices and asserts the equality.
 
 Reference analogue: none — the reference (SykesCottages/stream-cdc) has
 no graph state at all; this is part of the training-data curation
@@ -254,62 +255,6 @@ def incremental_cc_step(
         "vertex", F.coalesce("new_root", "vertex").alias("root")
     )
     return members_delta, parents_delta
-
-
-def apply_parent_delta(flat_parents: DataFrame, delta: DataFrame) -> DataFrame:
-    """Fold a step's parents_delta into a flattened log, keeping it flat.
-
-    delta is flat by construction (its parents are fixpoint labels, and
-    its children were canonical roots, so they never appear as CHILDREN
-    of the old log — though they may appear as its parents), so one
-    substitution pass suffices: old rows whose parent was just absorbed
-    re-point to the absorber, then the delta appends.
-    """
-    d_sub = delta.select(
-        F.col("child").alias("d_child"), F.col("parent").alias("d_parent")
-    )
-    rewired = flat_parents.join(
-        F.broadcast(d_sub), flat_parents["parent"] == d_sub["d_child"], "left"
-    ).select(
-        "child", F.coalesce("d_parent", "parent").alias("parent")
-    )
-    return rewired.unionByName(delta.select("child", "parent"))
-
-
-def components_over_batches(
-    edge_batches: list[DataFrame],
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Final (vertex, component) labels after draining the given edge
-    micro-batches — the in-memory harness for the q135 registry entry
-    and the equality tests. Bit-equal to dedup.connected_components over
-    the union of the batches.
-
-    Computed as ONE fixpoint over the unioned edge set (guide §1.2-1 /
-    §5). That is not an approximation — it is the harness's declared
-    contract, and it is exact by algebra: edges carry no per-batch
-    payload and union-find admission is idempotent/commutative over an
-    edge multiset (re-delivered or re-ordered edges change nothing), so
-    the fold's final labels are a function of the edge SET alone. The
-    former batch-at-a-time fold re-proved that identity the slow way:
-    ~17 driver-serialized jobs per slice (per-slice pins of the
-    accumulated member set, per-slice merge-graph collects, broadcast
-    probes — measured 52 jobs / 9.1 s for the 3-slice sf0.01 drain vs
-    23 jobs / 1.4 s for the identical one-shot fixpoint on the same
-    host). The true per-trigger incremental path — a real stream cannot
-    see future batches — is incremental_cc_step and the statedir sink
-    (IncrementalComponentsSnapshot) below, whose restart/replay equality
-    to batch CC tests/test_components_stream.py and
-    tests/test_incremental_graph.py hold directly."""
-    if not edge_batches:
-        raise ValueError("components_over_batches: no edge batches given")
-    from stream_cdc_spark.operators.dedup import connected_components
-
-    allb = edge_batches[0].select(id_a, id_b)
-    for e in edge_batches[1:]:
-        allb = allb.unionByName(e.select(id_a, id_b))
-    return connected_components(allb, id_a, id_b)
 
 
 class IncrementalComponentsSnapshot:

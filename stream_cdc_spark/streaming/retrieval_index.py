@@ -45,8 +45,10 @@ batch ``text.bm25_topk`` and ``tfidf_top_terms`` to q54's scorer, both
 over the latest live image of every admitted doc. Both paths share
 ``text.bm25_topk_from_postings`` / ``text.tfidf_top_terms_from_tf``
 verbatim, so equality is by construction once admission is
-exactly-once; the q137 and q138 registry entries value-check the fold
-against the q89 SQL oracle.
+exactly-once. The q137 and q138 registry entries are the batch side
+(compaction.versioned_latest_live + text.bm25_topk over their event
+slices, oracled against the q89 SQL); tests/test_sink_equals_query.py
+drains this sink with the same slices and asserts the equality.
 
 Deletions (the right-to-be-forgotten path a production training-data
 corpus needs) affect READS ONLY — the admit path never consults them,
@@ -176,10 +178,10 @@ class VersionedRetrievalIndexSnapshot:
     ``text.bm25_topk`` over the latest live image of every admitted
     doc. Shared scoring body (text.bm25_topk_from_postings), so the
     equality is by construction once the latest-live reduction is
-    exact. The q138 registry entry value-checks an interleaved
-    insert/update/delete drain against q89's SQL over the compacted
-    latest images — q03-style latest-image compaction composed with
-    q89's scorer, per the round-11 verdict.
+    exact. q138's batch plan over an interleaved insert/update/delete
+    sequence is oracled against q89's SQL over the compacted latest
+    images, and tests/test_sink_equals_query.py drains this sink with
+    the same sequence and asserts the equality.
 
     Reference anchor: the coordinator's process-then-checkpoint loop
     (stream_cdc/coordinator.py:110-159) carrying mysql.py's Update
@@ -583,140 +585,6 @@ class VersionedRetrievalIndexSnapshot:
             )
         )
         return new_docs, new_postings
-
-
-def versioned_bm25_over_events(
-    events: list[tuple[str, DataFrame]],
-    query_terms: list[str],
-    top_k: int = 15,
-    id_col: str = "doc_id",
-    version_col: str = "version",
-    text_col: str = "text",
-) -> DataFrame:
-    """Fold an interleaved upsert/delete event sequence through the
-    versioned admission (exactly-once per (doc_id, version), version-max
-    read, doc-level deletes) and score the latest live images — the
-    in-memory harness for the q137 (one upsert event per slice at
-    version 0) and q138 registry entries and the equality tests.
-    ``events``: [('upsert', df(doc_id, version, text)) | ('delete',
-    df(doc_id)) | ('vdelete', df(doc_id, version)), ...] applied in
-    order (though the final ranking is order-insensitive by construction
-    — that is what the oracle check proves). 'delete' is the permanent
-    doc-level channel (kills every version, present and future);
-    'vdelete' is the in-band CDC Delete carrying its sequence (kills
-    versions <= it; a later re-insert is live again — ADVICE r13).
-    Bit-equal to `text.bm25_topk` over the compacted corpus (latest live
-    version per doc).
-
-    Computed as ONE plan with a single pin and ONE admission aggregate
-    (guide §1.2-1 / §5): both delete channels are order-insensitive
-    accumulations (a distinct id set, a max-version watermark per id)
-    whose exclusions are per-row filters on (doc_id, version), so they
-    apply to the tagged union of the upsert events BEFORE admission;
-    the version-max read rule and first-wins admission per (doc_id,
-    version) are then one ``min(struct(~version, event_index,
-    text_is_null, text))`` per doc_id — the highest live version, and
-    within it the earliest event's smallest non-null text (``~version``
-    orders versions descending without the overflow a negation has).
-    Only the LATEST LIVE image is
-    tokenized — postings of a (doc, version) are a pure function of its
-    text, so tokenizing superseded/killed versions (as the former
-    per-event loop did before filtering them out) was discarded work.
-    The tokenized latest-live relation is pinned ONCE per drain (corpus
-    stats + term-pruned postings both read it) where the former loop
-    paid 11 eager localCheckpoints on the q138 event sequence. The
-    statedir sink (VersionedRetrievalIndexSnapshot) keeps the true
-    per-trigger incremental path. Precondition (as before): upsert
-    versions are non-null — the sinks' VersionedTombstoneLog refuses
-    null versions loudly on the real path."""
-    if not events:
-        raise ValueError("versioned_bm25_over_events: no events given")
-    upserts: list[DataFrame] = []
-    tomb_ids: list[DataFrame] = []
-    vtomb_marks: list[DataFrame] = []
-    for ei, (kind, b) in enumerate(events):
-        if kind == "delete":
-            tomb_ids.append(
-                b.select(F.col(id_col).cast("long").alias("doc_id"))
-            )
-            continue
-        if kind == "vdelete":
-            vtomb_marks.append(
-                b.select(
-                    F.col(id_col).cast("long").alias("doc_id"),
-                    F.col(version_col).cast("long").alias("dead_version"),
-                )
-            )
-            continue
-        if kind != "upsert":
-            raise ValueError(f"unknown event kind {kind!r}")
-        upserts.append(
-            b.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.col(version_col).cast("long").alias("version"),
-                F.col(text_col).cast("string").alias("text"),
-                F.lit(ei).alias("__ei"),
-            )
-        )
-    if not upserts:
-        raise ValueError("versioned_bm25_over_events: no upsert events")
-    live = upserts[0]
-    for u in upserts[1:]:
-        live = live.unionByName(u)
-    if tomb_ids:
-        tombs = tomb_ids[0]
-        for t in tomb_ids[1:]:
-            tombs = tombs.unionByName(t)
-        live = live.join(tombs.distinct(), "doc_id", "left_anti")
-    if vtomb_marks:
-        vt = vtomb_marks[0]
-        for v in vtomb_marks[1:]:
-            vt = vt.unionByName(v)
-        vtombs = vt.groupBy("doc_id").agg(
-            F.max("dead_version").alias("dead_version")
-        )
-        live = (
-            live.join(vtombs, "doc_id", "left")
-            .filter(
-                F.col("dead_version").isNull()
-                | (F.col("version") > F.col("dead_version"))
-            )
-            .drop("dead_version")
-        )
-    latest = (
-        live.groupBy("doc_id")
-        .agg(
-            F.min(
-                F.struct(
-                    F.bitwise_not("version").alias("__nv"),
-                    F.col("__ei"),
-                    F.col("text").isNull().alias("__tnull"),
-                    F.col("text"),
-                )
-            ).alias("__latest")
-        )
-        .select("doc_id", F.col("__latest.text").alias("text"))
-    )
-    # pin ONCE per drain: corpus stats and postings both read it
-    toks = latest.select(
-        "doc_id", text.tokens(F.col("text")).alias("t")
-    ).localCheckpoint(eager=True)
-    corpus = toks.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.coalesce(F.sum(F.size("t")), F.lit(0)).cast("bigint").alias("l"),
-    )
-    matching = (
-        toks.select(
-            "doc_id",
-            F.size("t").cast("bigint").alias("dl"),
-            F.explode("t").alias("word"),
-        )
-        .filter(F.col("word").isin(list(query_terms)))
-        .groupBy("doc_id", "dl", "word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .select("doc_id", "word", "tf", "dl")
-    )
-    return text.bm25_topk_from_postings(matching, corpus, top_k)
 
 
 def cdc_upserts_and_deletes(

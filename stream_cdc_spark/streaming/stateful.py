@@ -2,7 +2,7 @@
 
 The reference's only stateful construct is the offset checkpoint (O18-O20);
 Spark's arbitrary-stateful API generalizes it: per-key state evolves across
-micro-batches with exactly-once semantics from the checkpoint. Two
+micro-batches with exactly-once semantics from the checkpoint. The
 operators:
 
   position_tracker — per-key high-water mark + event count: the streaming
@@ -15,9 +15,16 @@ operators:
     arrive.
 
   write_dedup_tracker — streaming write-dedup over (key, fingerprint) with
-    TTL retention; prefers the Spark 4 transformWithState API
-    (per-fingerprint MapState) when the runtime has protobuf, else an
-    applyInPandasWithState seen-set fallback.
+    TTL retention, one seen-set per key.
+
+Every custom stateful operator here (write_dedup_tracker,
+heavy_hitter_stream, lsh_dedup_stream) runs on applyInPandasWithState,
+the one state API this runtime can execute and test. Spark 4's
+transformWithStateInPandas needs Python protobuf for its state-server
+protocol, so it is not used. A checkpoint written by a
+transformWithState operator does not restart under these operators
+(its state schema and operator differ); start such a query from a fresh
+checkpoint.
 
 State is Arrow-transferred pandas per key-batch; at 100 TB keys shard
 across executors and the state store should be RocksDB
@@ -150,7 +157,7 @@ def session_tracker(
 
 
 # ---------------------------------------------------------------------------
-# transformWithState (Spark 4 arbitrary-state API)
+# Streaming write-dedup
 # ---------------------------------------------------------------------------
 
 WRITE_DEDUP_OUT = StructType(
@@ -162,84 +169,15 @@ WRITE_DEDUP_OUT = StructType(
 )
 
 
-class _WriteDedupProcessor:
-    """StatefulProcessor emitting only first-seen fingerprints per key.
-
-    Streaming twin of the reference's write-dedup (state comparison before
-    save, stream_cdc/coordinator.py:110-159 / state/dynamodb.py:92-122) and
-    of this engine's batch ParquetKVState dedup: a MapState of seen
-    fingerprints with a TTL, so redelivered payloads (at-least-once
-    sources) are dropped exactly where the sink hands off.
-
-    Uses the Spark 4 transformWithState API rather than
-    applyInPandasWithState: per-fingerprint MapState entries mean a
-    redelivery probe touches ONE state-store key instead of
-    deserializing a whole per-key blob — the RocksDB-friendly layout for
-    100 TB retention — and the TTL bounds state without a timer loop.
-    """
-
-    def __init__(self, ttl_ms: int | None):
-        self.ttl_ms = ttl_ms
-
-    def init(self, handle) -> None:
-        self.seen = handle.getMapState(
-            "seen", "fp STRING", "one LONG", ttlDurationMs=self.ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        first: dict[str, int | None] = {}
-        for pdf in rows:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("seq")
-            for fp, seq in zip(pdf["fp"], pdf["seq"]):
-                if fp in first:
-                    continue
-                if self.seen.containsKey((fp,)):
-                    continue
-                first[fp] = None if pd.isna(seq) else int(seq)
-        for fp in first:
-            self.seen.updateValue((fp,), (1,))
-        if first:
-            yield pd.DataFrame(
-                {
-                    "key": [str(key[0])] * len(first),
-                    "fp": list(first),
-                    "seq": list(first.values()),
-                }
-            )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def transform_with_state_available() -> bool:
-    """transformWithStateInPandas needs Python-side protobuf for the state
-    server protocol; absent in this container (no installs), present on a
-    standard cluster image."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 WRITE_DEDUP_STATE = StructType(
     [StructField("seen", ArrayType(StringType()), True)]
 )
 
 
-def _write_dedup_legacy(ttl_ms: int | None):
-    """applyInPandasWithState fallback: the seen-set rides in one per-key
-    array blob (fine for bounded key cardinality; the MapState layout in
-    _WriteDedupProcessor is the per-fingerprint-addressable scale path)."""
+def _write_dedup(ttl_ms: int | None):
+    """Per-key group function: the seen-set rides in one per-key array
+    blob, bounded by the TTL (a redelivery probe deserializes the key's
+    whole blob, so the layout suits bounded per-key fingerprint counts)."""
 
     def inner(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -277,16 +215,15 @@ def write_dedup_tracker(
     fp_col: str = "fp",
     seq_col: str = "seq",
     ttl_hours: int | None = 24,
-    use_transform_with_state: bool | None = None,
 ) -> DataFrame:
     """Streaming write-dedup: emit each (key, fingerprint) once within the
     TTL horizon; duplicates from at-least-once redelivery are dropped.
 
-    `use_transform_with_state=None` auto-selects the Spark 4
-    transformWithState implementation when the runtime supports it
-    (per-fingerprint MapState + native TTL — the 100 TB layout) and falls
-    back to applyInPandasWithState with a per-key seen-set blob otherwise.
-    Both implement the same contract and share the output schema.
+    Streaming twin of the reference's write-dedup (state comparison
+    before save, stream_cdc/coordinator.py:110-159 / state/dynamodb.py:
+    92-122) and of this engine's batch ParquetKVState dedup: a TTL-bounded
+    seen-set per key, so redelivered payloads (at-least-once sources) are
+    dropped exactly where the sink hands off.
     """
     keyed = events.selectExpr(
         f"CAST({key_col} AS STRING) AS key",
@@ -294,26 +231,8 @@ def write_dedup_tracker(
         f"CAST({seq_col} AS LONG) AS seq",
     )
     ttl_ms = None if ttl_hours is None else ttl_hours * 3_600_000
-    if use_transform_with_state is None:
-        use_transform_with_state = transform_with_state_available()
-    if use_transform_with_state:
-        from pyspark.sql.streaming import StatefulProcessor
-
-        # Subclass lazily so importing this module never requires the
-        # StatefulProcessor ABC (or protobuf) at module load.
-        proc_cls = type(
-            "_WriteDedupStatefulProcessor",
-            (_WriteDedupProcessor, StatefulProcessor),
-            {},
-        )
-        return keyed.groupBy("key").transformWithStateInPandas(
-            statefulProcessor=proc_cls(ttl_ms),
-            outputStructType=WRITE_DEDUP_OUT,
-            outputMode="Update",
-            timeMode="ProcessingTime" if ttl_ms is not None else "None",
-        )
     return keyed.groupBy("key").applyInPandasWithState(
-        _write_dedup_legacy(ttl_ms),
+        _write_dedup(ttl_ms),
         outputStructType=WRITE_DEDUP_OUT,
         stateStructType=WRITE_DEDUP_STATE,
         outputMode="update",
@@ -339,16 +258,14 @@ def hll_distinct_stream(
     """Continuously maintained approximate distinct counts per key — the
     streaming twin of q90 (operators/incremental.py kind='hll').
 
-    Deliberately NOT a custom StatefulProcessor: ``hll_sketch_agg`` is a
+    Deliberately NOT a custom stateful operator: ``hll_sketch_agg`` is a
     typed imperative aggregate, so a plain streaming groupBy keeps the
     fixed-size DataSketches HLL buffer in Spark's own state store —
     exactly-once across restarts via the checkpoint, RocksDB-capable when
     state outgrows heap, merged across micro-batches with the same union
-    the batch path uses (incremental._MERGE['hll']). Where write-dedup
-    needs transformWithState for per-entry MapState addressing, sketch
-    maintenance is what streaming aggregation already is; declaring it
-    lets Catalyst plan partial aggregation map-side before the state-store
-    shuffle.
+    the batch path uses (incremental._MERGE['hll']). Sketch maintenance
+    is what streaming aggregation already is; declaring it lets Catalyst
+    plan partial aggregation map-side before the state-store shuffle.
 
     HLL registers are max-merged, so the estimate is independent of event
     order and micro-batch slicing: after draining the same input, the
@@ -378,7 +295,7 @@ def moments_stream(
     Spark's state store.
 
     Like hll_distinct_stream, deliberately declarative rather than a
-    custom StatefulProcessor: count/sum over exact integers are
+    custom stateful operator: count/sum over exact integers are
     mergeable monoids, so a plain streaming groupBy gets map-side
     partial aggregation before the state shuffle, exactly-once restart
     via the checkpoint, and RocksDB capability for free. Because every
@@ -483,65 +400,18 @@ HEAVY_HITTER_STATE = StructType(
 )
 
 
-class _HeavyHitterProcessor:
-    """StatefulProcessor maintaining one bounded Misra-Gries counter map
-    per key and emitting the full current summary each micro-batch.
+def _heavy_hitter(capacity: int):
+    """Per-key group function maintaining one bounded Misra-Gries counter
+    map and emitting the full current summary each micro-batch.
 
-    Unlike HLL (hll_distinct_stream, where a built-in typed aggregate
-    already IS the sketch), Spark has no MG aggregate, so this is genuine
-    transformWithState territory. The whole state is <= capacity entries
-    BY CONSTRUCTION — the sketch's memory bound is the operator's state
-    bound, so per-key state can never outgrow the store no matter how
-    large the key's vocabulary gets. The undercount guarantee
-    (<= N_key/(capacity+1), incremental.mg_combine) survives micro-batch
-    slicing and restarts because MERGE error is additive over any
-    partitioning of the stream.
-    """
-
-    def __init__(self, capacity: int):
-        self.capacity = capacity
-
-    def init(self, handle) -> None:
-        self.sketch = handle.getValueState(
-            "sketch", "items ARRAY<STRING>, counts ARRAY<BIGINT>"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        from stream_cdc_spark.operators.incremental import mg_combine
-
-        if self.sketch.exists():
-            items, counts = self.sketch.get()
-            counters = dict(zip(items, (int(c) for c in counts)))
-        else:
-            counters = {}
-        local: dict[str, int] = {}
-        for pdf in rows:
-            for item in pdf["item"]:
-                local[item] = local.get(item, 0) + 1
-        counters = mg_combine(counters, local, self.capacity)
-        self.sketch.update((list(counters), list(counters.values())))
-        yield pd.DataFrame(
-            {
-                "key": [str(key[0])] * len(counters),
-                "item": list(counters),
-                "c_hat": list(counters.values()),
-            }
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def _heavy_hitter_legacy(capacity: int):
-    """applyInPandasWithState fallback carrying the same <= capacity-entry
-    state blob — here the blob layout is NOT a scale compromise (unlike
-    write-dedup's seen-set): MG state is capacity-bounded by definition."""
+    Spark has no MG aggregate (unlike HLL, where hll_sketch_agg already
+    IS the sketch), so this is arbitrary-state territory. The state blob
+    holds <= capacity entries BY CONSTRUCTION — the sketch's memory bound
+    is the operator's state bound, so per-key state never outgrows the
+    store however large the key's vocabulary gets. The undercount
+    guarantee (<= N_key/(capacity+1), incremental.mg_combine) survives
+    micro-batch slicing and restarts because MERGE error is additive
+    over any partitioning of the stream."""
 
     def inner(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -575,7 +445,6 @@ def heavy_hitter_stream(
     key_col: str = "event_type",
     item_col: str = "user_id",
     capacity: int = 64,
-    use_transform_with_state: bool | None = None,
 ) -> DataFrame:
     """Continuously maintained per-key heavy-hitter candidates — the
     streaming twin of q108 (incremental.heavy_hitters): after draining any
@@ -593,24 +462,8 @@ def heavy_hitter_stream(
         f"CAST({key_col} AS STRING) AS key",
         f"CAST({item_col} AS STRING) AS item",
     )
-    if use_transform_with_state is None:
-        use_transform_with_state = transform_with_state_available()
-    if use_transform_with_state:
-        from pyspark.sql.streaming import StatefulProcessor
-
-        proc_cls = type(
-            "_HeavyHitterStatefulProcessor",
-            (_HeavyHitterProcessor, StatefulProcessor),
-            {},
-        )
-        return keyed.groupBy("key").transformWithStateInPandas(
-            statefulProcessor=proc_cls(capacity),
-            outputStructType=HEAVY_HITTER_OUT,
-            outputMode="Update",
-            timeMode="None",
-        )
     return keyed.groupBy("key").applyInPandasWithState(
-        _heavy_hitter_legacy(capacity),
+        _heavy_hitter(capacity),
         outputStructType=HEAVY_HITTER_OUT,
         stateStructType=HEAVY_HITTER_STATE,
         outputMode="update",
@@ -651,7 +504,7 @@ _SEEN_CAP_FACTOR = 8
 
 
 def _bucket_matches(members, pdfs, num_hashes, min_agree, max_bucket, seen=None):
-    """Shared per-bucket admission scan for both state APIs.
+    """Per-bucket admission scan of _lsh_bucket.
 
     ``members``: list of (doc_id, signature tuple) already in the bucket.
     ``seen``: list of capped-but-processed doc ids (redelivery guard for
@@ -688,66 +541,20 @@ def _bucket_matches(members, pdfs, num_hashes, min_agree, max_bucket, seen=None)
     return (out_doc, out_dup, out_agree), members, seen
 
 
-class _LshDedupProcessor:
-    """StatefulProcessor holding one LSH bucket's membership: the arriving
-    doc's signature is compared against every resident of its (band, key)
-    bucket; agreements >= min_agree emit a near-dup match immediately, in
-    the same micro-batch the doc arrives — the continuous form of q110's
-    batch admission (sketch-level decision; the exact-Jaccard certificate
-    stays a batch join over the emitted candidates, mirroring
-    heavy_hitter_stream's candidates-now/certify-later split).
+def _lsh_bucket(num_hashes: int, min_agree: float, max_bucket: int):
+    """Per-(band, key) group function holding one LSH bucket's
+    membership: the arriving doc's signature is compared against every
+    resident of its bucket; agreements >= min_agree emit a near-dup match
+    in the same micro-batch the doc arrives — the continuous form of
+    q110's batch admission (sketch-level decision; the exact-Jaccard
+    certificate stays a batch join over the emitted candidates,
+    mirroring heavy_hitter_stream's candidates-now/certify-later split).
 
     State is bounded by ``max_bucket`` members per bucket (hot buckets —
     boilerplate bands — stop admitting new residents but still match
     against the existing ones, the same guard as the batch side's
-    hot-bucket split), so per-key state cannot grow with the corpus.
-    """
-
-    def __init__(self, num_hashes: int, min_agree: float, max_bucket: int):
-        self.num_hashes = num_hashes
-        self.min_agree = min_agree
-        self.max_bucket = max_bucket
-
-    def init(self, handle) -> None:
-        self.bucket = handle.getValueState(
-            "bucket",
-            "ids ARRAY<BIGINT>, sigs ARRAY<ARRAY<BIGINT>>, seen ARRAY<BIGINT>",
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self.bucket.exists():
-            ids, sigs, seen = self.bucket.get()
-            members = [
-                (int(i), tuple(int(x) for x in s)) for i, s in zip(ids, sigs)
-            ]
-        else:
-            members, seen = [], []
-        (docs, dups, agrees), members, seen = _bucket_matches(
-            members, rows, self.num_hashes, self.min_agree, self.max_bucket,
-            seen,
-        )
-        self.bucket.update(
-            ([m[0] for m in members], [list(m[1]) for m in members], seen)
-        )
-        if docs:
-            yield pd.DataFrame(
-                {"doc_id": docs, "dup_of": dups, "agree_ppm": agrees}
-            )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def _lsh_dedup_legacy(num_hashes: int, min_agree: float, max_bucket: int):
-    """applyInPandasWithState fallback: bucket membership rides in one
-    per-bucket blob. Bounded by max_bucket, so (as with Misra-Gries) the
-    blob layout is not a scale compromise."""
+    hot-bucket split), so the per-bucket blob cannot grow with the
+    corpus."""
 
     def inner(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -867,7 +674,6 @@ def lsh_dedup_stream(
     bands: int = 16,
     min_agree: float = 0.8,
     max_bucket: int = 64,
-    use_transform_with_state: bool | None = None,
 ) -> DataFrame:
     """Continuous near-duplicate admission over a document stream — the
     streaming twin of dedup.incremental_verified_dedup: every arriving doc
@@ -896,50 +702,17 @@ def lsh_dedup_stream(
     Throughput note: this per-bucket stateful form is the continuous-
     admission design point (small micro-batches, sub-second). Draining a
     LARGE backlog through it pays one Python group invocation per
-    (band, key) bucket — ~bands groups per doc — which the fallback
-    applyInPandasWithState API cannot amortize. For backfills and bulk
+    (band, key) bucket — ~bands groups per doc — which
+    applyInPandasWithState cannot amortize. For backfills and bulk
     drains use streaming.lsh_snapshot.LshDedupSnapshot: the same
     admission semantics as JVM-side joins against a batch-versioned
     parquet snapshot — measured 3367 docs/s on the 10x-corpus drain vs
-    284 docs/s recorded for this operator's fallback in round 4 (see
+    284 docs/s recorded for this operator in round 4 (see
     SCALE_BENCH_r05.md for the round-5 numbers of both paths).
     """
     keyed = banded_signatures(docs, text_col, id_col, k, num_hashes, bands)
-    if use_transform_with_state is None:
-        use_transform_with_state = transform_with_state_available()
-        if not use_transform_with_state:
-            # Round-5 measured the implicit fallback draining a 50k-doc
-            # backlog at <87 docs/s (vs 3367 for the snapshot sink) — a
-            # wall a user should never hit by accident. On runtimes
-            # without transformWithState the per-bucket fallback is
-            # EXPLICIT opt-in only; continuous small-batch admission is
-            # its legitimate use, bulk drains are not.
-            raise RuntimeError(
-                "transformWithStateInPandas is unavailable on this runtime "
-                "and the applyInPandasWithState fallback is opt-in only "
-                "(it drains bulk backlogs at <100 docs/s). For backfills "
-                "and drains use streaming.lsh_snapshot.LshDedupSnapshot "
-                "(pipeline mode PIPELINE=lsh_dedup — same admission "
-                "semantics, JVM joins, ~38x faster); for continuous "
-                "small-batch admission pass use_transform_with_state=False "
-                "explicitly."
-            )
-    if use_transform_with_state:
-        from pyspark.sql.streaming import StatefulProcessor
-
-        proc_cls = type(
-            "_LshDedupStatefulProcessor",
-            (_LshDedupProcessor, StatefulProcessor),
-            {},
-        )
-        return keyed.groupBy("band", "key").transformWithStateInPandas(
-            statefulProcessor=proc_cls(num_hashes, min_agree, max_bucket),
-            outputStructType=LSH_DEDUP_OUT,
-            outputMode="Update",
-            timeMode="None",
-        )
     return keyed.groupBy("band", "key").applyInPandasWithState(
-        _lsh_dedup_legacy(num_hashes, min_agree, max_bucket),
+        _lsh_bucket(num_hashes, min_agree, max_bucket),
         outputStructType=LSH_DEDUP_OUT,
         stateStructType=LSH_DEDUP_STATE,
         outputMode="update",
@@ -963,7 +736,7 @@ def quantile_stream(
     (Greenwald-Khanna summaries), so a declarative streaming groupBy
     keeps the bounded-size summary in Spark's state store — exactly-once
     across restarts, RocksDB-capable, partial-aggregated map-side before
-    the state shuffle. No custom StatefulProcessor needed.
+    the state shuffle. No custom stateful operator needed.
 
     Unlike HLL (whose register max-merge makes the drained stream answer
     bit-equal to batch), GK summaries are merge-order sensitive: the

@@ -144,9 +144,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_session_conf(spark)
     df = _read_parquet(spark, table_path(sf_dir, name))
     return _normalize_ts(df, _TS_COLS.get(name, ()))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql use)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

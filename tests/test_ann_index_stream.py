@@ -15,13 +15,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from stream_cdc_spark.operators import similarity
+from stream_cdc_spark.operators import compaction, similarity
 from stream_cdc_spark.streaming import statedir
 from stream_cdc_spark.streaming.ann_index import (
     ANN_VLEDGER_SCHEMA,
     VersionedAnnIndexSnapshot,
     centroid_digest,
-    versioned_ann_topk_over_events,
 )
 from stream_cdc_spark.tables import load
 from tests.conftest import SF_SMALL
@@ -250,12 +249,15 @@ def test_compaction_keeps_cells_clustered(spark, tmp_path):
 
 
 def test_in_memory_fold_matches_batch(spark):
+    live = compaction.versioned_latest_live(
+        [("upsert", b) for b in _slices(spark)],
+        "vec_id", "version", "embedding",
+    )
     got = sorted(
         map(
             tuple,
-            versioned_ann_topk_over_events(
-                [("upsert", b) for b in _slices(spark)],
-                _centroids_df(spark), _queries(spark),
+            similarity.ivf_ann_topk(
+                live, _queries(spark), _centroids_df(spark),
                 k=5, nprobe=2, quantize_bp=10000,
             ).collect(),
         )

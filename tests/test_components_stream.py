@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from stream_cdc_spark.operators import dedup
 from stream_cdc_spark.streaming.components import (
     IncrementalComponentsSnapshot,
-    components_over_batches,
     flatten_parent_log,
 )
 from stream_cdc_spark.tables import load
@@ -175,26 +174,22 @@ def test_leveled_compaction_restart_equality(spark, tmp_path):
     assert _labels_set(snap.labels(spark)) == _labels_set(want)
 
 
-def test_components_over_batches_equals_batch(spark):
-    """The in-memory fold (q135's core): interleaved micro-batch slices
-    of the q64 edge set produce labels bit-equal to one-shot batch CC."""
-    edges = _doc_edges(spark).localCheckpoint(eager=True)
-    slices = [edges.filter(F.col("id_a") % 3 == i) for i in range(3)]
-    got = components_over_batches(slices)
-    want = dedup.connected_components(edges)
-    assert _labels_set(got) == _labels_set(want)
-    assert got.columns == want.columns == ["vertex", "component"]
-
-
-def test_components_over_batches_all_empty_returns_empty(spark):
-    """A corpus with zero qualifying pairs must fold to an EMPTY labels
-    relation — the batch twin returns empty there, and q135 must stay
-    empty-not-ERR at a scale factor with no near-dups (review finding:
-    this used to raise ValueError)."""
+def test_all_empty_slices_give_empty_labels(spark, tmp_path):
+    """A corpus with zero qualifying pairs must give an EMPTY labels
+    relation on both sides of q135 — the batch plan (connected
+    components over the union of empty slices) and the sink drained
+    with the same slices — so q135 stays empty-not-ERR at a scale
+    factor with no near-dups."""
     empty = _edges(spark, [])
-    got = components_over_batches([empty, empty, empty])
+    got = dedup.connected_components(
+        empty.unionByName(empty).unionByName(empty)
+    )
     assert got.columns == ["vertex", "component"]
     assert got.count() == 0
+    snap = IncrementalComponentsSnapshot(str(tmp_path / "s"))
+    for i in range(3):
+        snap.foreach_batch(empty, i)
+    assert snap.labels(spark).count() == 0
 
 
 def test_labels_never_ride_a_shuffle_join(spark, tmp_path):

@@ -8,11 +8,7 @@ import os
 import pandas as pd
 from pyspark.sql import functions as F
 
-from stream_cdc_spark.streaming.stateful import (
-    _bucket_matches,
-    lsh_dedup_stream,
-    transform_with_state_available,
-)
+from stream_cdc_spark.streaming.stateful import _bucket_matches, lsh_dedup_stream
 from stream_cdc_spark.operators import dedup
 from stream_cdc_spark.tables import load
 from tests.conftest import SF_SMALL
@@ -116,10 +112,7 @@ def test_stream_matches_batch_candidates_across_restart(spark, tmp_path):
             .parquet(indir + "/slice=*")
         )
         q = (
-            lsh_dedup_stream(
-                stream,
-                use_transform_with_state=transform_with_state_available(),
-            )
+            lsh_dedup_stream(stream)
             .writeStream.foreachBatch(emit)
             .outputMode("update")
             .option("checkpointLocation", ckpt)
@@ -148,20 +141,3 @@ def test_stream_matches_batch_candidates_across_restart(spark, tmp_path):
     }
     assert got == want
     assert len(want) > 0  # the corpus genuinely exercises the operator
-
-
-def test_implicit_fallback_drain_is_gated(spark):
-    """Without transformWithState, the slow per-bucket fallback must be
-    EXPLICIT opt-in (round-5: <87 docs/s on bulk drains) — the implicit
-    path raises and points at LshDedupSnapshot."""
-    import pytest
-
-    if transform_with_state_available():
-        pytest.skip("fast path available on this runtime")
-    d = spark.readStream.format("rate").load().selectExpr(
-        "value as doc_id", "cast(value as string) as text"
-    )
-    with pytest.raises(RuntimeError, match="LshDedupSnapshot"):
-        lsh_dedup_stream(d)
-    # the explicit opt-in still builds a plan
-    assert lsh_dedup_stream(d, use_transform_with_state=False) is not None

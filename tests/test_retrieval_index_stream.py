@@ -12,12 +12,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from stream_cdc_spark.operators import text
+from stream_cdc_spark.operators import compaction, text
 from stream_cdc_spark.streaming import statedir
 from stream_cdc_spark.streaming.retrieval_index import (
     RETR_VDOCS_SCHEMA,
     VersionedRetrievalIndexSnapshot,
-    versioned_bm25_over_events,
 )
 from stream_cdc_spark.tables import load
 from tests.conftest import SF_SMALL
@@ -328,8 +327,12 @@ def test_in_memory_fold_matches_batch(spark):
     got = sorted(
         map(
             tuple,
-            versioned_bm25_over_events(
-                [("upsert", b) for b in _slices(spark)], TERMS, top_k=15
+            text.bm25_topk(
+                compaction.versioned_latest_live(
+                    [("upsert", b) for b in _slices(spark)],
+                    "doc_id", "version", "text",
+                ),
+                TERMS, top_k=15,
             ).collect(),
         )
     )

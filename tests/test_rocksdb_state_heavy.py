@@ -88,17 +88,12 @@ def test_lsh_dedup_stream_rocksdb_80k_buckets(rocksdb, tmp_path):
     """5000 docs x 16 bands ≈ 80k bucket keys in RocksDB; emitted distinct
     pairs must equal the batch LSH candidates at the same gate."""
     from stream_cdc_spark.operators import dedup
-    from stream_cdc_spark.streaming.stateful import (
-        lsh_dedup_stream,
-        transform_with_state_available,
-    )
+    from stream_cdc_spark.streaming.stateful import lsh_dedup_stream
 
     spark = rocksdb
     d = load(spark, SF01, "documents").select("doc_id", "text")
     emitted, progress = _drain(
-        spark, lambda s: lsh_dedup_stream(
-            s, use_transform_with_state=transform_with_state_available()
-        ), d, tmp_path, "lsh", slices=3
+        spark, lsh_dedup_stream, d, tmp_path, "lsh", slices=3
     )
     got = {
         (r["dup_of"], r["doc_id"])

@@ -205,7 +205,7 @@ def test_rocksdb_state_store_with_restart(spark, tmp_path):
 
 
 def test_write_dedup_tracker_emits_first_seen_only(spark, tmp_path):
-    """transformWithState write-dedup: a fingerprint that recurs across
+    """Streaming write-dedup: a fingerprint that recurs across
     micro-batches must be emitted exactly once per key. fp = event_id % 50
     guarantees heavy recurrence within the replayed stream."""
     from stream_cdc_spark.streaming.stateful import write_dedup_tracker
@@ -259,54 +259,6 @@ def test_write_dedup_tracker_emits_first_seen_only(spark, tmp_path):
     assert all(r.c == 1 for r in got), [r for r in got if r.c > 1][:5]
     # keys are Debezium-op labels of event_type; compare counts only
     assert len(got) == want
-
-
-def test_write_dedup_tracker_native_path(spark, tmp_path):
-    """Same contract through the Spark 4 transformWithState implementation.
-    Skipped where pyspark's state-server protocol deps (protobuf) are
-    absent — this container has no installs; cluster images do."""
-    import pytest
-
-    from stream_cdc_spark.streaming.stateful import (
-        transform_with_state_available,
-        write_dedup_tracker,
-    )
-
-    if not transform_with_state_available():
-        pytest.skip("transformWithState needs python protobuf; not in env")
-
-    cdc_replay.register(spark)
-    env = (
-        spark.readStream.format("cdc_replay")
-        .option("path", table_path(SF_SMALL, "events"))
-        .option("batchEvents", "700")
-        .load()
-    )
-    fp_stream = env.selectExpr(
-        "event_type", "CAST(pmod(seq, 50) AS STRING) AS fp", "seq"
-    )
-    out = write_dedup_tracker(
-        fp_stream, ttl_hours=None, use_transform_with_state=True
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wdedup_native")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    _drain(
-        spark,
-        "wdedup_native",
-        q,
-        lambda: spark.sql("SELECT COUNT(*) n FROM wdedup_native").collect()[0].n
-        >= 150,
-    )
-    got = spark.sql(
-        "SELECT key, fp, COUNT(*) c FROM wdedup_native GROUP BY key, fp"
-    ).collect()
-    assert all(r.c == 1 for r in got)
 
 
 @pytest.mark.slow

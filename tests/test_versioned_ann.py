@@ -15,13 +15,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from stream_cdc_spark.operators import similarity
+from stream_cdc_spark.operators import compaction, similarity
 from stream_cdc_spark.streaming import statedir
 from stream_cdc_spark.streaming.ann_index import (
     ANN_VLEDGER_SCHEMA,
     VersionedAnnIndexSnapshot,
     train_sq_ranges,
-    versioned_ann_topk_over_events,
 )
 from stream_cdc_spark.tables import load
 from tests.conftest import SF_SMALL, count_jobs
@@ -468,16 +467,25 @@ def test_sq8_tier_matches_float_tier_ranking(spark, tmp_path):
         )
 
 
-def test_in_memory_fold_matches_batch(spark):
-    got = sorted(
+def _latest_live_topk(spark, events):
+    """The batch plan of q136/q139: IVF top-k over the latest live
+    vectors."""
+    live = compaction.versioned_latest_live(
+        events, "vec_id", "version", "embedding"
+    )
+    return sorted(
         map(
             tuple,
-            versioned_ann_topk_over_events(
-                _events(spark), _centroids_df(spark), _queries(spark),
+            similarity.ivf_ann_topk(
+                live, _queries(spark), _centroids_df(spark),
                 k=5, nprobe=2, quantize_bp=10000,
             ).collect(),
         )
     )
+
+
+def test_in_memory_fold_matches_batch(spark):
+    got = _latest_live_topk(spark, _events(spark))
     assert got == _batch_topk(spark)
 
 
@@ -770,8 +778,8 @@ def test_versioned_delete_then_recreate_statedir_ann(spark, tmp_path):
 
 
 def test_vdelete_harness_matches_statedir_ann(spark, tmp_path):
-    """versioned_ann_topk_over_events with 'vdelete' events equals the
-    same version-max compaction reference."""
+    """compaction.versioned_latest_live with 'vdelete' events, probed by
+    batch IVF, equals the same version-max compaction reference."""
     v1, v2 = _v1(spark), _v2(spark)
     v3 = (
         _emb(spark)
@@ -792,15 +800,7 @@ def test_vdelete_harness_matches_statedir_ann(spark, tmp_path):
         ("vdelete", vdel),
         ("upsert", v3),
     ]
-    got = sorted(
-        map(
-            tuple,
-            versioned_ann_topk_over_events(
-                events, _centroids_df(spark), _queries(spark),
-                k=5, nprobe=2, quantize_bp=10000,
-            ).orderBy("q_id", "rank").collect(),
-        )
-    )
+    got = _latest_live_topk(spark, events)
     # v2 (version 2) of %10==3 ids is killed even though it arrived
     # AFTER the first delete (watermark rule, not arrival order)
     allv = v1.unionByName(v2).unionByName(v3).filter(

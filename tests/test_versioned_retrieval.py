@@ -14,12 +14,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from stream_cdc_spark.operators import text
+from stream_cdc_spark.operators import compaction, text
 from stream_cdc_spark.streaming import statedir
 from stream_cdc_spark.streaming.retrieval_index import (
     VersionedRetrievalIndexSnapshot,
     cdc_upserts_and_deletes,
-    versioned_bm25_over_events,
 )
 from stream_cdc_spark.tables import load
 from tests.conftest import SF_SMALL
@@ -379,15 +378,16 @@ def test_bucketed_ledger_equality_and_shuffle_free_admission(spark, tmp_path):
     assert n_exchanges == 1, plan
 
 
-def test_in_memory_fold_matches_batch(spark):
-    got = sorted(
-        map(
-            tuple,
-            versioned_bm25_over_events(
-                _events(spark), TERMS, top_k=15
-            ).collect(),
-        )
+def _latest_live_bm25(events):
+    """The batch plan of q137/q138: BM25 over the latest live images."""
+    live = compaction.versioned_latest_live(events, "doc_id", "version", "text")
+    return sorted(
+        map(tuple, text.bm25_topk(live, TERMS, top_k=15).collect())
     )
+
+
+def test_in_memory_fold_matches_batch(spark):
+    got = _latest_live_bm25(_events(spark))
     assert got == _batch_bm25(spark)
 
 
@@ -983,16 +983,10 @@ def _vdel_reference_count(spark):
 
 
 def test_vdelete_harness_equals_statedir_and_reference(spark, tmp_path):
-    """versioned_bm25_over_events with 'vdelete' events equals the
-    batch reference — the q140 composition's in-memory leg."""
-    got = sorted(
-        map(
-            tuple,
-            versioned_bm25_over_events(
-                _vdel_events(spark), TERMS, top_k=15
-            ).collect(),
-        )
-    )
+    """compaction.versioned_latest_live with 'vdelete' events, scored
+    by batch BM25, equals the versioned-kill reference — the q140
+    composition's batch leg."""
+    got = _latest_live_bm25(_vdel_events(spark))
     assert got == _vdel_reference(spark)
 
 
