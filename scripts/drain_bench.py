@@ -31,10 +31,6 @@ def main() -> None:
     )
     stateful = "--stateful" in sys.argv
     bucketed = "--bucketed" in sys.argv
-    # --leveled: the full 100 TB configuration — bucketed snapshot tier
-    # AND leveled L1 deltas at once (major folds publish the bucketed
-    # table, minor folds absorb the batch tail at O(recent) cost)
-    leveled = "--leveled" in sys.argv
     spark = get_spark(app_name="lsh-drain-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -79,11 +75,7 @@ def main() -> None:
     else:
         from stream_cdc_spark.streaming.lsh_snapshot import LshDedupSnapshot
 
-        if leveled:
-            snap = LshDedupSnapshot(
-                state, bucketed=True, compact_every=2, major_every=2
-            )
-        elif bucketed:
+        if bucketed:
             snap = LshDedupSnapshot(state, bucketed=True, compact_every=2)
         else:
             snap = LshDedupSnapshot(state)
@@ -96,11 +88,7 @@ def main() -> None:
         q.awaitTermination()
         wall = time.time() - t0
         matches = snap.matches(spark).dropDuplicates(["doc_id", "dup_of"]).count()
-        path = (
-            "snapshot_bucketed_leveled"
-            if leveled
-            else ("snapshot_bucketed" if bucketed else "snapshot")
-        )
+        path = "snapshot_bucketed" if bucketed else "snapshot"
     print(json.dumps({
         "path": path,
         "docs": n_docs,

@@ -19,11 +19,8 @@ trigger overhead; per-batch wall therefore equals the state-layer
 latency the verdict asks to see flat.
 
 Usage:
-  python scripts/longhorizon_bench.py lsh_drain [n_batches] [compact_every] [major_every]
-  python scripts/longhorizon_bench.py curation  [n_batches] [compact_every] [major_every]
-
-major_every > 0 enables the leveled tier (L1 delta folds, full fold
-every K deltas — statedir module doc).
+  python scripts/longhorizon_bench.py lsh_drain [n_batches] [compact_every]
+  python scripts/longhorizon_bench.py curation  [n_batches] [compact_every]
 
 Prints ONE JSON line with per-segment latency means (first/mid/last
 10%), a latency slope estimate, and dir/file counts sampled along the
@@ -48,12 +45,11 @@ from stream_cdc_spark.streaming import statedir  # noqa: E402
 
 
 def _state_stats(state_dir: str, subs) -> dict:
-    out = {"batch_dirs": 0, "compact_dirs": 0, "delta_dirs": 0, "files": 0}
+    out = {"batch_dirs": 0, "compact_dirs": 0, "files": 0}
     for sub in subs:
         c = statedir.dir_counts(os.path.join(state_dir, sub))
         out["batch_dirs"] += c["batch"]
         out["compact_dirs"] += c["compact"]
-        out["delta_dirs"] += c.get("delta", 0)
         out["files"] += c["files"]
     return out
 
@@ -73,12 +69,10 @@ def _segments(walls: list[float]) -> dict:
     }
 
 
-def run(
-    section: str, n_batches: int, compact_every: int, major_every: int = 0
-) -> None:
+def run(section: str, n_batches: int, compact_every: int) -> None:
     spark = get_spark(app_name=f"stream-cdc-spark-longhorizon-{section}")
     spark.sparkContext.setLogLevel("ERROR")
-    work = f"/tmp/longhorizon-{section}-{compact_every}-{major_every}"
+    work = f"/tmp/longhorizon-{section}-{compact_every}"
     shutil.rmtree(work, ignore_errors=True)
     state = os.path.join(work, "state")
 
@@ -91,10 +85,9 @@ def run(
         sink = LshDedupSnapshot(
             state,
             compact_every=compact_every,
-            major_every=major_every,
-            # LONGHORIZON_BUCKETED=1: run the full 100 TB configuration —
-            # bucketed snapshot tier + pre-bucketed L1 deltas (r8
-            # per-bucket major folds) — over the whole horizon
+            # LONGHORIZON_BUCKETED=1: run the 100 TB configuration — a
+            # bucketed snapshot tier folded per bucket — over the whole
+            # horizon
             bucketed=os.environ.get("LONGHORIZON_BUCKETED", "0") == "1",
         )
         subs = ("sigs", "index", "counts", "matches")
@@ -104,9 +97,7 @@ def run(
         docs_path = os.environ.get(
             "LONGHORIZON_DOCS", "/root/testdata/sf0.1/documents.parquet"
         )
-        sink = MediaDedupSnapshot(
-            state, compact_every=compact_every, major_every=major_every
-        )
+        sink = MediaDedupSnapshot(state, compact_every=compact_every)
         subs = ("sigs", "index", "matches")
     else:
         from stream_cdc_spark.streaming.curation import CurationPipeline
@@ -115,8 +106,7 @@ def run(
             "LONGHORIZON_DOCS", ".scale/sf10x0.1/documents.parquet"
         )
         sink = CurationPipeline(
-            state, min_tokens=5, compact_every=compact_every,
-            major_every=major_every,
+            state, min_tokens=5, compact_every=compact_every
         )
         subs = ("decisions", "kept", "index")
 
@@ -171,7 +161,6 @@ def run(
         "docs": n_docs,
         "n_batches": n_batches,
         "compact_every": compact_every,
-        "major_every": major_every,
         "total_wall_s": round(total, 1),
         "docs_per_s": round(n_docs / total, 1),
         "latency": _segments(walls),
@@ -216,5 +205,4 @@ if __name__ == "__main__":
     section = sys.argv[1] if len(sys.argv) > 1 else "lsh_drain"
     n = int(sys.argv[2]) if len(sys.argv) > 2 else (1000 if section == "lsh_drain" else 200)
     every = int(sys.argv[3]) if len(sys.argv) > 3 else 16
-    major = int(sys.argv[4]) if len(sys.argv) > 4 else 0
-    run(section, n, every, major)
+    run(section, n, every)

@@ -120,9 +120,7 @@ class Components(Surface):
             IncrementalComponentsSnapshot,
         )
 
-        self.snap = IncrementalComponentsSnapshot(
-            self.state, compact_every=8, major_every=4
-        )
+        self.snap = IncrementalComponentsSnapshot(self.state, compact_every=8)
         self.all_edges: list[tuple[int, int]] = []
         self.next_vid = 1_000_000  # new vertices come from here
 
@@ -235,9 +233,7 @@ class VersionedRetrieval(_Versioned):
             VersionedRetrievalIndexSnapshot,
         )
 
-        return VersionedRetrievalIndexSnapshot(
-            self.state, compact_every=8, major_every=4
-        )
+        return VersionedRetrievalIndexSnapshot(self.state, compact_every=8)
 
     def image(self, doc_id, version):
         return _text(_seed(doc_id, version))
@@ -282,7 +278,7 @@ class VersionedAnn(_Versioned):
             (c, _vec(10 ** 7 + c, self.dim)) for c in range(self.n_cells)
         ]
         return VersionedAnnIndexSnapshot(
-            self.state, self.centroids, compact_every=8, major_every=4,
+            self.state, self.centroids, compact_every=8,
             bucketed=self.bucketed, num_buckets=16,
         )
 
@@ -347,7 +343,7 @@ class CdcFull(Surface):
         ]
         self.pipe = CdcFullPipeline(
             self.state, self.centroids, min_tokens=self.min_tokens,
-            compact_every=8, major_every=4,
+            compact_every=8,
         )
         self.good_hi = 0
         self.deleted_below = 0

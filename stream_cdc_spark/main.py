@@ -23,9 +23,6 @@ incremental near-dup admission with durable batch-versioned state:
   MIN_TOKENS=<n>                     quality gate (default 5)
   COMPACT_EVERY=<n>                  fold state dirs every n batches
                                      (default 16; 0 disables)
-  COMPACT_MAJOR_EVERY=<K>            leveled: minor L1 delta folds,
-                                     full fold every K deltas
-                                     (default 0 = single-level)
   LSH_BUCKETED=1                     lsh_dedup mode: compact into
                                      bucketed snapshot tables
   CLUSTER_STATE=1                    lsh_dedup mode: maintain dedup-
@@ -47,7 +44,7 @@ RETR_VERSION_COL= set empty: every row admits as version 0.
   ANN_STATE_DIR / RETR_STATE_DIR     the index state dir
   EMB_VERSION_COL / RETR_VERSION_COL the version column (default
                                      version; empty: version 0)
-  COMPACT_EVERY / COMPACT_MAJOR_EVERY  same fold knobs as curation
+  COMPACT_EVERY                      same fold knob as curation
 
 Composed mode (PIPELINE=cdc_full): one typed CDC envelope feed
 (event_type, gtid_seq, content struct with doc_id/text/embedding) drives
@@ -58,7 +55,7 @@ versioned ANN index under ONE checkpoint (streaming/cdc_full.py):
                                      filters files)
   CDC_STATE_DIR=<root>               sub-roots retr/ and ann/
   CENTROIDS_PATH=<(cid, cv) parquet> REQUIRED (IVF quantizer)
-  MIN_TOKENS / COMPACT_EVERY / COMPACT_MAJOR_EVERY  as above
+  MIN_TOKENS / COMPACT_EVERY         as above
 
 Knobs shared by the index modes (ann_index_versioned,
 retrieval_index_versioned, cdc_full — whose deletion feed is applied to
@@ -378,7 +375,6 @@ PIPELINES = {
 def _knobs(out_dir: str) -> dict[str, dict]:
     """The env knobs several modes share, parsed once, by group:
     COMPACT_EVERY=<n batch dirs before a fold; 0 disables>,
-    COMPACT_MAJOR_EVERY=<K deltas before a full fold; 0 = single-level>,
     STATE_BUCKETED=1 folds an index's admission ledger into a bucketed
     snapshot of STATE_NUM_BUCKETS buckets — the 100 TB admission shape:
     the per-trigger redelivery anti-join reads the corpus-sized ledger
@@ -390,10 +386,7 @@ def _knobs(out_dir: str) -> dict[str, dict]:
     return {
         "state": {"state_dir": out_dir},
         "queue": {"client": FileQueue(out_dir)},
-        "compaction": {
-            "compact_every": int(env("COMPACT_EVERY", "16")),
-            "major_every": int(env("COMPACT_MAJOR_EVERY", "0")),
-        },
+        "compaction": {"compact_every": int(env("COMPACT_EVERY", "16"))},
         "state_bucketed": (
             {"bucketed": True, "num_buckets": int(env("STATE_NUM_BUCKETS", "32"))}
             if bucketed else {}

@@ -49,8 +49,10 @@ class QuerySpec:
     builder: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL; None -> driver runs rows-only check
     headline: bool = False  # include in bench.py
-    # True when builder() itself EXECUTES Spark jobs (the incremental-
-    # index drains run eager localCheckpoint folds at build time):
+    # True when builder() itself EXECUTES Spark jobs inside an SQL
+    # execution (a localCheckpoint pin, a collected parameter set, a
+    # fixed-point loop; tests/test_lazy_builders.py holds every entry
+    # to this flag):
     # bench.py must open its timing/metrics window before the build for
     # these, while lazy queries keep collect-only timing — the protocol
     # their frozen baseline rows were recorded under (a builder's
@@ -1069,6 +1071,7 @@ def q29(spark: SparkSession, sf: str) -> DataFrame:
     WHERE list_cosine_similarity(a.v, b.v) >= 0.95
     ORDER BY id_a, id_b
     """,
+    eager=True,
     doc="Embedding-cosine near-duplicate pairs (>=0.95) via LSH buckets — "
     "linear in corpus size, never n^2. The input is augmented with 25 "
     "deterministically perturbed copies (vec_id+100000, +0.002 per element "
@@ -1485,6 +1488,7 @@ def q42(spark: SparkSession, sf: str) -> DataFrame:
     SELECT cid AS cell, COUNT(*) AS n_assigned
     FROM r WHERE rn = 1 GROUP BY cid ORDER BY cell
     """,
+    eager=True,
     doc="IVF coarse quantization (similarity.ivf_assign): every vector "
     "assigned to its nearest deterministic centroid; cell histogram. The "
     "cell id is the partition key for cell-local ANN at scale.",
@@ -1551,6 +1555,7 @@ def q43(spark: SparkSession, sf: str) -> DataFrame:
     ) WHERE rank <= 5
     ORDER BY q_id, rank
     """,
+    eager=True,
     doc="IVF ANN top-k (nprobe=2 cells per query): the partition-pruned "
     "scale path for similarity search. With deterministic centroids "
     "(vec_id % 100 = 0) and FLOOR-quantized distances/similarities, the "
@@ -2279,6 +2284,7 @@ def q63(spark: SparkSession, sf: str) -> DataFrame:
     SELECT u AS vertex, MIN(v) AS component FROM reach GROUP BY u
     ORDER BY vertex
     """,
+    eager=True,
     doc="Dedup cluster assembly: connected components over the >=0.5-"
     "Jaccard pair graph by iterative min-label propagation (Pregel-style; "
     "O(diameter) shuffle rounds, lineage truncated per round). The oracle "
@@ -2316,6 +2322,7 @@ def q64(spark: SparkSession, sf: str) -> DataFrame:
       FROM pairs
     ) WHERE rn = 1 ORDER BY vec_id
     """,
+    eager=True,
     doc="K-means assignment step (k=8, deterministic first-k init): "
     "distances to all broadcast centroid literals computed with zip_with/"
     "aggregate inside codegen and argmin via array_min over (dist, cid) "
@@ -3348,6 +3355,7 @@ def q87(spark: SparkSession, sf: str) -> DataFrame:
     SELECT CAST(node AS BIGINT) AS node, CAST(r AS BIGINT) AS rank
     FROM r3 ORDER BY rank DESC, node LIMIT 20
     """,
+    eager=True,
     doc="Fixed-point integer PageRank (operators/graph.py) over the "
     "customer-supplier bipartite graph (orders x lineitem), symmetrized, "
     "3 synchronous rounds, damping 17/20. All arithmetic is 64-bit integer "
@@ -3999,6 +4007,7 @@ def q100(spark: SparkSession, sf: str) -> DataFrame:
     FROM fp a JOIN fp b ON a.f = b.f AND a.doc_id < b.doc_id
     GROUP BY source_a, source_b ORDER BY source_a, source_b
     """,
+    eager=True,
     doc="Cross-source duplication matrix: exact-duplicate pair counts per "
     "(source_a, source_b) — the audit that locates WHICH feeds re-crawl "
     "each other before dedup drops the copies. Fingerprint equi-join "
@@ -4173,6 +4182,7 @@ def q103(spark: SparkSession, sf: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_dups
     FROM pairs GROUP BY dropped ORDER BY vec_id
     """,
+    eager=True,
     doc="SemDeDup-shape semantic dedup (Abbas et al. 2023): cluster "
     "embeddings coarsely (similarity.ivf_assign, the q43 deterministic "
     "centroids over the ORIGINAL corpus so planting cannot move cells), "
@@ -4490,6 +4500,7 @@ def q109(spark: SparkSession, sf: str) -> DataFrame:
     LEFT JOIN dup d ON b.doc_id = d.new_id
     ORDER BY doc_id
     """,
+    eager=True,
     doc="Incremental batch admission against an LSH-indexed corpus "
     "(dedup.incremental_verified_dedup): docs with doc_id%7=3 play the "
     "arriving batch, the rest the already-deduped corpus. Candidates come "
@@ -4690,6 +4701,7 @@ def q113(spark: SparkSession, sf: str) -> DataFrame:
                 ELSE 'test' END AS split
     FROM labeled ORDER BY doc_id
     """,
+    eager=True,
     doc="Leakage-safe train/val/test split (sampling.leakage_safe_split): "
     "the unit of assignment is the near-dup CLUSTER (min-label connected "
     "component of the >=0.5-Jaccard pair graph; unpaired docs are "
@@ -4833,6 +4845,7 @@ def q116(spark: SparkSession, sf: str) -> DataFrame:
     FROM labeled l JOIN csize ON l.cluster = csize.cluster
     ORDER BY doc_id
     """,
+    eager=True,
     doc="Soft dedup: instead of dropping near-duplicates, downweight them "
     "— each doc gets sampling weight 1/|its near-dup cluster| (ppm-"
     "quantized), so a training sampler sees every cluster with equal "
@@ -5104,6 +5117,7 @@ def q121(spark: SparkSession, sf: str) -> DataFrame:
     FROM allc a JOIN canon c ON a.cluster = c.cluster
     ORDER BY a.doc_id
     """,
+    eager=True,
     doc="Survivorship / canonical-record selection: cluster near-dups "
     "(connected components over the >=0.5-Jaccard pair graph, as q64), "
     "then keep the highest-quality copy per cluster (q21's score, ties "
@@ -5503,6 +5517,7 @@ def _media_thumbs(d: DataFrame) -> DataFrame:
     SELECT component, CAST(COUNT(*) AS BIGINT) AS n_media
     FROM comp GROUP BY component ORDER BY component
     """,
+    eager=True,
     doc="Multimodal dedup cluster rollup: q129's perceptual near-dup "
     "pairs assembled into connected components (dedup.connected_"
     "components — Pregel-style min-label propagation, O(diameter) "
@@ -5836,6 +5851,7 @@ _patch_bpe_oracle()
     SELECT u AS vertex, MIN(v) AS component FROM reach GROUP BY u
     ORDER BY vertex
     """,
+    eager=True,
     doc="INCREMENTAL dedup-cluster maintenance as a batch plan: the q64 "
     "edge set, cut into the three micro-batch slices (id_a % 3) the "
     "streaming sink drains, labelled by dedup.connected_components over "
@@ -6277,6 +6293,7 @@ def q139(spark: SparkSession, sf: str) -> DataFrame:
     SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(score AS BIGINT) AS score
     FROM scored ORDER BY score DESC, doc_id LIMIT 15
     """,
+    eager=True,
     doc="COMPOSED pipeline semantics as a batch plan — the curation "
     "quality gate inside the CDC update flow: typed envelope batches "
     "carry inserts, GOOD updates (two query terms appended), "

@@ -93,7 +93,7 @@ round-9 hardening). Admitting or probing with a DIFFERENT centroid set
 against persisted cell assignments would silently score the wrong cells
 (wrong neighbors, no error anywhere), so a mismatched digest refuses
 with migration guidance. statedir compaction re-applies column metadata
-through folds, so the stamp survives the leveled tiers.
+through folds, so the stamp survives every fold.
 
 Reference anchor: the coordinator's process-then-checkpoint admission
 loop (stream_cdc/coordinator.py:110-159).
@@ -344,11 +344,10 @@ class _DriftMonitor:
 
 
 # the drift monitor's moments table: folds are component-wise sums per
-# cell (a commutative monoid — minor/major folds and the read-time
-# reduction all compose); each trigger commits num_cells rows as one
-# file
+# cell (a commutative monoid — repeated folds and the read-time
+# reduction compose); each trigger commits num_cells rows as one file
 _MOMENTS = statedir.Table(
-    "moments", ANN_MOMENTS_SCHEMA, fold=_DriftMonitor._reduce_moments, files=1
+    "moments", ANN_MOMENTS_SCHEMA, fold=_DriftMonitor._reduce_moments
 )
 
 
@@ -457,8 +456,6 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
         vec_col: str = "embedding",
         quantize_bp: int | None = 10000,
         compact_every: int = 16,
-        major_every: int = 0,
-        commit_files: int = 1,
         storage: str = "float32",
         sq_ranges: list[tuple[float, float]] | None = None,
         bucketed: bool = False,
@@ -523,8 +520,6 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
             store_col="vec_id",
             source_col=id_col,
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             # read-unioned second-channel tombstones (cdc_full's
             # out-of-band deletion feed) — never written here
             extra_read_roots=extra_tombstones_roots,
@@ -539,8 +534,6 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
             source_col=id_col,
             version_col=version_col,
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             fs=fs,
         )
         self.vtombstones_dir = self._vtomb.root
@@ -579,8 +572,6 @@ class VersionedAnnIndexSnapshot(_DriftMonitor):
                 _MOMENTS,
             ],
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             bucketed=bucketed,
             num_buckets=num_buckets,
             fs=fs,

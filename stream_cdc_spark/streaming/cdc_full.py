@@ -126,8 +126,6 @@ class CdcFullPipeline:
         version_col: str = "gtid_seq",
         content_col: str = "content",
         compact_every: int = 16,
-        major_every: int = 0,
-        commit_files: int = 1,
         bucketed: bool = False,
         num_buckets: int = 32,
     ):
@@ -141,8 +139,6 @@ class CdcFullPipeline:
         self.content_col = content_col
         kw = dict(
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             bucketed=bucketed,
             num_buckets=num_buckets,
         )
@@ -168,14 +164,11 @@ class CdcFullPipeline:
             **kw,
         )
         self._ext_retr = statedir.TombstoneLog(
-            retr_ext, store_col="doc_id",
-            compact_every=compact_every, major_every=major_every,
-            commit_files=commit_files,
+            retr_ext, store_col="doc_id", compact_every=compact_every
         )
         self._ext_ann = statedir.TombstoneLog(
             ann_ext, store_col="vec_id", source_col="doc_id",
-            compact_every=compact_every, major_every=major_every,
-            commit_files=commit_files,
+            compact_every=compact_every,
         )
 
     # -- fan-out ----------------------------------------------------------

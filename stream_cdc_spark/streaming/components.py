@@ -270,8 +270,6 @@ class IncrementalComponentsSnapshot:
         id_a: str = "id_a",
         id_b: str = "id_b",
         compact_every: int = 16,
-        major_every: int = 0,
-        commit_files: int = 1,
         fs: statedir.LocalFS | None = None,
     ):
         self.state_dir = state_dir
@@ -287,8 +285,6 @@ class IncrementalComponentsSnapshot:
                 ),
             ],
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             fs=fs,
         )
         self.members_dir = self._tables.dir("members")

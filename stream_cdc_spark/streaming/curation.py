@@ -30,10 +30,10 @@ whole multimodal gate has a deterministic batch twin
 
 Exactly-once without sink transactions: the per-trigger protocol of
 statedir.SinkTables (overwrite of the batch's own subdirs, reads that
-exclude them, folds of the committed prefix, the leveled tier with
-``major_every``) — the same guarantee the reference gets from its
-offset-after-flush ordering (stream_cdc/coordinator.py:281-303),
-generalized to three state tables (five in multimodal mode).
+exclude them, folds of the committed prefix) — the same guarantee the
+reference gets from its offset-after-flush ordering
+(stream_cdc/coordinator.py:281-303), generalized to three state tables
+(five in multimodal mode).
 
 At 100 TB the kept/ and index/ tables compact into bucketed tables (see
 tests/test_bucketing.py: the (band, key)-bucketed index joins without an
@@ -42,8 +42,6 @@ that layout); the read-exclusion rule is unchanged.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -91,8 +89,6 @@ class CurationPipeline:
         num_hashes: int = 64,
         bands: int = 16,
         compact_every: int = 16,
-        major_every: int = 0,
-        commit_files: int = 1,
         media_blob_col: str | None = None,
         media_grid_w: int = 9,
         media_grid_h: int = 8,
@@ -135,8 +131,6 @@ class CurationPipeline:
             state_dir,
             tables,
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             fs=fs,
         )
         self.decisions_dir = self._tables.dir("decisions")
@@ -187,11 +181,6 @@ class CurationPipeline:
         return default_quality_predicate(self.text_col, self._min_tokens)
 
     # -- state ------------------------------------------------------------
-    def _read(self, spark, root: str, schema: str, batch_id: int) -> DataFrame:
-        """State of the table stored at ``root``, read with the table's
-        declared schema (``schema`` is kept for callers)."""
-        return self._tables.read(spark, os.path.basename(root), batch_id)
-
     def corpus(self, spark) -> DataFrame:
         """The curated corpus accumulated so far (all committed batches)."""
         return self._tables.read(spark, "kept")

@@ -32,10 +32,9 @@ streaming/statedir.py, which also holds the crash-interleaving proof):
     */compact=<w>/      compacted snapshot of all batches < w
 
 Every trigger runs the statedir.SinkTables protocol over these tables
-(folds every ``compact_every`` batches, leveled with ``major_every``;
-an effectively-empty micro-batch commits nothing); counts additionally
-re-aggregate on fold — readers sum increments, so the reduction is
-read-equivalent.
+(folds every ``compact_every`` batches; an effectively-empty micro-batch
+commits nothing); counts additionally re-aggregate on fold — readers sum
+increments, so the reduction is read-equivalent.
 
 Semantics (matches _bucket_matches):
   - every arriving doc is compared against all bucket residents, emits a
@@ -92,10 +91,8 @@ class LshDedupSnapshot:
         min_agree: float = 0.8,
         max_bucket: int = 64,
         compact_every: int = 16,
-        major_every: int = 0,
         bucketed: bool = False,
         num_buckets: int = 32,
-        commit_files: int = 1,
         cluster_state: bool = False,
         fs: statedir.LocalFS | None = None,
     ):
@@ -119,8 +116,6 @@ class LshDedupSnapshot:
                 ),
             ],
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             bucketed=bucketed,
             num_buckets=num_buckets,
             fs=fs,
@@ -153,17 +148,10 @@ class LshDedupSnapshot:
                 id_a="dup_of",
                 id_b="doc_id",
                 compact_every=compact_every,
-                major_every=major_every,
-                commit_files=commit_files,
                 fs=fs,
             )
 
     # -- state ------------------------------------------------------------
-    def _read(self, spark, root: str, schema: str, batch_id: int) -> DataFrame:
-        """State of the table stored at ``root``, read with the table's
-        declared schema (``schema`` is kept for callers)."""
-        return self._tables.read(spark, os.path.basename(root), batch_id)
-
     def matches(self, spark) -> DataFrame:
         """All matches emitted by committed batches."""
         return self._tables.read(spark, "matches")

@@ -59,8 +59,6 @@ class MediaDedupSnapshot:
         max_hamming: int = 4,
         n_bands: int = 8,
         compact_every: int = 16,
-        major_every: int = 0,
-        commit_files: int = 1,
         cluster_state: bool = False,
         fs: statedir.LocalFS | None = None,
     ):
@@ -78,8 +76,6 @@ class MediaDedupSnapshot:
                 statedir.Table("matches", MEDIA_MATCHES_SCHEMA),
             ],
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             fs=fs,
         )
         self.sigs_dir = self._tables.dir("sigs")
@@ -107,8 +103,6 @@ class MediaDedupSnapshot:
                 id_a="dup_of",
                 id_b="media_id",
                 compact_every=compact_every,
-                major_every=major_every,
-                commit_files=commit_files,
                 fs=fs,
             )
 

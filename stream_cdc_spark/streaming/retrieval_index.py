@@ -203,8 +203,6 @@ class VersionedRetrievalIndexSnapshot:
         version_col: str = "version",
         text_col: str = "text",
         compact_every: int = 16,
-        major_every: int = 0,
-        commit_files: int = 1,
         bucketed: bool = False,
         num_buckets: int = 32,
         broadcast_max_ids: int = 4_000_000,
@@ -218,8 +216,6 @@ class VersionedRetrievalIndexSnapshot:
             store_col="doc_id",
             source_col=id_col,
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             # tombstones arriving over OTHER independently-checkpointed
             # channels (the composed cdc_full pipeline's out-of-band
             # deletion feed) — read-unioned, never written here
@@ -235,8 +231,6 @@ class VersionedRetrievalIndexSnapshot:
             source_col=id_col,
             version_col=version_col,
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             fs=fs,
         )
         self.vtombstones_dir = self._vtomb.root
@@ -302,8 +296,6 @@ class VersionedRetrievalIndexSnapshot:
                 ),
             ],
             compact_every=compact_every,
-            major_every=major_every,
-            commit_files=commit_files,
             bucketed=bucketed,
             num_buckets=num_buckets,
             fs=fs,

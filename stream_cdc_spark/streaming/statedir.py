@@ -34,10 +34,10 @@ a partial dir complete with its _SUCCESS marker). Instead:
      — the reference's single-item checkpoint put gives the same
      single-object atomicity point (stream_cdc/state/dynamodb.py:76-91).
 
-One commit rule: a compact/delta dir is COMMITTED iff its manifest
-exists. Readers of a committed dir read EXACTLY the files the manifest
-names, so stray objects from a torn earlier attempt never leak into a
-read; ``_SUCCESS`` and every other marker mean nothing. Deletion of a
+One commit rule: a compact dir is COMMITTED iff its manifest exists.
+Readers of a committed dir read EXACTLY the files the manifest names,
+so stray objects from a torn earlier attempt never leak into a read;
+``_SUCCESS`` and every other marker mean nothing. Deletion of a
 committed dir removes the manifest FIRST, then the files. Folded dirs
 are deleted only after the covering manifest is durable, and only dirs
 strictly below a committed cover are ever deleted. Every state a crash
@@ -52,8 +52,8 @@ can leave behind:
   or mid-delete after it went)           place until a cover is durable
   ``.inprogress`` manifest temp   no     removed
   interrupted delete below the    no     deleted by the stale cleanup
-  cover (batch dirs < C, off-            (the read rule already skips
-  chain deltas, older snapshots)         everything below the cover)
+  cover (batch dirs < W, older           (the read rule already skips
+  snapshots)                             everything below the cover)
 
 All protocol metadata I/O (listing, manifest puts, deletes) goes
 through an injectable ``StateFS``; ``LocalFS`` is the default. A real
@@ -85,26 +85,17 @@ deleted and the fold re-runs from the same sources.
 
 Scale notes: the fold is a single union-scan -> overwrite (optionally
 bucketed — see ``bucket_cols`` — so the compacted snapshot doubles as the
-shuffle-free join-side table of tests/test_bucketing.py). Single-level
-compaction re-reads O(total state) every ``every`` batches; for state
-that dwarfs a batch (the 100 TB admitted corpus) the LEVELED tier caps
-the common fold at O(recent) instead:
-
-    <root>/delta=<lo>-<hi>/   union of all batch ids in [lo, hi) —
-                              an L1 fold, published with the same
-                              manifest commit as compact=
-
-Enabled by ``maybe_compact(..., major_every=K)``: every ``every``
-batches the pending batch dirs fold into one delta (cost O(every
-batches)); once K deltas sit on the chain, everything folds into a fresh
-``compact=`` snapshot (cost O(total state), paid 1/K as often). The read
-rule extends without changing any invariant: compact=W0, then the
-maximal contiguous delta chain lo==W0 -> hi1 -> hi2 ... ending at cover
-C, then batch=i with C <= i < B; anything below the cover (leftover
-batch dirs, off-chain deltas) is invisible, so torn publishes and
-interrupted deletes stay unreadable exactly as before. Dir listing is
-one fs.listdir per state table per trigger, bounded by ``every`` +
-``major_every`` + 1 entries once compaction is running.
+shuffle-free join-side table of tests/test_bucketing.py; a bucketed fold
+merges the previous bucketed snapshot per bucket and routes only the
+batch tail). There is ONE fold level, the shape of Spark's own state
+store (per-batch deltas folded into a snapshot by a maintenance task):
+each fold re-reads O(total state), once every ``every`` batches. A
+``delta=<lo>-<hi>`` dir, the L1 fold of a removed two-level layout,
+holds rows that no batch dir still has, so ``_scan`` refuses it with
+``ValueError`` rather than silently dropping them; such a root is
+rebuilt by replaying the source into a fresh root. Dir listing is one
+fs.listdir per state table per trigger, bounded by ``every`` + 1
+entries once compaction is running.
 """
 
 from __future__ import annotations
@@ -130,8 +121,11 @@ _AUTO_BUCKETED_SCAN_LOCK = threading.Lock()
 
 _BATCH_RE = re.compile(r"^batch=(\d+)$")
 _COMPACT_RE = re.compile(r"^compact=(\d+)$")
-_DELTA_RE = re.compile(r"^delta=(\d+)-(\d+)$")
 _MANIFEST_SUFFIX = ".commit"
+# a micro-batch is small by construction, so each table's commit is one
+# file: more files per trigger balloon the long-horizon file count and
+# write latency
+_COMMIT_FILES = 1
 
 
 class LocalFS:
@@ -192,9 +186,9 @@ def _table_location(path: str) -> str:
     RELATIVE local paths resolve against the process cwd — exactly what
     plain ``df.write.parquet(path)`` does — because Spark resolves a
     relative ``option("path", ...)``/LOCATION against the WAREHOUSE dir
-    instead, silently splitting the statedir in two (the bucketed delta
-    fold of a relative-rooted state wrote its data under
-    spark-warehouse/ while the manifest publish looked at cwd). URIs
+    instead, silently splitting the statedir in two (a bucketed fold of
+    a relative-rooted state wrote its data under spark-warehouse/ while
+    the manifest publish looked at cwd). URIs
     with a scheme pass through untouched — including the single-slash
     Hadoop spellings (file:/x, hdfs:/x), which os.path.abspath would
     mangle into a cwd-relative 'file:' directory."""
@@ -208,8 +202,8 @@ def _manifest_path(dir_path: str) -> str:
 
 
 def _is_valid(fs: LocalFS, dir_path: str) -> bool:
-    """The one commit rule: a compact/delta dir is committed iff its
-    manifest exists (module doc)."""
+    """The one commit rule: a compact dir is committed iff its manifest
+    exists (module doc)."""
     return fs.exists(_manifest_path(dir_path))
 
 
@@ -219,8 +213,8 @@ def _publish_manifest(
     """Commit ``dest``: atomically put the manifest naming its data
     files. The manifest put is the commit point. ``bucket_spec``
     ({'cols': [...], 'n': int}) records that the dir was written as a
-    Spark-bucketed layout, so the next major fold can read it one-
-    partition-per-bucket and merge without re-shuffling it."""
+    Spark-bucketed layout, so the next fold can read it one-partition-
+    per-bucket and merge without re-shuffling it."""
     files = [
         n
         for n in fs.list_files(dest)
@@ -240,7 +234,7 @@ def _manifest_info(fs: LocalFS, dir_path: str) -> dict | None:
 
 
 def _data_paths(fs: LocalFS, dir_path: str) -> list[str]:
-    """What a reader reads for a committed compact/delta dir: the EXACT
+    """What a reader reads for a committed compact dir: the EXACT
     files its manifest names (stray objects from torn overwrite
     attempts never leak into a read)."""
     names = json.loads(fs.read_text(_manifest_path(dir_path)))["files"]
@@ -261,16 +255,15 @@ def batch_dir(root: str, batch_id: int) -> str:
 
 def _scan(
     root: str, fs: LocalFS | None = None
-) -> tuple[dict[int, str], dict[int, str], dict[tuple[int, int], str]]:
-    """(compacts, batches, deltas) as {id: path} / {(lo, hi): path}. Only
-    committed compact/delta dirs count — a manifestless dir is a torn
-    publish and must never be read."""
+) -> tuple[dict[int, str], dict[int, str]]:
+    """(compacts, batches) as {id: path}. Only committed compact dirs
+    count — a manifestless dir is a torn publish and must never be read.
+    Refuses a root holding any ``delta=`` entry (module doc)."""
     fs = fs or _DEFAULT_FS
     compacts: dict[int, str] = {}
     batches: dict[int, str] = {}
-    deltas: dict[tuple[int, int], str] = {}
     if not fs.isdir(root):
-        return compacts, batches, deltas
+        return compacts, batches
     for name in fs.listdir(root):
         path = os.path.join(root, name)
         m = _BATCH_RE.match(name)
@@ -282,47 +275,37 @@ def _scan(
             if _is_valid(fs, path):
                 compacts[int(m.group(1))] = path
             continue
-        m = _DELTA_RE.match(name)
-        if m and _is_valid(fs, path):
-            deltas[(int(m.group(1)), int(m.group(2)))] = path
-    return compacts, batches, deltas
+        if name.startswith("delta="):
+            raise ValueError(
+                f"state root {root!r} holds {name!r}, a delta of the removed "
+                f"leveled compaction tier whose rows may be in no batch dir; "
+                f"such state is not read — replay the source into a fresh "
+                f"root"
+            )
+    return compacts, batches
 
 
-def _chain(
-    compacts: dict[int, str],
-    deltas: dict[tuple[int, int], str],
-    batch_id: int,
-) -> tuple[list[str], int]:
-    """(snapshot + delta-chain paths, cover) for ``batch_id``: the best
-    compact watermark W0 <= batch_id, then the maximal contiguous chain
-    of deltas lo==W0 -> hi1, lo==hi1 -> hi2, ... with every hi <=
-    batch_id. Returns the paths in read order and the cover C — batch
-    dirs with id < C are invisible."""
+def _cover(compacts: dict[int, str], batch_id: int) -> tuple[str | None, int]:
+    """(snapshot path or None, cover W) for ``batch_id``: the largest
+    committed compact watermark W <= batch_id (0 if none) — batch dirs
+    with id < W are invisible."""
     eligible = [w for w in compacts if w <= batch_id]
-    w = max(eligible, default=0)
-    out = [compacts[w]] if eligible else []
-    cur = w
-    while True:
-        nxt = [(lo, hi) for (lo, hi) in deltas if lo == cur and hi <= batch_id]
-        if not nxt:
-            return out, cur
-        lo, hi = max(nxt, key=lambda b: b[1])
-        out.append(deltas[(lo, hi)])
-        cur = hi
+    if not eligible:
+        return None, 0
+    w = max(eligible)
+    return compacts[w], w
 
 
 def state_paths(
     root: str, batch_id: int, fs: LocalFS | None = None
 ) -> list[str]:
-    """The read set for batch ``batch_id``: the best compacted snapshot,
-    its delta chain (each expanded to its manifest's exact file list),
-    then the batch dirs above the cover (module doc)."""
+    """The read set for batch ``batch_id``: the best compacted snapshot
+    (expanded to its manifest's exact file list), then the batch dirs
+    above the cover (module doc)."""
     fs = fs or _DEFAULT_FS
-    compacts, batches, deltas = _scan(root, fs)
-    chain, cover = _chain(compacts, deltas, batch_id)
-    out: list[str] = []
-    for d in chain:
-        out.extend(_data_paths(fs, d))
+    compacts, batches = _scan(root, fs)
+    snap, cover = _cover(compacts, batch_id)
+    out = _data_paths(fs, snap) if snap else []
     out.extend(p for i, p in sorted(batches.items()) if cover <= i < batch_id)
     return out
 
@@ -370,33 +353,23 @@ def compact(
     a snapshot-side Exchange (tests/test_bucketing.py). The bucketed
     publish commits through the same manifest protocol (saveAsTable
     writes the final location directly; the manifest put makes it
-    visible). When the chain's snapshot and deltas were THEMSELVES
-    written bucketed with the same spec (compact_minor with bucket_cols
-    — their manifests record it), the fold reads each of them one-
-    partition-per-bucket and merges per bucket: no Exchange over total
-    state, output file count bounded by num_buckets * chain length
-    (plus the small unbucketed batch tail). Only the tail ever pays a
-    (tiny) bucket routing; total state is read and rewritten in place.
-    Size ``num_buckets`` to the target fold parallelism — the per-bucket
-    merge runs one task per bucket per chain dir."""
+    visible). When the previous snapshot was ITSELF written bucketed
+    with the same spec (its manifest records it), the fold reads it
+    one-partition-per-bucket and merges per bucket: no Exchange over
+    total state, output file count bounded by 2 * num_buckets (the
+    snapshot's buckets plus the bucket-routed batch tail). Only the tail
+    ever pays a (tiny) bucket routing; total state is read and rewritten
+    in place. Size ``num_buckets`` to the target fold parallelism — the
+    per-bucket merge runs one task per bucket."""
     fs = fs or _DEFAULT_FS
     _reconcile(root, fs)
-    compacts, batches, deltas = _scan(root, fs)
-    chain, cover = _chain(compacts, deltas, batch_id)
-    eligible = [w for w in compacts if w <= batch_id]
-    w = max(eligible, default=0)
-    fold_batches = [p for i, p in sorted(batches.items()) if cover <= i < batch_id]
-    fold_deltas = chain[1:] if eligible else chain  # chain minus the snapshot
-    stale_batches = [p for i, p in batches.items() if i < cover]
-    stale_deltas = [
-        p for (lo, hi), p in deltas.items() if p not in chain and hi <= cover
-    ]
-    stale_compacts = [p for i, p in compacts.items() if eligible and i < w]
+    compacts, batches = _scan(root, fs)
+    _, cover = _cover(compacts, batch_id)
     # Note: a replay after a COMPLETED publish needs no special case —
     # compact=batch_id being committed makes cover == batch_id, the fold set
     # empty, and the folded dirs fall into the stale cleanup below.
-    published = False
-    if fold_batches or fold_deltas:
+    published = any(cover <= i < batch_id for i in batches)
+    if published:
         dest = os.path.join(root, f"compact={batch_id:09d}")
         if bucket_cols:
             df, tmp_tables = _fold_input(
@@ -409,7 +382,7 @@ def compact(
             spark.sql(f"DROP TABLE IF EXISTS {name}")
             fs.rmtree(dest)
             auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-            # force one-partition-per-bucket scans of the chain for the
+            # force one-partition-per-bucket scans of the snapshot for the
             # duration of the fold job, so each write task holds exactly
             # one bucket and emits exactly one file — the per-bucket
             # merge (auto mode would fall back to size splits here
@@ -441,95 +414,14 @@ def compact(
             # manifest commits it (never a dir rename — module doc)
             df.write.mode("overwrite").parquet(dest)
             _publish_manifest(fs, dest)
-        published = True
-        stale_batches = [p for i, p in batches.items() if i < batch_id]
-        stale_deltas = [p for (lo, hi), p in deltas.items() if hi <= batch_id]
-        stale_compacts = [compacts[i] for i in compacts if i < batch_id]
-    for p in stale_batches:
-        fs.rmtree(p)
-    for p in stale_deltas + stale_compacts:
-        _delete_published(fs, p)
+        cover = batch_id
+    for i, p in batches.items():
+        if i < cover:
+            fs.rmtree(p)
+    for i, p in compacts.items():
+        if i < cover:
+            _delete_published(fs, p)
     return published
-
-
-def compact_minor(
-    spark: SparkSession,
-    root: str,
-    schema: str,
-    batch_id: int,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    bucket_cols: list[str] | None = None,
-    num_buckets: int = 32,
-    table_name: str | None = None,
-    fs: LocalFS | None = None,
-) -> bool:
-    """L1 fold: publish ``delta=<cover>-<batch_id>`` holding exactly the
-    batch dirs in [cover, batch_id), then delete them. Cost is O(those
-    batches), never O(total state) — the compacted snapshot and earlier
-    deltas are not re-read. Same manifest commit and read-exclusion rules
-    as ``compact``; ``transform`` must be the same read-equivalent
-    reduction (a delta holding partially-reduced increments still reads
-    correctly because readers aggregate).
-
-    ``bucket_cols`` writes the delta PRE-BUCKETED by the same spec as the
-    snapshot tier (one small O(recent) shuffle — exactly num_buckets
-    output files) and records the spec in its manifest, so the next
-    major fold merges it per-bucket instead of re-shuffling total state
-    (``compact`` doc). The catalog entry is dropped right after the
-    write — the delta is addressed by its manifest, not by name."""
-    fs = fs or _DEFAULT_FS
-    _reconcile(root, fs)
-    compacts, batches, deltas = _scan(root, fs)
-    _, cover = _chain(compacts, deltas, batch_id)
-    if cover >= batch_id:
-        return False  # replay after a completed publish: chain already ends here
-    fold = [(i, p) for i, p in sorted(batches.items()) if cover <= i < batch_id]
-    if not fold:
-        return False
-    df = spark.read.parquet(*(p for _, p in fold))
-    if transform is not None:
-        df = transform(df)
-    dest = os.path.join(root, f"delta={cover:09d}-{batch_id:09d}")
-    if bucket_cols:
-        name = (
-            f"{table_name or _default_table_name(root)}"
-            f"_delta_{cover:09d}_{batch_id:09d}"
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        fs.rmtree(dest)
-        # Bound the delta at <= num_buckets files — every file the chain
-        # carries is re-opened by EVERY trigger's state read until the
-        # next major fold, so an unbounded per-fold file count is a
-        # long-horizon latency leak (a 300-batch soak with task-count
-        # routing alone saw-toothed to ~6,700 files and doubled trigger
-        # latency). Aligning partitions with buckets (one task per
-        # bucket -> at most num_buckets files) is ALSO the measured
-        # fastest write: the shuffle moves only this delta's O(recent)
-        # rows, never total state, while the per-bucket parquet writes
-        # (footer/open/close per file) run across num_buckets tasks
-        # instead of serially in one — r9 microbench at a 16x20k-row
-        # fold: repartition 0.41 s vs single-task coalesce 0.90 s, the
-        # dominant term of the bucketed fold's former 2x-over-plain
-        # constant (SCALE_BENCH_r09.md §5).
-        df = df.repartition(num_buckets, *bucket_cols)
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(num_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-            .option("path", _table_location(dest))
-            .saveAsTable(name)
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {name}")  # external: files stay
-        _publish_manifest(
-            fs, dest, {"cols": list(bucket_cols), "n": num_buckets}
-        )
-    else:
-        df.write.mode("overwrite").parquet(dest)
-        _publish_manifest(fs, dest)
-    for _, p in fold:
-        fs.rmtree(p)
-    return True
 
 
 def _bucket_aligned(
@@ -558,36 +450,34 @@ def _fold_input(
     bucket_cols: list[str],
     num_buckets: int,
 ) -> tuple[DataFrame, list[str]]:
-    """The major fold's read set (identical rows to ``read_state``), with
-    every bucket-aligned chain dir (snapshot + pre-bucketed deltas) read
-    as a registered bucketed table so the fold scans it one-partition-
-    per-bucket and the bucketed rewrite merges per bucket with NO
-    Exchange over total state; only the unbucketed batch tail (and any
-    unaligned dir) is path-read and pays bucket routing. Returns
-    (df, temp table names to drop after the fold job)."""
-    compacts, batches, deltas = _scan(root, fs)
-    chain, cover = _chain(compacts, deltas, batch_id)
+    """The fold's read set (identical rows to ``read_state``), with a
+    bucket-aligned snapshot read as a registered bucketed table so the
+    fold scans it one-partition-per-bucket and the bucketed rewrite
+    merges per bucket with NO Exchange over total state; only the
+    unbucketed batch tail (and an unaligned snapshot) is path-read and
+    pays bucket routing. Returns (df, temp table names to drop after the
+    fold job)."""
+    compacts, batches = _scan(root, fs)
+    snap, cover = _cover(compacts, batch_id)
     parts: list[DataFrame] = []
     plain_paths: list[str] = []
     tmp_tables: list[str] = []
-    base = _default_table_name(root)
-    for d in chain:
-        if _bucket_aligned(fs, d, bucket_cols, num_buckets):
-            name = base + "_fold_" + re.sub(
-                r"[^A-Za-z0-9_]", "_", os.path.basename(d)
-            )
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            cols = ", ".join(bucket_cols)
-            spark.sql(
-                f"CREATE TABLE {name} ({schema}) USING PARQUET "
-                f"CLUSTERED BY ({cols}) SORTED BY ({cols}) "
-                f"INTO {num_buckets} BUCKETS "
-                f"LOCATION '{_table_location(d)}'"
-            )
-            tmp_tables.append(name)
-            parts.append(spark.table(name))
-        else:
-            plain_paths.extend(_data_paths(fs, d))
+    if snap and _bucket_aligned(fs, snap, bucket_cols, num_buckets):
+        name = _default_table_name(root) + "_fold_" + re.sub(
+            r"[^A-Za-z0-9_]", "_", os.path.basename(snap)
+        )
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        cols = ", ".join(bucket_cols)
+        spark.sql(
+            f"CREATE TABLE {name} ({schema}) USING PARQUET "
+            f"CLUSTERED BY ({cols}) SORTED BY ({cols}) "
+            f"INTO {num_buckets} BUCKETS "
+            f"LOCATION '{_table_location(snap)}'"
+        )
+        tmp_tables.append(name)
+        parts.append(spark.table(name))
+    elif snap:
+        plain_paths.extend(_data_paths(fs, snap))
     plain_paths.extend(
         p for i, p in sorted(batches.items()) if cover <= i < batch_id
     )
@@ -598,11 +488,10 @@ def _fold_input(
         # partition index == bucket id): each tail task then writes one
         # file, not one file per bucket it happens to hold. Without
         # this, N tail partitions sprayed up to N*num_buckets files
-        # into the folded snapshot — bounded (the chain is bounded) but
-        # ~3x the necessary count, and every folded file is re-opened
+        # into the folded snapshot — bounded, but ~3x the necessary
+        # count, and every folded file is re-opened
         # by every subsequent trigger's state read. The shuffle moves
-        # only the O(recent) tail, never total state — the same
-        # measured trade as compact_minor's delta routing.
+        # only the O(recent) tail, never total state.
         parts.append(tail.repartition(num_buckets, *bucket_cols))
     if not parts:
         return spark.createDataFrame([], schema), tmp_tables
@@ -625,15 +514,13 @@ def _fold_input(
 def _reconcile(root: str, fs: LocalFS) -> None:
     """Pre-fold housekeeping (writer-only — readers never mutate):
     remove ``.inprogress`` manifest temps (puts that never reached their
-    replace) and delete every manifestless compact/delta dir — a torn
-    publish, never read (module doc's recovery table)."""
+    replace) and delete every manifestless compact dir — a torn publish,
+    never read (module doc's recovery table)."""
     for n in fs.listdir(root) if fs.isdir(root) else []:
         path = os.path.join(root, n)
         if n.endswith(".inprogress"):
             fs.remove(path)
-        elif (_COMPACT_RE.match(n) or _DELTA_RE.match(n)) and not _is_valid(
-            fs, path
-        ):
+        elif _COMPACT_RE.match(n) and not _is_valid(fs, path):
             fs.rmtree(path)
 
 
@@ -643,45 +530,20 @@ def maybe_compact(
     schema: str,
     batch_id: int,
     every: int,
-    major_every: int = 0,
     fs: LocalFS | None = None,
     **kwargs,
 ) -> bool:
     """Per-trigger entry point (called at the START of foreach_batch,
     before the batch writes its own dirs, so a replayed batch re-folds
-    the identical prefix).
-
-    ``major_every <= 0`` (default): single-level — full fold iff at
-    least ``every`` batch dirs sit above the cover. ``major_every = K``:
-    leveled — ``every`` pending batch dirs fold into one L1 delta
-    (O(recent)); once K deltas sit on the chain everything folds into a
-    fresh snapshot (O(total state), paid 1/K as often)."""
+    the identical prefix): a full fold iff at least ``every`` batch dirs
+    sit above the cover."""
     if every <= 0:
         return False
-    compacts, batches, deltas = _scan(root, fs)
-    chain, cover = _chain(compacts, deltas, batch_id)
-    pending = sum(1 for i in batches if cover <= i < batch_id)
-    if pending < every:
+    compacts, batches = _scan(root, fs)
+    _, cover = _cover(compacts, batch_id)
+    if sum(1 for i in batches if cover <= i < batch_id) < every:
         return False
-    if major_every <= 0:
-        return compact(spark, root, schema, batch_id, fs=fs, **kwargs)
-    n_deltas = len(chain) - (1 if any(w <= batch_id for w in compacts) else 0)
-    if n_deltas + 1 >= major_every:
-        # this fold would make the chain major_every long — fold it all
-        return compact(spark, root, schema, batch_id, fs=fs, **kwargs)
-    return compact_minor(
-        spark,
-        root,
-        schema,
-        batch_id,
-        transform=kwargs.get("transform"),
-        # deltas are written pre-bucketed by the snapshot tier's spec so
-        # the next major fold merges per-bucket (compact/compact_minor doc)
-        bucket_cols=kwargs.get("bucket_cols"),
-        num_buckets=kwargs.get("num_buckets", 32),
-        table_name=kwargs.get("table_name"),
-        fs=fs,
-    )
+    return compact(spark, root, schema, batch_id, fs=fs, **kwargs)
 
 
 def maybe_compact_with_fallback(
@@ -692,7 +554,6 @@ def maybe_compact_with_fallback(
     every: int,
     transform: Callable[[DataFrame], DataFrame],
     fallback_transform: Callable[[DataFrame], DataFrame] | None,
-    major_every: int = 0,
     fs: LocalFS | None = None,
     **kwargs,
 ) -> bool:
@@ -712,7 +573,7 @@ def maybe_compact_with_fallback(
     try:
         return maybe_compact(
             spark, root, schema, batch_id, every=every,
-            major_every=major_every, transform=transform, fs=fs, **kwargs,
+            transform=transform, fs=fs, **kwargs,
         )
     except Exception as exc:
         if fallback_transform is None:
@@ -738,8 +599,7 @@ def maybe_compact_with_fallback(
         )
         return maybe_compact(
             spark, root, schema, batch_id, every=every,
-            major_every=major_every, transform=fallback_transform, fs=fs,
-            **kwargs,
+            transform=fallback_transform, fs=fs, **kwargs,
         )
 
 
@@ -758,7 +618,7 @@ def bucketed_relation(
     ids Spark maps at scan time — do). Returns None when no bucketed
     snapshot exists. ``schema`` / ``bucket_cols`` / ``num_buckets`` must
     match what ``compact`` wrote (they are the sink's own constants)."""
-    compacts, _, _ = _scan(root, fs)
+    compacts, _ = _scan(root, fs)
     if not compacts:
         return None
     latest = compacts[max(compacts)]
@@ -801,15 +661,14 @@ def _count_files(fs: LocalFS, path: str) -> int:
 
 
 def dir_counts(root: str, fs: LocalFS | None = None) -> dict[str, int]:
-    """Metadata-size observability: {'compact': n, 'delta': n, 'batch':
-    n, 'files': n} — the quantities compaction bounds (asserted flat in
-    the long-horizon bench). All four counts go through the injectable
-    fs, so an object-store StateFS reports them accurately."""
+    """Metadata-size observability: {'compact': n, 'batch': n, 'files':
+    n} — the quantities compaction bounds (asserted flat in the
+    long-horizon bench). All three counts go through the injectable fs,
+    so an object-store StateFS reports them accurately."""
     fs = fs or _DEFAULT_FS
-    compacts, batches, deltas = _scan(root, fs)
+    compacts, batches = _scan(root, fs)
     return {
         "compact": len(compacts),
-        "delta": len(deltas),
         "batch": len(batches),
         "files": _count_files(fs, root),
     }
@@ -836,8 +695,8 @@ def publish_snapshot(
     the write lands at the final path and becomes readable only when
     the manifest commits it, like every fold. Refuses a non-empty root."""
     fs = fs or _DEFAULT_FS
-    compacts, batches, deltas = _scan(root, fs)
-    if compacts or batches or deltas:
+    compacts, batches = _scan(root, fs)
+    if compacts or batches:
         raise ValueError(
             f"publish_snapshot: state root {root!r} is not empty — "
             f"sweep it (or pick a fresh root) before publishing"
@@ -867,8 +726,7 @@ class Table:
     fold to retry with (``maybe_compact_with_fallback``).
     ``bucket_cols``: the folded snapshot's bucket spec, applied only
     when the sink is ``bucketed``. ``sort_by``: the commit-time
-    ``sortWithinPartitions`` key. ``files``: a fixed commit file count
-    (None: the sink's ``commit_files``)."""
+    ``sortWithinPartitions`` key."""
 
     name: str
     schema: str
@@ -876,7 +734,6 @@ class Table:
     fallback: Callable[[DataFrame], DataFrame] | None = None
     bucket_cols: tuple[str, ...] = ()
     sort_by: str | None = None
-    files: int | None = None
 
 
 class SinkTables:
@@ -911,8 +768,6 @@ class SinkTables:
         root: str,
         tables: list[Table],
         compact_every: int = 16,
-        major_every: int = 0,
-        commit_files: int = 1,
         bucketed: bool = False,
         num_buckets: int = 32,
         fs: LocalFS | None = None,
@@ -920,14 +775,6 @@ class SinkTables:
         self.root = root
         self.tables = {t.name: t for t in tables}
         self.compact_every = compact_every
-        # major_every=K: leveled compaction — pending batch dirs fold
-        # into L1 deltas (O(recent)); the full O(total state) fold runs
-        # only every K deltas (module doc)
-        self.major_every = major_every
-        # a micro-batch is small by construction, so each table's
-        # commit is ``commit_files`` files (default one): more files per
-        # trigger balloon the long-horizon file count and write latency
-        self.commit_files = commit_files
         self.bucketed = bucketed
         self.num_buckets = num_buckets
         self.fs = fs
@@ -1037,7 +884,6 @@ class SinkTables:
         for t in self.tables.values():
             kw = dict(
                 every=self.compact_every,
-                major_every=self.major_every,
                 transform=t.fold,
                 bucket_cols=(
                     list(t.bucket_cols)
@@ -1063,10 +909,10 @@ class SinkTables:
         for name, df in tables.items():
             if df is None:
                 continue
-            t = self.tables[name]
-            df = df.coalesce(t.files or self.commit_files)
-            if t.sort_by:
-                df = df.sortWithinPartitions(t.sort_by)
+            df = df.coalesce(_COMMIT_FILES)
+            sort_by = self.tables[name].sort_by
+            if sort_by:
+                df = df.sortWithinPartitions(sort_by)
             df.write.mode("overwrite").parquet(
                 batch_dir(self.dir(name), batch_id)
             )
@@ -1105,8 +951,6 @@ class TombstoneLog:
         store_col: str,
         source_col: str | None = None,
         compact_every: int = 16,
-        major_every: int = 0,
-        commit_files: int = 1,
         extra_read_roots: tuple[str, ...] = (),
         fs: LocalFS | None = None,
     ):
@@ -1115,8 +959,6 @@ class TombstoneLog:
         self.source_col = source_col or store_col
         self.schema = f"{store_col} bigint"
         self.compact_every = compact_every
-        self.major_every = major_every
-        self.commit_files = commit_files
         self.extra_read_roots = tuple(extra_read_roots)
         self.fs = fs
 
@@ -1158,7 +1000,7 @@ class TombstoneLog:
         spark = batch_df.sparkSession
         maybe_compact(
             spark, self.root, self.schema, batch_id,
-            every=self.compact_every, major_every=self.major_every,
+            every=self.compact_every,
             transform=lambda df: df.distinct(),
             fs=self.fs,
         )
@@ -1170,7 +1012,7 @@ class TombstoneLog:
         if ids is None:
             return  # empty trigger: commit nothing (missing == empty)
         (
-            ids.coalesce(self.commit_files)
+            ids.coalesce(_COMMIT_FILES)
             .write.mode("overwrite")
             .parquet(batch_dir(self.root, batch_id))
         )
@@ -1202,8 +1044,6 @@ class VersionedTombstoneLog:
         source_col: str | None = None,
         version_col: str = "version",
         compact_every: int = 16,
-        major_every: int = 0,
-        commit_files: int = 1,
         fs: LocalFS | None = None,
     ):
         self.root = root
@@ -1212,8 +1052,6 @@ class VersionedTombstoneLog:
         self.version_col = version_col
         self.schema = f"{store_col} bigint, dead_version bigint"
         self.compact_every = compact_every
-        self.major_every = major_every
-        self.commit_files = commit_files
         self.fs = fs
 
     def _reduce(self, df: DataFrame) -> DataFrame:
@@ -1267,7 +1105,7 @@ class VersionedTombstoneLog:
         spark = batch_df.sparkSession
         maybe_compact(
             spark, self.root, self.schema, batch_id,
-            every=self.compact_every, major_every=self.major_every,
+            every=self.compact_every,
             transform=self._reduce,
             fs=self.fs,
         )
@@ -1293,7 +1131,7 @@ class VersionedTombstoneLog:
                 f"version at all (silent no-op)."
             )
         (
-            rows.coalesce(self.commit_files)
+            rows.coalesce(_COMMIT_FILES)
             .write.mode("overwrite")
             .parquet(batch_dir(self.root, batch_id))
         )
@@ -1311,8 +1149,8 @@ def state_relations(
 ) -> list[DataFrame]:
     """The read set for ``batch_id`` as SEPARATE relations whose union is
     row-equal to ``read_state``: the latest bucket-aligned compacted
-    snapshot as its registered bucketed table first, then everything
-    above it (batch tail + any deltas) as one plain relation.
+    snapshot as its registered bucketed table first, then the batch tail
+    above it as one plain relation.
 
     The point is join shape at scale: a join against ``read_state``'s
     path-union cannot use the snapshot's bucketing (a union has no
@@ -1327,11 +1165,10 @@ def state_relations(
     a snapshot beyond ``batch_id`` — only possible outside the owning
     sink's own trigger sequence, where correctness beats shape)."""
     fs = fs or _DEFAULT_FS
-    compacts, _, _ = _scan(root, fs)
-    eligible = [w for w in compacts if w <= batch_id]
-    if not eligible or max(eligible) != max(compacts):
+    compacts, _ = _scan(root, fs)
+    snap_dir, w = _cover(compacts, batch_id)
+    if snap_dir is None or w != max(compacts):
         return [read_state(spark, root, schema, batch_id, fs)]
-    snap_dir = compacts[max(eligible)]
     if not _bucket_aligned(fs, snap_dir, list(bucket_cols), num_buckets):
         return [read_state(spark, root, schema, batch_id, fs)]
     rel = bucketed_relation(

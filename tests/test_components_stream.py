@@ -1,8 +1,8 @@
 """IncrementalComponentsSnapshot: streaming dedup-cluster maintenance.
 
 Equality standard mirrors test_lsh_snapshot.py: after any drain —
-including across a checkpoint restart and under the leveled compaction
-tier — labels() must be bit-equal to dedup.connected_components over
+including across a checkpoint restart and across compaction folds —
+labels() must be bit-equal to dedup.connected_components over
 the union of all edge batches.
 """
 
@@ -150,12 +150,11 @@ def test_redundant_and_self_loop_edges(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_leveled_compaction_restart_equality(spark, tmp_path):
-    """Same equality contract with the leveled state tier active
-    (compact_every=1, major_every=2: the sequence crosses L1 delta folds
-    AND a full path-compressing fold)."""
+def test_compaction_restart_equality(spark, tmp_path):
+    """Same equality contract with a fold at every trigger
+    (compact_every=1: the sequence crosses path-compressing folds)."""
     state = str(tmp_path / "state")
-    snap = IncrementalComponentsSnapshot(state, compact_every=1, major_every=2)
+    snap = IncrementalComponentsSnapshot(state, compact_every=1)
     batches = [
         [(10, 11), (20, 21), (30, 31)],
         [(11, 21)],          # merge 10s with 20s

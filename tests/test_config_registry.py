@@ -37,6 +37,14 @@ def test_registry_unknown_type_errors():
         datasource_registry.create("mysql-binlog-direct")
 
 
+def test_cdc_full_registry_refuses_major_every(tmp_path):
+    with pytest.raises(ValueError, match="major_every=2"):
+        sink_registry.create(
+            "cdc_full", state_dir=str(tmp_path), centroids=[(0, [1.0])],
+            major_every=2,
+        )
+
+
 @pytest.mark.slow
 def test_parquet_kv_state_roundtrip(spark, tmp_path):
     st = ParquetKVState(spark, str(tmp_path / "state"))

@@ -183,16 +183,14 @@ def test_curation_crash_between_state_writes_recovers(spark, tmp_path):
     )
     pipe.foreach_batch(b0, 0)
 
-    import stream_cdc_spark.streaming.curation as C
-
     # simulate the torn batch: perform batch 1's work manually, writing
     # ONLY the decisions subdir before "crashing" (kept/index never land)
     docs = b1.select("doc_id", "text")
     from pyspark.sql import functions as F
 
     qual_ok = docs.filter(pipe.quality_predicate)
-    corpus = pipe._read(spark, pipe.kept_dir, C.KEPT_SCHEMA, 1)
-    index = pipe._read(spark, pipe.index_dir, C.INDEX_SCHEMA, 1)
+    corpus = pipe._tables.read(spark, "kept", 1)
+    index = pipe._tables.read(spark, "index", 1)
     adm = D.incremental_verified_dedup(qual_ok, corpus, index=index)
     import os
 

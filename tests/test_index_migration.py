@@ -240,12 +240,12 @@ def _docs_slices(spark):
 
 def _lsh_state(snap, spark):
     index = sorted(
-        map(tuple, snap._read(spark, snap.index_dir, "doc_id bigint, band int, key bigint", 1 << 62).collect())
+        map(tuple, snap._tables.read(spark, "index").collect())
     )
     counts = sorted(
         map(
             tuple,
-            snap._read(spark, snap.counts_dir, "band int, key bigint, cnt bigint", 1 << 62)
+            snap._tables.read(spark, "counts")
             .groupBy("band", "key")
             .agg(F.sum("cnt").alias("cnt"))
             .collect(),

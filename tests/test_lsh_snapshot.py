@@ -137,12 +137,7 @@ def test_snapshot_cap_matches_bucket_semantics(spark, tmp_path):
     # matches 1
     assert got == [(5, 1), (7, 1)]
     # the index never grew past the cap
-    idx = snap._read(
-        spark,
-        snap.index_dir,
-        "doc_id bigint, band int, key bigint",
-        1 << 62,
-    )
+    idx = snap._tables.read(spark, "index")
     per_bucket = idx.groupBy("band", "key").count().agg(F.max("count")).first()[0]
     assert per_bucket == 1
 
@@ -254,10 +249,10 @@ def test_snapshot_within_batch_cap_orders_by_id(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_snapshot_leveled_restart_equality(spark, tmp_path):
-    """Same restart-equality contract with the leveled state tier active
-    (compact_every=1, major_every=2 so the two runs cross delta folds AND
-    a full fold): distinct pairs equal the batch candidate set."""
+def test_snapshot_compaction_restart_equality(spark, tmp_path):
+    """Same restart-equality contract with a fold at every trigger
+    (compact_every=1, so the two runs cross folds): distinct pairs equal
+    the batch candidate set."""
     d = load(spark, SF_SMALL, "documents").select("doc_id", "text")
     indir, ckpt, state = (str(tmp_path / p) for p in ("in", "ckpt", "state"))
     os.makedirs(indir, exist_ok=True)
@@ -266,7 +261,7 @@ def test_snapshot_leveled_restart_equality(spark, tmp_path):
         .rdd.mapPartitionsWithIndex(lambda i, it: ((i, list(it)),))
         .collect()
     )
-    snap = LshDedupSnapshot(state, compact_every=1, major_every=2)
+    snap = LshDedupSnapshot(state, compact_every=1)
 
     def run():
         stream = (

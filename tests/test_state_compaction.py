@@ -173,122 +173,6 @@ def test_curation_param_drift_fails_loudly_on_restart(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_snapshot_leveled_mode_matches_plain(spark, tmp_path):
-    """major_every: minor L1 folds between full folds — identical
-    matches/processed vs compaction-off, and the state settles into
-    snapshot + a bounded delta chain (never an unbounded batch list)."""
-    batches = _slices(spark, 8)
-    plain = LshDedupSnapshot(str(tmp_path / "plain"), compact_every=0)
-    leveled = LshDedupSnapshot(
-        str(tmp_path / "lvl"), compact_every=2, major_every=3
-    )
-    for i, b in enumerate(batches):
-        plain.foreach_batch(b, i)
-        leveled.foreach_batch(b, i)
-    assert _pairs(leveled, spark) == _pairs(plain, spark)
-    assert leveled.processed(spark).count() == plain.processed(spark).count()
-    saw_delta = False
-    for sub in ("sigs", "index", "counts", "matches"):
-        c = statedir.dir_counts(os.path.join(str(tmp_path / "lvl"), sub))
-        assert c["batch"] <= 2, (sub, c)
-        assert c["delta"] <= 3, (sub, c)
-        saw_delta = saw_delta or c["delta"] > 0 or c["compact"] > 0
-    assert saw_delta  # folds actually happened
-
-
-@pytest.mark.slow
-def test_curation_leveled_mode_matches_plain(spark, tmp_path):
-    batches = _slices(spark, 6)
-    plain = CurationPipeline(str(tmp_path / "plain"), compact_every=0)
-    leveled = CurationPipeline(
-        str(tmp_path / "lvl"), compact_every=2, major_every=2
-    )
-    for i, b in enumerate(batches):
-        plain.foreach_batch(b, i)
-        leveled.foreach_batch(b, i)
-    a = sorted(map(tuple, plain.decisions(spark).collect()))
-    b2 = sorted(map(tuple, leveled.decisions(spark).collect()))
-    assert a == b2
-
-
-@pytest.mark.slow
-def test_bucketed_and_leveled_compose_probe_shuffle_free_after_minor_fold(
-    spark, tmp_path
-):
-    """The 100 TB configuration runs BOTH tiers at once: major folds
-    publish the (band, key)-bucketed snapshot, minor folds cheaply absorb
-    the batch tail into plain deltas. A minor fold must not disturb the
-    snapshot tier — immediately after one, the probe against the bucketed
-    index still plans with a bucketed scan and NO index-side Exchange,
-    and reads through the mixed chain stay identical to a plain sink."""
-    batches = _slices(spark, 8)
-    plain = LshDedupSnapshot(str(tmp_path / "plain"), compact_every=0)
-    lvl = LshDedupSnapshot(
-        str(tmp_path / "lb"),
-        compact_every=2,
-        major_every=2,
-        bucketed=True,
-        num_buckets=4,
-    )
-    for i, b in enumerate(batches):
-        plain.foreach_batch(b, i)
-        lvl.foreach_batch(b, i)
-    assert _pairs(lvl, spark) == _pairs(plain, spark)
-    # force the state into a snapshot + fresh L1 delta shape, then check
-    # the probe plan against the untouched snapshot tier
-    idx_root = os.path.join(str(tmp_path / "lb"), "index")
-    did_minor = statedir.compact_minor(
-        spark, idx_root, "doc_id bigint, band int, key bigint", len(batches)
-    )
-    c = statedir.dir_counts(idx_root)
-    assert c["compact"] >= 1, c
-    assert did_minor or c["delta"] >= 1 or c["batch"] == 0
-    rel = lvl.bucketed_index(spark)
-    assert rel is not None
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        # co-located probe: a relation bucketed the same way (here the
-        # index itself) joins with ZERO exchanges in the executed plan —
-        # the minor fold touched only the tail, never the bucket files
-        probe = rel.select("band", "key", F.col("doc_id").alias("probe_id"))
-        joined = rel.join(probe.hint("shuffle_merge"), ["band", "key"])
-        joined.collect()
-        plan = joined._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
-        tree = plan.split("== Initial Plan ==")[0]
-        assert "Bucketed: true" in plan
-        assert "SortMergeJoin" in tree
-        assert "Exchange" not in tree, tree
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024)
-        )
-    # the mixed chain (bucketed snapshot + plain delta + batch dirs)
-    # still reads to the same corpus as the plain sink
-    got = sorted(
-        map(
-            tuple,
-            statedir.read_state(
-                spark, idx_root, "doc_id bigint, band int, key bigint", 1 << 62
-            ).select("doc_id").distinct().collect(),
-        )
-    )
-    want = sorted(
-        map(
-            tuple,
-            statedir.read_state(
-                spark,
-                os.path.join(str(tmp_path / "plain"), "index"),
-                "doc_id bigint, band int, key bigint",
-                1 << 62,
-            ).select("doc_id").distinct().collect(),
-        )
-    )
-    assert got == want
-
-
-@pytest.mark.slow
 def test_sinks_accept_injected_object_store_fs(spark, tmp_path):
     """Both foreachBatch sinks thread an injected StateFS through every
     statedir call: running the LSH snapshot sink entirely on the
@@ -300,8 +184,7 @@ def test_sinks_accept_injected_object_store_fs(spark, tmp_path):
     batches = _slices(spark, 6)
     plain = LshDedupSnapshot(str(tmp_path / "plain"), compact_every=0)
     s3 = LshDedupSnapshot(
-        str(tmp_path / "s3"), compact_every=2, major_every=2,
-        fs=ObjectStoreFS(),
+        str(tmp_path / "s3"), compact_every=2, fs=ObjectStoreFS(),
     )
     for i, b in enumerate(batches):
         plain.foreach_batch(b, i)
@@ -314,18 +197,19 @@ def test_sinks_accept_injected_object_store_fs(spark, tmp_path):
 
 
 def test_bucketed_deltas_make_major_fold_a_per_bucket_merge(spark, tmp_path):
-    """Round-8 fold-cost fix: with bucket_cols, minor folds publish L1
-    deltas PRE-BUCKETED by the snapshot spec (manifest records it,
-    exactly num_buckets data files — only the O(recent) delta rows ever
-    shuffle), and the next major fold reads snapshot+deltas as forced
-    bucketed scans — 'Bucketed: true', one partition per bucket, ZERO
-    Exchange in the fold input — so total state is merged per bucket,
-    never re-shuffled, and the new snapshot's file count is bounded by
-    num_buckets * chain length (+ batch tail), not by input splits."""
+    """With bucket_cols, a fold publishes its snapshot bucketed (the
+    manifest records the spec), and the NEXT fold over that snapshot plus
+    the per-batch dirs above it reads the snapshot as a forced bucketed
+    scan — 'Bucketed: true', one partition per bucket, ZERO Exchange on
+    the snapshot side — so total state is merged per bucket, never
+    re-shuffled; only the batch tail is routed into buckets, and the new
+    snapshot's file count is bounded by twice num_buckets, not by input
+    splits."""
     import json
 
     SCHEMA = "doc_id bigint, band int, key bigint"
     NB = 4
+    BK = dict(bucket_cols=["band", "key"], num_buckets=NB)
     root = str(tmp_path / "index")
     fs = statedir._DEFAULT_FS
 
@@ -336,47 +220,44 @@ def test_bucketed_deltas_make_major_fold_a_per_bucket_merge(spark, tmp_path):
             (F.col("id") % 997).alias("key"),
         )
 
-    for b in range(4):
-        batch(b).coalesce(1).write.mode("overwrite").parquet(
-            statedir.batch_dir(root, b)
-        )
-    # two bucketed minor folds
-    assert statedir.compact_minor(
-        spark, root, SCHEMA, 2, bucket_cols=["band", "key"], num_buckets=NB
-    )
-    assert statedir.compact_minor(
-        spark, root, SCHEMA, 4, bucket_cols=["band", "key"], num_buckets=NB
-    )
-    deltas = sorted(
-        d for d in os.listdir(root)
-        if d.startswith("delta=") and not d.endswith(".commit")
-    )
-    assert len(deltas) == 2
-    for d in deltas:
-        p = os.path.join(root, d)
-        data = [f for f in os.listdir(p) if not f.startswith(("_", "."))]
-        # bounded by fold partitions (O(recent), here <= 2 batch files)
-        # x touched buckets — a wide delta would repartition to exactly
-        # one file per bucket first
-        assert len(data) <= 2 * NB, (d, data)
-        man = json.load(open(p + ".commit"))
-        assert man["bucket"] == {"cols": ["band", "key"], "n": NB}
-        assert sorted(man["files"]) == sorted(data)
+    def write(lo, hi):
+        for b in range(lo, hi):
+            batch(b).coalesce(1).write.mode("overwrite").parquet(
+                statedir.batch_dir(root, b)
+            )
 
-    # the major fold's input: every chain dir a bucketed scan, no Exchange
+    def data_files(d):
+        return [f for f in os.listdir(d) if not f.startswith(("_", "."))]
+
+    write(0, 4)
+    assert statedir.compact(spark, root, SCHEMA, 4, **BK)
+    snap = os.path.join(root, "compact=000000004")
+    man = json.load(open(snap + ".commit"))
+    assert man["bucket"] == {"cols": ["band", "key"], "n": NB}
+    assert sorted(man["files"]) == sorted(data_files(snap))
+
+    # the next fold's input: the snapshot a bucketed scan, and the only
+    # Exchange is the tail's bucket routing
+    write(4, 6)
     spark.conf.set(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
     )
     try:
         df, tmps = statedir._fold_input(
-            spark, root, SCHEMA, 4, fs, ["band", "key"], NB
+            spark, root, SCHEMA, 6, fs, ["band", "key"], NB
         )
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        assert plan.count("Bucketed: true") == 2
-        assert "Exchange" not in plan, plan
-        assert df.rdd.getNumPartitions() == 2 * NB  # one per bucket per dir
+        tree = plan.split("\n\n")[0].splitlines()
+        assert plan.count("Bucketed: true") == 1
+        # one Exchange, and it routes the path-read tail, not the
+        # catalog-registered snapshot
+        ex = [i for i, line in enumerate(tree) if "Exchange" in line]
+        assert len(ex) == 1, plan
+        assert "Scan parquet" in tree[ex[0] + 1], plan
+        assert "spark_catalog" not in tree[ex[0] + 1], plan
+        assert "hashpartitioning(band" in plan, plan
     finally:
         spark.conf.set(
             "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true"
@@ -384,18 +265,11 @@ def test_bucketed_deltas_make_major_fold_a_per_bucket_merge(spark, tmp_path):
         for t in tmps:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
-    # two more (unbucketed tail) batches, then the major fold itself
-    for b in range(4, 6):
-        batch(b).coalesce(1).write.mode("overwrite").parquet(
-            statedir.batch_dir(root, b)
-        )
-    assert statedir.compact(
-        spark, root, SCHEMA, 6, bucket_cols=["band", "key"], num_buckets=NB
-    )
+    assert statedir.compact(spark, root, SCHEMA, 6, **BK)
     snap = os.path.join(root, "compact=000000006")
-    data = [f for f in os.listdir(snap) if not f.startswith(("_", "."))]
-    # 2 bucketed chain dirs x NB one-bucket tasks + <= 2 tail tasks x NB
-    assert len(data) <= 4 * NB, len(data)
+    data = data_files(snap)
+    # NB one-bucket snapshot tasks + NB one-bucket tail tasks
+    assert len(data) <= 2 * NB, len(data)
     man = json.load(open(snap + ".commit"))
     assert man["bucket"] == {"cols": ["band", "key"], "n": NB}
     got = statedir.read_state(spark, root, SCHEMA, 1 << 62)
@@ -403,16 +277,16 @@ def test_bucketed_deltas_make_major_fold_a_per_bucket_merge(spark, tmp_path):
     assert got.select("doc_id").distinct().count() == 6 * 4000
     # converged: nothing below the new snapshot survives
     c = statedir.dir_counts(root)
-    assert (c["compact"], c["delta"], c["batch"]) == (1, 0, 0)
+    assert (c["compact"], c["batch"]) == (1, 0)
 
 
 @pytest.mark.slow
 def test_bucketed_fold_preserves_column_metadata_stamp(spark, tmp_path):
-    """The LSH parameter stamp rides column metadata; a bucketed major
-    fold reads chain dirs through catalog tables whose DDL schema strips
-    metadata, so the fold must re-attach it — otherwise the drift guard
-    silently disarms exactly on bucketed deployments (the round-5 bug
-    class, bucketed edition)."""
+    """The LSH parameter stamp rides column metadata; a bucketed fold
+    reads the previous bucketed snapshot through a catalog table whose
+    DDL schema strips metadata, so the fold must re-attach it —
+    otherwise the drift guard silently disarms exactly on bucketed
+    deployments (the round-5 bug class, bucketed edition)."""
     from pyspark.sql.types import (
         IntegerType, LongType, StructField, StructType,
     )
@@ -432,7 +306,7 @@ def test_bucketed_fold_preserves_column_metadata_stamp(spark, tmp_path):
             statedir.batch_dir(root, b)
         )
     BK = dict(bucket_cols=["band", "key"], num_buckets=4)
-    assert statedir.compact_minor(spark, root, SCHEMA, 2, **BK)
+    assert statedir.compact(spark, root, SCHEMA, 2, **BK)
     assert statedir.compact(spark, root, SCHEMA, 4, **BK)
     got = statedir.read_state(spark, root, SCHEMA, 1 << 62)
     assert dict(got.schema["band"].metadata or {}) == stamp

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -268,155 +269,42 @@ def test_legacy_unpadded_batch_dirs_still_read(spark, tmp_path):
     assert _rows(spark, root, 9) == [(1, "a"), (2, "b")]
     assert _rows(spark, root, 8) == [(1, "a")]
 
-# -- leveled tier ----------------------------------------------------------
-
-
-def test_minor_fold_preserves_reads_and_bounds_dirs(spark, tmp_path):
-    """compact_minor folds ONLY the pending batch dirs into a delta; the
-    read set for every batch is unchanged and the batch-dir count drops
-    to zero without touching (or re-reading) the snapshot."""
-    root = str(tmp_path / "s")
-    for b in range(4):
-        _write_batch(spark, root, b, [(b, f"v{b}")])
-    assert statedir.compact(spark, root, SCHEMA, 4)  # L0 snapshot at 4
-    for b in range(4, 8):
-        _write_batch(spark, root, b, [(b, f"v{b}")])
-    want = {b: _rows(spark, root, b) for b in (5, 7, 8)}
-    assert statedir.compact_minor(spark, root, SCHEMA, 8)
-    c = statedir.dir_counts(root)
-    assert c == {"compact": 1, "delta": 1, "batch": 0, "files": c["files"]}
-    # reads through the chain are identical for the replayable batch and
-    # the accessor horizon
-    assert _rows(spark, root, 8) == want[8]
-    assert _rows(spark, root, 1 << 62) == want[8]
-    # replayed minor fold at the same cover: no-op
-    assert not statedir.compact_minor(spark, root, SCHEMA, 8)
-
-
-def test_delta_chain_reads_in_order_and_major_fold_collapses(spark, tmp_path):
-    root = str(tmp_path / "s")
-    rows = []
-    for b in range(9):
-        _write_batch(spark, root, b, [(b, f"v{b}")])
-        rows.append((b, f"v{b}"))
-        if b in (2, 5):  # minor folds at batches 3 and 6
-            statedir.compact_minor(spark, root, SCHEMA, b + 1)
-    # two deltas + pending batches, no snapshot yet
-    c = statedir.dir_counts(root)
-    assert c["compact"] == 0 and c["delta"] == 2 and c["batch"] == 3
-    assert _rows(spark, root, 9) == rows
-    # read at the latest fold watermark: whole chain, no batch dirs
-    # (reads BELOW the latest fold are outside the protocol, exactly as
-    # in single-level mode — streaming replays only the last in-flight
-    # batch, and folds at the start of batch B cover only ids < B)
-    assert _rows(spark, root, 6) == rows[:6]
-    # major fold eats snapshot-less chain + batches
-    assert statedir.compact(spark, root, SCHEMA, 9)
-    c = statedir.dir_counts(root)
-    assert c["compact"] == 1 and c["delta"] == 0 and c["batch"] == 0
-    assert _rows(spark, root, 9) == rows
-
-
-def test_torn_delta_publish_is_ignored_and_cleaned(spark, tmp_path):
-    root = str(tmp_path / "s")
-    for b in range(3):
-        _write_batch(spark, root, b, [(b, f"v{b}")])
-    torn = os.path.join(root, "delta=000000000-000000002")
-    os.makedirs(torn)
-    with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
-        f.write(b"\x00garbage")
-    want = [(i, f"v{i}") for i in range(3)]
-    assert _rows(spark, root, 3) == want  # torn delta excluded
-    assert statedir.compact_minor(spark, root, SCHEMA, 3)
-    assert _rows(spark, root, 3) == want
-    assert statedir.dir_counts(root)["delta"] == 1  # torn one replaced
-
-
-def test_delta_interrupted_delete_does_not_double_count(spark, tmp_path):
-    """Crash between publishing delta=[0,3) and deleting the folded batch
-    dirs: leftovers below the cover are invisible."""
-    root = str(tmp_path / "s")
-    for b in range(3):
-        _write_batch(spark, root, b, [(b, f"v{b}")])
-    df = statedir.read_state(spark, root, SCHEMA, 3)
-    dest = os.path.join(root, "delta=000000000-000000003")
-    df.write.mode("overwrite").parquet(dest)
-    statedir._publish_manifest(statedir._DEFAULT_FS, dest)
-    want = [(i, f"v{i}") for i in range(3)]
-    assert _rows(spark, root, 3) == want  # not doubled
-    _write_batch(spark, root, 3, [(3, "v3")])
-    assert _rows(spark, root, 4) == want + [(3, "v3")]
-
-
-@pytest.mark.slow
-def test_maybe_compact_leveled_schedule(spark, tmp_path):
-    """every=2, major_every=3: batches fold into deltas every 2, the
-    third fold is a full snapshot; reads identical to a never-compacted
-    control throughout."""
-    root = str(tmp_path / "s")
-    control = str(tmp_path / "ctl")
-    rows = []
-    majors = minors = 0
-    for b in range(13):
-        did = statedir.maybe_compact(
-            spark, root, SCHEMA, b, every=2, major_every=3
-        )
-        if did:
-            c = statedir.dir_counts(root)
-            if c["batch"] == 0 and c["delta"] == 0:
-                majors += 1
-            else:
-                minors += 1
-        _write_batch(spark, root, b, [(b, f"v{b}")])
-        _write_batch(spark, control, b, [(b, f"v{b}")])
-        rows.append((b, f"v{b}"))
-        assert _rows(spark, root, b + 1) == _rows(spark, control, b + 1) == rows
-    assert majors >= 1 and minors >= 2
-    c = statedir.dir_counts(root)
-    assert c["delta"] <= 3 and c["batch"] <= 2 + 1
-
-
-def test_leveled_transform_reduces_on_every_fold(spark, tmp_path):
-    """The counts-style reduction applies at minor AND major folds and
-    the aggregate answer never changes (read-equivalent reduction)."""
-    root = str(tmp_path / "s")
-    red = lambda df: df.groupBy("id").agg(  # noqa: E731
-        F.sum(F.col("v").cast("bigint")).cast("string").alias("v")
-    )
-    total = 0
-    for b in range(9):
-        statedir.maybe_compact(
-            spark, root, SCHEMA, b, every=2, major_every=2, transform=red
-        )
-        _write_batch(spark, root, b, [(7, "1")])
-        total += 1
-        got = statedir.read_state(spark, root, SCHEMA, b + 1)
-        s = got.groupBy("id").agg(F.sum(F.col("v").cast("bigint")).alias("t"))
-        assert [tuple(r) for r in s.collect()] == [(7, total)]
-
-
-def test_column_metadata_survives_minor_fold(spark, tmp_path):
-    """The LSH parameter stamp must ride through L1 delta folds exactly
-    as through full folds (the restart-path mismatch guard reads it)."""
-    root = str(tmp_path / "s")
-    df = spark.createDataFrame([(1, "a")], SCHEMA).withColumn(
-        "id", F.col("id").alias("id", metadata={"lsh_k": 3})
-    )
-    df.write.mode("overwrite").parquet(statedir.batch_dir(root, 0))
-    assert statedir.compact_minor(spark, root, SCHEMA, 1)
-    got = statedir.read_state(spark, root, SCHEMA, 1)
-    assert dict(got.schema["id"].metadata)["lsh_k"] == 3
+def test_delta_dirs_are_refused_committed_or_torn(spark, tmp_path):
+    """A ``delta=`` dir of the removed two-level layout holds rows that
+    no batch dir still has, so skipping it would drop state. Committed
+    or torn, it makes every read and fold entry refuse the root with a
+    ValueError naming it, and nothing under the root changes."""
+    for committed in (True, False):
+        parent = str(tmp_path / f"committed-{committed}")
+        root = os.path.join(parent, "s")
+        for b in range(3):
+            _write_batch(spark, root, b, [(b, f"v{b}")])
+        delta = os.path.join(root, "delta=000000000-000000002")
+        spark.createDataFrame([(9, "v9")], SCHEMA).write.parquet(delta)
+        if committed:
+            statedir._publish_manifest(statedir._DEFAULT_FS, delta)
+        before = sorted(os.listdir(root))
+        tables = statedir.SinkTables(parent, [statedir.Table("s", SCHEMA)])
+        for call in (
+            lambda: statedir.read_state(spark, root, SCHEMA, 3),
+            lambda: tables.read(spark, "s", 3),
+            lambda: statedir.maybe_compact(spark, root, SCHEMA, 3, every=1),
+        ):
+            with pytest.raises(ValueError, match=re.escape(repr(root))):
+                call()
+        assert sorted(os.listdir(root)) == before, committed
 
 
 def test_bucketed_folds_work_on_relative_roots(spark, tmp_path, monkeypatch):
     """A RELATIVE state root must behave like plain parquet writes do
     (resolve against the process cwd): Spark resolves a relative
     saveAsTable path/LOCATION against the WAREHOUSE dir instead, which
-    silently split a relative-rooted statedir in two — the bucketed
-    delta fold wrote its data under spark-warehouse/ while the manifest
+    silently split a relative-rooted statedir in two — a bucketed fold
+    wrote its data under spark-warehouse/ while the manifest
     publish looked at cwd (the bucketed ANN soak crashed on exactly
-    this). Both the minor (delta) and major (snapshot) bucketed folds
-    must land at the cwd-relative path."""
+    this). Both bucketed folds — the first over batch dirs, the second
+    merging that snapshot per bucket with the tail — must land at the
+    cwd-relative path."""
     import os as _os
 
     from pyspark.sql import functions as F
@@ -434,10 +322,10 @@ def test_bucketed_folds_work_on_relative_roots(spark, tmp_path, monkeypatch):
             F.col("id").alias("vec_id")
         )
         df.write.mode("overwrite").parquet(statedir.batch_dir(root, b))
-    assert statedir.compact_minor(
+    assert statedir.compact(
         spark, root, schema, 2, bucket_cols=["vec_id"], num_buckets=4
     )
-    assert _os.path.isdir(_os.path.join(root, "delta=000000000-000000002"))
+    assert _os.path.isdir(_os.path.join(root, "compact=000000002"))
     assert statedir.compact(
         spark, root, schema, 3, bucket_cols=["vec_id"], num_buckets=4
     )
@@ -520,7 +408,7 @@ class _ToySink:
                     ),
                     bucket_cols=("k",),
                 ),
-                statedir.Table("c", "id bigint", fold=rec("c"), sort_by="id", files=1),
+                statedir.Table("c", "id bigint", fold=rec("c"), sort_by="id"),
             ],
             compact_every=compact_every,
             bucketed=bucketed,

@@ -4,8 +4,7 @@ commits, compactions, torn compactions, and interrupted deletes must
 never change what any executing batch observes.
 
 This generalizes test_statedir.py's hand-picked interleavings: hypothesis
-drives the schedule (including the leveled tier's minor delta folds and
-torn delta publishes), the model is the obviously-correct union, and the
+drives the schedule, the model is the obviously-correct union, and the
 assertion is read_state == model at every step for both the next batch id
 and the accessor horizon (1 << 62)."""
 
@@ -28,14 +27,7 @@ SCHEMA = "id bigint, v bigint"
 # the folded dirs in place.
 OPS = st.lists(
     st.sampled_from(
-        [
-            "commit",
-            "compact",
-            "minor_compact",
-            "torn_compact",
-            "torn_delta",
-            "interrupted_delete",
-        ]
+        ["commit", "compact", "torn_compact", "interrupted_delete"]
     ),
     min_size=4,
     max_size=10,
@@ -78,14 +70,6 @@ def test_random_interleavings_preserve_reads(spark, sd_root, ops):
             head += 1
         elif op == "compact":
             statedir.compact(spark, root, SCHEMA, head)
-        elif op == "minor_compact":
-            statedir.compact_minor(spark, root, SCHEMA, head)
-        elif op == "torn_delta":
-            torn = os.path.join(root, f"delta=000000000-{head:09d}")
-            if not os.path.exists(torn):
-                os.makedirs(torn)
-                with open(os.path.join(torn, "part-0.parquet"), "wb") as f:
-                    f.write(b"\x00torn")
         elif op == "torn_compact":
             torn = os.path.join(root, f"compact={head:09d}")
             if not os.path.exists(torn):
@@ -180,11 +164,13 @@ def test_manifest_protocol_never_renames_directories():
 
 
 def test_object_store_crash_sweep(spark, tmp_path):
-    """Drive the leveled protocol on the S3 fake, crashing every fold at
-    every metadata-mutation boundary (each crashed attempt leaves its
-    partial object writes in place — the next attempt starts from that
-    wreckage). After every crash AND after convergence, both consumer
-    reads must equal the model; folds must eventually complete."""
+    """Drive the fold protocol on the S3 fake, crashing two full folds —
+    one over batch dirs only, one over a committed snapshot plus pending
+    batches — at every metadata-mutation boundary (each crashed attempt
+    leaves its partial object writes in place — the next attempt starts
+    from that wreckage). After every crash AND after convergence, both
+    consumer reads must equal the model; folds must eventually
+    complete."""
     fs = ObjectStoreFS()
     root = str(tmp_path / "s3root")
     os.makedirs(root)
@@ -234,16 +220,11 @@ def test_object_store_crash_sweep(spark, tmp_path):
     crash_sweep(lambda: statedir.compact(spark, root, SCHEMA, head, fs=fs))
     for _ in range(2):
         commit()
-    crash_sweep(
-        lambda: statedir.compact_minor(spark, root, SCHEMA, head, fs=fs)
-    )
-    for _ in range(2):
-        commit()
-    # major fold over snapshot + delta + pending batches
+    # second fold over the committed snapshot + pending batches
     crash_sweep(lambda: statedir.compact(spark, root, SCHEMA, head, fs=fs))
     # converged layout: exactly one snapshot expressing all state
     c = statedir.dir_counts(root, fs=fs)
-    assert c["compact"] == 1 and c["delta"] == 0 and c["batch"] == 0
+    assert c["compact"] == 1 and c["batch"] == 0
     assert observed(1 << 62) == expected(1 << 62)
 
 
@@ -251,7 +232,6 @@ OPS_S3 = st.lists(
     st.one_of(
         st.just(("commit", None)),
         st.tuples(st.just("compact"), st.one_of(st.none(), st.integers(0, 12))),
-        st.tuples(st.just("minor"), st.one_of(st.none(), st.integers(0, 12))),
     ),
     min_size=4,
     max_size=10,
@@ -268,7 +248,7 @@ OPS_S3 = st.lists(
 def test_random_interleavings_on_object_store_fake(spark, sd_root, ops):
     """The hypothesis twin of the systematic crash sweep: RANDOM
     schedules of commits and (possibly crashing, at a random metadata
-    mutation) major/minor folds on the S3-semantics fake — every crashed
+    mutation) folds on the S3-semantics fake — every crashed
     attempt's partial object writes stay as the next op's starting state,
     and both consumer reads must equal the model after every op."""
     fs = ObjectStoreFS()
@@ -304,10 +284,7 @@ def test_random_interleavings_on_object_store_fake(spark, sd_root, ops):
             fs.ops = 0
             fs.crash_after = crash_after
             try:
-                if op == "compact":
-                    statedir.compact(spark, root, SCHEMA, head, fs=fs)
-                else:
-                    statedir.compact_minor(spark, root, SCHEMA, head, fs=fs)
+                statedir.compact(spark, root, SCHEMA, head, fs=fs)
             except InjectedCrash:
                 pass
             finally:
@@ -317,22 +294,22 @@ def test_random_interleavings_on_object_store_fake(spark, sd_root, ops):
 
 
 def test_manifestless_dirs_are_torn_never_healed(spark, tmp_path):
-    """The one commit rule on the default fs: a ``compact=`` and a
-    ``delta=`` dir holding real data files, ``_SUCCESS`` and a sibling
-    ``.intent`` bucket-spec marker but no manifest (a crash before the
-    manifest put, or a torn copy on an object store) are (a) never read,
-    (b) deleted — not manifest-stamped — by the next fold, and (c) that
-    fold re-folds the batch dirs' rows."""
+    """The one commit rule on the default fs: ``compact=`` dirs holding
+    real data files, ``_SUCCESS`` and a sibling ``.intent`` bucket-spec
+    marker but no manifest (a crash before the manifest put, or a torn
+    copy on an object store) are (a) never read, (b) deleted — not
+    manifest-stamped — by the next fold, and (c) that fold re-folds the
+    batch dirs' rows."""
     root = str(tmp_path / "torn")
     for b in range(4):
         spark.createDataFrame([(b, b)], SCHEMA).write.mode(
             "overwrite"
         ).parquet(statedir.batch_dir(root, b))
-    # compact=2 with delta=[2, 4) stacked on it: a chain whose cover
-    # would hide every batch dir if either dir counted as committed
+    # compact=2 and compact=3: covers that would hide batch dirs if
+    # either dir counted as committed
     fakes = {
         os.path.join(root, "compact=000000002"): 999,
-        os.path.join(root, "delta=000000002-000000004"): 888,
+        os.path.join(root, "compact=000000003"): 888,
     }
     for path, v in fakes.items():
         spark.createDataFrame([(v, v)], SCHEMA).write.mode(
@@ -367,16 +344,16 @@ def test_manifestless_dirs_are_torn_never_healed(spark, tmp_path):
     assert rows(4) == want
     assert rows(1 << 62) == want
     c = statedir.dir_counts(root)
-    assert c["compact"] == 1 and c["delta"] == 0 and c["batch"] == 0
+    assert c["compact"] == 1 and c["batch"] == 0
 
 
 def test_object_store_crash_sweep_bucketed(spark, tmp_path):
-    """The round-8 bucketed tier (pre-bucketed L1 deltas, per-bucket
-    major folds) must satisfy the SAME crash-point invariant as the
-    plain protocol: sweep every metadata-mutation boundary of a bucketed
-    minor fold and a bucketed major fold (which now reads the delta as a
-    forced bucketed scan) — reads equal the model at every crash point,
-    folds eventually complete, layout converges."""
+    """The bucketed fold must satisfy the SAME crash-point invariant as
+    the plain protocol: sweep every metadata-mutation boundary of a
+    bucketed fold over batch dirs and of a second bucketed fold, which
+    reads the bucket-aligned snapshot as a forced bucketed scan and
+    merges it per bucket with the tail — reads equal the model at every
+    crash point, folds eventually complete, layout converges."""
     fs = ObjectStoreFS()
     root = str(tmp_path / "s3bucketed")
     os.makedirs(root)
@@ -425,14 +402,14 @@ def test_object_store_crash_sweep_bucketed(spark, tmp_path):
     for _ in range(2):
         commit()
     crash_sweep(
-        lambda: statedir.compact_minor(spark, root, SCHEMA, head, fs=fs, **BK)
+        lambda: statedir.compact(spark, root, SCHEMA, head, fs=fs, **BK)
     )
     for _ in range(2):
         commit()
-    # bucketed major fold over bucketed delta + pending batches
+    # second bucketed fold: bucket-aligned snapshot + pending batches
     crash_sweep(
         lambda: statedir.compact(spark, root, SCHEMA, head, fs=fs, **BK)
     )
     c = statedir.dir_counts(root, fs=fs)
-    assert c["compact"] == 1 and c["delta"] == 0 and c["batch"] == 0
+    assert c["compact"] == 1 and c["batch"] == 0
     assert observed(1 << 62) == expected(1 << 62)
